@@ -44,7 +44,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     // 4M turns: long enough that the host's multi-pass CPU ramp completes
     // within one measurement's warm passes (observed ~5 passes)
     val nTurns = sys.env.getOrElse("SPARK_GRAFT_BENCH_TURNS", "4000000").toLong

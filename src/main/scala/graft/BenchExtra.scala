@@ -20,7 +20,8 @@ object BenchExtra {
     val repeats = if (args.length > 1) args(1).toInt else 2
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val spark = Scale.configure(
       SparkSession.builder().appName("graft-bench-extra"), cpus)
       .master(s"local[$cpus]").getOrCreate()

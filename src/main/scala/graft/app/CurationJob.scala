@@ -45,7 +45,8 @@ object CurationJob {
     val waves = if (args.length > 3) args(3).toInt else 1
     val blockTokens = if (args.length > 4) args(4).toInt else 256
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val spark = Scale.configure(
       SparkSession.builder().appName("graft-curation"), cpus)
       .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))

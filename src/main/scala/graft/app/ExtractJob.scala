@@ -11,19 +11,23 @@ import org.apache.spark.sql.functions._
   *
   * Usage:
   *   spark-submit --class graft.app.ExtractJob <jar> \
-  *     <inputPath> <tableDir> [nBuckets] [salts]
+  *     <inputPath> <tableDir> [nBuckets] [salts] [waves]
   *
   * Scale posture (north_rule): input is read as-is (at 10^12 turns this is
   * an Iceberg table with bucket(conv_id) partitioning; here a parquet dir);
   * the per-turn kernel is embarrassingly parallel and runs MAP-SIDE in the
-  * scan stage — the job's only shuffle is the write's keyed repartition,
-  * salted (bucket, turn_idx % salts) so a skewed long conversation spreads
-  * across up to `salts` writer tasks instead of one straggler; the write is
+  * scan stage — the job's only shuffle is the write's keyed repartition.
+  * `salts` caps the writer tasks per bucket: a column-pruned count of the
+  * rows per bucket runs first, and only a bucket holding more than an even
+  * share of the corpus (a skewed long conversation) is spread over several
+  * writers, so an unskewed corpus writes one file per bucket. The write is
   * bucket-partitioned and manifest-guarded INSIDE an unpublished snapshot
   * directory, so a resumed run recomputes only unfinished buckets AND
   * readers of the published table never see a torn write — the snapshot
   * becomes visible only at the final atomic pointer flip (TableIO).
   * Metrics come from `observe` (Spark-native, no driver-side collect).
+  * `waves` > 1 commits the write in that many bucket chunks, each a
+  * resume point (Scale.resumableWrite).
   */
 object ExtractJob {
   def main(args: Array[String]): Unit = {
@@ -35,7 +39,8 @@ object ExtractJob {
     // waves > 1 = crash-resumable checkpoint granularity (Scale.resumableWrite)
     val waves = if (args.length > 4) args(4).toInt else 1
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val spark = Scale.configure(
       SparkSession.builder().appName("graft-extract"), cpus)
       .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
@@ -77,9 +82,7 @@ object ExtractJob {
     // parallel and runs map-side inside the scan stage (size-balanced
     // splits), so the job's ONLY shuffle is the write's keyed repartition —
     // which is where conversation skew actually bites and where
-    // resumableWrite's salted (bucket, turn_idx % salts) keying handles it.
-    // Round 4 removed a full-corpus salted shuffle that sat in front of the
-    // kernel doing nothing for a per-turn pipeline.
+    // resumableWrite's measured fan-out handles it.
     // (`Scale.saltedRepartition` remains the tool for per-CONVERSATION
     // compute stages, where co-location with spread is the point.)
     val turns = spark.read.parquet(in)
@@ -109,9 +112,12 @@ object ExtractJob {
     // waves is NOT in the params sidecar on purpose: it changes checkpoint
     // granularity, never bucket identity, so a retry may resume the same
     // staging snapshot at a different wave count safely.
+    // the fan-out pre-pass counts the UNOBSERVED pipeline: it prunes to
+    // conv_id, while the observed frame's CollectMetrics node would make
+    // the count run the kernel (and feed the single-shot Observation)
     val written = Scale.resumableWrite(extracted,
       TableIO.dataDir(table, snap), s"$table/$snap/manifest", nBuckets, waves,
-      salts)
+      salts, keyFrame = Some(pipeline))
     // zero-row corpus: the bucketed write commits no partition dirs, and
     // publishing a fileless data dir makes TableIO.readTable throw on
     // schema inference forever after (the snapshotWrite path repairs this
@@ -148,6 +154,12 @@ object ExtractJob {
           "chars_out" -> r.get(2))
       }
     }
+    // the manifest total may come from the pre-pass counts rather than the
+    // written files; on a fresh single-wave run the Observation saw every
+    // written row, so a mismatch means the counts were not the write's
+    if (obs.isDefined && m("turns_out") != written)
+      throw new IllegalStateException(s"$table/$snap: manifest records " +
+        s"$written rows but the write observed ${m("turns_out")}; not publishing")
     System.err.println(s"[extract_metrics] turns_out=${m("turns_out")} " +
       s"empty_turns=${m("empty_turns")} chars_out=${m("chars_out")}")
     TableIO.publish(spark, table, snap)

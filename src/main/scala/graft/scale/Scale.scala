@@ -79,11 +79,21 @@ object Scale {
     }
   }
 
-  def completedBuckets(spark: SparkSession, manifestDir: String): Set[Int] = {
-    if (!hasDataFiles(spark, manifestDir)) Set.empty
+  /** Manifested row count per completed bucket. The manifest is
+    * append-only, so a crashed run that died between its write commit and
+    * its manifest append and was then re-run records a bucket twice (with
+    * identical counts; the data dirs themselves are last-writer-wins under
+    * dynamic overwrite): one entry per bucket keeps the bookkeeping honest.
+    * Single-writer-per-snapshot remains the operating assumption (the
+    * Iceberg deployment gets real commit-level OCC). */
+  private def manifestRows(spark: SparkSession, manifestDir: String): Map[Int, Long] =
+    if (!hasDataFiles(spark, manifestDir)) Map.empty
     else spark.read.parquet(manifestDir)
-      .select("bucket").distinct().collect().map(_.getInt(0)).toSet
-  }
+      .groupBy(col("bucket")).agg(max(col("rows")))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+
+  def completedBuckets(spark: SparkSession, manifestDir: String): Set[Int] =
+    manifestRows(spark, manifestDir).keySet
 
   def recordBucket(spark: SparkSession, manifestDir: String, bucket: Int,
                    rows: Long): Unit =
@@ -98,101 +108,134 @@ object Scale {
         .coalesce(1).write.mode("append").parquet(manifestDir)
   }
 
+  /** Rows per bucket of `df`, from one column-pruned pass over `keyCol`. */
+  private def bucketCounts(df: DataFrame, nBuckets: Int, keyCol: String,
+                           buckets: Seq[Int]): Map[Int, Long] = {
+    val keyed = df.select(bucketCol(nBuckets, keyCol))
+    val pending =
+      if (buckets.size == nBuckets) keyed
+      else keyed.filter(col("bucket").isin(buckets.map(Int.box): _*))
+    pending.groupBy("bucket").count().collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+  }
+
+  /** Writers per bucket, for the buckets that need more than one: bucket
+    * b gets ceil(rows_b / share) writers, capped at `salts`, where share is
+    * an even split of all rows over the writer stage's parallelism. */
+  private def fanOut(counts: Map[Int, Long], parallelism: Int,
+                     salts: Int): Map[Int, Int] = {
+    val share = math.max(1L, (counts.values.sum + parallelism - 1) / parallelism)
+    counts.collect {
+      case (b, n) if n > share => b -> math.min(salts.toLong, (n + share - 1) / share).toInt
+    }
+  }
+
   /** Resumable keyed write: bucket the result by hash(`keyCol`, default
-    * conv_id; `orderCol` orders within the key and salts the writers —
-    * doc-keyed curation stages pass doc_id/doc_id), drop buckets
-    * the manifest marks complete, and write every remaining bucket in ONE
-    * distributed job with dynamic partition overwrite (idempotent under
-    * retry — a re-run of a failed job rewrites exactly the unfinished
-    * buckets and leaves completed ones untouched). The bucket filter prunes
-    * at the source when the input is already bucket-partitioned, so a resume
-    * after k completed buckets rescans only (n−k)/n of the data.
+    * conv_id), drop buckets the manifest marks complete, and write every
+    * remaining bucket in ONE distributed job with dynamic partition
+    * overwrite (idempotent under retry — a re-run of a failed job rewrites
+    * exactly the unfinished buckets and leaves completed ones untouched).
+    * The bucket filter prunes at the source when the input is already
+    * bucket-partitioned, so a resume after k completed buckets rescans only
+    * (n−k)/n of the data.
     *
-    * Bookkeeping is O(1) jobs, not O(nBuckets): per-bucket row counts come
-    * from ONE `groupBy(bucket).count()` pass over the written table and the
-    * return total is the manifest sum — round 1 issued 65 sequential driver
-    * round-trip count jobs per 64-bucket write.
+    * Fan-out is measured, not blind. With `salts` > 1, one column-pruned
+    * `groupBy(bucket).count()` over `keyCol` runs before the write, and a
+    * bucket holding more than an even share of the rows (all rows over
+    * `spark.sql.shuffle.partitions`) is spread over ceil(rows / share)
+    * writer tasks, at most `salts`, keyed by `orderCol` mod that number. A
+    * 10^9-turn conversation lands in ONE bucket and still fans out, while
+    * an unskewed corpus writes one file per non-empty bucket instead of one
+    * per bucket per writer task. `keyFrame` is the frame the pre-pass
+    * counts when `df` itself would not prune to `keyCol` (an observed frame:
+    * its CollectMetrics node blocks column pruning, so counting it runs the
+    * whole projection); it must hold exactly `df`'s rows. With `salts` = 1
+    * no pre-pass runs and every bucket has one writer.
+    *
+    * Bookkeeping is O(1) jobs, not O(nBuckets). When the pre-pass counted a
+    * deterministic plan, its per-bucket counts ARE the written counts and
+    * go straight to the manifest. Otherwise (salts = 1, or a
+    * nondeterministic plan) ONE `groupBy(bucket).count()` pass over the
+    * written output records them. Either way a zero-row bucket is still
+    * manifested (rows=0), or every resume would rescan it. The return value
+    * is the total over the manifest: earlier runs' buckets plus this one's.
+    *
+    * Each file is sorted by (`keyCol`, `orderCol`): the write sorts by
+    * (bucket, keyCol, orderCol), which also satisfies the bucket ordering
+    * the planned partitioned write requires — a sort on (keyCol, orderCol)
+    * alone is replaced by the planner's bucket sort. A bucket dir as a whole
+    * is not sorted when it holds several files; consumers sort on
+    * (conv_id, turn_idx), never assume file order (SURVEY §1).
     *
     * `waves` chunks the write into that many sequential jobs (wave w writes
     * buckets with `bucket % waves == w`), appending the manifest AFTER each
     * wave. With waves=1 (default) the manifest only ever gains entries once
-    * the WHOLE write commits — so a run killed mid-write resumes from zero,
-    * and the advertised "skip completed partitions" lineage never actually
-    * engages on a crash. waves>1 is what makes a 10^12-turn run killable:
-    * die in wave k and the retry prunes waves 0..k−1 at the source. The
-    * cost is `waves` input scans — on the real deployment the input is an
-    * Iceberg table bucketed by conv_id, so each wave's bucket filter prunes
-    * at the source and the rescan is ~free; on a flat parquet input each
-    * wave re-reads the corpus (kernel work still runs once per row — the
-    * bucket filter sits below the projection), so keep waves modest (4–8). */
+    * the WHOLE write commits — so a run killed mid-write resumes from zero.
+    * waves>1 is what makes a 10^12-turn run killable: die in wave k and the
+    * retry prunes waves 0..k−1 at the source. The cost is `waves` input
+    * scans — on the real deployment the input is an Iceberg table bucketed
+    * by conv_id, so each wave's bucket filter prunes at the source and the
+    * rescan is ~free; on a flat parquet input each wave re-reads the corpus
+    * (kernel work still runs once per row — the bucket filter sits below
+    * the projection), so keep waves modest (4–8). */
   def resumableWrite(df: DataFrame, outDir: String, manifestDir: String,
                      nBuckets: Int = DefaultBuckets, waves: Int = 1,
                      salts: Int = 1, keyCol: String = "conv_id",
-                     orderCol: String = "turn_idx"): Long = {
+                     orderCol: String = "turn_idx",
+                     keyFrame: Option[DataFrame] = None): Long = {
     require(waves >= 1 && waves <= nBuckets,
       s"waves must be in [1, nBuckets]: $waves")
     require(salts >= 1, s"salts must be >= 1: $salts")
     val spark = df.sparkSession
-    val done = completedBuckets(spark, manifestDir)
+    val done = manifestRows(spark, manifestDir)
+    val pending = (0 until nBuckets).filterNot(done.contains)
+    val counts =
+      if (salts <= 1 || pending.isEmpty) None
+      else Some(bucketCounts(keyFrame.getOrElse(df), nBuckets, keyCol, pending))
+    val writers = counts.fold(Map.empty[Int, Int])(
+      fanOut(_, spark.conf.get("spark.sql.shuffle.partitions").toInt, salts))
+    // the pre-pass counts stand in for the written ones only if neither
+    // plan can yield different rows on a second evaluation
+    val exact = counts.filter(_ => (df +: keyFrame.toSeq)
+      .forall(_.queryExecution.analyzed.deterministic))
+    // a hot bucket's rows go to `writers(b)` tasks by orderCol mod that
+    // number; every other bucket keeps writer 0 (mod 1)
+    val writer = writers.foldLeft(lit(1)) { case (rest, (b, w)) =>
+      when(col("bucket") === b, lit(w)).otherwise(rest)
+    }
     val withBucket = df.withColumn("bucket", bucketCol(nBuckets, keyCol))
-    (0 until waves).foreach { w =>
-      val waveBuckets =
-        (w until nBuckets by waves).filterNot(done.contains)
-      if (waveBuckets.nonEmpty) {
-        // one job per wave: shuffle grouped into bucket dirs; stable order
-        // restored inside each file, never assumed from partition order.
+    val recorded = (0 until waves).flatMap { w =>
+      val waveBuckets = (w until nBuckets by waves).filterNot(done.contains)
+      if (waveBuckets.isEmpty) Nil
+      else {
         // partitionOverwriteMode is scoped to THIS write via the per-write
-        // option, not session conf (round-2 VERDICT: the conf mutation
-        // leaked into every later write of a long-lived session).
+        // option, not session conf (a conf mutation would leak into every
+        // later write of a long-lived session).
         val wave =
           if (waveBuckets.size == nBuckets) withBucket // nothing to prune
           else withBucket.filter(col("bucket").isin(waveBuckets.map(Int.box): _*))
-        // salts > 1 spreads one bucket across up to `salts` writer tasks
-        // (keyed by turn_idx mod salts): a 10^9-turn conversation lands in
-        // ONE bucket, and a bucket-only repartition would hand the whole
-        // thing to a single straggler writer. partitionBy lets every task
-        // write its own file into the bucket dir, so skew is handled AT the
-        // write — no upfront corpus-wide salted shuffle needed for a
-        // per-turn pipeline (that shuffle was pure overhead; round-4 fix).
-        // Order stays a read-side contract: each file is sorted, the bucket
-        // dir as a whole is not — consumers sort on (conv_id, turn_idx),
-        // never assume file order (SURVEY §1).
         val keyed =
-          if (salts <= 1) wave.repartition(col("bucket"))
-          else wave.repartition(col("bucket"), pmod(col(orderCol), lit(salts)))
+          if (writers.isEmpty) wave.repartition(col("bucket"))
+          else wave.repartition(col("bucket"), pmod(col(orderCol), writer))
         keyed
-          .sortWithinPartitions(keyCol, orderCol)
+          .sortWithinPartitions("bucket", keyCol, orderCol)
           .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
           .partitionBy("bucket").parquet(outDir)
-        // one distributed pass over the (partition-pruned) output records
-        // every bucket count this wave committed. Two empty-bucket guards
-        // (round-4 review findings): a wave whose buckets are ALL empty
-        // commits no partition dir, and reading the then-fileless outDir
-        // throws a schema-inference error; and a bucket with zero rows must
-        // still be manifested (rows=0) or every resume rescans it forever.
-        val counts =
+        // read-back guard: a wave whose buckets are ALL empty commits no
+        // partition dir, and reading the then-fileless outDir throws a
+        // schema-inference error
+        val waveCounts = exact.getOrElse {
           if (!hasBucketData(spark, outDir)) Map.empty[Int, Long]
           else spark.read.parquet(outDir)
             .filter(col("bucket").isin(waveBuckets.map(Int.box): _*))
             .groupBy("bucket").count().collect()
             .map(r => r.getInt(0) -> r.getLong(1)).toMap
-        recordBuckets(spark, manifestDir,
-          waveBuckets.map(b => b -> counts.getOrElse(b, 0L)))
+        }
+        val rows = waveBuckets.map(b => b -> waveCounts.getOrElse(b, 0L))
+        recordBuckets(spark, manifestDir, rows)
+        rows
       }
     }
-    // total rows now present = manifest sum (metadata-sized read), ONE
-    // record per bucket: the manifest is append-only, so a duplicate append
-    // — a crashed run that died between its write-job commit and its
-    // manifest append and was then re-run, or an operator racing two
-    // writers against one staging snapshot — records the same bucket twice
-    // (with identical counts; the data dirs themselves are last-writer-wins
-    // under dynamic overwrite). completedBuckets is distinct-by-bucket for
-    // the same reason. Single-writer-per-snapshot remains the operating
-    // assumption (the Iceberg deployment gets real commit-level OCC);
-    // dedup here keeps the BOOKKEEPING honest under the crash-retry races
-    // the manifest exists for.
-    spark.read.parquet(manifestDir)
-      .groupBy(col("bucket")).agg(max(col("rows")).as("rows"))
-      .agg(sum(col("rows"))).collect()(0).getLong(0)
+    (done ++ recorded).values.sum
   }
 }

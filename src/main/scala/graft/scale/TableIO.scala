@@ -124,15 +124,9 @@ object TableIO {
     val (f, _) = fs(spark, tableDir)
     val dd = f.makeQualified(new org.apache.hadoop.fs.Path(dataDir(tableDir, snap)))
     val prefix = dd.toString + "/"
-    val files = scala.collection.mutable.ArrayBuffer.empty[String]
-    if (f.exists(dd)) {
-      val it = f.listFiles(dd, true)
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile && st.getPath.getName.endsWith(".parquet"))
-          files += st.getPath.toString.stripPrefix(prefix)
-      }
-    }
+    val files =
+      if (!f.exists(dd)) Seq.empty
+      else dataFiles(f, dd).map(_.toString.stripPrefix(prefix)).toSeq
     writeSidecar(spark, tableDir, snap, FilesManifest,
       files.sorted.mkString("\n"))
   }
@@ -181,16 +175,24 @@ object TableIO {
   /** Any .parquet data file under `dir` (recursive, short-circuits). */
   private def hasDataFiles(spark: SparkSession, dir: String): Boolean = {
     val (f, p) = fs(spark, dir)
-    f.exists(p) && {
-      val it = f.listFiles(p, true)
-      var found = false
-      while (!found && it.hasNext) {
-        val st = it.next()
-        if (st.isFile && st.getPath.getName.endsWith(".parquet")) found = true
-      }
-      found
-    }
+    f.exists(p) && dataFiles(f, p).hasNext
   }
+
+  /** The `.parquet` data files under `dir`, recursively, lazily, skipping
+    * the hidden entries (`_…`, `.…`) Spark's file index skips. A plain
+    * `listStatus` walk on purpose: `FileSystem.listFiles` builds a
+    * `LocatedFileStatus` per file, whose constructor reads the file's
+    * permission — on a local FS without native Hadoop that forks one
+    * `ls -ld` per file (Spark's `HadoopFSUtils` avoids it the same way). */
+  private def dataFiles(f: org.apache.hadoop.fs.FileSystem,
+                        dir: org.apache.hadoop.fs.Path): Iterator[org.apache.hadoop.fs.Path] =
+    f.listStatus(dir).iterator.flatMap { st =>
+      val n = st.getPath.getName
+      if (n.startsWith("_") || n.startsWith(".")) Iterator.empty
+      else if (st.isDirectory) dataFiles(f, st.getPath)
+      else if (n.endsWith(".parquet")) Iterator.single(st.getPath)
+      else Iterator.empty
+    }
 
   /** Publish `snap`: commit its file manifest, then atomically flip
     * `_CURRENT` via a SINGLE overwrite-rename (`FileContext.rename` with

@@ -4,7 +4,11 @@ import graft.app.ExtractJob
 import graft.core.Transcripts
 import graft.extract.Extract
 import graft.scale.TableIO
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 import java.nio.file.Files
 
 /** End-to-end job flow: extraction kernel → resumable bucketed write inside
@@ -108,5 +112,32 @@ class ExtractJobSpec extends AnyFunSuite {
       nBuckets = 8, salts = 4, cpus = 4)
     assert(snap3 === "snap-00003")
     assert(n3 === 200)
+  }
+
+  test("the per-bucket count runs before the write without the kernel") {
+    val tmp = Files.createTempDirectory("graft_job_prepass").toString
+    Transcripts.synthetic(spark, 300, 10).drop("doc_text")
+      .write.parquet(s"$tmp/in")
+    val collected = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "collect") collected.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val (_, n) = ExtractJob.run(spark, s"$tmp/in", s"$tmp/table",
+        nBuckets = 8, salts = 4, cpus = 4)
+      assert(n === 300)
+      // the count is the job's only collect over the bucket hash
+      eventually(timeout(30.seconds)) {
+        assert(collected.toArray.exists(_.toString.contains("xxhash64")))
+      }
+    } finally spark.listenerManager.unregister(listener)
+    val counts = collected.toArray.map(_.toString).filter(_.contains("xxhash64"))
+    counts.foreach { plan =>
+      assert(!plan.contains("extract_turn"), plan)
+      assert(plan.contains("ReadSchema: struct<conv_id:string>"), plan)
+    }
   }
 }

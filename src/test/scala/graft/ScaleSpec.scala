@@ -134,6 +134,55 @@ class ScaleSpec extends AnyFunSuite {
     assert(files > 1, s"skewed bucket written by a single task ($files file)")
   }
 
+  /** Data files under each `bucket=` dir of `dir`. */
+  private def filesPerBucket(dir: String): Map[String, Seq[java.io.File]] =
+    new java.io.File(dir).listFiles().toSeq
+      .filter(d => d.isDirectory && d.getName.startsWith("bucket="))
+      .map(d => d.getName -> d.listFiles().toSeq.filter(_.getName.endsWith(".parquet")))
+      .toMap
+
+  test("measured fan-out: an unskewed corpus writes one file per non-empty bucket") {
+    val tmp = Files.createTempDirectory("graft_fanout").toString
+    val result = Extract.pipeline(Transcripts.synthetic(spark, 2000, 10).drop("doc_text"))
+    val n1 = Scale.resumableWrite(result, s"$tmp/plain", s"$tmp/man1", nBuckets = 8)
+    // coalescing off, as in the salted-write test: each bucket must still
+    // reach exactly one writer task because no bucket exceeds its share
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    val n2 =
+      try Scale.resumableWrite(result, s"$tmp/salted", s"$tmp/man2",
+        nBuckets = 8, salts = 8)
+      finally spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    assert(n1 === n2)
+    val nonEmpty = result.select(Scale.bucketCol(8)).distinct().count()
+    val files = filesPerBucket(s"$tmp/salted")
+    assert(files.size === nonEmpty)
+    assert(files.values.forall(_.size == 1),
+      s"files per bucket: ${files.view.mapValues(_.size).toMap}")
+    val a = spark.read.parquet(s"$tmp/plain").select("conv_id", "turn_idx", "text", "bucket")
+    val b = spark.read.parquet(s"$tmp/salted").select("conv_id", "turn_idx", "text", "bucket")
+    assert(a.exceptAll(b).count() === 0)
+    assert(b.exceptAll(a).count() === 0)
+  }
+
+  test("every written file is sorted by (conv_id, turn_idx)") {
+    val tmp = Files.createTempDirectory("graft_sorted").toString
+    // a deterministic scramble, so no writer receives its rows in key order
+    val scrambled = Extract.pipeline(Transcripts.synthetic(spark, 2000, 10)
+        .drop("doc_text"))
+      .orderBy(xxhash64(col("conv_id"), col("turn_idx")))
+    Seq(1, 8).foreach { salts =>
+      val out = s"$tmp/salts$salts"
+      Scale.resumableWrite(scrambled, out, s"$tmp/man$salts", nBuckets = 8, salts = salts)
+      val files = filesPerBucket(out).values.flatten.toSeq
+      assert(files.nonEmpty)
+      files.foreach { f =>
+        val keys = spark.read.parquet(f.getPath).select("conv_id", "turn_idx")
+          .collect().map(r => (r.getString(0), r.getInt(1))).toSeq
+        assert(keys === keys.sorted, s"salts=$salts: ${f.getName} is not sorted")
+      }
+    }
+  }
+
   test("salted repartition spreads a skewed conversation across partitions") {
     val skewed = Transcripts.synthetic(spark, 2000, 10, skewFactor = 100)
       .drop("doc_text")

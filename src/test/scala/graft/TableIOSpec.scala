@@ -58,6 +58,22 @@ class TableIOSpec extends AnyFunSuite {
       .collect().contains("zombie"))
   }
 
+  test("files.list of a bucketed snapshot names every bucket data file") {
+    val dir = Files.createTempDirectory("graft_table_buckets").toString
+    val snap = TableIO.nextSnapshotName(spark, dir)
+    val dd = TableIO.dataDir(dir, snap)
+    (0 until 40).map(i => (s"c${i % 7}", i, s"t$i", i % 5)).toDF("conv_id", "turn_idx", "text", "bucket")
+      .repartition(3).write.partitionBy("bucket").parquet(dd)
+    TableIO.publish(spark, dir, snap)
+    val expected = new java.io.File(dd).listFiles().toSeq
+      .filter(d => d.isDirectory && d.getName.startsWith("bucket="))
+      .flatMap(d => d.listFiles().toSeq.filter(_.getName.endsWith(".parquet"))
+        .map(f => s"${d.getName}/${f.getName}"))
+    assert(expected.size >= 5)
+    assert(TableIO.filesManifest(spark, dir, snap) === Some(expected.sorted))
+    assert(TableIO.readTable(spark, dir).count() === 40)
+  }
+
   test("pointer loss falls back to the newest COMPLETE snapshot") {
     val dir = Files.createTempDirectory("graft_table_ptr").toString
     TableIO.snapshotWrite(Seq(("a", 0, "x")).toDF("conv_id", "turn_idx", "text"), dir)
