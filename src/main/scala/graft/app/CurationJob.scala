@@ -45,12 +45,7 @@ object CurationJob {
     val waves = if (args.length > 3) args(3).toInt else 1
     val blockTokens = if (args.length > 4) args(4).toInt else 256
 
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors)
-    val spark = Scale.configure(
-      SparkSession.builder().appName("graft-curation"), cpus)
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .getOrCreate()
+    val spark = Scale.jobSession("graft-curation")
     spark.sparkContext.setLogLevel("WARN")
 
     val t0 = System.nanoTime()

@@ -17,14 +17,15 @@ import org.apache.spark.sql.functions._
   * an Iceberg table with bucket(conv_id) partitioning; here a parquet dir);
   * the per-turn kernel is embarrassingly parallel and runs MAP-SIDE in the
   * scan stage — the job's only shuffle is the write's keyed repartition.
-  * `salts` caps the writer tasks per bucket: a column-pruned count of the
-  * rows per bucket runs first, and only a bucket holding more than an even
-  * share of the corpus (a skewed long conversation) is spread over several
-  * writers, so an unskewed corpus writes one file per bucket. The write is
-  * bucket-partitioned and manifest-guarded INSIDE an unpublished snapshot
-  * directory, so a resumed run recomputes only unfinished buckets AND
-  * readers of the published table never see a torn write — the snapshot
-  * becomes visible only at the final atomic pointer flip (TableIO).
+  * `salts` is the writer spread of a hot bucket: a column-pruned count of
+  * the rows per bucket runs first, and only a bucket holding more than a
+  * quarter of one writer task's even share (a skewed long conversation) is
+  * spread over `salts` writer keys, so an unskewed corpus writes one file
+  * per bucket. The write is bucket-partitioned and manifest-guarded INSIDE
+  * an unpublished snapshot directory, so a resumed run recomputes only
+  * unfinished buckets AND readers of the published table never see a torn
+  * write — the snapshot becomes visible only at the final atomic pointer
+  * flip (TableIO).
   * Metrics come from `observe` (Spark-native, no driver-side collect).
   * `waves` > 1 commits the write in that many bucket chunks, each a
   * resume point (Scale.resumableWrite).
@@ -39,16 +40,12 @@ object ExtractJob {
     // waves > 1 = crash-resumable checkpoint granularity (Scale.resumableWrite)
     val waves = if (args.length > 4) args(4).toInt else 1
 
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors)
-    val spark = Scale.configure(
-      SparkSession.builder().appName("graft-extract"), cpus)
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .getOrCreate()
+    val spark = Scale.jobSession("graft-extract")
     spark.sparkContext.setLogLevel("WARN")
 
     val t0 = System.nanoTime()
-    val (snap, written) = run(spark, in, table, nBuckets, salts, cpus, waves)
+    val (snap, written) = run(spark, in, table, nBuckets, salts,
+      spark.sparkContext.defaultParallelism, waves)
     val secs = (System.nanoTime() - t0) / 1e9
     println(f"[extract-job] wrote $written%d turns in $secs%.1f s " +
       f"(${written / secs}%.0f turns/sec) to $table/$snap (published)")
@@ -155,9 +152,10 @@ object ExtractJob {
       }
     }
     // the manifest total may come from the pre-pass counts rather than the
-    // written files; on a fresh single-wave run the Observation saw every
-    // written row, so a mismatch means the counts were not the write's
-    if (obs.isDefined && m("turns_out") != written)
+    // written files, while turns_out counts the rows the write saw (or, on
+    // a resumed or multi-wave run, the data dir): a mismatch means the
+    // manifest is not the data's. A retry of such a snapshot fails here too.
+    if (m("turns_out") != written)
       throw new IllegalStateException(s"$table/$snap: manifest records " +
         s"$written rows but the write observed ${m("turns_out")}; not publishing")
     System.err.println(s"[extract_metrics] turns_out=${m("turns_out")} " +

@@ -1,6 +1,7 @@
 package graft.scale
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, LogicalPlan}
 import org.apache.spark.sql.functions._
 
 /** The scale module (SURVEY.md §7 item 8): conv_id hash bucketing, salted
@@ -33,12 +34,30 @@ object Scale {
   /** Session defaults for the engine: AQE on (coalesce + skew-join), sane
     * local shuffle parallelism. */
   def configure(b: SparkSession.Builder, cpus: Int): SparkSession.Builder =
-    b.config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
+    defaults(b).config("spark.sql.shuffle.partitions", cpus.toString)
+
+  private def defaults(b: SparkSession.Builder): SparkSession.Builder =
+    b.config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+
+  /** Session for a spark-submit job. `SPARK_MASTER` picks the master
+    * (default local[cpus]) and `SPARK_GRAFT_CPUS` the shuffle parallelism.
+    * Unset, a local run takes the host's processor count, while a cluster
+    * run keeps the cluster's own `spark.sql.shuffle.partitions`: the
+    * driver's cores say nothing about the executors'. */
+  def jobSession(appName: String): SparkSession = {
+    val b = SparkSession.builder().appName(appName)
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    sys.env.get("SPARK_MASTER") match {
+      case Some(master) => cpus.fold(defaults(b))(configure(b, _)).master(master).getOrCreate()
+      case None =>
+        val n = cpus.getOrElse(Runtime.getRuntime.availableProcessors)
+        configure(b, n).master(s"local[$n]").getOrCreate()
+    }
+  }
 
   // ---------------------------------------------------------------- manifest
 
@@ -119,15 +138,23 @@ object Scale {
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
   }
 
-  /** Writers per bucket, for the buckets that need more than one: bucket
-    * b gets ceil(rows_b / share) writers, capped at `salts`, where share is
-    * an even split of all rows over the writer stage's parallelism. */
-  private def fanOut(counts: Map[Int, Long], parallelism: Int,
-                     salts: Int): Map[Int, Int] = {
-    val share = math.max(1L, (counts.values.sum + parallelism - 1) / parallelism)
-    counts.collect {
-      case (b, n) if n > share => b -> math.min(salts.toLong, (n + share - 1) / share).toInt
+  /** Buckets too big for one writer. The task that writes a bucket alone
+    * also receives its hashed part of the other buckets, so a bucket of
+    * more than a quarter of an even share (all rows over the writer stage's
+    * `parallelism`) would push that task well past the share. */
+  private def hotBuckets(counts: Map[Int, Long], parallelism: Int): Seq[Int] = {
+    val share = counts.values.sum.toDouble / parallelism
+    counts.collect { case (b, n) if n > share / 4 => b }.toSeq.sorted
+  }
+
+  /** `df`'s analyzed plan without its top `observe` (CollectMetrics)
+    * nodes, which pass every row through unchanged. */
+  private def unobserved(df: DataFrame): LogicalPlan = {
+    def strip(p: LogicalPlan): LogicalPlan = p match {
+      case c: CollectMetrics => strip(c.child)
+      case _ => p
     }
+    strip(df.queryExecution.analyzed)
   }
 
   /** Resumable keyed write: bucket the result by hash(`keyCol`, default
@@ -140,25 +167,33 @@ object Scale {
     * (n−k)/n of the data.
     *
     * Fan-out is measured, not blind. With `salts` > 1, one column-pruned
-    * `groupBy(bucket).count()` over `keyCol` runs before the write, and a
-    * bucket holding more than an even share of the rows (all rows over
-    * `spark.sql.shuffle.partitions`) is spread over ceil(rows / share)
-    * writer tasks, at most `salts`, keyed by `orderCol` mod that number. A
-    * 10^9-turn conversation lands in ONE bucket and still fans out, while
-    * an unskewed corpus writes one file per non-empty bucket instead of one
-    * per bucket per writer task. `keyFrame` is the frame the pre-pass
-    * counts when `df` itself would not prune to `keyCol` (an observed frame:
-    * its CollectMetrics node blocks column pruning, so counting it runs the
-    * whole projection); it must hold exactly `df`'s rows. With `salts` = 1
-    * no pre-pass runs and every bucket has one writer.
+    * `groupBy(bucket).count()` over `keyCol` runs before the write. A
+    * bucket holding more than a quarter of an even share of the rows (all
+    * rows over `spark.sql.shuffle.partitions`) is hot: its rows are keyed by
+    * (bucket, `orderCol` mod `salts`), so they spread over the writer tasks
+    * as a blind salting would, and a 10^9-turn conversation, which lands in
+    * ONE bucket, has no single straggler writer. Every other bucket keeps
+    * one writer, so an unskewed corpus with several buckets per writer task
+    * writes one file per non-empty bucket instead of one per bucket per
+    * writer task; with under four buckets per writer task every bucket is
+    * hot. With `salts` = 1 no pre-pass runs and every bucket has one writer.
     *
-    * Bookkeeping is O(1) jobs, not O(nBuckets). When the pre-pass counted a
-    * deterministic plan, its per-bucket counts ARE the written counts and
-    * go straight to the manifest. Otherwise (salts = 1, or a
-    * nondeterministic plan) ONE `groupBy(bucket).count()` pass over the
-    * written output records them. Either way a zero-row bucket is still
-    * manifested (rows=0), or every resume would rescan it. The return value
-    * is the total over the manifest: earlier runs' buckets plus this one's.
+    * `keyFrame` is the frame the pre-pass counts when `df` itself would not
+    * prune to `keyCol`: an observed frame, whose CollectMetrics node blocks
+    * column pruning, so counting it would run the whole projection. Pass
+    * `df` minus its `observe` calls; the counts stand in for the written
+    * ones only when that holds (checked on the analyzed plans) and the plan
+    * is deterministic. Otherwise they only size the fan-out.
+    *
+    * Bookkeeping is O(1) jobs, not O(nBuckets). Exact pre-pass counts go
+    * straight to the manifest. Otherwise (salts = 1, a nondeterministic
+    * plan, or a `keyFrame` that is not `df`'s rows) ONE
+    * `groupBy(bucket).count()` pass over the written output records them.
+    * Either way a zero-row bucket is still manifested (rows=0), or every
+    * resume would rescan it. The return value is the total over the
+    * manifest: earlier runs' buckets plus this one's. A caller that can
+    * count the written rows itself (ExtractJob's Observation) should compare
+    * that count with the total before it publishes.
     *
     * Each file is sorted by (`keyCol`, `orderCol`): the write sorts by
     * (bucket, keyCol, orderCol), which also satisfies the bucket ordering
@@ -192,17 +227,12 @@ object Scale {
     val counts =
       if (salts <= 1 || pending.isEmpty) None
       else Some(bucketCounts(keyFrame.getOrElse(df), nBuckets, keyCol, pending))
-    val writers = counts.fold(Map.empty[Int, Int])(
-      fanOut(_, spark.conf.get("spark.sql.shuffle.partitions").toInt, salts))
-    // the pre-pass counts stand in for the written ones only if neither
-    // plan can yield different rows on a second evaluation
-    val exact = counts.filter(_ => (df +: keyFrame.toSeq)
-      .forall(_.queryExecution.analyzed.deterministic))
-    // a hot bucket's rows go to `writers(b)` tasks by orderCol mod that
-    // number; every other bucket keeps writer 0 (mod 1)
-    val writer = writers.foldLeft(lit(1)) { case (rest, (b, w)) =>
-      when(col("bucket") === b, lit(w)).otherwise(rest)
-    }
+    val hot = counts.fold(Seq.empty[Int])(
+      hotBuckets(_, spark.conf.get("spark.sql.shuffle.partitions").toInt))
+    // the pre-pass counts stand in for the written ones only if they count
+    // df's rows and the plan yields the same rows on a second evaluation
+    val exact = counts.filter(_ => df.queryExecution.analyzed.deterministic &&
+      keyFrame.forall(k => unobserved(df).sameResult(k.queryExecution.analyzed)))
     val withBucket = df.withColumn("bucket", bucketCol(nBuckets, keyCol))
     val recorded = (0 until waves).flatMap { w =>
       val waveBuckets = (w until nBuckets by waves).filterNot(done.contains)
@@ -215,8 +245,10 @@ object Scale {
           if (waveBuckets.size == nBuckets) withBucket // nothing to prune
           else withBucket.filter(col("bucket").isin(waveBuckets.map(Int.box): _*))
         val keyed =
-          if (writers.isEmpty) wave.repartition(col("bucket"))
-          else wave.repartition(col("bucket"), pmod(col(orderCol), writer))
+          if (hot.isEmpty) wave.repartition(col("bucket"))
+          else wave.repartition(col("bucket"),
+            when(col("bucket").isin(hot.map(Int.box): _*), pmod(col(orderCol), lit(salts)))
+              .otherwise(lit(0)))
         keyed
           .sortWithinPartitions("bucket", keyCol, orderCol)
           .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")

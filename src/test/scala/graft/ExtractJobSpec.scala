@@ -68,6 +68,28 @@ class ExtractJobSpec extends AnyFunSuite {
     assert(TableIO.readTable(spark, s"$tmp/table").count() === 200)
   }
 
+  test("a staging snapshot whose manifest disagrees with its data never publishes") {
+    // what a failed total check leaves behind: every bucket written and
+    // manifested, one with a wrong count. The retry resumes it (its params
+    // match), runs no write, and must still refuse to publish.
+    val tmp = Files.createTempDirectory("graft_job_bad_manifest").toString
+    Transcripts.synthetic(spark, 200, 10).drop("doc_text")
+      .write.parquet(s"$tmp/in")
+    TableIO.writeSidecar(spark, s"$tmp/table", "snap-00001", "params",
+      "nBuckets=8\nsalts=4")
+    val manifest = s"$tmp/table/snap-00001/manifest"
+    graft.scale.Scale.resumableWrite(
+      Extract.pipeline(spark.read.parquet(s"$tmp/in")),
+      TableIO.dataDir(s"$tmp/table", "snap-00001"), manifest, nBuckets = 8)
+    graft.scale.Scale.recordBucket(spark, manifest, 0, 1000L)
+    Seq(1, 2).foreach { _ =>
+      intercept[IllegalStateException] {
+        ExtractJob.run(spark, s"$tmp/in", s"$tmp/table", nBuckets = 8, salts = 4, cpus = 4)
+      }
+      assert(TableIO.currentSnapshot(spark, s"$tmp/table") === None)
+    }
+  }
+
   test("zero-row corpus publishes a readable snapshot WITH the bucket column") {
     // the empty placeholder parquet must carry the `bucket` partition column
     // a committed bucketed write exposes via its bucket= dirs — otherwise a

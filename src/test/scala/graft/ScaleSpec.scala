@@ -3,8 +3,12 @@ package graft
 import graft.core.Transcripts
 import graft.extract.Extract
 import graft.scale.Scale
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 import java.nio.file.Files
 
 /** FIXTURES.md families 9 (resume/lineage) and 4 (skew): idempotent resume
@@ -144,16 +148,16 @@ class ScaleSpec extends AnyFunSuite {
   test("measured fan-out: an unskewed corpus writes one file per non-empty bucket") {
     val tmp = Files.createTempDirectory("graft_fanout").toString
     val result = Extract.pipeline(Transcripts.synthetic(spark, 2000, 10).drop("doc_text"))
-    val n1 = Scale.resumableWrite(result, s"$tmp/plain", s"$tmp/man1", nBuckets = 8)
+    val n1 = Scale.resumableWrite(result, s"$tmp/plain", s"$tmp/man1")
     // coalescing off, as in the salted-write test: each bucket must still
-    // reach exactly one writer task because no bucket exceeds its share
+    // reach exactly one writer task, because with 64 buckets over 4 writer
+    // tasks no bucket is hot
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     val n2 =
-      try Scale.resumableWrite(result, s"$tmp/salted", s"$tmp/man2",
-        nBuckets = 8, salts = 8)
+      try Scale.resumableWrite(result, s"$tmp/salted", s"$tmp/man2", salts = 8)
       finally spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     assert(n1 === n2)
-    val nonEmpty = result.select(Scale.bucketCol(8)).distinct().count()
+    val nonEmpty = result.select(Scale.bucketCol()).distinct().count()
     val files = filesPerBucket(s"$tmp/salted")
     assert(files.size === nonEmpty)
     assert(files.values.forall(_.size == 1),
@@ -181,6 +185,64 @@ class ScaleSpec extends AnyFunSuite {
         assert(keys === keys.sorted, s"salts=$salts: ${f.getName} is not sorted")
       }
     }
+  }
+
+  test("a hot bucket spreads over the writer tasks, a cold one keeps one writer") {
+    // conversation 0 holds a quarter of the corpus, so its bucket holds more
+    // than an even share of the 4 writer tasks' rows; every other bucket
+    // holds under 2 %
+    val tmp = Files.createTempDirectory("graft_hot").toString
+    val result = Extract.pipeline(
+      Transcripts.synthetic(spark, 4000, 10, skewFactor = 100).drop("doc_text"))
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    val n =
+      try Scale.resumableWrite(result, s"$tmp/out", s"$tmp/man", salts = 16)
+      finally spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    assert(n === 4000)
+    val hot = result.filter(col("conv_id") === "c00000000000000")
+      .select(Scale.bucketCol()).distinct().collect().map(r => s"bucket=${r.getInt(0)}")
+    val files = filesPerBucket(s"$tmp/out")
+    assert(files(hot.head).size === 4, s"hot bucket files: ${files(hot.head).size}")
+    assert((files - hot.head).values.forall(_.size == 1))
+    // rows per writer task (the part number of its files): the hot bucket's
+    // 16 salt keys land on every task, so none holds much over a quarter
+    val perTask = files.values.flatten.toSeq
+      .groupBy(_.getName.split("-")(1))
+      .map { case (_, fs) => fs.map(f => spark.read.parquet(f.getPath).count()).sum }
+    assert(perTask.size === 4)
+    assert(perTask.max < 0.35 * n, s"rows per writer task: $perTask")
+  }
+
+  test("pre-pass counts reach the manifest only when keyFrame is the written rows") {
+    val tmp = Files.createTempDirectory("graft_keyframe").toString
+    val result = Extract.pipeline(Transcripts.synthetic(spark, 2000, 10).drop("doc_text"))
+    val observed = result.observe(
+      org.apache.spark.sql.Observation("keyframe"), count(lit(1)).as("rows"))
+    val reads = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "collect") reads.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val (exact, other) =
+      try {
+        val exact = Scale.resumableWrite(observed, s"$tmp/exact", s"$tmp/man1",
+          nBuckets = 8, salts = 4, keyFrame = Some(result))
+        // counts of other rows size the fan-out but never reach the manifest
+        val other = Scale.resumableWrite(observed, s"$tmp/other", s"$tmp/man2",
+          nBuckets = 8, salts = 4, keyFrame = Some(result.filter(col("turn_idx") < 5)))
+        spark.range(7).collect() // the listener bus delivers in order
+        eventually(timeout(30.seconds)) {
+          assert(reads.toArray.exists(_.toString.contains("Range (0, 7")))
+        }
+        (exact, other)
+      } finally spark.listenerManager.unregister(listener)
+    assert(exact === 2000)
+    assert(other === 2000)
+    val plans = reads.toArray.map(_.toString)
+    assert(!plans.exists(_.contains(s"$tmp/exact")), "exact counts were read back")
+    assert(plans.exists(_.contains(s"$tmp/other")), "other rows' counts were not read back")
   }
 
   test("salted repartition spreads a skewed conversation across partitions") {
