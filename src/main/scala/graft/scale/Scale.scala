@@ -31,28 +31,42 @@ object Scale {
   def saltedRepartition(df: DataFrame, partitions: Int, salts: Int = 16): DataFrame =
     df.repartition(partitions, col("conv_id"), pmod(col("turn_idx"), lit(salts)))
 
-  /** Session defaults for the engine: AQE on (coalesce + skew-join), sane
-    * local shuffle parallelism. */
+  /** Session defaults for a local master: [[defaults]], `cpus` shuffle
+    * partitions, and file listing in the driver. A directory with more
+    * leaf dirs than `spark.sql.sources.parallelPartitionDiscovery.threshold`
+    * (32) is otherwise listed by a Spark job with one task per dir — on a
+    * local master, in the same JVM, so the job only adds its scheduling
+    * cost: reading a 64-bucket staged table back started a 64-task job. */
   def configure(b: SparkSession.Builder, cpus: Int): SparkSession.Builder =
     defaults(b).config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue.toString)
 
+  /** Defaults for every session, local or cluster: AQE on (coalesce +
+    * skew-join), UTC, no UI, and [[NioLocalFileSystem]] for `file:`. */
   private def defaults(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
 
   /** Session for a spark-submit job. `SPARK_MASTER` picks the master
     * (default local[cpus]) and `SPARK_GRAFT_CPUS` the shuffle parallelism.
-    * Unset, a local run takes the host's processor count, while a cluster
-    * run keeps the cluster's own `spark.sql.shuffle.partitions`: the
-    * driver's cores say nothing about the executors'. */
+    * Unset, a local run takes the host's processor count and [[configure]]
+    * (driver-side listing). A cluster run gets [[defaults]] only: it keeps
+    * Spark's distributed listing, whose tasks run on the executors, and,
+    * without `SPARK_GRAFT_CPUS`, the cluster's own
+    * `spark.sql.shuffle.partitions`, since the driver's cores say nothing
+    * about the executors'. */
   def jobSession(appName: String): SparkSession = {
     val b = SparkSession.builder().appName(appName)
     val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     sys.env.get("SPARK_MASTER") match {
-      case Some(master) => cpus.fold(defaults(b))(configure(b, _)).master(master).getOrCreate()
+      case Some(master) =>
+        val d = defaults(b)
+        cpus.fold(d)(n => d.config("spark.sql.shuffle.partitions", n.toString))
+          .master(master).getOrCreate()
       case None =>
         val n = cpus.getOrElse(Runtime.getRuntime.availableProcessors)
         configure(b, n).master(s"local[$n]").getOrCreate()

@@ -1,10 +1,11 @@
 package graft.tools
+import graft.scale.Scale
 import org.apache.spark.sql.SparkSession
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val cpus = Runtime.getRuntime.availableProcessors
+    val spark = Scale.configure(SparkSession.builder(), cpus)
+      .master(s"local[$cpus]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val df = graft.SparkEntry.entry(spark)
     println(s"[entry-smoke] rows=${df.count()} cols=${df.columns.mkString(",")}")

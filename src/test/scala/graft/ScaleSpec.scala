@@ -2,7 +2,10 @@ package graft
 
 import graft.core.Transcripts
 import graft.extract.Extract
-import graft.scale.Scale
+import graft.scale.{Scale, TableIO}
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -10,6 +13,7 @@ import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.SpanSugar._
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** FIXTURES.md families 9 (resume/lineage) and 4 (skew): idempotent resume
   * under partial failure, and salting bounds on skewed conversations. */
@@ -243,6 +247,67 @@ class ScaleSpec extends AnyFunSuite {
     val plans = reads.toArray.map(_.toString)
     assert(!plans.exists(_.contains(s"$tmp/exact")), "exact counts were read back")
     assert(plans.exists(_.contains(s"$tmp/other")), "other rows' counts were not read back")
+  }
+
+  /** Command lines of the OS processes started while `body` runs, from an
+    * in-process JFR recording of `jdk.ProcessStart`. */
+  private def processesStarted(body: => Unit): Seq[String] = {
+    val rec = new Recording()
+    val jfr = Files.createTempFile("graft_forks", ".jfr")
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      try body finally rec.stop()
+      rec.dump(jfr)
+      RecordingFile.readAllEvents(jfr).asScala.map(_.getString("command")).toSeq
+    } finally { rec.close(); Files.deleteIfExists(jfr) }
+  }
+
+  test("a staged boundary forks no chmod: 64-bucket write and publish") {
+    val table = Files.createTempDirectory("graft_forks").toString
+    val result = Extract.pipeline(Transcripts.synthetic(spark, 2000, 10).drop("doc_text"))
+    val snap = TableIO.nextSnapshotName(spark, table)
+    val started = processesStarted {
+      Scale.resumableWrite(result, TableIO.dataDir(table, snap), s"$table/$snap/manifest")
+      TableIO.publish(spark, table, snap)
+    }
+    assert(TableIO.readTable(spark, table).count() === 2000)
+    val chmods = started.filter(_.split("\\s+").head.endsWith("chmod"))
+    assert(chmods.isEmpty, s"${chmods.size} chmod processes, e.g. ${chmods.take(3)}")
+  }
+
+  test("reading a 64-bucket staged table back lists it in the driver, not in a job") {
+    val tmp = Files.createTempDirectory("graft_listing").toString
+    val result = Extract.pipeline(Transcripts.synthetic(spark, 2000, 10).drop("doc_text"))
+    Scale.resumableWrite(result, s"$tmp/out", s"$tmp/man")
+    // more leaf dirs than Spark's default parallel-listing threshold (32)
+    assert(filesPerBucket(s"$tmp/out").size > 32)
+    // (job group, description, tasks) of every job started
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Int)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add((e.properties.getProperty("spark.jobGroup.id"),
+          e.properties.getProperty("spark.job.description"), e.stageInfos.map(_.numTasks).sum))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("listing-guard", "read back")
+      try spark.read.parquet(s"$tmp/out") finally sc.clearJobGroup()
+      // the listener bus delivers in order: once this job is seen, every
+      // job the read started has been seen too
+      sc.setJobGroup("listing-guard-end", "marker")
+      try spark.range(1).collect() finally sc.clearJobGroup()
+      eventually(timeout(30.seconds)) {
+        assert(jobs.asScala.exists(_._1 == "listing-guard-end"))
+      }
+    } finally sc.removeSparkListener(listener)
+    // what may remain is parquet's schema inference: one task reading one
+    // file footer
+    val read = jobs.asScala.filter(_._1 == "listing-guard").toSeq
+    assert(read.map(_._3).sum <= 1, s"jobs started by the read: $read")
+    assert(!read.exists(j => Option(j._2).exists(_.startsWith("Listing leaf files"))),
+      s"jobs started by the read: $read")
   }
 
   test("salted repartition spreads a skewed conversation across partitions") {

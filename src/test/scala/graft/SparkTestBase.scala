@@ -1,17 +1,14 @@
 package graft
 
+import graft.scale.Scale
 import org.apache.spark.sql.SparkSession
 
-/** One SparkSession shared by every suite in the forked test JVM. */
+/** One SparkSession shared by every suite in the forked test JVM, built
+  * with the jobs' own session defaults. */
 object SparkTestBase {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = Scale.configure(SparkSession.builder().appName("graft-test"), 4)
       .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
