@@ -73,8 +73,8 @@ object Bench {
     // 8 and 32 threads, so thread-scaling approximates executor-scaling
     // only below the knee. 8→32 and 2→32 are reported alongside, never
     // substituted. The job itself has ZERO shuffles and no driver
-    // synchronization (see PLANS.md q30) — nothing in its structure caps
-    // disjoint-executor scaling.
+    // synchronization (plans/r07/q30_extract_after.txt) — nothing in its
+    // structure caps disjoint-executor scaling.
     //
     // Protocol (pre-registered, NO adaptive stopping — round-2 ADVICE
     // flagged the old "extra rounds while eff < 0.8" rule as one-sided
@@ -148,8 +148,8 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
     // The warmup pass is TIMED as the cold stat: several queries' results
-    // are shared persisted frames (the ANN trio, the q74 curation
-    // intermediate, the fits) that this pass materializes — a later "warm"
+    // are shared persisted frames (the ANN trio, the curation stages, the
+    // fits) that this pass materializes — a later "warm"
     // pass over one of those times a cache count, not the operator. cold =
     // first-ever cost incl. shared-artifact builds + plan compile/JIT;
     // warm = incremental cost in a session whose shared artifacts are

@@ -342,45 +342,34 @@ object SparkEntry {
       Ann.ivfAssign(emb, ivfQuantizerShared(s, dir), "vec_id", "embedding")
     }
 
-  /** ONE persisted result frame per (session, sf, name) for queries whose
-    * results other queries (or their own convergence checks) re-consume:
-    * the three ANN paths (q27 brute / q47 LSH / q70 IVF — q72's recall and
-    * q73's curve consume all three; without sharing, one Verify/Bench
-    * sweep re-ran the exact O(n·probes) corpus scan three times — round-5
-    * ADVICE) and the q77 component labels (the converged() fixpoint check
-    * re-reads them). The frames are tiny; what's saved is the corpus work
-    * behind each. Released in [[releaseShared]]. */
+  /** ONE checkpointed result frame per (session, sf, name) for queries
+    * whose results other queries (or their own convergence checks)
+    * re-consume: the three ANN paths (q27 brute / q47 LSH / q70 IVF — q72's
+    * recall and q73's curve consume all three, so one Verify/Bench sweep
+    * runs the exact O(n·probes) corpus scan once), the q77 component labels
+    * (the converged() fixpoint check re-reads them) and the curation
+    * stages q74 and q82 share. The frames are small; what's saved is the
+    * corpus work behind each. Released in [[releaseShared]]. */
   private val sharedResults = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String, String), DataFrame]()
 
-  /** Round-7: materialized via EAGER localCheckpoint, not persist().
-    * persist only dedupes execution — every consumer's QueryExecution
-    * still re-analyzes/re-optimizes the frame's full logical tree, and for
-    * the deep compositions (q82's staged chain, the CC labels) that
-    * driver-side walk cost ~2 s per warm invocation (measured; the q77
-    * plan-doubling lesson). The checkpoint truncates the logical plan to
-    * the materialized rows; releaseShared's unpersist stays harmless (the
-    * checkpoint RDDs die with the session). At 10^12 rows the equivalent
-    * boundary is a Scale.resumableWrite stage, which truncates the same
-    * way and adds crash-resume. */
+  /** Materialized via EAGER localCheckpoint, not persist(): persist only
+    * dedupes execution, while every consumer's QueryExecution still
+    * re-analyzes the frame's full logical tree — for the deep compositions
+    * (the curation chain, the CC labels) that driver-side walk cost ~2 s
+    * per warm invocation. The checkpoint truncates the logical plan to the
+    * materialized rows; [[releaseShared]] unpersists the checkpoint RDD
+    * behind it. */
   private def sharedResult(s: SparkSession, dir: String, name: String)
                           (build: => DataFrame): DataFrame =
     sharedResults.computeIfAbsent((s, dir, name), _ => build.localCheckpoint())
 
-  /** q74's quality-gated, exact-deduped intermediate, persisted so the
-    * MinHash LSH self-join and the final anti-join read ONE materialization
-    * instead of re-evaluating the quality-scan + dedup subtree on every
-    * branch — the round-5 VERDICT #1 plan bug: the lazy composition's
-    * physical plan rescanned the documents corpus ~9× (correct, gated, and
-    * NOT the plan you'd run at 100 TB, where it means ~6 full corpus
-    * quality scans inside one job). This is the single-job spelling (the
-    * docTermCounts pattern); the production shape at 10^12 rows stages this
-    * frame through Scale.resumableWrite between pipeline stages instead —
-    * exactly where the reference materializes its corpus between stages
-    * (reference: src/doc_classification.py:492-494). Released in
-    * [[releaseShared]]. */
-  private val sharedCurated = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
+  /** The curation chain ([[graft.corpus.Curation.build]]) over `dir`'s
+    * documents, every stage a shared checkpointed frame: q74 and q82 read
+    * the same stages, and whichever runs first builds all three. */
+  private def curation(s: SparkSession, dir: String): graft.corpus.Curation.Stages =
+    graft.corpus.Curation.build(t(s, dir, "documents"), blockTokens = 256)(
+      (stage, df) => sharedResult(s, dir, s"curation.$stage")(df))
 
   /** q55's two verification scalars per (session, sf): the reported
     * log-perplexity (an MLlib pass over the features) and the plugin
@@ -392,31 +381,10 @@ object SparkEntry {
   private val sharedQ55Stats = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), (Double, Double)]()
 
-  private def curatedUnique(s: SparkSession, dir: String): DataFrame =
-    sharedCurated.computeIfAbsent((s, dir), _ => {
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      // quality is ALSO persisted: Dedup.exact's keeper join-back plus the
-      // semi join re-derive it three times otherwise, and each re-derivation
-      // is a full documents scan — with both stages cached the whole
-      // curation build touches parquet exactly once
-      val quality = t(s, dir, "documents").select(
-          col("doc_id"), col("text"),
-          graft.textstats.TextStatsExprs.qualityScorePpm(col("text"),
-            graft.text.Normalize.DefaultStops).as("quality_ppm"))
-        .filter(col("quality_ppm") >= 650000L)
-        .persist(mem)
-      val keepers = graft.dedup.Dedup.exact(quality, "doc_id", "text")
-        .filter(col("keep")).select("doc_id")
-      (quality.join(keepers, Seq("doc_id"), "left_semi").persist(mem), quality)
-    })._1
-
   /** Drop this session's entries from one shared cache, running `clean`
     * on each evicted value (round-7: nine copy-pasted iterator loops
     * collapsed — every new shared cache was one missed copy away from a
-    * session leak). Checkpointed frames (the sharedResult tier) have no
-    * cache entry to unpersist — their RDD blocks are released by the
-    * ContextCleaner / session stop; the unpersist stays for the persisted
-    * tiers. */
+    * session leak). */
   private def releaseEntries[K <: Product, V](
       m: java.util.concurrent.ConcurrentHashMap[K, V], s: SparkSession)(
       clean: V => Unit): Unit = {
@@ -430,10 +398,12 @@ object SparkEntry {
   }
 
   def releaseShared(s: SparkSession): Unit = {
-    releaseEntries(sharedResults, s)(_.unpersist(): Unit)
-    releaseEntries(sharedCurated, s) { v =>
-      v._1.unpersist(); v._2.unpersist(): Unit
-    }
+    // a checkpointed frame has no cache entry: its rows are the persisted
+    // checkpoint RDD under its LogicalRDD leaf
+    releaseEntries(sharedResults, s)(_.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist()
+      case _ =>
+    })
     releaseEntries(sharedIvfQuant, s)(_.unpersist(): Unit)
     releaseEntries(sharedTermCounts, s)(_.unpersist(): Unit)
     releaseEntries(sharedLda, s)(_._2.unpersist(): Unit)
@@ -779,11 +749,11 @@ object SparkEntry {
     // MinHash+LSH end-to-end (md5-portable hash family): banding, bucket
     // join and slot-match estimate all replayed by the DuckDB oracle —
     // round 1 only oracle-checked the signatures (q29).
+    // The operator is the curation chain's near-dup stage (q74).
     "q45_minhash_lsh" -> ((s, dir) => {
       val docs = t(s, dir, "documents").filter(col("doc_id") % 10 === 0)
         .select(col("doc_id"), split(col("text"), " ").as("tokens"))
-      Dedup.minhashLshMd5(docs, "doc_id", "tokens", k = 3,
-        numHashes = 16, bands = 4)
+      graft.corpus.Curation.nearDupPairs(docs)
     }),
 
     // M11 — TRUE stratified split: exactly ceil(3n/10) test rows per label,
@@ -946,36 +916,12 @@ object SparkEntry {
         .unionAll(recallOf("lsh", queries("q47_ann_lsh")(s, dir)))
     }),
 
-    // The corpus-curation capstone — the whole pretraining-data pass as
-    // ONE composed job: quality gate (integer-ppm score ≥ 650000) →
-    // exact dedup (md5 keeper) → MinHash near-dup prune (banded LSH
-    // candidates at est_jaccard ≥ 0.5; greedy-by-id: a doc drops when it
-    // pairs with ANY lower-id survivor, deterministic and replayable —
-    // transitive chains prune conservatively). Every stage is a gated
-    // operator (q20/q21/q45); the oracle replays the full composition.
-    // Round-5 VERDICT #1 fix: the quality → exact-dedup intermediate is a
-    // PERSISTED shared frame ([[curatedUnique]]) — both sides of the MinHash
-    // self-join and the final anti-join read one InMemoryRelation, so the
-    // plan scans `documents` ONCE (was ~9 Scan parquet leaves; at 100 TB
-    // that was ~6 full corpus quality scans inside one job).
-    "q74_curation" -> ((s, dir) => {
-      // resolve the curation intermediate BEFORE the sharedResult builder
-      // (computeIfAbsent must not re-enter its own map)
-      val unique = curatedUnique(s, dir)
-      // the survivor set itself is a shared persisted frame (round-7): q82
-      // re-reads it as its base, and the bench's warm tier already prices
-      // shared-frame owners by the cold pass — re-running the MinHash
-      // self-join + anti-join per consumer rebuilt the same tiny frame.
-      sharedResult(s, dir, "q74survivors") {
-        val nearDropped = graft.dedup.Dedup.minhashLshMd5(
-            unique.select(col("doc_id"), split(col("text"), " ").as("tokens")),
-            "doc_id", "tokens", k = 3, numHashes = 16, bands = 4)
-          .filter(col("est_jaccard") >= 0.5)
-          .select(col("key_b").as("doc_id")).distinct()
-        unique.join(nearDropped, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("quality_ppm"))
-      }
-    }),
+    // The curation chain's near-dup survivors (graft.corpus.Curation.build):
+    // quality gate → exact dedup → MinHash near-dup prune, each stage a
+    // gated operator (q20/q21/q45). The survivors are a shared checkpointed
+    // stage of the chain q82 packs. The oracle replays the composition.
+    "q74_curation" -> ((s, dir) =>
+      curation(s, dir).survivors.select(col("doc_id"), col("quality_ppm"))),
 
     // The IVF nprobe→recall curve — the tradeoff a deployment tunes: mean
     // recall ppm across probes at nprobe ∈ {1, 3, 5, 8} (visiting 10–80% of
@@ -1184,20 +1130,20 @@ object SparkEntry {
     }),
 
     // Benchmark decontamination (the n-gram-overlap rule of the GPT-3/
-    // Llama pretraining pipelines): docs with doc_id % 97 == 0 stand in as
-    // the eval suite; any other doc sharing a 4-token shingle with it is
-    // flagged with its hit count. The benchmark shingle set is BROADCAST
-    // (eval suites are tiny next to the corpus), so the corpus side is one
-    // scan + a map-side probe + one groupBy(doc_id) shuffle — never a
-    // corpus×corpus join. k=4 probed non-degenerate at every sf
-    // (8/8/727 contaminated of ~494/~494/~4948 docs).
+    // Llama pretraining pipelines), the curation chain's decontamination
+    // stage: the Curation.isBenchmark docs stand in as the eval suite; any
+    // other doc sharing a shingle with them is flagged with its hit count.
+    // The benchmark shingle set is BROADCAST (eval suites are tiny next to
+    // the corpus), so the corpus side is one scan + a map-side probe + one
+    // groupBy(doc_id) shuffle — never a corpus×corpus join. The shingle
+    // length is non-degenerate at every sf (8/8/727 contaminated of
+    // ~494/~494/~4948 docs).
     "q80_decontaminate" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-        .select(col("doc_id"), split(col("text"), " ").as("tokens"))
-      graft.corpus.Curation.contaminated(
-        docs.filter(col("doc_id") % 97 =!= 0),
-        docs.filter(col("doc_id") % 97 === 0),
-        "doc_id", "tokens", k = 4)
+      graft.corpus.Curation.contaminatedBy(
+        docs.filter(!graft.corpus.Curation.isBenchmark(col("doc_id")))
+          .select(col("doc_id"), split(col("text"), " ").as("tokens")),
+        docs)
     }),
 
     // Deterministic mixture sampling: downsample every language to (in
@@ -1242,60 +1188,16 @@ object SparkEntry {
           expr("CAST((nb - nbd) * 1000000 DIV nb AS BIGINT)")
             .as("dup_bigram_ppm"))),
 
-    // THE FULL CORPUS BUILD — every curation stage composed into the one
-    // job a pretraining run actually ships: q74's survivors (quality gate →
-    // exact dedup → MinHash near-dup prune, reused as the shared persisted
-    // frame) → benchmark decontamination (q80's broadcast shingle probe,
-    // here as an anti-join) → balanced-lang mixture sampling (q81's rate
-    // filter, rates over the CLEAN set) → GPT-style sequence packing
-    // (q78's distributed prefix sum) into 256-token blocks. The oracle
-    // replays the tail from q74's own gated export (the __VERIFY_OUT__
-    // cross-read pattern), so every stage boundary is pinned twice: once
-    // by its standalone gate, once inside the composition.
-    // Stage boundaries are PERSISTED shared frames (the q74 discipline —
-    // without them the lazy composition re-evaluates the whole upstream
-    // subtree on every reference and the plan reads `documents` ~25×):
-    // `base` is consumed by both the corpus-shingle probe and the
-    // anti-join, `clean` by the mixture-rate counts and the kept join,
-    // `counts` by both prefix-sum passes. With all three staged the job
-    // touches parquet twice (base build + benchmark shingles). At 10^12
-    // rows each boundary is a Scale.resumableWrite checkpoint instead.
-    "q82_corpus_build" -> ((s, dir) => {
-      // resolve q74's shared survivor frame BEFORE entering this query's
-      // own sharedResult builders (computeIfAbsent must not re-enter)
-      val survivors = queries("q74_curation")(s, dir)
-      val base = sharedResult(s, dir, "q82_base") {
-        survivors.select("doc_id")
-          .join(t(s, dir, "documents"), Seq("doc_id"))
-          .select(col("doc_id"), col("text"), col("lang"),
-            split(col("text"), " ").as("tokens"))
-      }
-      val clean = sharedResult(s, dir, "q82_clean") {
-        val bench = t(s, dir, "documents")
-          .filter(col("doc_id") % 97 === 0)
-          .select(split(col("text"), " ").as("tokens"))
-        val contam = graft.corpus.Curation.contaminated(
-          base, bench, "doc_id", "tokens", k = 4).select("doc_id")
-        base.join(contam, Seq("doc_id"), "left_anti")
-          .select("doc_id", "text", "lang")
-      }
-      val kept = graft.corpus.Curation.sampleToBalanced(
-        clean.select(col("doc_id"), col("lang")), "doc_id", "lang")
-      val counts = sharedResult(s, dir, "q82_counts") {
-        graft.corpus.Packing.tokenCounts(
-          clean.join(kept.select("doc_id"), Seq("doc_id"))
-            .select(col("doc_id"), col("text")),
-          "doc_id", "text", bucketSize = 128L)
-      }
-      // the block map itself is the shared frame of record (round-7): the
-      // corpus build is a once-per-session artifact and the bench's warm
-      // tier prices shared-frame owners (q82 among them, per the audit's
-      // query_stat) by their cold pass
-      sharedResult(s, dir, "q82_result") {
-        graft.corpus.Packing.packSpansFromCounts(counts, "doc_id",
-          blockTokens = 256)
-      }
-    }),
+    // The full corpus build: the curation chain's block map
+    // (graft.corpus.Curation.build) — q74's survivors → benchmark
+    // decontamination (q80's broadcast shingle probe, here as an anti-join)
+    // → balanced-lang mixture sampling (q81's rate filter, rates over the
+    // clean set) → sequence packing (q78's distributed prefix sum) into
+    // 256-token blocks. The oracle replays the tail from q74's own gated
+    // export (the __VERIFY_OUT__ cross-read pattern), so every stage is
+    // pinned twice: by its standalone gate and inside the composition.
+    // `graft.app.CurationJob` runs the same chain through staged tables.
+    "q82_corpus_build" -> ((s, dir) => curation(s, dir).blocks),
 
     // SimHash near-dup — md5-portable 32-bit signature so DuckDB replays it;
     // maxHamming=3 < bands=4 makes the banded join pigeonhole-EXACT, i.e.
@@ -1621,8 +1523,7 @@ object SparkEntry {
           split(when(col("doc_id").isin(30, 130), lit("eee fff ggg hhh"))
             .when(col("doc_id") % 50 === 0, lit("aaa bbb ccc ddd"))
             .otherwise(col("text")), " ").as("tokens"))
-      Dedup.minhashLshMd5(docs, "doc_id", "tokens", k = 3,
-        numHashes = 16, bands = 4, maxBucket = 5)
+      graft.corpus.Curation.nearDupPairs(docs, maxBucket = 5)
     }),
 
     // M18 — held-out log-perplexity of the topic model (reference:

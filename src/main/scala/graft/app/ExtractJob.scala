@@ -56,25 +56,10 @@ object ExtractJob {
     * (published snapshot, rows written). */
   def run(spark: SparkSession, in: String, table: String, nBuckets: Int,
           salts: Int, cpus: Int, waves: Int = 1): (String, Long) = {
-    // resume the newest UNPUBLISHED staging snapshot (a previous failed
-    // attempt), else open a fresh one; publish flips the pointer only after
-    // every bucket is present, so readers never see a partial table.
-    // Resume is parameter-checked: the staging snapshot records (nBuckets,
-    // salts), and a retry with DIFFERENT parameters starts a fresh snapshot
-    // instead of skipping "done" bucket ids computed under the old
-    // bucketing — which would publish a silently incomplete table
-    // (round-2 ADVICE).
-    val params = s"nBuckets=$nBuckets\nsalts=$salts"
-    val current = TableIO.currentSnapshot(spark, table)
-    val snap = TableIO.snapshots(spark, table)
-      // NUMERIC compare (string compare of snap names misorders once the
-      // %05d format widens — round-3 review finding)
-      .filter(s => current.forall(c => TableIO.snapNum(c) < TableIO.snapNum(s)))
-      .lastOption
-      .filter(s => TableIO.readSidecar(spark, table, s, "params")
-        .contains(params))
-      .getOrElse(TableIO.nextSnapshotName(spark, table))
-    TableIO.writeSidecar(spark, table, snap, "params", params)
+    // waves is not a parameter of the staging snapshot: it changes
+    // checkpoint granularity, never bucket identity, so a retry may resume
+    // the same snapshot at a different wave count.
+    val snap = TableIO.openStaging(spark, table, s"nBuckets=$nBuckets\nsalts=$salts")
     // NO upfront repartition: the kernel is per-turn embarrassingly
     // parallel and runs map-side inside the scan stage (size-balanced
     // splits), so the job's ONLY shuffle is the write's keyed repartition —
@@ -106,32 +91,14 @@ object ExtractJob {
       count(lit(1)).as("turns_out"),
       sum(when(col("text") === "", 1).otherwise(0)).as("empty_turns"),
       sum(length(col("text"))).as("chars_out")))
-    // waves is NOT in the params sidecar on purpose: it changes checkpoint
-    // granularity, never bucket identity, so a retry may resume the same
-    // staging snapshot at a different wave count safely.
     // the fan-out pre-pass counts the UNOBSERVED pipeline: it prunes to
     // conv_id, while the observed frame's CollectMetrics node would make
     // the count run the kernel (and feed the single-shot Observation)
     val written = Scale.resumableWrite(extracted,
       TableIO.dataDir(table, snap), s"$table/$snap/manifest", nBuckets, waves,
       salts, keyFrame = Some(pipeline))
-    // zero-row corpus: the bucketed write commits no partition dirs, and
-    // publishing a fileless data dir makes TableIO.readTable throw on
-    // schema inference forever after (the snapshotWrite path repairs this
-    // the same way — round-3/round-4 review findings). Write one
-    // schema-bearing empty parquet before publish.
-    // The placeholder's schema carries the `bucket` partition column a
-    // committed bucketed write exposes via its bucket= dirs — without it a
-    // zero-row snapshot's schema differs from every non-empty snapshot's,
-    // and a reader selecting `bucket` fails only on empty corpora
-    // (round-4 ADVICE).
-    if (!Scale.hasBucketData(spark, TableIO.dataDir(table, snap)))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        extracted.schema.add("bucket",
-          org.apache.spark.sql.types.IntegerType, nullable = false))
-        .repartition(1).write.mode("overwrite")
-        .parquet(TableIO.dataDir(table, snap))
+    TableIO.writeEmptyIfNoBuckets(spark, TableIO.dataDir(table, snap),
+      extracted.schema)
     // .filter(_.nonEmpty): a zero-row fresh run's keyed write launches zero
     // tasks, so the Observation completes with an EMPTY map (no metrics row
     // ever accumulated) — fall through to the post-hoc aggregation, which

@@ -1,17 +1,109 @@
 package graft.corpus
 
+import graft.dedup.Dedup
+import graft.text.Normalize
+import graft.textstats.TextStatsExprs
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Corpus-curation passes beyond dedup: benchmark decontamination and
-  * mixture sampling — the two remaining steps a pretraining-data pipeline
-  * runs between near-dup pruning (q74) and sequence packing (q78).
+/** The corpus-curation chain and its passes. [[build]] is the one spelling
+  * of the chain, with its constants:
   *
-  * Both are deterministic and integer/ppm-exact so the DuckDB gate can
-  * replay them bit-for-bit (the house discipline: no RNG, no float
-  * thresholds crossing engines).
+  *   quality gate → exact dedup → MinHash near-dup prune → benchmark
+  *   decontamination → balanced mixture sampling → sequence packing
+  *
+  * q74, q82 and `graft.app.CurationJob` all run it; they differ only in how
+  * a stage is materialized. Every pass is deterministic and
+  * integer/ppm-exact, so the DuckDB oracles replay it bit-for-bit (no RNG,
+  * no float thresholds crossing engines).
   */
 object Curation {
+
+  /** A document passes the quality gate at this integer-ppm score. */
+  private val QualityMinPpm = 650000L
+
+  /** Decontamination shingle length, in tokens. */
+  private val DecontamK = 4
+
+  /** What [[build]]'s callers read: its first and last stage. */
+  final case class Stages(survivors: DataFrame, blocks: DataFrame)
+
+  /** The curation chain over `docs` (doc_id, text, lang), packed into
+    * `blockTokens`-token blocks. `boundary(stage, frame)` materializes each
+    * stage and returns the frame later stages read; it is called in order
+    * with
+    *  - "survivors": (doc_id, text, lang, quality_ppm), the docs that pass
+    *    the quality gate, exact dedup and the near-dup prune;
+    *  - "clean": (doc_id, text, lang), the survivors minus the docs that
+    *    share a shingle with the benchmark set ([[isBenchmark]] docs of
+    *    `docs`);
+    *  - "blocks": (pack_id, doc_id, start_tok, end_tok), the block map of
+    *    the mixture-sampled clean docs.
+    *
+    * The chain persists the frames it reads more than once (the quality
+    * frame, the near-dup self-join input, the token counts) and releases
+    * them once the last boundary has returned, so a boundary must have run
+    * every job its frame needs by then. A boundary may return its frame
+    * unchanged: the next boundary's job then runs the stage too.
+    *
+    * The near-dup prune is greedy by id: a doc drops when it pairs with ANY
+    * lower-id doc at est_jaccard ≥ 0.5, so a transitive chain prunes
+    * conservatively. Mixture rates are counted over the clean set.
+    */
+  def build(docs: DataFrame, blockTokens: Int)(
+      boundary: (String, DataFrame) => DataFrame): Stages = {
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def hold(df: DataFrame): DataFrame = { held += df.persist(); df }
+    try {
+      val quality = hold(docs.select(col("doc_id"), col("text"), col("lang"),
+          TextStatsExprs.qualityScorePpm(col("text"), Normalize.DefaultStops)
+            .as("quality_ppm"))
+        .filter(col("quality_ppm") >= QualityMinPpm))
+      val keepers = Dedup.exact(quality, "doc_id", "text")
+        .filter(col("keep")).select("doc_id")
+      val unique = hold(quality.join(keepers, Seq("doc_id"), "left_semi"))
+      val nearDropped = nearDupPairs(tokenized(unique))
+        .filter(col("est_jaccard") >= 0.5)
+        .select(col("key_b").as("doc_id")).distinct()
+      val survivors = boundary("survivors",
+        unique.join(nearDropped, Seq("doc_id"), "left_anti"))
+      val contam = contaminatedBy(tokenized(survivors), docs).select("doc_id")
+      val clean = boundary("clean",
+        survivors.join(contam, Seq("doc_id"), "left_anti")
+          .select("doc_id", "text", "lang"))
+      val kept = sampleToBalanced(clean.select(col("doc_id"), col("lang")),
+        "doc_id", "lang")
+      val counts = hold(Packing.tokenCounts(
+        clean.join(kept.select("doc_id"), Seq("doc_id"))
+          .select(col("doc_id"), col("text")),
+        "doc_id", "text", bucketSize = 4096L))
+      val blocks = boundary("blocks",
+        Packing.packSpansFromCounts(counts, "doc_id", blockTokens))
+      Stages(survivors, blocks)
+    } finally held.reverseIterator.foreach(_.unpersist())
+  }
+
+  /** (doc_id, tokens): the whitespace tokens the near-dup and
+    * decontamination shingles are cut from. */
+  private def tokenized(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), split(col("text"), " ").as("tokens"))
+
+  /** The curation's near-dup candidate pairs over (doc_id, tokens):
+    * md5-portable MinHash LSH on 3-token shingles, 16 hashes in 4 bands
+    * ([[graft.dedup.Dedup.minhashLshMd5]]), with its hot-bucket cap. */
+  def nearDupPairs(docs: DataFrame, maxBucket: Long = 0): DataFrame =
+    Dedup.minhashLshMd5(docs, "doc_id", "tokens", k = 3, numHashes = 16,
+      bands = 4, maxBucket = maxBucket)
+
+  /** The evaluation-suite stand-in: documents with doc_id ≡ 0 (mod 97). */
+  def isBenchmark(docId: Column): Column = docId % 97 === 0
+
+  /** (doc_id, n_hits) for each `corpus` (doc_id, tokens) doc sharing a
+    * 4-token shingle with the [[isBenchmark]] docs of `docs` (doc_id,
+    * text) — [[contaminated]] with the curation's benchmark set and k. */
+  def contaminatedBy(corpus: DataFrame, docs: DataFrame): DataFrame =
+    contaminated(corpus, tokenized(docs.filter(isBenchmark(col("doc_id")))),
+      "doc_id", "tokens", DecontamK)
 
   /** Benchmark decontamination: flag corpus documents that share at least
     * one k-token shingle with an evaluation ("benchmark") set, so they can

@@ -39,13 +39,12 @@ object Packing {
 
   /** Pass 1 of the prefix sum: the narrow (key, n_tok, bucket) frame —
     * token count = whitespace tokens + 1 (the EOS separator appended after
-    * every doc). Exposed separately because [[packSpansFromCounts]]
-    * consumes it TWICE (bucket totals + placement): at 10^12 rows, stage
-    * this frame (Scale.resumableWrite — the q74 materialize-between-stages
-    * discipline) or persist it, so the tokenize projection doesn't run two
-    * full corpus scans inside one job (round-6 review finding; at the
-    * gated sfs the recompute is three tiny columns and not worth a cache
-    * entry). */
+    * every doc), bucket = key div `bucketSize`. The bucket width only sets
+    * how the prefix sum splits into passes: every width gives the same
+    * block map. [[packSpansFromCounts]] reads this frame twice (bucket
+    * totals + placement), so a caller over a large corpus persists or
+    * stages it between the two ([[Curation.build]] persists it); otherwise
+    * the tokenize projection runs two corpus scans in one job. */
   def tokenCounts(docs: DataFrame, key: String, textCol: String,
                   bucketSize: Long): DataFrame =
     docs.select(col(key),
@@ -54,8 +53,8 @@ object Packing {
       floor(col(key) / bucketSize).cast("long").as("bucket"))
 
   /** Map each document to its training blocks — convenience composition of
-    * [[tokenCounts]] → [[packSpansFromCounts]] (production stages the
-    * counts frame between the two, see [[tokenCounts]]).
+    * [[tokenCounts]] → [[packSpansFromCounts]], which reads the counts
+    * twice (see [[tokenCounts]]).
     *
     * Output: (pack_id, key, start_tok, end_tok) — global token span
     * [start_tok, end_tok) of the doc in the concatenated stream, one row

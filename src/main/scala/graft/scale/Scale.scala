@@ -3,6 +3,7 @@ package graft.scale
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, LogicalPlan}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 /** The scale module (SURVEY.md §7 item 8): conv_id hash bucketing, salted
   * repartition for skewed conversations, AQE config, and the checkpointed
@@ -21,6 +22,11 @@ object Scale {
 
   def bucketCol(nBuckets: Int = DefaultBuckets, keyCol: String = "conv_id") =
     pmod(xxhash64(col(keyCol)), lit(nBuckets.toLong)).cast("int").as("bucket")
+
+  /** The schema a [[resumableWrite]] of a frame with `schema` reads back
+    * with: its columns plus the `bucket` partition column. */
+  def bucketedSchema(schema: StructType): StructType =
+    schema.add("bucket", IntegerType, nullable = false)
 
   /** Salted repartition for skewed long conversations: per-turn stages are
     * embarrassingly parallel, so rows of one huge conversation may be spread
@@ -267,12 +273,11 @@ object Scale {
           .sortWithinPartitions("bucket", keyCol, orderCol)
           .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
           .partitionBy("bucket").parquet(outDir)
-        // read-back guard: a wave whose buckets are ALL empty commits no
-        // partition dir, and reading the then-fileless outDir throws a
-        // schema-inference error
+        // a wave whose buckets are ALL empty commits no partition dir:
+        // there is nothing to count
         val waveCounts = exact.getOrElse {
           if (!hasBucketData(spark, outDir)) Map.empty[Int, Long]
-          else spark.read.parquet(outDir)
+          else spark.read.schema(bucketedSchema(df.schema)).parquet(outDir)
             .filter(col("bucket").isin(waveBuckets.map(Int.box): _*))
             .groupBy("bucket").count().collect()
             .map(r => r.getInt(0) -> r.getLong(1)).toMap

@@ -86,6 +86,23 @@ object TableIO {
     f"snap-${maxN + 1}%05d"
   }
 
+  /** The staging snapshot a job writes into, with `params` recorded in its
+    * `params` sidecar: the newest snapshot newer than the published one
+    * when its sidecar equals `params` (a retry of a failed run resumes it),
+    * else a fresh one. A retry under different parameters never resumes:
+    * the bucket ids its manifests mark done belong to another bucketing,
+    * and skipping them would publish an incomplete table. */
+  def openStaging(spark: SparkSession, tableDir: String, params: String): String = {
+    val current = currentSnapshot(spark, tableDir)
+    val snap = snapshots(spark, tableDir)
+      .filter(s => current.forall(c => snapNum(c) < snapNum(s)))
+      .lastOption
+      .filter(s => readSidecar(spark, tableDir, s, "params").contains(params))
+      .getOrElse(nextSnapshotName(spark, tableDir))
+    writeSidecar(spark, tableDir, snap, "params", params)
+    snap
+  }
+
   /** Snapshot layout: payload under `<snap>/data` (bucket dirs or plain
     * parquet), job-private bookkeeping (e.g. a resume manifest) anywhere
     * else inside the snapshot dir. */
@@ -171,6 +188,18 @@ object TableIO {
     publish(spark, tableDir, next)
     next
   }
+
+  /** Make a bucket-partitioned data dir readable when its write had no
+    * rows: such a write commits no `bucket=` dir, and a dir without a data
+    * file cannot be read back or published. Writes one empty parquet file
+    * with the written frame's `schema` plus the `bucket` column
+    * ([[Scale.bucketedSchema]]), the columns every non-empty table has. */
+  def writeEmptyIfNoBuckets(spark: SparkSession, dir: String,
+                            schema: org.apache.spark.sql.types.StructType): Unit =
+    if (!Scale.hasBucketData(spark, dir))
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          Scale.bucketedSchema(schema))
+        .repartition(1).write.mode("overwrite").parquet(dir)
 
   /** Any .parquet data file under `dir` (recursive, short-circuits). */
   private def hasDataFiles(spark: SparkSession, dir: String): Boolean = {

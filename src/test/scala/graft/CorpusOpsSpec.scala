@@ -48,6 +48,20 @@ class CorpusOpsSpec extends AnyFunSuite {
     assert(dist.toSeq.map(_._2).sum >= cum) // straddlers double-count
   }
 
+  test("packSpansFromCounts: bucketSize 128 and 4096 give one block map over sf0.001") {
+    // the bucket width only splits the prefix sum into passes, so the
+    // curation chain can fix one width for every caller
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select("doc_id", "text")
+    def blocks(bucketSize: Long) = Packing.packSpansFromCounts(
+        Packing.tokenCounts(docs, "doc_id", "text", bucketSize), "doc_id", 256)
+      .as[(Long, Long, Long, Long)].collect()
+    val narrow = blocks(128L)
+    assert(narrow.length > docs.count()) // blocks straddle docs
+    assert(narrow.toSet.size === narrow.length)
+    assert(narrow.toSet === blocks(4096L).toSet)
+  }
+
   test("redactPii: rules fire in order with per-rule counts") {
     val rows = Seq(
       (0L, "mail bob.smith+x@corp.example.org and carol@ex.io now"),

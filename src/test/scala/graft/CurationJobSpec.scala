@@ -3,12 +3,13 @@ package graft
 import graft.app.CurationJob
 import graft.corpus.{Curation, Packing}
 import graft.dedup.Dedup
+import graft.scale.{Scale, TableIO}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The production corpus-build main: staged-through-parquet boundaries must
-  * land on exactly the single-job composition's result (q82's semantics),
-  * and the stage manifest must make the build resumable. */
+/** The corpus-build job: its staged stages must land on exactly the
+  * composed chain's result and on q82's, the stage manifests must make the
+  * build resumable, and an empty stage must still publish. */
 class CurationJobSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
 
@@ -64,5 +65,63 @@ class CurationJobSpec extends AnyFunSuite {
     // instead of recompute) — every bucket of stage_clean is recorded
     assert(graft.scale.Scale.completedBuckets(spark,
       s"$table/$snap/stage_clean/manifest").size === 8)
+  }
+
+  private val blockCols = Seq("pack_id", "doc_id", "start_tok", "end_tok")
+
+  private def published(table: String) =
+    TableIO.readTable(spark, table).select(blockCols.map(col): _*)
+      .collect().map(_.toSeq).toSet
+
+  test("the job publishes q82_corpus_build's block map at sf0.01") {
+    val sf = "/root/testdata/sf0.01"
+    val table = java.nio.file.Files.createTempDirectory("curation_job_q82")
+      .toString + "/corpus_blocks"
+    val (_, written) = CurationJob.run(spark, s"$sf/documents.parquet", table,
+      nBuckets = 8)
+    val got = published(table)
+    assert(got.size.toLong === written)
+    val q82 = SparkEntry.queries("q82_corpus_build")(spark, sf)
+      .select(blockCols.map(col): _*).collect().map(_.toSeq).toSet
+    assert(got === q82)
+  }
+
+  test("no doc passing the quality gate publishes an empty snapshot with the bucket column") {
+    // every stage is empty: each staged write commits no bucket dir, so
+    // reading a stage back must not depend on inferring a schema from files
+    val work = java.nio.file.Files.createTempDirectory("curation_job_empty").toString
+    val in = s"$work/documents.parquet"
+    spark.read.parquet(s"$srcDir/documents.parquet")
+      .withColumn("text", lit("1.2.3.4.5.6.7.8")) // score ~5000 ppm
+      .write.parquet(in)
+    val table = s"$work/corpus_blocks"
+    Seq("snap-00001", "snap-00002").foreach { want =>
+      val (snap, written) = CurationJob.run(spark, in, table, nBuckets = 8)
+      assert(snap === want)
+      assert(written === 0L)
+      assert(TableIO.currentSnapshot(spark, table) === Some(snap))
+      assert(TableIO.readTable(spark, table)
+        .select((blockCols :+ "bucket").map(col): _*).count() === 0)
+    }
+  }
+
+  test("a retry with a different nBuckets starts a fresh snapshot") {
+    // a failed attempt at nBuckets = 8 left its params and a partial
+    // stage_clean manifest in an unpublished snapshot; its done bucket ids
+    // mean nothing under 16 buckets
+    val table = java.nio.file.Files.createTempDirectory("curation_job_params")
+      .toString + "/corpus_blocks"
+    TableIO.writeSidecar(spark, table, "snap-00001", "params",
+      "nBuckets=8\nblockTokens=256")
+    Scale.recordBuckets(spark, s"$table/snap-00001/stage_clean/manifest",
+      Seq(0 -> 10L, 1 -> 10L))
+    val (snap, written) = CurationJob.run(spark,
+      s"$srcDir/documents.parquet", table, nBuckets = 16)
+    assert(snap === "snap-00002")
+    assert(Scale.completedBuckets(spark,
+      s"$table/snap-00002/stage_clean/manifest").size === 16)
+    val got = published(table)
+    assert(got.size.toLong === written)
+    assert(got === composedExpected(srcDir).collect().map(_.toSeq).toSet)
   }
 }

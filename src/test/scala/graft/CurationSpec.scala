@@ -135,4 +135,15 @@ class CurationSpec extends AnyFunSuite {
     out.foreach { case (p, _, st, en) =>
       assert(p >= st / 256 && p <= (en - 1) / 256) }
   }
+
+  test("releaseShared frees the checkpointed frames q74 and q82 leave") {
+    val sc = spark.sparkContext
+    SparkEntry.releaseShared(spark)
+    val before = sc.getPersistentRDDs.keySet
+    run().collect()
+    SparkEntry.queries("q82_corpus_build")(spark, dir).collect()
+    assert((sc.getPersistentRDDs.keySet -- before).nonEmpty)
+    SparkEntry.releaseShared(spark)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+  }
 }
