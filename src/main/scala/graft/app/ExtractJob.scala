@@ -65,8 +65,6 @@ object ExtractJob {
     // splits), so the job's ONLY shuffle is the write's keyed repartition —
     // which is where conversation skew actually bites and where
     // resumableWrite's measured fan-out handles it.
-    // (`Scale.saltedRepartition` remains the tool for per-CONVERSATION
-    // compute stages, where co-location with spread is the point.)
     val turns = spark.read.parquet(in)
     // Observation (not a bare .observe name): the metrics are retrieved
     // after the write action and printed — the bare-name spelling computed

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.scale.Scale
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -370,26 +371,30 @@ object Dedup {
     *
     * Input: `nodes` carrying `key`; `edges` carrying (src, dst) pairs (one
     * direction suffices — symmetrized here). Output: (key, component)
-    * where component = min key reachable within `iters` hops. */
-  /** Round-7 note — each round is CHECKPOINTED (eager localCheckpoint, so
-    * the logical plan truncates to the materialized round): [[ccRound]]
-    * references the incoming label frame twice (neighbour-min derivation +
-    * the carry join), so the lazy spelling doubled the LOGICAL PLAN per
-    * round — 2^iters copies of round 0 in the final tree. persist() does
-    * NOT fix that: the cache only dedupes execution, while analysis/
-    * optimization/canonicalization still walk the exponential tree every
-    * round (measured: persist made the 6-round q77 chain SLOWER). Plan
-    * truncation per round is the standard production shape for iterative
-    * graph passes (GraphX does the same internally); at 10^12 edges swap
-    * the localCheckpoint for a Scale.resumableWrite stage boundary, which
-    * adds crash-resume on top of the same truncation. */
+    * where component = min key reachable within `iters` hops.
+    *
+    * Execution is eager: each round is materialized by an eager
+    * `localCheckpoint` before the call returns, so the logical plan
+    * truncates to the materialized round. [[ccRound]] references the
+    * incoming label frame twice (neighbour-min derivation + the carry
+    * join), so the lazy spelling doubles the logical plan per round —
+    * 2^iters copies of round 0 in the final tree — and persist() does not
+    * help, since analysis still walks the whole tree. Once round r is
+    * materialized, round r−1's checkpoint is freed, so the call leaves
+    * exactly one persisted RDD: the returned labels, which the caller owns
+    * (free it with [[graft.scale.Scale.unpersistCheckpoint]]). The caller's
+    * `nodes` and `edges` are never unpersisted. At 10^12 edges swap the
+    * localCheckpoint for a Scale.resumableWrite stage boundary, which adds
+    * crash-resume on top of the same truncation. */
   def connectedComponents(nodes: DataFrame, key: String, edges: DataFrame,
                           iters: Int): DataFrame = {
     val sym = edges.select(col("src"), col("dst"))
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
     var labels = nodes.select(col(key), col(key).as("component"))
-    (1 to iters).foreach { _ =>
-      labels = ccRound(labels, key, sym).localCheckpoint()
+    (1 to iters).foreach { round =>
+      val next = ccRound(labels, key, sym).localCheckpoint()
+      if (round > 1) Scale.unpersistCheckpoint(labels)
+      labels = next
     }
     labels
   }

@@ -5,10 +5,11 @@ import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, LogicalPlan}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructType}
 
-/** The scale module (SURVEY.md §7 item 8): conv_id hash bucketing, salted
-  * repartition for skewed conversations, AQE config, and the checkpointed
-  * per-partition lineage manifest that makes a failed 10^12-turn run
-  * resumable without recomputing completed buckets (north_rule).
+/** The scale module (SURVEY.md §7 item 8): conv_id hash bucketing, a keyed
+  * write that salts only measured-hot buckets, AQE config, and the
+  * checkpointed per-partition lineage manifest that makes a failed
+  * 10^12-turn run resumable without recomputing completed buckets
+  * (north_rule).
   *
   * The reference has no equivalent — a failed run restarts from scratch and
   * "resume" is a human moving files (reference: src/doc_classification.py:75-92).
@@ -28,14 +29,14 @@ object Scale {
   def bucketedSchema(schema: StructType): StructType =
     schema.add("bucket", IntegerType, nullable = false)
 
-  /** Salted repartition for skewed long conversations: per-turn stages are
-    * embarrassingly parallel, so rows of one huge conversation may be spread
-    * across `salts` partitions — `repartition(hash(conv_id, salt))` with
-    * salt = turn_idx mod salts. Downstream keyed writes re-group by bucket;
-    * stable ordering is restored by sorting on (conv_id, turn_idx) within
-    * the write, never assumed from partition order (SURVEY.md §1). */
-  def saltedRepartition(df: DataFrame, partitions: Int, salts: Int = 16): DataFrame =
-    df.repartition(partitions, col("conv_id"), pmod(col("turn_idx"), lit(salts)))
+  /** Free the rows behind a checkpointed frame. A `localCheckpoint`ed
+    * frame has no cache entry, so `unpersist()` on it is a no-op: its rows
+    * are the persisted RDD under its `LogicalRDD` leaf. */
+  def unpersistCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist()
+      case _ =>
+    }
 
   /** Session defaults for a local master: [[defaults]], `cpus` shuffle
     * partitions, and file listing in the driver. A directory with more

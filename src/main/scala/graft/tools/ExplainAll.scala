@@ -2,13 +2,12 @@ package graft.tools
 
 import graft.SparkEntry
 import graft.scale.Scale
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
-/** Round-7 plan snapshotter: dumps `.explain("formatted")` for EVERY declared
+/** Plan snapshotter: dumps `.explain("formatted")` for EVERY declared
   * query to `plans/<tag>/<query>_<suffix>.txt` — the before/after plan
-  * artifacts the optimization round commits (the judge checks plan claims
-  * against these files).
+  * artifacts an optimization change commits, against which its plan claims
+  * are checked.
   *
   * usage: ExplainAll <suffix> [sfDir] [tag] [onlyQueryCsv]
   *   suffix — "before" | "after"
@@ -22,8 +21,7 @@ object ExplainAll {
     val tag = if (args.length > 2) args(2) else "r07"
     val only: Option[Set[String]] =
       if (args.length > 3) Some(args(3).split(",").toSet) else None
-    val spark = Scale.configure(SparkSession.builder(), 8)
-      .master("local[8]").getOrCreate()
+    val spark = Scale.jobSession("graft-explain-all")
     spark.sparkContext.setLogLevel("ERROR")
     val outDir = Paths.get(s"plans/$tag")
     Files.createDirectories(outDir)

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.core.Transcripts
 import graft.scale.Scale
-import org.apache.spark.sql.SparkSession
 
 /** CLI: materialize a deterministic synthetic transcript corpus as parquet.
   * usage: GenCorpus <outPath> <nTurns> [turnsPerConv] [skewFactor] */
@@ -12,12 +11,10 @@ object GenCorpus {
     val out = args(0); val n = args(1).toLong
     val tpc = if (args.length > 2) args(2).toInt else 20
     val skew = if (args.length > 3) args(3).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = Scale.configure(SparkSession.builder(), cpus)
-      .master(s"local[$cpus]").getOrCreate()
+    val spark = Scale.jobSession("graft-gen-corpus")
     spark.sparkContext.setLogLevel("WARN")
     Transcripts.synthetic(spark, n, tpc, skew).drop("doc_text")
-      .repartition(math.max(cpus * 2, 16))
+      .repartition(math.max(spark.sparkContext.defaultParallelism * 2, 16))
       .write.mode("overwrite").parquet(out)
     println(s"[gen-corpus] wrote $n turns to $out")
     spark.stop()

@@ -138,12 +138,24 @@ class CurationSpec extends AnyFunSuite {
 
   test("releaseShared frees the checkpointed frames q74 and q82 leave") {
     val sc = spark.sparkContext
-    SparkEntry.releaseShared(spark)
-    val before = sc.getPersistentRDDs.keySet
-    run().collect()
-    SparkEntry.queries("q82_corpus_build")(spark, dir).collect()
-    assert((sc.getPersistentRDDs.keySet -- before).nonEmpty)
-    SparkEntry.releaseShared(spark)
-    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+    // groups of queries that share persisted or checkpointed artifacts
+    val groups = Seq(
+      Seq("q74_curation", "q82_corpus_build"),
+      // the shared dictionary is an eager checkpoint under all of these
+      Seq("q14_vocab", "q15_bow", "q16_tfidf", "q44_lsa", "q49_pca",
+        "q52_lda", "q55_lda_perplexity", "q56_topic_corr"),
+      // the component labels are connectedComponents' own last round
+      Seq("q77_dup_components"))
+    groups.foreach { group =>
+      withClue(group.mkString("after ", ", ", ": ")) {
+        SparkEntry.releaseShared(spark)
+        val before = sc.getPersistentRDDs.keySet
+        group.foreach(q => SparkEntry.queries(q)(spark, dir).collect())
+        assert((sc.getPersistentRDDs.keySet -- before).nonEmpty)
+        SparkEntry.releaseShared(spark)
+        val left = sc.getPersistentRDDs -- before
+        assert(left.isEmpty, left.values.mkString("still persisted: ", ", ", ""))
+      }
+    }
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.dedup.Dedup
+import graft.scale.Scale
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -223,8 +224,15 @@ class DedupSpec extends AnyFunSuite {
       .toDF("doc_id")
     val edges = Seq((2L, 1L), (3L, 2L), (4L, 3L), (10L, 11L), (11L, 12L),
       (10L, 12L), (20L, 21L)).toDF("src", "dst")
-    val got = Dedup.connectedComponents(nodes, "doc_id", edges, iters = 3)
-      .as[(Long, Long)].collect().toMap
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val labels = Dedup.connectedComponents(nodes, "doc_id", edges, iters = 3)
+    // every round but the last is freed before the call returns
+    val kept = sc.getPersistentRDDs -- before
+    assert(kept.size <= 1, s"rounds left persisted: ${kept.values.mkString(", ")}")
+    val got = labels.as[(Long, Long)].collect().toMap
+    Scale.unpersistCheckpoint(labels)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
     val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L,
       30L -> 30L, 31L -> 31L)

@@ -309,16 +309,4 @@ class ScaleSpec extends AnyFunSuite {
     assert(!read.exists(j => Option(j._2).exists(_.startsWith("Listing leaf files"))),
       s"jobs started by the read: $read")
   }
-
-  test("salted repartition spreads a skewed conversation across partitions") {
-    val skewed = Transcripts.synthetic(spark, 2000, 10, skewFactor = 100)
-      .drop("doc_text")
-    val salted = Scale.saltedRepartition(skewed, partitions = 8, salts = 8)
-    val sizes = salted.groupBy(spark_partition_id().as("pid"))
-      .count().select("count").collect().map(_.getLong(0))
-    val ratio = sizes.max.toDouble / (sizes.sum.toDouble / sizes.length)
-    // conversation 0 holds half the corpus; unsalted hash partitioning would
-    // put ≥50% of rows in one partition (ratio ≥ 4 of 8 partitions).
-    assert(ratio < 2.5, s"partition sizes too skewed: ${sizes.mkString(",")}")
-  }
 }

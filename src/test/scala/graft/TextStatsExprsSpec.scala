@@ -49,6 +49,23 @@ class TextStatsExprsSpec extends AnyFunSuite {
     }
   }
 
+  test("q19's shared tokenize counts what wsTokenCount counts") {
+    import spark.implicits._
+    val edges = Seq("\u0130" -> 1, "\t\t\n\n\t\r\n" -> 0,
+      "  lead and trail \t" -> 3, "" -> 0)
+    val texts = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select("text").union((edges.map(_._1) ++ cases).toDF("text"))
+    val counts = texts.select(col("text"),
+      TextStats.wsTokenCount(col("text")).as("ws"),
+      size(Normalize.tokenize(lower(col("text")))).as("q19")).collect()
+    assert(counts.length > edges.length + cases.length)
+    counts.foreach { r =>
+      assert(r.getInt(1) === r.getInt(2), s"on '${r.getString(0).take(60)}'")
+    }
+    val byText = counts.map(r => r.getString(0) -> r.getInt(2)).toMap
+    edges.foreach { case (text, n) => assert(byText(text) === n, s"on '$text'") }
+  }
+
   test("quality_score_ppm native ≡ composed on the fixture corpus") {
     val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     val diff = docs.select(
