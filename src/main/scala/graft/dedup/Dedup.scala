@@ -64,18 +64,24 @@ object Dedup {
     * `maxShingleDf` caps the document frequency of shingles admitted to the
     * comparison space: a stop-shingle present in most docs otherwise creates
     * a near-cartesian hot key in the self-join (a shingle in d docs yields
-    * d² candidate rows — the round-1 scale-killer). The cap is a SEMANTIC
-    * parameter, not a sampling trick: both sizes and intersections are
-    * computed over the capped shingle space, so jaccard-over-capped-space is
-    * exact and oracle-replayable. 0 disables the cap. */
+    * d² candidate rows). The cap is a SEMANTIC parameter, not a sampling
+    * trick: both sizes and intersections are computed over the capped
+    * shingle space, so jaccard-over-capped-space is exact and
+    * oracle-replayable. 0 disables the cap.
+    *
+    * Execution is eager, with [[connectedComponents]]' contract: the pairs
+    * are materialized by an eager `localCheckpoint` before the call
+    * returns, and the shingle checkpoint behind them is freed, so the call
+    * leaves exactly one persisted RDD: the returned pairs, which the caller
+    * owns (free it with [[graft.scale.Scale.unpersistCheckpoint]]). */
   def ngramJaccard(df: DataFrame, key: String, tokens: String, k: Int,
                    threshold: Double, maxShingleDf: Long = 0): DataFrame = {
     val shRaw = df
       .select(col(key).as("k"), explode(array_distinct(shingles(col(tokens), k))).as("sh"))
     // The (k, sh) long form is consumed by THREE branches below (per-doc
     // sizes, both sides of the inverted-index self-join, and the df-cap
-    // stats) — materialize it once (round-7): lazily each branch re-ran
-    // the shingle explode over the corpus, and only the self-join's two
+    // stats) — materialize it once: lazily each branch would re-run the
+    // shingle explode over the corpus, and only the self-join's two
     // sides canonicalize equal for exchange reuse. At 10^12 rows this
     // boundary is a staged table (the q74 materialize-between-stages
     // discipline); the checkpoint is the single-job spelling.
@@ -94,7 +100,7 @@ object Dedup {
         col("a.sh") === col("b.sh") && col("a.k") < col("b.k"))
       .groupBy(col("a.k").as("key_a"), col("b.k").as("key_b"))
       .agg(count(lit(1)).as("inter"))
-    pairs
+    val out = pairs
       .join(sizes.withColumnRenamed("k", "key_a").withColumnRenamed("sz", "sz_a"), Seq("key_a"))
       .join(sizes.withColumnRenamed("k", "key_b").withColumnRenamed("sz", "sz_b"), Seq("key_b"))
       .withColumn("jaccard",
@@ -102,6 +108,9 @@ object Dedup {
           (col("sz_a") + col("sz_b") - col("inter")).cast("double"), 6))
       .filter(col("jaccard") >= threshold)
       .select("key_a", "key_b", "jaccard")
+      .localCheckpoint()
+    Scale.unpersistCheckpoint(shMat)
+    out
   }
 
   // ------------------------------------------------------------ MinHash + LSH

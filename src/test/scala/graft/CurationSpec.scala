@@ -4,7 +4,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** q74's composition invariants — each stage is separately gated
-  * (q20/q21/q45); this pins how they compose. */
+  * (q20/q21/q45); this pins how they compose — and the query map's
+  * session-artifact and oracle contracts. */
 class CurationSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -136,7 +137,7 @@ class CurationSpec extends AnyFunSuite {
       assert(p >= st / 256 && p <= (en - 1) / 256) }
   }
 
-  test("releaseShared frees the checkpointed frames q74 and q82 leave") {
+  test("a query group builds each shared artifact once, and releaseShared frees them all") {
     val sc = spark.sparkContext
     // groups of queries that share persisted or checkpointed artifacts
     val groups = Seq(
@@ -145,17 +146,39 @@ class CurationSpec extends AnyFunSuite {
       Seq("q14_vocab", "q15_bow", "q16_tfidf", "q44_lsa", "q49_pca",
         "q52_lda", "q55_lda_perplexity", "q56_topic_corr"),
       // the component labels are connectedComponents' own last round
-      Seq("q77_dup_components"))
+      Seq("q77_dup_components"),
+      // nested builds from cold: q70's result reads the IVF assignment,
+      // which reads the quantizer, which reads the KMeans fit; q55's
+      // scalars read q52's doc-topic frame, which reads the LDA fit
+      Seq("q70_ann_ivf", "q55_lda_perplexity"),
+      // the full sweep
+      SparkEntry.queries.keys.toSeq.sorted)
+    // getPersistentRDDs holds its RDDs weakly, so the run keeps every
+    // returned frame reachable: an RDD nothing frees cannot drop out of
+    // the map by being collected before the check
+    def run(group: Seq[String]) = group.map { q =>
+      val df = SparkEntry.queries(q)(spark, dir); df.collect(); df
+    }
     groups.foreach { group =>
       withClue(group.mkString("after ", ", ", ": ")) {
         SparkEntry.releaseShared(spark)
         val before = sc.getPersistentRDDs.keySet
-        group.foreach(q => SparkEntry.queries(q)(spark, dir).collect())
-        assert((sc.getPersistentRDDs.keySet -- before).nonEmpty)
+        val first = run(group)
+        val firstPass = sc.getPersistentRDDs.keySet
+        assert((firstPass -- before).nonEmpty)
+        val second = run(group)
+        val rebuilt = sc.getPersistentRDDs -- firstPass
+        assert(rebuilt.isEmpty, rebuilt.values.mkString("built twice: ", ", ", ""))
         SparkEntry.releaseShared(spark)
         val left = sc.getPersistentRDDs -- before
         assert(left.isEmpty, left.values.mkString("still persisted: ", ", ", ""))
+        java.lang.ref.Reference.reachabilityFence((first, second))
       }
     }
+  }
+
+  test("every query has a DuckDB oracle except the two exported fits") {
+    assert(SparkEntry.oracleSql.keySet ===
+      SparkEntry.queries.keySet -- Set("q60_word_vectors", "q65_lsa_model"))
   }
 }

@@ -17,6 +17,26 @@ class DedupSpec extends AnyFunSuite {
   ).toDF("doc_id", "text")
     .withColumn("tokens", split(col("text"), " "))
 
+  /** Runs `call`, checks it returned a materialized frame and left at most
+    * one new persisted RDD (that frame's own checkpoint), hands the result
+    * to `use`, then frees it and checks that nothing the call persisted is
+    * left. */
+  private def freedAfter[T](call: => org.apache.spark.sql.DataFrame)(
+      use: org.apache.spark.sql.DataFrame => T): T = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val out = call
+    assert(out.queryExecution.logical
+      .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
+      "the returned frame is not materialized")
+    val kept = sc.getPersistentRDDs -- before
+    assert(kept.size <= 1, s"left persisted: ${kept.values.mkString(", ")}")
+    val got = use(out)
+    Scale.unpersistCheckpoint(out)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+    got
+  }
+
   test("exact dedup keeps the smallest key per fingerprint group") {
     val out = Dedup.exact(docs, "doc_id", "text")
       .select("doc_id", "keep").as[(Long, Boolean)].collect().toMap
@@ -46,8 +66,9 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("ngram jaccard finds the near-dup pair, not the unrelated one") {
-    val pairs = Dedup.ngramJaccard(docs, "doc_id", "tokens", k = 3, threshold = 0.5)
-      .select("key_a", "key_b").as[(Long, Long)].collect().toSet
+    val pairs = freedAfter(
+      Dedup.ngramJaccard(docs, "doc_id", "tokens", k = 3, threshold = 0.5))(
+      _.select("key_a", "key_b").as[(Long, Long)].collect().toSet)
     assert(pairs.contains((0L, 1L))) // identical
     assert(pairs.contains((0L, 2L))) // one-word change
     assert(!pairs.exists { case (a, b) => a == 3L || b == 3L })
@@ -115,15 +136,15 @@ class DedupSpec extends AnyFunSuite {
     val hot = (0L until 12L).map { i =>
       (i, s"common stop prefix unique${i}a unique${i}b unique${i}c unique${i}d")
     }.toDF("doc_id", "text").withColumn("tokens", split(col("text"), " "))
-    val uncapped = Dedup.ngramJaccard(hot, "doc_id", "tokens", k = 3,
-      threshold = 0.0)
+    val uncapped = freedAfter(Dedup.ngramJaccard(hot, "doc_id", "tokens",
+      k = 3, threshold = 0.0))(_.count())
     // all 66 pairs are candidates through the hot shingle
-    assert(uncapped.count() === 66)
-    val capped = Dedup.ngramJaccard(hot, "doc_id", "tokens", k = 3,
-      threshold = 0.0, maxShingleDf = 5)
+    assert(uncapped === 66)
+    val capped = freedAfter(Dedup.ngramJaccard(hot, "doc_id", "tokens",
+      k = 3, threshold = 0.0, maxShingleDf = 5))(_.count())
     // the df-12 stop-shingle is excluded from the comparison space, so no
     // pair shares any shingle at all
-    assert(capped.count() === 0)
+    assert(capped === 0)
   }
 
   test("minhash LSH hot-bucket cap drops degenerate giant buckets") {
@@ -224,15 +245,10 @@ class DedupSpec extends AnyFunSuite {
       .toDF("doc_id")
     val edges = Seq((2L, 1L), (3L, 2L), (4L, 3L), (10L, 11L), (11L, 12L),
       (10L, 12L), (20L, 21L)).toDF("src", "dst")
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val labels = Dedup.connectedComponents(nodes, "doc_id", edges, iters = 3)
     // every round but the last is freed before the call returns
-    val kept = sc.getPersistentRDDs -- before
-    assert(kept.size <= 1, s"rounds left persisted: ${kept.values.mkString(", ")}")
-    val got = labels.as[(Long, Long)].collect().toMap
-    Scale.unpersistCheckpoint(labels)
-    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+    val got = freedAfter(
+      Dedup.connectedComponents(nodes, "doc_id", edges, iters = 3))(
+      _.as[(Long, Long)].collect().toMap)
     val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L,
       30L -> 30L, 31L -> 31L)

@@ -107,4 +107,28 @@ class StreamingSpec extends AnyFunSuite {
     val rows = spark.table("rate_out")
     assert(rows.agg(sum("turns")).head().getLong(0) === 200L)
   }
+
+  test("q76 re-stages its input when documents.parquet is rewritten in place") {
+    import java.nio.file.StandardCopyOption
+    val sf = Files.createTempDirectory("graft_q76_sf")
+    // n documents as ONE parquet file at the same path each time
+    def writeDocs(n: Int): Unit = {
+      val part = Files.createTempDirectory("graft_q76_part").resolve("out")
+      spark.range(n).select(col("id").as("doc_id"),
+          concat(lit("plain prose about document "), col("id").cast("string"))
+            .as("text"))
+        .coalesce(1).write.parquet(part.toString)
+      val file = Files.list(part).filter(_.toString.endsWith(".parquet"))
+        .findFirst().get
+      Files.move(file, sf.resolve("documents.parquet"),
+        StandardCopyOption.REPLACE_EXISTING)
+      ()
+    }
+    def q76() = SparkEntry.queries("q76_streaming_extract")(spark, sf.toString)
+      .count()
+    writeDocs(300)
+    assert(q76() === 300L)
+    writeDocs(100)
+    assert(q76() === 100L)
+  }
 }
