@@ -61,7 +61,6 @@ object CurationJob {
                df: DataFrame): DataFrame = {
       written(stage) = Scale.resumableWrite(df, s"$dir/data", s"$dir/manifest",
         nBuckets, stageWaves, salts = 1, keyCol = "doc_id", orderCol = orderCol)
-      TableIO.writeEmptyIfNoBuckets(spark, s"$dir/data", df.schema)
       spark.read.schema(Scale.bucketedSchema(df.schema)).parquet(s"$dir/data")
     }
     Curation.build(spark.read.parquet(in), blockTokens) {

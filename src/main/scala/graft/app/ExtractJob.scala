@@ -67,9 +67,9 @@ object ExtractJob {
     // resumableWrite's measured fan-out handles it.
     val turns = spark.read.parquet(in)
     // Observation (not a bare .observe name): the metrics are retrieved
-    // after the write action and printed — the bare-name spelling computed
-    // the aggregates on every row and silently discarded them (round-3
-    // review finding). Attached ONLY on a FRESH single-wave run:
+    // after the write action and printed; a bare-name observe would compute
+    // the aggregates on every row and discard them. Attached ONLY on a
+    // FRESH single-wave run:
     //  - an Observation is single-shot, and its CollectMetrics node is a
     //    pushdown barrier — under waves>1 it would pin the kernel ABOVE the
     //    wave's bucket filter (kernel × waves) and capture wave-0's subset
@@ -77,7 +77,7 @@ object ExtractJob {
     //  - on a RESUMED snapshot the observed plan either never executes
     //    (all buckets already manifested → resumableWrite runs no write
     //    job, and obs.get would block forever) or sees only the re-written
-    //    subset (round-4 review finding).
+    //    subset.
     // Both fall back to one aggregation over the written table.
     val resumed = Scale.completedBuckets(spark, s"$table/$snap/manifest").nonEmpty
     val pipeline = Extract.pipeline(turns)
@@ -85,41 +85,25 @@ object ExtractJob {
       if (waves == 1 && !resumed)
         Some(org.apache.spark.sql.Observation("extract_metrics"))
       else None
-    val extracted = obs.fold(pipeline)(o => pipeline.observe(o,
-      count(lit(1)).as("turns_out"),
-      sum(when(col("text") === "", 1).otherwise(0)).as("empty_turns"),
-      sum(length(col("text"))).as("chars_out")))
-    // the fan-out pre-pass counts the UNOBSERVED pipeline: it prunes to
-    // conv_id, while the observed frame's CollectMetrics node would make
-    // the count run the kernel (and feed the single-shot Observation)
+    val metrics = Seq(count(lit(1)).as("turns_out"),
+      coalesce(sum(when(col("text") === "", 1).otherwise(0)), lit(0L)).as("empty_turns"),
+      coalesce(sum(length(col("text"))), lit(0L)).as("chars_out"))
+    val extracted = obs.fold(pipeline)(o => pipeline.observe(o, metrics.head, metrics.tail: _*))
     val written = Scale.resumableWrite(extracted,
-      TableIO.dataDir(table, snap), s"$table/$snap/manifest", nBuckets, waves,
-      salts, keyFrame = Some(pipeline))
-    TableIO.writeEmptyIfNoBuckets(spark, TableIO.dataDir(table, snap),
-      extracted.schema)
+      TableIO.dataDir(table, snap), s"$table/$snap/manifest", nBuckets, waves, salts)
     // .filter(_.nonEmpty): a zero-row fresh run's keyed write launches zero
     // tasks, so the Observation completes with an EMPTY map (no metrics row
-    // ever accumulated) — fall through to the post-hoc aggregation, which
-    // handles the zero-row table explicitly (surfaced by the round-5
-    // zero-row schema test).
+    // ever accumulated) — fall through to the aggregation over the written
+    // table, which reads the zero-row table as zeros.
     val m: Map[String, Any] = obs.map(_.get).filter(_.nonEmpty).getOrElse {
-      val dataDir = TableIO.dataDir(table, snap)
-      if (spark.read.parquet(dataDir).isEmpty) // zero-row corpus
-        Map("turns_out" -> 0L, "empty_turns" -> 0L, "chars_out" -> 0L)
-      else {
-        val r = spark.read.parquet(dataDir)
-          .agg(count(lit(1)).as("turns_out"),
-            sum(when(col("text") === "", 1).otherwise(0)).as("empty_turns"),
-            sum(length(col("text"))).as("chars_out"))
-          .collect()(0)
-        Map("turns_out" -> r.get(0), "empty_turns" -> r.get(1),
-          "chars_out" -> r.get(2))
-      }
+      val r = spark.read.parquet(TableIO.dataDir(table, snap))
+        .agg(metrics.head, metrics.tail: _*).collect()(0)
+      Map("turns_out" -> r.get(0), "empty_turns" -> r.get(1), "chars_out" -> r.get(2))
     }
-    // the manifest total may come from the pre-pass counts rather than the
-    // written files, while turns_out counts the rows the write saw (or, on
-    // a resumed or multi-wave run, the data dir): a mismatch means the
-    // manifest is not the data's. A retry of such a snapshot fails here too.
+    // the manifest records the committed files' footer counts, while
+    // turns_out counts the rows the write saw (or, on a resumed or
+    // multi-wave run, the data dir): a mismatch means the manifest is not
+    // the data's. A retry of such a snapshot fails here too.
     if (m("turns_out") != written)
       throw new IllegalStateException(s"$table/$snap: manifest records " +
         s"$written rows but the write observed ${m("turns_out")}; not publishing")

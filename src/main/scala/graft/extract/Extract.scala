@@ -92,43 +92,16 @@ object Extract {
       .drop("content_blocks")
   }
 
-  /** E4 — refine the rule labels with the neural block scorer: a logistic
-    * model over densitometric features evaluated per block as broadcast-
-    * weight column math (graft.score.Scorer). The rule tier (E3) decides
-    * structurally-obvious chrome (nav/footer paths); the scorer arbitrates
-    * the rest by content statistics. Threshold 0.5 on sigmoid output.
-    * Pure higher-order-function math — still zero shuffles, still codegen.
-    * The score expression is GENERATED from Scorer.scoreSql so the feature
-    * semantics (incl. the stoplist) cannot drift from the definition the
-    * DefaultW weights were fit against (round-1 ADVICE finding). */
-  def scored(classifiedDf: DataFrame,
-             w: Seq[Double] = graft.score.Scorer.DefaultW,
-             b: Double = graft.score.Scorer.DefaultB): DataFrame = {
-    classifiedDf.withColumn(
-      "blocks",
-      expr(s"""
-        transform(blocks, blk -> named_struct(
-          'tag', blk.tag, 'path', blk.path, 'text', blk.text,
-          'start', blk.start, 'end', blk.end,
-          'nTags', blk.nTags, 'nLinks', blk.nLinks, 'linkChars', blk.linkChars,
-          'nWords', blk.nWords, 'nStops', blk.nStops, 'nDigits', blk.nDigits,
-          'text_len', blk.text_len, 'link_density', blk.link_density,
-          'tag_density', blk.tag_density,
-          'score', ${graft.score.Scorer.scoreSql("blk", w = w, b = b)},
-          'label', CASE
-            WHEN blk.path RLIKE '$ChromePathRe' THEN 'chrome'
-            WHEN blk.label = 'chrome' THEN 'chrome'
-            ELSE 'content' END))
-      """))
-  }
-
-  /** Fused E2+E3+E4 stage for the scored pipeline: ONE transform over the
-    * lexed block array computes the logistic score and the final label.
-    * Round 1 spelled this as three sequential full array rewrites
-    * (classified → scored → relabelByScore), 3× the per-row work of the
-    * stage; semantics are identical because relabelByScore discards
-    * everything but path-chrome and the score threshold anyway. The score
-    * is bound once per block via the single-element-array trick (a
+  /** E2+E3+E4 — label the lexed blocks with the neural block scorer: a
+    * logistic model over densitometric features evaluated per block as
+    * broadcast-weight column math (graft.score.Scorer), in ONE transform
+    * over the lexed block array. Structural chrome (nav/footer paths) stays
+    * chrome; the rest is content iff the sigmoid score exceeds `threshold`.
+    * Each block keeps its `score`. Pure higher-order-function math — zero
+    * shuffles, codegen. The score expression is GENERATED from
+    * Scorer.scoreSql, so the feature semantics (incl. the stoplist) cannot
+    * drift from the definition the DefaultW weights were fit against. The
+    * score is bound once per block via the single-element-array trick (a
     * named_struct field cannot reference a sibling; evaluating the score
     * twice instead measured 20% slower — exp() and the divisions dominate
     * the wrapper cost). */
@@ -151,26 +124,6 @@ object Extract {
               WHEN blk.path RLIKE '$ChromePathRe' THEN 'chrome'
               WHEN sc > ${threshold}D THEN 'content'
               ELSE 'chrome' END)), 1))
-      """))
-
-  /** Let the E4 score arbitrate labels: structural chrome stays chrome; the
-    * rest is content iff sigmoid score > threshold. Separate stage because
-    * a named_struct field can't reference a sibling computed in the same
-    * transform. */
-  def relabelByScore(scoredDf: DataFrame, threshold: Double = 0.5): DataFrame =
-    scoredDf.withColumn(
-      "blocks",
-      expr(s"""
-        transform(blocks, blk -> named_struct(
-          'tag', blk.tag, 'path', blk.path, 'text', blk.text,
-          'start', blk.start, 'end', blk.end,
-          'nTags', blk.nTags, 'nLinks', blk.nLinks, 'linkChars', blk.linkChars,
-          'text_len', blk.text_len, 'link_density', blk.link_density,
-          'tag_density', blk.tag_density, 'score', blk.score,
-          'label', CASE
-            WHEN blk.path RLIKE '$ChromePathRe' THEN 'chrome'
-            WHEN blk.score > ${threshold}D THEN 'content'
-            ELSE 'chrome' END))
       """))
 
   /** Full kernel: transcripts in → (conv_id, turn_idx, extracted, spans).

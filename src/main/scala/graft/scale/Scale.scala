@@ -1,7 +1,11 @@
 package graft.scale
 
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, LogicalPlan}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructType}
 
@@ -87,47 +91,19 @@ object Scale {
     * resume = read manifest, skip completed buckets, overwrite-by-partition
     * for the rest. Plain application logic, not planner surgery
     * (SURVEY.md §4 conclusion). All path probing goes through the Hadoop
-    * FileSystem API — java.io.File broke on S3/HDFS, the stated design
-    * point (round-1 verdict). */
-  private def fsFor(spark: SparkSession, path: String) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-  }
-
-  /** True iff the dir holds at least one actual parquet data file. A
-    * listing check alone is NOT enough: a job that crashed mid manifest
-    * append leaves only a `_temporary` subdir, and schema inference over
-    * that throws — permanently bricking resume at the exact crash-recovery
-    * step the manifest exists for (round-3 review finding). Hidden entries
-    * (`_…`, `.…`) are the same set Spark's file index skips. */
-  private def hasDataFiles(spark: SparkSession, path: String): Boolean = {
-    val (fs, p) = fsFor(spark, path)
-    fs.exists(p) && fs.listStatus(p).exists { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-  }
-
-  /** True iff `path` holds at least one committed `bucket=` partition dir —
-    * the readability probe for bucket-partitioned output. (`hasDataFiles`
-    * checks top-level FILES and is blind to partition dirs; reading a dir
-    * with no committed partitions throws schema-inference errors.) */
-  def hasBucketData(spark: SparkSession, path: String): Boolean = {
-    val (fs, p) = fsFor(spark, path)
-    fs.exists(p) && fs.listStatus(p).exists { st =>
-      st.isDirectory && st.getPath.getName.startsWith("bucket=")
-    }
-  }
-
-  /** Manifested row count per completed bucket. The manifest is
+    * FileSystem API, so the same code runs on S3 and HDFS.
+    *
+    * Manifested row count per completed bucket. The manifest is
     * append-only, so a crashed run that died between its write commit and
     * its manifest append and was then re-run records a bucket twice (with
     * identical counts; the data dirs themselves are last-writer-wins under
     * dynamic overwrite): one entry per bucket keeps the bookkeeping honest.
     * Single-writer-per-snapshot remains the operating assumption (the
-    * Iceberg deployment gets real commit-level OCC). */
+    * Iceberg deployment gets real commit-level OCC). A manifest dir without
+    * a data file (never written, or a crashed append that left only
+    * `_temporary`) reads as empty rather than failing schema inference. */
   private def manifestRows(spark: SparkSession, manifestDir: String): Map[Int, Long] =
-    if (!hasDataFiles(spark, manifestDir)) Map.empty
+    if (!TableIO.dataFiles(spark, manifestDir).hasNext) Map.empty
     else spark.read.parquet(manifestDir)
       .groupBy(col("bucket")).agg(max(col("rows")))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -148,10 +124,19 @@ object Scale {
         .coalesce(1).write.mode("append").parquet(manifestDir)
   }
 
-  /** Rows per bucket of `df`, from one column-pruned pass over `keyCol`. */
+  /** Rows per bucket of `df`, from one column-pruned pass over `keyCol`.
+    * The pass counts `df` without its top `observe` (CollectMetrics)
+    * nodes: they pass every row through unchanged, but they block column
+    * pruning, so counting an observed frame would run its whole projection
+    * and feed its single-shot Observation. */
   private def bucketCounts(df: DataFrame, nBuckets: Int, keyCol: String,
                            buckets: Seq[Int]): Map[Int, Long] = {
-    val keyed = df.select(bucketCol(nBuckets, keyCol))
+    def strip(p: LogicalPlan): LogicalPlan = p match {
+      case c: CollectMetrics => strip(c.child)
+      case _ => p
+    }
+    val keyed = ColumnBridge.ofRows(df.sparkSession, strip(df.queryExecution.analyzed))
+      .select(bucketCol(nBuckets, keyCol))
     val pending =
       if (buckets.size == nBuckets) keyed
       else keyed.filter(col("bucket").isin(buckets.map(Int.box): _*))
@@ -168,14 +153,21 @@ object Scale {
     counts.collect { case (b, n) if n > share / 4 => b }.toSeq.sorted
   }
 
-  /** `df`'s analyzed plan without its top `observe` (CollectMetrics)
-    * nodes, which pass every row through unchanged. */
-  private def unobserved(df: DataFrame): LogicalPlan = {
-    def strip(p: LogicalPlan): LogicalPlan = p match {
-      case c: CollectMetrics => strip(c.child)
-      case _ => p
-    }
-    strip(df.queryExecution.analyzed)
+  /** Rows under each of `buckets`' `bucket=` dirs in `outDir`: the sum of
+    * the record counts in its data files' parquet footers. A driver-side
+    * listing plus one footer read per file; no Spark job. All files share
+    * one read-options object: the one-argument `ParquetFileReader.open`
+    * builds a fresh Hadoop `Configuration` per file, which rescans the
+    * classpath. A bucket without a dir holds no rows. */
+  private def footerCounts(spark: SparkSession, outDir: String,
+                           buckets: Seq[Int]): Seq[(Int, Long)] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val opts = HadoopReadOptions.builder(conf).build()
+    val files = TableIO.dataFiles(spark, outDir).toSeq.groupBy(_.getPath.getParent.getName)
+    buckets.map(b => b -> files.getOrElse(s"bucket=$b", Nil).map { st =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf), opts)
+      try r.getRecordCount finally r.close()
+    }.sum)
   }
 
   /** Resumable keyed write: bucket the result by hash(`keyCol`, default
@@ -198,23 +190,19 @@ object Scale {
     * writes one file per non-empty bucket instead of one per bucket per
     * writer task; with under four buckets per writer task every bucket is
     * hot. With `salts` = 1 no pre-pass runs and every bucket has one writer.
+    * The pre-pass only sizes the fan-out.
     *
-    * `keyFrame` is the frame the pre-pass counts when `df` itself would not
-    * prune to `keyCol`: an observed frame, whose CollectMetrics node blocks
-    * column pruning, so counting it would run the whole projection. Pass
-    * `df` minus its `observe` calls; the counts stand in for the written
-    * ones only when that holds (checked on the analyzed plans) and the plan
-    * is deterministic. Otherwise they only size the fan-out.
-    *
-    * Bookkeeping is O(1) jobs, not O(nBuckets). Exact pre-pass counts go
-    * straight to the manifest. Otherwise (salts = 1, a nondeterministic
-    * plan, or a `keyFrame` that is not `df`'s rows) ONE
-    * `groupBy(bucket).count()` pass over the written output records them.
-    * Either way a zero-row bucket is still manifested (rows=0), or every
-    * resume would rescan it. The return value is the total over the
-    * manifest: earlier runs' buckets plus this one's. A caller that can
-    * count the written rows itself (ExtractJob's Observation) should compare
-    * that count with the total before it publishes.
+    * The manifest holds the parquet footer counts of the committed files:
+    * after each wave commits, every bucket of the wave is recorded with the
+    * record counts summed over its dir's data files, a zero-row bucket
+    * included (rows=0), or every resume would rescan it. Counting runs no
+    * Spark job; the bookkeeping is one manifest append per wave. The return
+    * value is the total over the manifest: earlier runs' buckets plus this
+    * one's. A caller that can count the written rows itself (ExtractJob's
+    * Observation) should compare that count with the total before it
+    * publishes. On return `outDir` always reads back with
+    * [[bucketedSchema]]: a write with no rows commits no `bucket=` dir, so
+    * one empty parquet file with that schema stands in.
     *
     * Each file is sorted by (`keyCol`, `orderCol`): the write sorts by
     * (bucket, keyCol, orderCol), which also satisfies the bucket ordering
@@ -237,23 +225,17 @@ object Scale {
   def resumableWrite(df: DataFrame, outDir: String, manifestDir: String,
                      nBuckets: Int = DefaultBuckets, waves: Int = 1,
                      salts: Int = 1, keyCol: String = "conv_id",
-                     orderCol: String = "turn_idx",
-                     keyFrame: Option[DataFrame] = None): Long = {
+                     orderCol: String = "turn_idx"): Long = {
     require(waves >= 1 && waves <= nBuckets,
       s"waves must be in [1, nBuckets]: $waves")
     require(salts >= 1, s"salts must be >= 1: $salts")
     val spark = df.sparkSession
     val done = manifestRows(spark, manifestDir)
     val pending = (0 until nBuckets).filterNot(done.contains)
-    val counts =
-      if (salts <= 1 || pending.isEmpty) None
-      else Some(bucketCounts(keyFrame.getOrElse(df), nBuckets, keyCol, pending))
-    val hot = counts.fold(Seq.empty[Int])(
-      hotBuckets(_, spark.conf.get("spark.sql.shuffle.partitions").toInt))
-    // the pre-pass counts stand in for the written ones only if they count
-    // df's rows and the plan yields the same rows on a second evaluation
-    val exact = counts.filter(_ => df.queryExecution.analyzed.deterministic &&
-      keyFrame.forall(k => unobserved(df).sameResult(k.queryExecution.analyzed)))
+    val hot =
+      if (salts <= 1 || pending.isEmpty) Seq.empty[Int]
+      else hotBuckets(bucketCounts(df, nBuckets, keyCol, pending),
+        spark.conf.get("spark.sql.shuffle.partitions").toInt)
     val withBucket = df.withColumn("bucket", bucketCol(nBuckets, keyCol))
     val recorded = (0 until waves).flatMap { w =>
       val waveBuckets = (w until nBuckets by waves).filterNot(done.contains)
@@ -274,20 +256,12 @@ object Scale {
           .sortWithinPartitions("bucket", keyCol, orderCol)
           .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
           .partitionBy("bucket").parquet(outDir)
-        // a wave whose buckets are ALL empty commits no partition dir:
-        // there is nothing to count
-        val waveCounts = exact.getOrElse {
-          if (!hasBucketData(spark, outDir)) Map.empty[Int, Long]
-          else spark.read.schema(bucketedSchema(df.schema)).parquet(outDir)
-            .filter(col("bucket").isin(waveBuckets.map(Int.box): _*))
-            .groupBy("bucket").count().collect()
-            .map(r => r.getInt(0) -> r.getLong(1)).toMap
-        }
-        val rows = waveBuckets.map(b => b -> waveCounts.getOrElse(b, 0L))
+        val rows = footerCounts(spark, outDir, waveBuckets)
         recordBuckets(spark, manifestDir, rows)
         rows
       }
     }
+    TableIO.writeEmptyIfNoData(spark, outDir, bucketedSchema(df.schema))
     (done ++ recorded).values.sum
   }
 }

@@ -4,10 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Snapshot-versioned parquet table layer — the Iceberg-shaped fallback
   * (SURVEY.md §7 allows parquet when the Iceberg runtime jar is absent,
-  * which it is in this container). Round-1 gap: `Scale.resumableWrite`
-  * overwrites bucket dirs in place, so a concurrent reader saw a torn
-  * table. Here every publish is a NEW immutable snapshot directory plus an
-  * atomic pointer flip:
+  * which it is in this container). `Scale.resumableWrite` overwrites bucket
+  * dirs in place, so a reader of its output dir can see a torn table. Here
+  * every publish is a NEW immutable snapshot directory plus an atomic
+  * pointer flip:
   *
   * {{{
   *   table/
@@ -19,7 +19,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * `_CURRENT` is replaced via create-temp + `FileContext.rename(OVERWRITE)`
   * — a SINGLE atomic step on local FS and HDFS (no delete-then-rename
-  * window where the pointer is missing; round-2 ADVICE). On S3 a real
+  * window where the pointer is missing). On S3 a real
   * deployment swaps this for a conditional-put catalog. `files.list` is
   * written BEFORE the pointer flip and names every data file, so (a) it
   * doubles as the snapshot's completion marker, (b) readers resolve the
@@ -52,7 +52,7 @@ object TableIO {
         // reads as ABSENT, not a crash in snapNum downstream: callers fall
         // back to latestComplete (readers) or a fresh snapshot (ExtractJob
         // resume) — the resume path is exactly where a torn pointer is
-        // plausible (round-3 ADVICE).
+        // plausible.
         if (s.startsWith("snap-") && s.stripPrefix("snap-").nonEmpty &&
             s.stripPrefix("snap-").forall(_.isDigit)) Some(s) else None
       } finally in.close()
@@ -63,7 +63,7 @@ object TableIO {
     * NUMERICALLY — the %05d format widens at snapshot 100000, where a
     * lexicographic sort puts snap-100000 before snap-99999 and every
     * ordering consumer (latestComplete fallback, resume filter,
-    * expireSnapshots) misorders forever after (round-3 review finding). */
+    * expireSnapshots) misorders forever after. */
   def snapshots(spark: SparkSession, tableDir: String): Seq[String] = {
     val (f, dir) = fs(spark, tableDir)
     if (!f.exists(dir)) Seq.empty
@@ -139,11 +139,9 @@ object TableIO {
   def writeFilesManifest(spark: SparkSession, tableDir: String,
                          snap: String): Unit = {
     val (f, _) = fs(spark, tableDir)
-    val dd = f.makeQualified(new org.apache.hadoop.fs.Path(dataDir(tableDir, snap)))
-    val prefix = dd.toString + "/"
-    val files =
-      if (!f.exists(dd)) Seq.empty
-      else dataFiles(f, dd).map(_.toString.stripPrefix(prefix)).toSeq
+    val dd = dataDir(tableDir, snap)
+    val prefix = f.makeQualified(new org.apache.hadoop.fs.Path(dd)).toString + "/"
+    val files = dataFiles(spark, dd).map(_.getPath.toString.stripPrefix(prefix)).toSeq
     writeSidecar(spark, tableDir, snap, FilesManifest,
       files.sorted.mkString("\n"))
   }
@@ -176,58 +174,51 @@ object TableIO {
     val dd = dataDir(tableDir, next)
     sorted.write.mode("overwrite").parquet(dd)
     // a 0-partition frame writes only _SUCCESS, publishing a snapshot that
-    // readTable can never schema-infer (round-3 review finding). Repair
-    // AFTER the write by probing the output dir — probing the input plan
-    // (rdd.getNumPartitions) materializes every AQE shuffle stage, running
-    // a shuffled pipeline once for the probe and again for the write
-    // (round-3 ADVICE: doubled compute on the corpus-scale write API).
-    if (!hasDataFiles(spark, dd))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
-        .repartition(1).write.mode("overwrite").parquet(dd)
+    // readTable can never schema-infer. Repair AFTER the write by probing
+    // the output dir: probing the input plan (rdd.getNumPartitions) would
+    // materialize every AQE shuffle stage, running a shuffled pipeline once
+    // for the probe and again for the write.
+    writeEmptyIfNoData(spark, dd, df.schema)
     publish(spark, tableDir, next)
     next
   }
 
-  /** Make a bucket-partitioned data dir readable when its write had no
-    * rows: such a write commits no `bucket=` dir, and a dir without a data
-    * file cannot be read back or published. Writes one empty parquet file
-    * with the written frame's `schema` plus the `bucket` column
-    * ([[Scale.bucketedSchema]]), the columns every non-empty table has. */
-  def writeEmptyIfNoBuckets(spark: SparkSession, dir: String,
-                            schema: org.apache.spark.sql.types.StructType): Unit =
-    if (!Scale.hasBucketData(spark, dir))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          Scale.bucketedSchema(schema))
+  /** Make `dir` readable when a write left no data file in it (a
+    * 0-partition frame commits only `_SUCCESS`; a bucketed write of no rows
+    * commits no `bucket=` dir): write one empty parquet file with
+    * `schema`. */
+  private[scale] def writeEmptyIfNoData(spark: SparkSession, dir: String,
+                                        schema: org.apache.spark.sql.types.StructType): Unit =
+    if (!dataFiles(spark, dir).hasNext)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
         .repartition(1).write.mode("overwrite").parquet(dir)
 
-  /** Any .parquet data file under `dir` (recursive, short-circuits). */
-  private def hasDataFiles(spark: SparkSession, dir: String): Boolean = {
-    val (f, p) = fs(spark, dir)
-    f.exists(p) && dataFiles(f, p).hasNext
-  }
-
   /** The `.parquet` data files under `dir`, recursively, lazily, skipping
-    * the hidden entries (`_…`, `.…`) Spark's file index skips. A plain
-    * `listStatus` walk on purpose: `FileSystem.listFiles` builds a
-    * `LocatedFileStatus` per file, whose constructor reads the file's
-    * permission — on a local FS without native Hadoop that forks one
-    * `ls -ld` per file (Spark's `HadoopFSUtils` avoids it the same way). */
-  private def dataFiles(f: org.apache.hadoop.fs.FileSystem,
-                        dir: org.apache.hadoop.fs.Path): Iterator[org.apache.hadoop.fs.Path] =
-    f.listStatus(dir).iterator.flatMap { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("_") || n.startsWith(".")) Iterator.empty
-      else if (st.isDirectory) dataFiles(f, st.getPath)
-      else if (n.endsWith(".parquet")) Iterator.single(st.getPath)
-      else Iterator.empty
-    }
+    * the hidden entries (`_…`, `.…`) Spark's file index skips; none when
+    * `dir` does not exist. A plain `listStatus` walk on purpose:
+    * `FileSystem.listFiles` builds a `LocatedFileStatus` per file, whose
+    * constructor reads the file's permission — on a local FS without native
+    * Hadoop that forks one `ls -ld` per file (Spark's `HadoopFSUtils` avoids
+    * it the same way). */
+  private[scale] def dataFiles(spark: SparkSession,
+                               dir: String): Iterator[org.apache.hadoop.fs.FileStatus] = {
+    val (f, root) = fs(spark, dir)
+    def walk(d: org.apache.hadoop.fs.Path): Iterator[org.apache.hadoop.fs.FileStatus] =
+      f.listStatus(d).iterator.flatMap { st =>
+        val n = st.getPath.getName
+        if (n.startsWith("_") || n.startsWith(".")) Iterator.empty
+        else if (st.isDirectory) walk(st.getPath)
+        else if (n.endsWith(".parquet")) Iterator.single(st)
+        else Iterator.empty
+      }
+    if (f.exists(root)) walk(root) else Iterator.empty
+  }
 
   /** Publish `snap`: commit its file manifest, then atomically flip
     * `_CURRENT` via a SINGLE overwrite-rename (`FileContext.rename` with
     * `Options.Rename.OVERWRITE` — atomic on local FS and HDFS). There is
-    * no intermediate state with the pointer deleted (round-2 ADVICE: the
-    * previous delete-then-rename left a window with NO `_CURRENT`). */
+    * no intermediate state with the pointer deleted: a delete-then-rename
+    * would leave a window with NO `_CURRENT`. */
   def publish(spark: SparkSession, tableDir: String, snap: String): Unit = {
     writeFilesManifest(spark, tableDir, snap)
     val (f, dir) = fs(spark, tableDir)

@@ -105,6 +105,38 @@ class CurationJobSpec extends AnyFunSuite {
     }
   }
 
+  test("a run killed between stage_clean and publish resumes without rewriting stage_clean") {
+    val table = java.nio.file.Files.createTempDirectory("curation_job_kill")
+      .toString + "/corpus_blocks"
+    val (snap, _) = CurationJob.run(spark, s"$srcDir/documents.parquet", table,
+      nBuckets = 8, waves = 2)
+    assert(snap === "snap-00001")
+    val clean = published(table)
+    // what a kill after stage_clean's last wave leaves: no pointer, no
+    // file manifest, no block map and no block-map manifest
+    val snapDir = new java.io.File(s"$table/$snap")
+    Seq(s"$table/_CURRENT", s"$table/$snap/files.list", s"$table/$snap/data",
+        s"$table/$snap/manifest").foreach { p =>
+      val f = new java.io.File(p)
+      assert(f.exists, p)
+      org.apache.commons.io.FileUtils.forceDelete(f)
+    }
+    def files(dir: java.io.File): Seq[java.io.File] =
+      dir.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    def mtimes = files(new java.io.File(snapDir, "stage_clean"))
+      .map(f => f.getPath -> f.lastModified).toMap
+    val before = mtimes
+    assert(before.keys.exists(_.endsWith(".parquet")))
+    val (retry, written) = CurationJob.run(spark, s"$srcDir/documents.parquet", table,
+      nBuckets = 8, waves = 2)
+    assert(retry === "snap-00001")
+    assert(TableIO.currentSnapshot(spark, table) === Some(retry))
+    assert(mtimes === before, "stage_clean was rewritten on resume")
+    val got = published(table)
+    assert(got === clean)
+    assert(written === got.size.toLong)
+  }
+
   test("a retry with a different nBuckets starts a fresh snapshot") {
     // a failed attempt at nBuckets = 8 left its params and a partial
     // stage_clean manifest in an unpublished snapshot; its done bucket ids

@@ -96,10 +96,8 @@ class ScaleSpec extends AnyFunSuite {
     val turns = Transcripts.synthetic(spark, 300, 10).drop("doc_text")
     // keep only rows landing in ODD buckets of 8, so wave 0 of waves=2
     // (the even buckets) is entirely empty: the wave's write commits no
-    // partition dir and the count-read of the then-fileless outDir used to
-    // throw a schema-inference error; empty buckets must still land in the
-    // manifest (rows=0) or every resume rescans them (round-4 review
-    // findings)
+    // partition dir, and its empty buckets must still land in the manifest
+    // (rows=0) or every resume rescans them
     val result = Extract.pipeline(turns)
     val odd = result.withColumn("bucket", Scale.bucketCol(8))
       .filter(pmod(col("bucket"), lit(2)) === 1).drop("bucket")
@@ -107,6 +105,16 @@ class ScaleSpec extends AnyFunSuite {
       nBuckets = 8, waves = 2)
     assert(n === odd.count())
     assert(Scale.completedBuckets(spark, s"$tmp/man") === (0 until 8).toSet)
+    // with no rows at all no wave commits a bucket dir; the dir must still
+    // read back, with the columns a non-empty write has
+    val none = result.filter(lit(false))
+    assert(Scale.resumableWrite(none, s"$tmp/none", s"$tmp/man_none",
+      nBuckets = 8, waves = 2) === 0)
+    assert(Scale.completedBuckets(spark, s"$tmp/man_none") === (0 until 8).toSet)
+    val back = spark.read.parquet(s"$tmp/none")
+    assert(back.schema.map(f => f.name -> f.dataType.simpleString) ===
+      Scale.bucketedSchema(none.schema).map(f => f.name -> f.dataType.simpleString))
+    assert(back.count() === 0)
   }
 
   test("salted write spreads a skewed conversation across writer files") {
@@ -217,36 +225,57 @@ class ScaleSpec extends AnyFunSuite {
     assert(perTask.max < 0.35 * n, s"rows per writer task: $perTask")
   }
 
-  test("pre-pass counts reach the manifest only when keyFrame is the written rows") {
-    val tmp = Files.createTempDirectory("graft_keyframe").toString
-    val result = Extract.pipeline(Transcripts.synthetic(spark, 2000, 10).drop("doc_text"))
-    val observed = result.observe(
-      org.apache.spark.sql.Observation("keyframe"), count(lit(1)).as("rows"))
-    val reads = new java.util.concurrent.ConcurrentLinkedQueue[String]
+  /** What `body` returns, and the (function name, executed plan, observed
+    * metric names) of every query that succeeded while it ran. */
+  private def queriesDuring[T](body: => T): (T, Seq[(String, String, Set[String])]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Set[String])]
     val listener = new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        if (f == "collect") reads.add(qe.executedPlan.toString)
+        seen.add((f, qe.executedPlan.toString, qe.observedMetrics.keySet))
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
-    val (exact, other) =
-      try {
-        val exact = Scale.resumableWrite(observed, s"$tmp/exact", s"$tmp/man1",
-          nBuckets = 8, salts = 4, keyFrame = Some(result))
-        // counts of other rows size the fan-out but never reach the manifest
-        val other = Scale.resumableWrite(observed, s"$tmp/other", s"$tmp/man2",
-          nBuckets = 8, salts = 4, keyFrame = Some(result.filter(col("turn_idx") < 5)))
-        spark.range(7).collect() // the listener bus delivers in order
-        eventually(timeout(30.seconds)) {
-          assert(reads.toArray.exists(_.toString.contains("Range (0, 7")))
-        }
-        (exact, other)
-      } finally spark.listenerManager.unregister(listener)
-    assert(exact === 2000)
-    assert(other === 2000)
-    val plans = reads.toArray.map(_.toString)
-    assert(!plans.exists(_.contains(s"$tmp/exact")), "exact counts were read back")
-    assert(plans.exists(_.contains(s"$tmp/other")), "other rows' counts were not read back")
+    try {
+      val result = body
+      spark.range(7).collect() // the listener bus delivers in order
+      eventually(timeout(30.seconds)) {
+        assert(seen.asScala.exists(_._2.contains("Range (0, 7")))
+      }
+      (result, seen.asScala.toSeq.filterNot(_._2.contains("Range (0, 7")))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("the manifest records the written files' rows, and nothing reads them back") {
+    val tmp = Files.createTempDirectory("graft_footer_counts").toString
+    val result = Extract.pipeline(Transcripts.synthetic(spark, 2000, 10).drop("doc_text"))
+    val obs = org.apache.spark.sql.Observation("footer_counts")
+    // (input, salts, its Observation): a nondeterministic filter keeps
+    // different rows on each evaluation, so a pre-pass count of it is not
+    // the written rows
+    val inputs = Seq(
+      ("plain", result, 1, None),
+      ("observed", result.observe(obs, count(lit(1)).as("rows")), 4, Some(obs)),
+      ("nondeterministic", result.filter(rand(7) < 0.5), 4, None))
+    inputs.foreach { case (name, df, salts, observation) =>
+      val out = s"$tmp/$name"; val man = s"$tmp/man_$name"
+      val (n, queries) = queriesDuring {
+        Scale.resumableWrite(df, out, man, nBuckets = 8, salts = salts)
+      }
+      val table = spark.read.parquet(out)
+      val perBucket = table.groupBy("bucket").count().collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      val manifest = spark.read.parquet(man).collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toSeq.sorted
+      assert(manifest === (0 until 8).map(b => b -> perBucket.getOrElse(b, 0L)), name)
+      val readBack = queries.filter(q => q._1 == "collect" && q._2.contains(out))
+      assert(readBack.isEmpty, s"$name: the written rows were read back: $readBack")
+      assert(n === table.count(), name)
+      observation.foreach { o =>
+        val fired = queries.filter(_._3.contains(o.name))
+        assert(fired.size === 1, s"$name: the Observation fired in ${fired.map(_._1)}")
+        assert(o.get.get("rows") === Some(n), name)
+      }
+    }
   }
 
   /** Command lines of the OS processes started while `body` runs, from an

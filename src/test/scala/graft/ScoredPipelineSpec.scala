@@ -34,7 +34,7 @@ class ScoredPipelineSpec extends AnyFunSuite {
 
   test("scores are exposed per block and stay in (0,1)") {
     val turns = Transcripts.synthetic(spark, 50, 10).drop("doc_text")
-    val blocks = Extract.scored(Extract.classified(Extract.lexed(turns)))
+    val blocks = Extract.scoreLabeled(Extract.lexed(turns))
       .select(explode(col("blocks")).as("b"))
       .select(col("b.score").as("score"))
     val stats = blocks.agg(min("score"), max("score")).head()
