@@ -79,7 +79,7 @@ object ExtractJob {
     //    job, and obs.get would block forever) or sees only the re-written
     //    subset.
     // Both fall back to one aggregation over the written table.
-    val resumed = Scale.completedBuckets(spark, s"$table/$snap/manifest").nonEmpty
+    val resumed = Scale.manifestRows(spark, s"$table/$snap/manifest").nonEmpty
     val pipeline = Extract.pipeline(turns)
     val obs =
       if (waves == 1 && !resumed)

@@ -127,10 +127,4 @@ object Vocab {
       .withColumn("tfidf", tf * log(lit(nDocs.toDouble) / col("df").cast("double")))
       .select(col(docKey), col("token_id"), col("cnt"), col("tfidf"))
   }
-
-  /** A5 — global token frequency, keep freq > minFreq
-    * (reference: modules/k_means_approach.py:60-65). */
-  def globalFreq(tokensLong: DataFrame, minFreq: Long = 1): DataFrame =
-    tokensLong.groupBy("token").agg(count(lit(1)).as("freq"))
-      .filter(col("freq") > minFreq)
 }

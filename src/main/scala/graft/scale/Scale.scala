@@ -1,9 +1,15 @@
 package graft.scale
 
+import java.io.{FileNotFoundException, IOException}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import scala.io.Source
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, LogicalPlan}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.functions._
@@ -11,9 +17,8 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
 
 /** The scale module (SURVEY.md §7 item 8): conv_id hash bucketing, a keyed
   * write that salts only measured-hot buckets, AQE config, and the
-  * checkpointed per-partition lineage manifest that makes a failed
-  * 10^12-turn run resumable without recomputing completed buckets
-  * (north_rule).
+  * per-bucket lineage manifest that makes a failed 10^12-turn run
+  * resumable without recomputing completed buckets (north_rule).
   *
   * The reference has no equivalent — a failed run restarts from scratch and
   * "resume" is a human moving files (reference: src/doc_classification.py:75-92).
@@ -86,42 +91,55 @@ object Scale {
 
   // ---------------------------------------------------------------- manifest
 
-  /** Per-partition lineage manifest: a tiny parquet table
-    * (bucket int, rows long) recording finished output buckets. Idempotent
-    * resume = read manifest, skip completed buckets, overwrite-by-partition
-    * for the rest. Plain application logic, not planner surgery
-    * (SURVEY.md §4 conclusion). All path probing goes through the Hadoop
-    * FileSystem API, so the same code runs on S3 and HDFS.
+  /** Per-bucket lineage manifest: a directory of small text files, one per
+    * committed wave, each holding one `bucket<TAB>rows` line per bucket of
+    * the wave. Idempotent resume = read the manifest, skip its buckets,
+    * overwrite-by-partition the rest. Plain application logic, not planner
+    * surgery (SURVEY.md §4 conclusion): the files are written and read in
+    * the driver through the Hadoop FileSystem API, with no Spark job, so the
+    * same code runs on S3 and HDFS.
     *
-    * Manifested row count per completed bucket. The manifest is
-    * append-only, so a crashed run that died between its write commit and
-    * its manifest append and was then re-run records a bucket twice (with
-    * identical counts; the data dirs themselves are last-writer-wins under
-    * dynamic overwrite): one entry per bucket keeps the bookkeeping honest.
-    * Single-writer-per-snapshot remains the operating assumption (the
-    * Iceberg deployment gets real commit-level OCC). A manifest dir without
-    * a data file (never written, or a crashed append that left only
-    * `_temporary`) reads as empty rather than failing schema inference. */
-  private def manifestRows(spark: SparkSession, manifestDir: String): Map[Int, Long] =
-    if (!TableIO.dataFiles(spark, manifestDir).hasNext) Map.empty
-    else spark.read.parquet(manifestDir)
-      .groupBy(col("bucket")).agg(max(col("rows")))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-
-  def completedBuckets(spark: SparkSession, manifestDir: String): Set[Int] =
-    manifestRows(spark, manifestDir).keySet
-
-  def recordBucket(spark: SparkSession, manifestDir: String, bucket: Int,
-                   rows: Long): Unit =
-    recordBuckets(spark, manifestDir, Seq(bucket -> rows))
-
-  /** Record several completed buckets in ONE append job. */
+    * A wave's file is created as the hidden `.wave-<uuid>.tmp` and renamed
+    * to `wave-<uuid>`. The name is fresh, so the rename never replaces a
+    * file, and a crash before it leaves only a hidden file that
+    * [[manifestRows]] skips: the wave's buckets are rewritten on retry. */
   def recordBuckets(spark: SparkSession, manifestDir: String,
                     buckets: Seq[(Int, Long)]): Unit = {
-    import spark.implicits._
-    if (buckets.nonEmpty)
-      buckets.toDF("bucket", "rows")
-        .coalesce(1).write.mode("append").parquet(manifestDir)
+    val dir = new Path(manifestDir)
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val id = java.util.UUID.randomUUID()
+    val tmp = new Path(dir, s".wave-$id.tmp")
+    val out = fs.create(tmp, false)
+    try out.write(buckets.map { case (b, n) => s"$b\t$n\n" }.mkString.getBytes(UTF_8))
+    finally out.close()
+    if (!fs.rename(tmp, new Path(dir, s"wave-$id")))
+      throw new IOException(s"could not rename $tmp to wave-$id")
+  }
+
+  /** Manifested row count per completed bucket, from one listing of
+    * `manifestDir` that skips hidden (`_`, `.`) names: an unrenamed `.tmp`
+    * and the checksum files. A missing dir reads as empty. A bucket listed
+    * twice (a run that died between a wave's commit and its rename, then
+    * re-ran the wave) keeps its largest count. The manifest is input from
+    * disk, so a line that is not `bucket<TAB>rows` throws, naming its file.
+    * Single-writer-per-snapshot remains the operating assumption (the
+    * Iceberg deployment gets real commit-level OCC). */
+  def manifestRows(spark: SparkSession, manifestDir: String): Map[Int, Long] = {
+    val dir = new Path(manifestDir)
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val files =
+      try fs.listStatus(dir) catch { case _: FileNotFoundException => Array.empty[FileStatus] }
+    files.iterator.map(_.getPath)
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+      .flatMap { p =>
+        val in = fs.open(p)
+        val lines = try Source.fromInputStream(in, "UTF-8").getLines().toList finally in.close()
+        lines.map(l => (l.split('\t') match {
+          case Array(b, n) => b.toIntOption.zip(n.toLongOption)
+          case _ => None
+        }).getOrElse(throw new IllegalStateException(s"malformed manifest line in $p: '$l'")))
+      }
+      .foldLeft(Map.empty[Int, Long]) { case (m, (b, n)) => m.updated(b, m.getOrElse(b, n) max n) }
   }
 
   /** Rows per bucket of `df`, from one column-pruned pass over `keyCol`.
@@ -155,16 +173,16 @@ object Scale {
 
   /** Rows under each of `buckets`' `bucket=` dirs in `outDir`: the sum of
     * the record counts in its data files' parquet footers. A driver-side
-    * listing plus one footer read per file; no Spark job. All files share
-    * one read-options object: the one-argument `ParquetFileReader.open`
-    * builds a fresh Hadoop `Configuration` per file, which rescans the
-    * classpath. A bucket without a dir holds no rows. */
+    * listing of each of those dirs, not of `outDir`, plus one footer read
+    * per file; no Spark job. All files share one read-options object: the
+    * one-argument `ParquetFileReader.open` builds a fresh Hadoop
+    * `Configuration` per file, which rescans the classpath. A bucket
+    * without a dir holds no rows. */
   private def footerCounts(spark: SparkSession, outDir: String,
                            buckets: Seq[Int]): Seq[(Int, Long)] = {
     val conf = spark.sessionState.newHadoopConf()
     val opts = HadoopReadOptions.builder(conf).build()
-    val files = TableIO.dataFiles(spark, outDir).toSeq.groupBy(_.getPath.getParent.getName)
-    buckets.map(b => b -> files.getOrElse(s"bucket=$b", Nil).map { st =>
+    buckets.map(b => b -> TableIO.dataFiles(spark, s"$outDir/bucket=$b").map { st =>
       val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf), opts)
       try r.getRecordCount finally r.close()
     }.sum)
@@ -195,8 +213,9 @@ object Scale {
     * The manifest holds the parquet footer counts of the committed files:
     * after each wave commits, every bucket of the wave is recorded with the
     * record counts summed over its dir's data files, a zero-row bucket
-    * included (rows=0), or every resume would rescan it. Counting runs no
-    * Spark job; the bookkeeping is one manifest append per wave. The return
+    * included (rows=0), or every resume would rescan it. Neither counting
+    * nor recording runs a Spark job: each wave adds one manifest file in
+    * the driver, by create-then-rename ([[recordBuckets]]). The return
     * value is the total over the manifest: earlier runs' buckets plus this
     * one's. A caller that can count the written rows itself (ExtractJob's
     * Observation) should compare that count with the total before it
@@ -212,9 +231,10 @@ object Scale {
     * (conv_id, turn_idx), never assume file order (SURVEY §1).
     *
     * `waves` chunks the write into that many sequential jobs (wave w writes
-    * buckets with `bucket % waves == w`), appending the manifest AFTER each
-    * wave. With waves=1 (default) the manifest only ever gains entries once
-    * the WHOLE write commits — so a run killed mid-write resumes from zero.
+    * buckets with `bucket % waves == w`), recording each wave's manifest
+    * file AFTER the wave commits. With waves=1 (default) the manifest only
+    * ever gains entries once the WHOLE write commits — so a run killed
+    * mid-write resumes from zero.
     * waves>1 is what makes a 10^12-turn run killable: die in wave k and the
     * retry prunes waves 0..k−1 at the source. The cost is `waves` input
     * scans — on the real deployment the input is an Iceberg table bucketed
@@ -261,7 +281,9 @@ object Scale {
         rows
       }
     }
-    TableIO.writeEmptyIfNoData(spark, outDir, bucketedSchema(df.schema))
+    if (!TableIO.dataFiles(spark, outDir).hasNext)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], bucketedSchema(df.schema))
+        .repartition(1).write.mode("overwrite").parquet(outDir)
     (done ++ recorded).values.sum
   }
 }

@@ -161,38 +161,6 @@ object TableIO {
 
   // ------------------------------------------------------------ lifecycle
 
-  /** Write `df` as the table's next snapshot and atomically publish it.
-    * Returns the new snapshot name. The data write happens into an
-    * unpublished directory; the table "commits" only at the pointer
-    * rename, so a failed write leaves the published table untouched
-    * (crash-safe, idempotent to retry). */
-  def snapshotWrite(df: DataFrame, tableDir: String,
-                    sortCols: Seq[String] = Seq("conv_id", "turn_idx")): String = {
-    val spark = df.sparkSession
-    val next = nextSnapshotName(spark, tableDir)
-    val sorted = if (sortCols.nonEmpty) df.sortWithinPartitions(sortCols.map(df(_)): _*) else df
-    val dd = dataDir(tableDir, next)
-    sorted.write.mode("overwrite").parquet(dd)
-    // a 0-partition frame writes only _SUCCESS, publishing a snapshot that
-    // readTable can never schema-infer. Repair AFTER the write by probing
-    // the output dir: probing the input plan (rdd.getNumPartitions) would
-    // materialize every AQE shuffle stage, running a shuffled pipeline once
-    // for the probe and again for the write.
-    writeEmptyIfNoData(spark, dd, df.schema)
-    publish(spark, tableDir, next)
-    next
-  }
-
-  /** Make `dir` readable when a write left no data file in it (a
-    * 0-partition frame commits only `_SUCCESS`; a bucketed write of no rows
-    * commits no `bucket=` dir): write one empty parquet file with
-    * `schema`. */
-  private[scale] def writeEmptyIfNoData(spark: SparkSession, dir: String,
-                                        schema: org.apache.spark.sql.types.StructType): Unit =
-    if (!dataFiles(spark, dir).hasNext)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        .repartition(1).write.mode("overwrite").parquet(dir)
-
   /** The `.parquet` data files under `dir`, recursively, lazily, skipping
     * the hidden entries (`_…`, `.…`) Spark's file index skips; none when
     * `dir` does not exist. A plain `listStatus` walk on purpose:

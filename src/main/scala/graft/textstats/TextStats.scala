@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for a large-scale training-data pipeline:
-  * language ID, quality scoring, token counting, fingerprinting. All are
+  * language ID, quality scoring, token counting, PII redaction. All are
   * narrow, UDF-free column pipelines — per-row math over one scan, so they
   * compose with the extraction kernel without extra stages or shuffles.
   */
@@ -67,34 +67,6 @@ object TextStats {
   /** Whitespace token count. */
   def wsTokenCount(text: Column): Column =
     size(filter(split(text, "\\s+"), t => length(t) > 0))
-
-  /** BPE-ish subword count: word-piece regex split — alpha runs, digit runs
-    * and single punctuation each count as one piece; long alpha runs count
-    * ceil(len/4) pieces (a cheap deterministic proxy for BPE merges). */
-  def bpeishTokenCount(text: Column): Column = {
-    val pieces = filter(split(text, "(?<=[^a-zA-Z0-9])|(?=[^a-zA-Z0-9])"),
-      t => length(trim(t)) > 0)
-    // each piece contributes ceil(len/4) for alpha runs, 1 otherwise
-    aggregate(pieces, lit(0),
-      (acc, p) => acc + when(p.rlike("^[a-zA-Z]+$"),
-        ceil(length(p).cast("double") / 4.0).cast("int")).otherwise(lit(1)))
-  }
-
-  /** Document fingerprint — 64-bit polynomial rolling hash over the
-    * normalized text's characters, as pure column math: fold the token array
-    * with aggregate(), combining per-token xxhash64 values with a
-    * multiplicative rolling step. Deterministic, order-sensitive (unlike a
-    * bag hash) — two docs differing only in word order fingerprint apart. */
-  def fingerprint(tokens: Column): Column =
-    aggregate(tokens, lit(1125899906842597L),
-      (acc, t) => acc * lit(31L) + xxhash64(t))
-
-  /** Exact content fingerprint usable in cross-engine oracles — delegates
-    * to [[graft.dedup.Dedup.fingerprint]], THE one normalization
-    * definition (round-3 review: an independent spelling here is exactly
-    * the drift that broke the streaming digest). */
-  def md5Fingerprint(text: Column): Column =
-    graft.dedup.Dedup.fingerprint(text)
 
   // ----------------------------------------------------------- PII redaction
 

@@ -63,7 +63,7 @@ class CurationJobSpec extends AnyFunSuite {
     assert(got.size.toLong === written)
     // the stage boundary is manifest-guarded (what makes a retry resume
     // instead of recompute) — every bucket of stage_clean is recorded
-    assert(graft.scale.Scale.completedBuckets(spark,
+    assert(graft.scale.Scale.manifestRows(spark,
       s"$table/$snap/stage_clean/manifest").size === 8)
   }
 
@@ -150,7 +150,7 @@ class CurationJobSpec extends AnyFunSuite {
     val (snap, written) = CurationJob.run(spark,
       s"$srcDir/documents.parquet", table, nBuckets = 16)
     assert(snap === "snap-00002")
-    assert(Scale.completedBuckets(spark,
+    assert(Scale.manifestRows(spark,
       s"$table/snap-00002/stage_clean/manifest").size === 16)
     val got = published(table)
     assert(got.size.toLong === written)

@@ -81,7 +81,7 @@ class ExtractJobSpec extends AnyFunSuite {
     graft.scale.Scale.resumableWrite(
       Extract.pipeline(spark.read.parquet(s"$tmp/in")),
       TableIO.dataDir(s"$tmp/table", "snap-00001"), manifest, nBuckets = 8)
-    graft.scale.Scale.recordBucket(spark, manifest, 0, 1000L)
+    graft.scale.Scale.recordBuckets(spark, manifest, Seq(0 -> 1000L))
     Seq(1, 2).foreach { _ =>
       intercept[IllegalStateException] {
         ExtractJob.run(spark, s"$tmp/in", s"$tmp/table", nBuckets = 8, salts = 4, cpus = 4)
@@ -117,9 +117,8 @@ class ExtractJobSpec extends AnyFunSuite {
     // params + a partial manifest exists, but was never published
     TableIO.writeSidecar(spark, s"$tmp/table", "snap-00001", "params",
       "nBuckets=8\nsalts=4")
-    import spark.implicits._
-    Seq((0, 10L), (1, 10L)).toDF("bucket", "rows")
-      .write.parquet(s"$tmp/table/snap-00001/manifest")
+    graft.scale.Scale.recordBuckets(spark, s"$tmp/table/snap-00001/manifest",
+      Seq(0 -> 10L, 1 -> 10L))
     // retry with DIFFERENT nBuckets: must NOT resume snap-00001 (its "done"
     // buckets were computed under the old bucketing — round-2 ADVICE)
     val (snap, n) = ExtractJob.run(spark, s"$tmp/in", s"$tmp/table",

@@ -35,11 +35,9 @@ class ScaleSpec extends AnyFunSuite {
     val withBucket = result.withColumn("bucket", Scale.bucketCol(8))
     withBucket.filter(col("bucket") < 3)
       .write.mode("overwrite").partitionBy("bucket").parquet(out2)
-    (0 until 3).foreach { b =>
-      val n = spark.read.parquet(s"$out2/bucket=$b").count()
-      Scale.recordBucket(spark, man2, b, n)
-    }
-    val preDone = Scale.completedBuckets(spark, man2)
+    Scale.recordBuckets(spark, man2,
+      (0 until 3).map(b => b -> spark.read.parquet(s"$out2/bucket=$b").count()))
+    val preDone = Scale.manifestRows(spark, man2).keySet
     assert(preDone === Set(0, 1, 2))
     val n2 = Scale.resumableWrite(result, out2, man2, nBuckets = 8)
 
@@ -49,8 +47,12 @@ class ScaleSpec extends AnyFunSuite {
     assert(a.exceptAll(b).count() === 0)
     assert(b.exceptAll(a).count() === 0)
     // second resume is a no-op on buckets (all recorded)
-    assert(Scale.completedBuckets(spark, man2) === (0 until 8).toSet)
+    assert(Scale.manifestRows(spark, man2).keySet === (0 until 8).toSet)
   }
+
+  /** File name -> mtime of every file directly under `dir`. */
+  private def mtimes(dir: java.io.File): Map[String, Long] =
+    dir.listFiles().map(f => f.getName -> f.lastModified).toMap
 
   test("wave-chunked write: same table as one-shot, done waves not rewritten") {
     val tmp = Files.createTempDirectory("graft_waves").toString
@@ -66,14 +68,9 @@ class ScaleSpec extends AnyFunSuite {
     val withBucket = result.withColumn("bucket", Scale.bucketCol(8))
     withBucket.filter(col("bucket").isin(0, 4))
       .write.mode("overwrite").partitionBy("bucket").parquet(waved)
-    Seq(0, 4).foreach { b =>
-      val n = spark.read.parquet(s"$waved/bucket=$b").count()
-      Scale.recordBucket(spark, manWaved, b, n)
-    }
-    val mtimes0 = Seq(0, 4).map { b =>
-      val d = new java.io.File(s"$waved/bucket=$b")
-      b -> d.listFiles().map(f => f.getName -> f.lastModified).toMap
-    }.toMap
+    Scale.recordBuckets(spark, manWaved,
+      Seq(0, 4).map(b => b -> spark.read.parquet(s"$waved/bucket=$b").count()))
+    val mtimes0 = Seq(0, 4).map(b => b -> mtimes(new java.io.File(s"$waved/bucket=$b"))).toMap
 
     // resume with waves=4: waves 0 fully pruned, 1–3 written + manifested
     val n2 = Scale.resumableWrite(result, waved, manWaved, nBuckets = 8, waves = 4)
@@ -82,11 +79,10 @@ class ScaleSpec extends AnyFunSuite {
     val b = spark.read.parquet(waved).select("conv_id", "turn_idx", "text")
     assert(a.exceptAll(b).count() === 0)
     assert(b.exceptAll(a).count() === 0)
-    assert(Scale.completedBuckets(spark, manWaved) === (0 until 8).toSet)
+    assert(Scale.manifestRows(spark, manWaved).keySet === (0 until 8).toSet)
     // the crashed run's committed buckets were skipped, not rewritten
     Seq(0, 4).foreach { bkt =>
-      val now = new java.io.File(s"$waved/bucket=$bkt")
-        .listFiles().map(f => f.getName -> f.lastModified).toMap
+      val now = mtimes(new java.io.File(s"$waved/bucket=$bkt"))
       assert(now === mtimes0(bkt), s"bucket $bkt was rewritten on resume")
     }
   }
@@ -104,13 +100,13 @@ class ScaleSpec extends AnyFunSuite {
     val n = Scale.resumableWrite(odd, s"$tmp/out", s"$tmp/man",
       nBuckets = 8, waves = 2)
     assert(n === odd.count())
-    assert(Scale.completedBuckets(spark, s"$tmp/man") === (0 until 8).toSet)
+    assert(Scale.manifestRows(spark, s"$tmp/man").keySet === (0 until 8).toSet)
     // with no rows at all no wave commits a bucket dir; the dir must still
     // read back, with the columns a non-empty write has
     val none = result.filter(lit(false))
     assert(Scale.resumableWrite(none, s"$tmp/none", s"$tmp/man_none",
       nBuckets = 8, waves = 2) === 0)
-    assert(Scale.completedBuckets(spark, s"$tmp/man_none") === (0 until 8).toSet)
+    assert(Scale.manifestRows(spark, s"$tmp/man_none").keySet === (0 until 8).toSet)
     val back = spark.read.parquet(s"$tmp/none")
     assert(back.schema.map(f => f.name -> f.dataType.simpleString) ===
       Scale.bucketedSchema(none.schema).map(f => f.name -> f.dataType.simpleString))
@@ -264,11 +260,12 @@ class ScaleSpec extends AnyFunSuite {
       val table = spark.read.parquet(out)
       val perBucket = table.groupBy("bucket").count().collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val manifest = spark.read.parquet(man).collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toSeq.sorted
+      val manifest = Scale.manifestRows(spark, man).toSeq.sorted
       assert(manifest === (0 until 8).map(b => b -> perBucket.getOrElse(b, 0L)), name)
       val readBack = queries.filter(q => q._1 == "collect" && q._2.contains(out))
       assert(readBack.isEmpty, s"$name: the written rows were read back: $readBack")
+      val viaSpark = queries.filter(_._2.contains(man))
+      assert(viaSpark.isEmpty, s"$name: a query touched the manifest: ${viaSpark.map(_._1)}")
       assert(n === table.count(), name)
       observation.foreach { o =>
         val fired = queries.filter(_._3.contains(o.name))
@@ -276,6 +273,51 @@ class ScaleSpec extends AnyFunSuite {
         assert(o.get.get("rows") === Some(n), name)
       }
     }
+  }
+
+  test("a wave whose manifest file never landed is rewritten on retry, and only it") {
+    val tmp = Files.createTempDirectory("graft_wave_kill").toString
+    val out = s"$tmp/out"; val man = new java.io.File(s"$tmp/man")
+    val result = Extract.pipeline(Transcripts.synthetic(spark, 2000, 10).drop("doc_text"))
+    val n1 = Scale.resumableWrite(result, out, man.getPath, nBuckets = 8, waves = 4)
+    val rows1 = Scale.manifestRows(spark, man.getPath)
+    // what a kill between wave 2's commit and its manifest rename leaves:
+    // the wave's bucket dirs, no wave file, and a hidden temp file
+    val waveFiles = man.listFiles().toSeq.filter(_.getName.startsWith("wave-"))
+    assert(waveFiles.size === 4)
+    def buckets(f: java.io.File) =
+      Files.readAllLines(f.toPath).asScala.map(_.split('\t')(0).toInt).toSet
+    val (wave2, kept) = waveFiles.partition(buckets(_) == Set(2, 6))
+    assert(wave2.size === 1)
+    assert(wave2.head.delete())
+    Files.write(new java.io.File(man, ".wave-x.tmp").toPath, "garbage\n".getBytes("UTF-8"))
+    val keptBefore = kept.map(f => f.getName -> f.lastModified).toMap
+    val dataBefore = (0 until 8).map(b => b -> mtimes(new java.io.File(s"$out/bucket=$b"))).toMap
+
+    val n2 = Scale.resumableWrite(result, out, man.getPath, nBuckets = 8, waves = 4)
+    assert(n2 === n1)
+    assert(Scale.manifestRows(spark, man.getPath) === rows1)
+    assert(kept.map(f => f.getName -> f.lastModified).toMap === keptBefore)
+    (0 until 8).foreach { b =>
+      val now = mtimes(new java.io.File(s"$out/bucket=$b"))
+      if (b % 4 == 2) assert(now.keySet.intersect(dataBefore(b).keySet).isEmpty,
+        s"bucket $b was not rewritten")
+      else assert(now === dataBefore(b), s"bucket $b was rewritten")
+    }
+    assert(spark.read.parquet(out).count() === n1)
+  }
+
+  test("a manifest file with a malformed line stops the write and names the file") {
+    val tmp = Files.createTempDirectory("graft_bad_manifest").toString
+    val man = s"$tmp/man"
+    Scale.recordBuckets(spark, man, Seq(0 -> 10L))
+    Files.write(java.nio.file.Paths.get(man, "wave-bad"), "1\t10\n1 10\n".getBytes("UTF-8"))
+    val result = Extract.pipeline(Transcripts.synthetic(spark, 200, 10).drop("doc_text"))
+    val e = intercept[IllegalStateException] {
+      Scale.resumableWrite(result, s"$tmp/out", man, nBuckets = 8)
+    }
+    assert(e.getMessage.contains(s"$man/wave-bad"), e.getMessage)
+    assert(!new java.io.File(s"$tmp/out").exists())
   }
 
   /** Command lines of the OS processes started while `body` runs, from an
