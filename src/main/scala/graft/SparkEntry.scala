@@ -262,9 +262,7 @@ object SparkEntry {
     artifact(s, dir, "lsa") {
       val (vocab, n, vocabSize) = vocabInfo(s, dir)
       val tfidf = Vocab.tfidfFromCounts(docTermCounts(s, dir), vocab, "doc_id", n)
-      // materialize = persist + release the internal vector-RDD cache
-      graft.ml.Lsa.projectModel(tfidf, "doc_id", "tfidf", vocabSize, k = 5,
-        materialize = true)
+      graft.ml.Lsa.projectModel(tfidf, "doc_id", "tfidf", vocabSize, k = 5)
     }(_._1.unpersist())
 
   private def lsaProjection(s: SparkSession, dir: String): DataFrame =
@@ -1528,7 +1526,7 @@ object SparkEntry {
     // corr cell from q52's parquet output (self-consistency): the LDA fit isn't replayable, the Pearson arithmetic is.
     "q56_topic_corr" -> ((s, dir) => {
       // q52's shared frame IS the 6dp-rounded doc-topic matrix (its dist
-      // column rounds before the explode), so a docTopics + round here
+      // column rounds before the explode), so transforming + rounding here
       // would be a third LDA transform producing byte-identical weights
       val dt = queries("q52_lda")(s, dir)
         .select(col("doc_id"), col("topic"), col("weight"))

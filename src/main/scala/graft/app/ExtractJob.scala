@@ -1,5 +1,6 @@
 package graft.app
 
+import graft.core.Turn
 import graft.extract.Extract
 import graft.scale.{Scale, TableIO}
 import org.apache.spark.sql.SparkSession
@@ -13,8 +14,9 @@ import org.apache.spark.sql.functions._
   *   spark-submit --class graft.app.ExtractJob <jar> \
   *     <inputPath> <tableDir> [nBuckets] [salts] [waves]
   *
-  * Scale posture (north_rule): input is read as-is (at 10^12 turns this is
-  * an Iceberg table with bucket(conv_id) partitioning; here a parquet dir);
+  * Scale posture (north_rule): input is read with the declared
+  * `Turn.schema` (at 10^12 turns this is an Iceberg table with
+  * bucket(conv_id) partitioning; here a parquet dir);
   * the per-turn kernel is embarrassingly parallel and runs MAP-SIDE in the
   * scan stage — the job's only shuffle is the write's keyed repartition.
   * `salts` is the writer spread of a hot bucket: a column-pruned count of
@@ -64,8 +66,9 @@ object ExtractJob {
     // parallel and runs map-side inside the scan stage (size-balanced
     // splits), so the job's ONLY shuffle is the write's keyed repartition —
     // which is where conversation skew actually bites and where
-    // resumableWrite's measured fan-out handles it.
-    val turns = spark.read.parquet(in)
+    // resumableWrite's measured fan-out handles it. The declared schema
+    // means no inference job, and a mistyped input fails the read.
+    val turns = spark.read.schema(Turn.schema).parquet(in)
     // Observation (not a bare .observe name): the metrics are retrieved
     // after the write action and printed; a bare-name observe would compute
     // the aggregates on every row and discard them. Attached ONLY on a

@@ -1,6 +1,7 @@
 package graft.core
 
 import java.sql.Timestamp
+import org.apache.spark.sql.types._
 
 /** Core data model of the transcript-extraction engine.
   *
@@ -19,6 +20,17 @@ final case class Turn(
     tool: String,
     ts: Timestamp
 )
+
+object Turn {
+  /** The declared schema of a transcripts table, in [[Turn]]'s field
+    * order. Jobs and streams read their input with it: no schema-inference
+    * job runs, and an input whose column types differ fails the read
+    * instead of flowing on under other types. */
+  val schema: StructType = StructType(Seq(
+    StructField("conv_id", StringType), StructField("turn_idx", IntegerType),
+    StructField("role", StringType), StructField("text", StringType),
+    StructField("tool", StringType), StructField("ts", TimestampType)))
+}
 
 /** A span of extracted content, with [start, end) character offsets into the
   * ORIGINAL turn payload (reference analog: spaCy sentence spans,
@@ -66,9 +78,9 @@ final case class Block(
 )
 
 object Block {
-  /** Stopword set the E4 scorer's stop_ratio feature counts against —
-    * shared with graft.score.Scorer.DefaultStops (ONE constant; round-1
-    * ADVICE flagged two drifting stoplists). */
+  /** Stopword set the E4 scorer's stop_ratio feature counts against — the
+    * one shared stoplist, graft.text.Normalize.DefaultStops, so the
+    * scorer's weights and the text operators mean the same stopwords. */
   val Stops: Set[String] = graft.text.Normalize.DefaultStops.toSet
 
   /** Longest stopword — words longer than this skip the substring/lowercase
@@ -81,14 +93,14 @@ object Block {
     * The lexer already touches every char, so computing these here is
     * nearly free — versus 3 regex/split expression passes per block when
     * spelled in SQL (measured: 4× whole-kernel slowdown of the scored
-    * pipeline, round 2).
+    * pipeline).
     *
     * `stats = false` skips that pass (fields emitted as 0): the PLAIN rule
     * kernel (E3, the headline bench path) never reads nWords/nStops/nDigits
     * — its decision is pathChrome + length + link density — so the stats
     * scan plus its per-short-word substring/lowercase allocations were pure
-    * waste on the hottest path (round-7 optimization; the scored kernel and
-    * the exported block struct keep stats = true). */
+    * waste on the hottest path (the scored kernel and the exported block
+    * struct keep stats = true). */
   def make(tag: String, path: String, text: String, start: Int, end: Int,
            nTags: Int, nLinks: Int, linkChars: Int,
            stats: Boolean = true): Block = {
@@ -107,8 +119,8 @@ object Block {
       } else if (wordStart >= 0) {
         words += 1
         // Locale.ROOT: under e.g. tr-TR the default locale lowercases 'I'
-        // to dotless-i, silently changing nStops across environments
-        // (round-2 ADVICE) — Spark's lower() and DuckDB are locale-free.
+        // to dotless-i, silently changing nStops across environments —
+        // Spark's lower() and DuckDB are locale-free.
         if (i - wordStart <= MaxStopLen &&
             Stops.contains(text.substring(wordStart, i)
               .toLowerCase(java.util.Locale.ROOT))) stops += 1

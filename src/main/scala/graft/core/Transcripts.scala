@@ -103,9 +103,9 @@ object Transcripts {
   // ----------------------------------------------------------- adversarial
 
   /** [[fromDocuments]]'s twin with ADVERSARIAL payload shells: every shape
-    * walks the lexer's hardened edge paths (round-3 fixes, previously
-    * spec-pinned only — this generator puts them under the driver's DuckDB
-    * gate via q59) while still extracting to EXACTLY the document text, so
+    * walks the lexer's hardened edge paths (LexerSpec pins them; this
+    * generator also puts them under the DuckDB oracle gate via q59) while
+    * still extracting to EXACTLY the document text, so
     * the oracle stays `SELECT … text FROM documents`:
     *
     *  0: doctype; comment decoys containing fake content markup; the HTML5
@@ -126,7 +126,7 @@ object Transcripts {
     fromDocs(spark, dir, adversarialPayload)
 
   /** [[fromDocuments]] with every document's text prefixed by `prefix` + one
-    * space BEFORE the payload wrapping — the round-5 vehicle for putting
+    * space BEFORE the payload wrapping — the vehicle for putting
     * NON-ASCII text through the full extraction kernel under the driver
     * gate (q68): the fixture corpus is ASCII-clean, so without this the
     * lexer's multi-byte handling ran spec-only. `prefix` must contain no
@@ -141,7 +141,7 @@ object Transcripts {
   }
 
   // shape 0's content <p> opens with a SELF-CLOSED anchor: a lexer whose
-  // link scope leaked (round-3 finding) would count the whole text as link
+  // link scope leaked would count the whole text as link
   // chars and misclassify the content block chrome — observable as an empty
   // extraction, not just a feature wobble
   private val Adv0Pre =
@@ -217,9 +217,9 @@ object Transcripts {
     base
       .withColumn("conv", conv)
       // 14-digit pad: Spark lpad TRUNCATES longer strings, so an 8-wide pad
-      // silently COLLIDED conv_ids once conv counts passed 10^8 — breaking
-      // (conv_id, turn_idx) uniqueness exactly at the advertised 10^12-turn
-      // scale (round-3 review finding). 14 digits covers 10^14 convs.
+      // would silently COLLIDE conv_ids once conv counts pass 10^8 —
+      // breaking (conv_id, turn_idx) uniqueness exactly at the advertised
+      // 10^12-turn scale. 14 digits covers 10^14 convs.
       .withColumn("conv_id", concat(lit("c"), lpad(col("conv").cast("string"), 14, "0")))
       .withColumn("turn_idx",
         when(col("conv") === 0, col("id")).otherwise((col("id") % turnsPerConv)).cast("int"))

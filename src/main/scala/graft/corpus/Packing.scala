@@ -32,8 +32,7 @@ object Packing {
   /** The whitespace class, spelled EXPLICITLY instead of `\s`: Java's `\s`
     * is `[ \t\n\x0B\f\r]` while RE2's (the DuckDB oracle engine) omits the
     * vertical tab — a `\x0B` between words would tokenize differently
-    * cross-engine and shift every downstream span (round-6 review
-    * finding). The explicit class is bit-identical to Java `\s`, and its
+    * cross-engine and shift every downstream span. The explicit class is bit-identical to Java `\s`, and its
     * RE2 spelling (`[ \t\n\v\f\r]+`) matches it exactly. */
   val WsClass = "[ \\t\\n\\x0B\\f\\r]+"
 

@@ -32,8 +32,8 @@ object Vocab {
   /** THE shared aggregation of the text tier: per-document term frequencies
     * (docKey, token, cnt). Dictionary df-stats, BOW and tf-idf all derive
     * from this one aggregate, so a pipeline that consumes it twice shares
-    * the tokenize+explode+shuffle subtree via Spark's ReuseExchange — the
-    * round-1 plan recomputed tokenization once per branch (3× the dominant
+    * the tokenize+explode+shuffle subtree via Spark's ReuseExchange instead
+    * of recomputing tokenization once per branch (3× the dominant
     * narrow-stage cost at 100 TB). */
   def termCounts(tokensLong: DataFrame, docKey: String): DataFrame =
     tokensLong.groupBy(col(docKey), col("token")).agg(count(lit(1)).as("cnt"))
@@ -50,10 +50,6 @@ object Vocab {
   def dfFromCounts(termCounts: DataFrame): DataFrame =
     termCounts.groupBy("token").agg(count(lit(1)).as("df"))
 
-  /** A3 over raw long-form tokens (compat shim). */
-  def dfStats(tokensLong: DataFrame, docKey: String): DataFrame =
-    dfFromCounts(termCounts(tokensLong, docKey))
-
   /** A2+A3 — build the dictionary from term counts: filter extremes
     * (df < noBelow || df > noAbove·N dropped; reference:
     * main_corpus_processing.py:174 with call-site params
@@ -63,9 +59,9 @@ object Vocab {
     *
     * Id assignment is scale-safe: a distributed TakeOrdered (`orderBy` +
     * `limit`) caps the candidate set at keepN BEFORE the single-partition
-    * ranking window — round 1 pushed the whole pruned vocab through one
-    * unbounded global window sort, which a permissive noBelow turns into a
-    * billions-of-rows single partition at web scale. */
+    * ranking window — one unbounded global window sort over the whole
+    * pruned vocab is, under a permissive noBelow, a billions-of-rows single
+    * partition at web scale. */
   def buildFromCounts(termCounts: DataFrame, nDocs: Long,
                       noBelow: Long = 1, noAbove: Double = 1.0,
                       keepN: Int = 100000): DataFrame = {
@@ -78,12 +74,6 @@ object Vocab {
       .select(col("token"), (col("rk") - 1).cast("long").as("id"), col("df"))
   }
 
-  /** A2+A3 over raw long-form tokens (compat shim). */
-  def build(tokensLong: DataFrame, docKey: String, nDocs: Long,
-            noBelow: Long = 1, noAbove: Double = 1.0,
-            keepN: Int = 100000): DataFrame =
-    buildFromCounts(termCounts(tokensLong, docKey), nDocs, noBelow, noAbove, keepN)
-
   /** A4 — bag of words in long form (docKey, token_id, cnt) from the shared
     * term counts: broadcast-join the pruned vocab onto the aggregate. Long
     * form keeps downstream ops relational (SURVEY.md §1 BOW row). */
@@ -93,14 +83,10 @@ object Vocab {
       .join(broadcast(vocab.select("token", "id")), Seq("token"))
       .select(col(docKey), col("id").as("token_id"), col("cnt"))
 
-  /** A4 over raw long-form tokens (compat shim). */
-  def bow(tokensLong: DataFrame, vocab: DataFrame, docKey: String): DataFrame =
-    bowFromCounts(termCounts(tokensLong, docKey), vocab, docKey)
-
   /** M1 — TF-IDF straight from the shared term counts in ONE vocab join:
     * the broadcast vocab carries both id and df, so the plan holds a single
-    * vocab-build subtree (round 1 built the dictionary twice — once for bow
-    * ids, once for the df re-join). idf = ln(N/df); sublinear tf = 1+ln(tf).
+    * vocab-build subtree (never one for the bow ids and a second for a df
+    * re-join). idf = ln(N/df); sublinear tf = 1+ln(tf).
     * (reference: TfidfVectorizer(max_df=.5) k_means_approach.py:18;
     * sublinear variant supervised.py:118. HashingTF is rejected — hash
     * collisions break fixture equality, SURVEY.md M1.) */
@@ -113,18 +99,5 @@ object Vocab {
       .join(broadcast(vocab.select(col("token"), col("id"), col("df"))), Seq("token"))
       .withColumn("tfidf", tf * log(lit(nDocs.toDouble) / col("df").cast("double")))
       .select(col(docKey), col("id").as("token_id"), col("cnt"), col("tfidf"))
-  }
-
-  /** M1 from a prebuilt BOW (compat shim — needs the second vocab join the
-    * counts-based path avoids). */
-  def tfidf(bow: DataFrame, vocab: DataFrame, docKey: String, nDocs: Long,
-            sublinear: Boolean = false): DataFrame = {
-    val tf: Column =
-      if (sublinear) lit(1.0) + log(col("cnt").cast("double"))
-      else col("cnt").cast("double")
-    bow
-      .join(broadcast(vocab.select(col("id").as("token_id"), col("df"))), Seq("token_id"))
-      .withColumn("tfidf", tf * log(lit(nDocs.toDouble) / col("df").cast("double")))
-      .select(col(docKey), col("token_id"), col("cnt"), col("tfidf"))
   }
 }

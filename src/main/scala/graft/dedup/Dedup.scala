@@ -2,7 +2,6 @@ package graft.dedup
 
 import graft.scale.Scale
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication suite for a web-scale training-data pipeline: exact,
@@ -14,28 +13,24 @@ import org.apache.spark.sql.functions._
   *    window sort, so partial aggregation applies;
   *  - MinHash/LSH never materializes the O(n²) pair space: docs shuffle once
   *    keyed by (band, band-signature) and only same-bucket pairs join;
-  *  - SimHash buckets on 16-bit sub-keys of the 64-bit signature (each
+  *  - SimHash buckets on 8-bit sub-keys of the 32-bit signature (each
   *    near-dup pair within Hamming distance r collides on ≥1 sub-key for
   *    r ≤ 3 by pigeonhole over 4 sub-keys);
+  *  - the MinHash and SimHash token hashes are md5-derived, so the DuckDB
+  *    oracles replay signatures and candidate sets bit for bit;
   *  - embedding near-dup composes with [[graft.sim.Ann]]'s LSH bucketing.
   */
 object Dedup {
 
   // ------------------------------------------------------------ exact (hash)
 
-  /** THE exact-dedup fingerprint — md5 of lowercased, whitespace-collapsed
-    * text. One shared definition for the batch keeper ([[exact]]) and the
-    * streaming twin (StreamingExtract.dedupStream): round-3 review found
-    * the stream hashing RAW text, so case/whitespace variants deduped in
-    * batch but both survived the stream. */
-  def fingerprint(text: Column): Column =
-    md5(regexp_replace(lower(text), "\\s+", " "))
-
-  /** Exact dedup: md5 over normalized text; keeps the smallest key per
-    * digest group. Returns (key, fingerprint, keep) for every row —
-    * keep = true on the group's canonical representative. */
+  /** Exact dedup: the fingerprint is md5 of lowercased, whitespace-
+    * collapsed text, so case and whitespace variants share a digest; keeps
+    * the smallest key per digest group. Returns (key, fingerprint, keep)
+    * for every row — keep = true on the group's canonical representative. */
   def exact(df: DataFrame, key: String, text: String): DataFrame = {
-    val withFp = df.select(col(key), fingerprint(col(text)).as("fingerprint"))
+    val withFp = df.select(col(key),
+      md5(regexp_replace(lower(col(text)), "\\s+", " ")).as("fingerprint"))
     val keepers = withFp.groupBy("fingerprint")
       .agg(min(col(key)).as("keeper"))
     withFp.join(keepers, Seq("fingerprint"))
@@ -46,8 +41,8 @@ object Dedup {
   // ------------------------------------------------------- shingles / jaccard
 
   /** k-token shingles of a token array, as strings — native one-pass
-    * kernel ([[ShinglesExpr]], round-7); the composed spelling below is
-    * the DedupSpec cross-check target. */
+    * kernel ([[ShinglesExpr]]); the composed spelling below is the
+    * DedupSpec cross-check target. */
   def shingles(tokens: Column, k: Int): Column =
     ShinglesExpr.shingles(tokens, k)
 
@@ -115,21 +110,16 @@ object Dedup {
 
   // ------------------------------------------------------------ MinHash + LSH
 
-  /** MinHash signature: numHashes values, hash_i(doc) = min over shingles of
-    * ((a_i * h + b_i) mod p), h = xxhash64(shingle) reduced mod p.
-    * p = 2^31 − 1 (Mersenne prime) keeps every product < 2^62 — no overflow
-    * under ANSI arithmetic. Pure column math: the signature is computed per
-    * row, no shuffle. */
+  /** MinHash modulus p = 2^31 − 1 (Mersenne prime): every product
+    * a_i · h stays < 2^62, so the signature math cannot overflow under ANSI
+    * arithmetic. */
   private val MersenneP = 2147483647L // 2^31 - 1
 
   /** Composed HOF spelling of the minima fold — kept as the cross-check
     * target for [[MinhashFoldExpr]] (DedupSpec pins native ≡ composed).
     * One pass over the shingle-hash array, state = zip_with-rebuilt array
-    * of minima — round 1 issued numHashes independent array_min traversals;
-    * round 3 measured the zip_with state rebuild itself interpreted at
-    * O(shingles·H) boxed allocations per row. The (a_i, b_i) family is
-    * identical to round 1's (and to the q29/q45 oracles):
-    * a = 1000000007(i+1) mod p, b = 998244353(i²+1) mod p. */
+    * of minima. The (a_i, b_i) family is the one the q29/q45 oracles
+    * replay: a = 1000000007(i+1) mod p, b = 998244353(i²+1) mod p. */
   private[graft] def minhashFromHashesComposed(hs: Column, numHashes: Int): Column = {
     val p = lit(MersenneP)
     val idx = sequence(lit(0L), lit(numHashes - 1L))
@@ -141,35 +131,30 @@ object Dedup {
             + pmod(lit(998244353L) * (i * i + 1L), p), p))))
   }
 
-  /** The minima fold as the native codegen'd [[MinhashFoldExpr]] — one
-    * primitive long[H] per row instead of an interpreted array rebuild per
-    * shingle. hs is never empty (shingles() emits ≥1 element even for
-    * short docs), so the p-valued init is always beaten. */
-  private def minhashFromHashes(hs: Column, numHashes: Int): Column =
-    MinhashFoldExpr.minhashFold(hs, numHashes)
-
-  def minhashSignature(tokens: Column, k: Int, numHashes: Int): Column = {
-    val p = lit(MersenneP)
-    val sh = array_distinct(shingles(tokens, k))
-    minhashFromHashes(transform(sh, s => pmod(xxhash64(s), p)), numHashes)
-  }
-
-  /** md5-based MinHash variant: h = first 8 hex chars of md5(shingle) as a
-    * 32-bit int, reduced mod p. Slower than xxhash64 (no codegen'd digest)
-    * but portable across engines — used by the cross-engine oracle gate;
-    * the xxhash64 variant above is the production path. */
+  /** MinHash signature: numHashes values, hash_i(doc) = min over the doc's
+    * distinct k-shingles of ((a_i · h + b_i) mod p), where h is the first 8
+    * hex chars of md5(shingle) as a 32-bit int, reduced mod p. md5 is
+    * portable across engines, so the DuckDB oracle replays the signatures
+    * bit for bit (q29). Pure column math: computed per row, no shuffle.
+    * The minima fold is the native codegen'd [[MinhashFoldExpr]] — one
+    * primitive long[H] per row; the shingle array is never empty
+    * ([[shingles]] emits ≥1 element even for short docs), so the p-valued
+    * init is always beaten. */
   def minhashSignatureMd5(tokens: Column, k: Int, numHashes: Int): Column = {
     val p = lit(MersenneP)
     val sh = array_distinct(shingles(tokens, k))
-    minhashFromHashes(
+    MinhashFoldExpr.minhashFold(
       transform(sh, s => pmod(conv(substring(md5(s), 1, 8), 16, 10).cast("long"), p)),
       numHashes)
   }
 
-  /** MinHash+LSH near-dup candidates: band the signature (bands × rowsPerBand
-    * = numHashes), bucket-join on (band_id, band_signature). One shuffle
-    * keyed by band bucket; same-bucket pairs only. Returns candidate pairs
-    * with their estimated Jaccard (fraction of matching signature slots).
+  /** MinHash+LSH near-dup candidates over [[minhashSignatureMd5]]: band the
+    * signature (bands × rowsPerBand = numHashes), bucket-join on (band_id,
+    * band_signature). One shuffle keyed by band bucket; same-bucket pairs
+    * only. Returns candidate pairs with their estimated Jaccard (fraction
+    * of matching signature slots). The DuckDB oracle replays the whole
+    * candidate generation — banding, bucket join and slot-match estimate
+    * (q45, q58).
     *
     * `maxBucket` caps bucket population: a bucket of b docs makes b²/2
     * candidate pairs, so one degenerate bucket (e.g. the empty-shingle
@@ -177,30 +162,13 @@ object Dedup {
     * larger than the cap are dropped from candidate generation — a standard,
     * documented recall trade (members of a giant bucket are near-identical
     * boilerplate and surface via exact dedup instead). 0 disables. */
-  def minhashLsh(df: DataFrame, key: String, tokens: String, k: Int = 3,
-                 numHashes: Int = 16, bands: Int = 4,
-                 maxBucket: Long = 0): DataFrame =
-    minhashLshFromSig(
-      df.select(col(key).as("k"),
-        minhashSignature(col(tokens), k, numHashes).as("sig")),
-      numHashes, bands, maxBucket)
-
-  /** md5-portable variant of [[minhashLsh]] — identical banding over the
-    * [[minhashSignatureMd5]] hash family, so the driver's DuckDB oracle can
-    * replay the WHOLE candidate-generation path (banding + bucket join +
-    * slot-match estimate), not just the signatures. */
   def minhashLshMd5(df: DataFrame, key: String, tokens: String, k: Int = 3,
                     numHashes: Int = 16, bands: Int = 4,
-                    maxBucket: Long = 0): DataFrame =
-    minhashLshFromSig(
-      df.select(col(key).as("k"),
-        minhashSignatureMd5(col(tokens), k, numHashes).as("sig")),
-      numHashes, bands, maxBucket)
-
-  private def minhashLshFromSig(sig: DataFrame, numHashes: Int, bands: Int,
-                                maxBucket: Long): DataFrame = {
+                    maxBucket: Long = 0): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rows = numHashes / bands
+    val sig = df.select(col(key).as("k"),
+      minhashSignatureMd5(col(tokens), k, numHashes).as("sig"))
     val bandedAll = sig.select(col("k"), col("sig"),
       posexplode(transform(sequence(lit(0), lit(bands - 1)),
         b => array_join(transform(slice(col("sig"), b * rows + 1, lit(rows)),
@@ -231,9 +199,7 @@ object Dedup {
   /** Composed HOF spelling of the per-bit majority vote — kept as the
     * cross-check target for [[SimhashFoldExpr]] (DedupSpec pins native ≡
     * composed). One pass, aggregate state = zip_with-rebuilt array of
-    * `bits` signed counters (round-1 verdict: 64 independent aggregate()
-    * passes were O(64·tokens) per row; round 3 measured the state rebuild
-    * itself interpreted). */
+    * `bits` signed counters. */
   private[graft] def simhashFromHashesComposed(hs: Column, bits: Int): Column = {
     val bitIdx = sequence(lit(0), lit(bits - 1))
     val zeros = transform(bitIdx, _ => lit(0L))
@@ -249,42 +215,36 @@ object Dedup {
       lit(0L), (acc, x) => acc.bitwiseOR(x))
   }
 
-  /** The vote fold as the native codegen'd [[SimhashFoldExpr]] — one
-    * primitive int[bits] per row instead of an interpreted counter-array
-    * rebuild per token. */
-  private def simhashFromHashes(hs: Column, bits: Int): Column =
-    SimhashFoldExpr.simhashFold(hs, bits)
-
-  /** 64-bit SimHash over the token array: per-bit majority vote of token
-    * xxhash64 values, columnar. Production path (fastest hash). */
-  def simhash(tokens: Column): Column =
-    simhashFromHashes(transform(tokens, t => xxhash64(t)), 64)
-
-  /** 32-bit SimHash over md5-derived token hashes — slower than xxhash64 but
-    * portable across engines, so the driver's DuckDB oracle can replay it
-    * bit-for-bit (same trick as [[minhashSignatureMd5]]). */
+  /** 32-bit SimHash over the token array: per-bit majority vote of token
+    * hashes, where a token's hash is the first 8 hex chars of its md5. md5
+    * is portable across engines, so the DuckDB oracle replays the
+    * signature bit for bit (q39; same trick as [[minhashSignatureMd5]]).
+    * The vote fold is the native codegen'd [[SimhashFoldExpr]] — one
+    * primitive int[bits] per row. */
   def simhash32Md5(tokens: Column): Column =
-    simhashFromHashes(
+    SimhashFoldExpr.simhashFold(
       transform(tokens, t => conv(substring(md5(t), 1, 8), 16, 10).cast("long")),
       32)
 
-  /** SimHash near-dup over a precomputed signature table (k, sh): bucket on
-    * `bands` equal-width sub-keys of the `bits`-bit signature, join within
-    * buckets, verify true Hamming distance.
+  /** SimHash near-dup over [[simhash32Md5]] signatures: bucket on `bands`
+    * equal-width sub-keys of the 32-bit signature, join within buckets,
+    * verify true Hamming distance.
     *
-    * Recall guarantee is pigeonhole-exact ONLY for maxHamming < bands (≤
-    * bands−1 differing bits cannot touch every sub-key), hence the require —
-    * round 1 shipped maxHamming=16 over 4 bands, silently losing pairs at
-    * distance 4..16. Callers wanting a wider radius must raise `bands`
-    * (narrower sub-keys ⇒ more candidate pairs: bands=8 over 64 bits ⇒ 8-bit
-    * keys ⇒ ~n²/256 candidates per band at scale — price the radius). */
-  def simhashDupFromSig(sig: DataFrame, maxHamming: Int, bands: Int,
-                        bits: Int): DataFrame = {
+    * Recall is pigeonhole-exact ONLY for maxHamming < bands (≤ bands−1
+    * differing bits cannot touch every sub-key), hence the require: a
+    * wider radius over the same bands silently loses pairs. Callers
+    * wanting a wider radius must raise `bands` (narrower sub-keys ⇒ more
+    * candidate pairs: bands=8 over 32 bits ⇒ 4-bit keys ⇒ ~n²/16
+    * candidates per band at scale — price the radius). */
+  def simhashDupMd5(df: DataFrame, key: String, tokens: String,
+                    maxHamming: Int = 3, bands: Int = 4): DataFrame = {
+    val bits = 32
     require(maxHamming < bands,
       s"pigeonhole recall guarantee needs maxHamming < bands ($maxHamming >= $bands)")
     require(bits % bands == 0, "bands must divide bits")
     val width = bits / bands
     val mask = (1L << width) - 1
+    val sig = df.select(col(key).as("k"), simhash32Md5(col(tokens)).as("sh"))
     val banded = sig.select(col("k"), col("sh"),
       posexplode(array((0 until bands).map(i =>
         shiftright(col("sh"), i * width).bitwiseAND(mask)): _*))
@@ -299,20 +259,6 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
       .select("key_a", "key_b", "hamming")
   }
-
-  /** SimHash near-dup on 64-bit xxhash64 signatures (production path). */
-  def simhashDup(df: DataFrame, key: String, tokens: String,
-                 maxHamming: Int = 3, bands: Int = 4): DataFrame =
-    simhashDupFromSig(
-      df.select(col(key).as("k"), simhash(col(tokens)).as("sh")),
-      maxHamming, bands, bits = 64)
-
-  /** SimHash near-dup on the 32-bit md5-portable signature (oracle path). */
-  def simhashDupMd5(df: DataFrame, key: String, tokens: String,
-                    maxHamming: Int = 3, bands: Int = 4): DataFrame =
-    simhashDupFromSig(
-      df.select(col(key).as("k"), simhash32Md5(col(tokens)).as("sh")),
-      maxHamming, bands, bits = 32)
 
   // ------------------------------------------------------- embedding near-dup
 
@@ -387,7 +333,7 @@ object Dedup {
     * truncates to the materialized round. [[ccRound]] references the
     * incoming label frame twice (neighbour-min derivation + the carry
     * join), so the lazy spelling doubles the logical plan per round —
-    * 2^iters copies of round 0 in the final tree — and persist() does not
+    * 2^iters copies of the initial labels in the final tree — and persist() does not
     * help, since analysis still walks the whole tree. Once round r is
     * materialized, round r−1's checkpoint is freed, so the call leaves
     * exactly one persisted RDD: the returned labels, which the caller owns

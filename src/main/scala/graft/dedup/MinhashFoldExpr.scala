@@ -50,8 +50,8 @@ object MinhashFoldExpr {
   private val P = 2147483647L // 2^31 - 1
 
   /** Constant permutation coefficients per numHashes, hoisted out of the
-    * per-(shingle, hash) inner loop (round-3 review finding — recomputing
-    * them cost two multiplies + two floorMods per element per lane). */
+    * per-(shingle, hash) inner loop — recomputing them would cost two
+    * multiplies + two floorMods per element per lane. */
   private val coefCache = new java.util.concurrent.ConcurrentHashMap[
     Int, (Array[Long], Array[Long])]()
 

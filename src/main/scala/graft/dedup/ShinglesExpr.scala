@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** k-token shingles as ONE native pass (round-7, the UDx Expression tier):
+/** k-token shingles as ONE native pass (the UDx Expression tier):
   * the composed spelling — `transform(sequence(0, greatest(size-k, 0)),
   * i -> array_join(slice(tokens, i+1, k), " "))` — runs interpreted with a
   * slice allocation and a join per window, on every row of every MinHash /

@@ -115,16 +115,15 @@ object ExtractTurnExpr {
   /** Text length in CODE POINTS — Spark's `length()` (and DuckDB's, which
     * the oracles use) counts characters, not UTF-16 units; Java
     * String.length counts units, so astral text ('🙂🙂'.length == 4 but
-    * length() == 2) flipped the len<3 rule and every length-normalized
-    * score feature between the native and composed paths (round-3 review
-    * finding). */
+    * length() == 2) would flip the len<3 rule and every length-normalized
+    * score feature between the native and composed paths. */
   private def cpLen(s: String): Int = s.codePointCount(0, s.length)
 
   /** Rule tier — mirrors Extract.classified's CASE exactly (incl. the
     * markup-only scope of the short-block rule: layout lines and tool
     * results are positionally recovered content regardless of length).
     *
-    * Fast path (round-7): with linkChars == 0 and UTF-16 length ≥ 6 the
+    * Fast path: with linkChars == 0 and UTF-16 length ≥ 6 the
     * decision is forced — cpLen ≥ ⌈jlen/2⌉ ≥ 3 (so neither the len == 0
     * nor the len < 3 rule can fire) and link density is exactly 0 ≤ 0.5 —
     * so the code-point scan is skipped entirely on link-free blocks, the
@@ -159,7 +158,7 @@ object ExtractTurnExpr {
     * separator, emit spans. Allocation-lean: the StringBuilder is only
     * materialized when a SECOND content block shows up — most payload
     * shapes yield exactly one content block, whose text is emitted without
-    * any copy (round-7); spans land in a right-sized plain array. */
+    * any copy; spans land in a right-sized plain array. */
   def extractTurn(text: UTF8String, role: UTF8String, scored: Boolean,
                   w: Array[Double], b: Double, threshold: Double): InternalRow = {
     val t = if (text == null) null else text.toString

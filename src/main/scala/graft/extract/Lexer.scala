@@ -40,9 +40,9 @@ object Lexer {
   private final val FlagDrop = 2
   private final val FlagVoid = 4
 
-  /** The three tag-set memberships as ONE hash dispatch (round-7: a string
-    * match compiles to a hashCode tableswitch — the per-tag cost was three
-    * separate Set probes on the markup hot path). Derivation from the Sets
+  /** The three tag-set memberships as ONE hash dispatch (a string match
+    * compiles to a hashCode tableswitch — one dispatch per tag instead of
+    * three separate Set probes on the markup hot path). Derivation from the Sets
     * is asserted below so the tables cannot drift. */
   private def tagFlags(name: String): Int = name match {
     case "div" | "p" | "nav" | "footer" | "header" | "aside" | "main" |
@@ -87,7 +87,7 @@ object Lexer {
 
   /** Lex a payload into blocks. Dispatcher over payload kind.
     * `stats = false` skips the per-block scorer-stat pass (Block.make) —
-    * the plain rule kernel never reads those fields (round-7). */
+    * the plain rule kernel never reads those fields. */
   def lex(text: String, role: String, stats: Boolean = true): Seq[Block] = {
     if (text == null) return Seq.empty
     kindOf(text, role) match {
@@ -137,8 +137,7 @@ object Lexer {
     }
 
     // '<' opens a tag only when followed by an optional '/' then a letter;
-    // otherwise it is literal text — 'a < b > c' must not lose ' b '
-    // (round-1 ADVICE: lexMarkup consumed '<'..'>' unconditionally).
+    // otherwise it is literal text — 'a < b > c' must not lose ' b '.
     def isTagAt(pos: Int): Boolean = {
       val j = if (pos + 1 < n && s.charAt(pos + 1) == '/') pos + 2 else pos + 1
       j < n && s.charAt(j).isLetter
@@ -155,7 +154,7 @@ object Lexer {
         rawUntil = -1
       } else if (rawUntil < 0 && c == '<' && i + 1 < n &&
                  (s.charAt(i + 1) == '!' || s.charAt(i + 1) == '?')) {
-        // declaration-family markup (round-2 ADVICE: these lexed as text):
+        // declaration-family markup (never lexed as text):
         //   <!-- … -->        comment — skipped entirely
         //   <![CDATA[ … ]]>   raw character data — contents are literal text
         //   <!DOCTYPE …>      declaration — skipped (quote-aware)
@@ -163,8 +162,7 @@ object Lexer {
         if (s.startsWith("<!--", i)) {
           // search from i+2, not i+4: HTML5's complete comments '<!-->' and
           // '<!--->' close on dashes shared with the opener; searching past
-          // them never terminated and dropped the rest of the payload
-          // (round-3 review finding)
+          // them would never terminate and would drop the rest of the payload
           val e = s.indexOf("-->", i + 2)
           i = if (e < 0) n else e + 3
         } else if (s.startsWith("<![CDATA[", i)) {
@@ -176,7 +174,7 @@ object Lexer {
           // in value position — after whitespace, '=', or the '['/'(' of an
           // internal subset — so an apostrophe INSIDE an unquoted token
           // (<!DOCTYPE wasn't-html>) can't swallow the rest of the payload
-          // (round-3 review finding, same rule as the tag scan below)
+          // (same rule as the tag scan below)
           var k = i + 2
           var valuePos = true
           while (k < n && s.charAt(k) != '>') {
@@ -206,7 +204,7 @@ object Lexer {
           j += 1
         }
         // skip the toLowerCase allocation when the raw name is already
-        // lowercase ASCII (the overwhelmingly common case) — round-7
+        // lowercase ASCII (the overwhelmingly common case)
         val raw = s.substring(nameStart, j)
         val name =
           if (needsFold) raw.toLowerCase(java.util.Locale.ROOT) else raw
@@ -215,8 +213,8 @@ object Lexer {
         // A quote opens a value only right after '=' (plus spaces), the
         // HTML5 before-attribute-value position: a quote inside an UNQUOTED
         // value (<img alt=don't>) is literal and must not swallow payload
-        // up to the next quote/EOF (round-3 review finding).
-        // Fast path (round-7): a '>' straight after the name — every close
+        // up to the next quote/EOF.
+        // Fast path: a '>' straight after the name — every close
         // tag and attribute-less open tag, the overwhelming majority —
         // needs no attribute scan at all.
         var k = j
@@ -258,7 +256,7 @@ object Lexer {
             // inline tag. A SELF-CLOSED anchor (<a/>) opens no link region —
             // incrementing linkDepth with no matching close made all
             // following text count as linkChars, flipping whole content
-            // blocks to chrome via link density (round-3 review finding).
+            // blocks to chrome via link density.
             if (dropDepth == 0) {
               nTags += 1
               if (name == "a") {
@@ -271,8 +269,8 @@ object Lexer {
         i = tagEnd
       } else if (rawUntil < 0 && c == '&' && dropDepth == 0) {
         // entity decode — named plus numeric character references
-        // (&#39; / &#x27; — round-2 VERDICT: numeric refs fell to the
-        // literal-'&' path)
+        // (&#39; / &#x27; — numeric refs never fall to the literal-'&'
+        // path)
         val semi = s.indexOf(';', i + 1)
         val (decoded, adv) =
           if (semi > i && semi - i <= 10) {
@@ -285,8 +283,7 @@ object Lexer {
                 // surrogate-range refs (&#xD800;–&#xDFFF;) pass
                 // isValidCodePoint but decode to LONE UTF-16 surrogates
                 // that re-encode as replacement chars — treat as invalid
-                // (literal '&' path) like any other bad ref (round-3
-                // review finding)
+                // (literal '&' path) like any other bad ref
                 if (Character.isValidCodePoint(cp) && cp > 0 &&
                     !(cp >= 0xD800 && cp <= 0xDFFF))
                   (new String(Character.toChars(cp)), semi + 1 - i)
@@ -305,7 +302,7 @@ object Lexer {
         // mirror the plain-char path: whitespace entities (&nbsp; &#32;)
         // never open a block and never advance blockEnd past trimmed text,
         // so the text == payload.substring(start, end) span invariant holds
-        // (round-1 ADVICE: a trailing whitespace entity overshot the span).
+        // (a trailing whitespace entity must not overshoot the span).
         val isWs = decoded.forall(_.isWhitespace)
         if (blockStart < 0 && !isWs) blockStart = i
         if (blockStart >= 0) {
@@ -315,7 +312,7 @@ object Lexer {
         }
         i += adv
       } else {
-        // ---- bulk plain-text run (round-7 optimization): every char from
+        // ---- bulk plain-text run: every char from
         // here to the next state-changing char takes this same branch — in
         // raw (CDATA) mode that bound is the region end; otherwise the next
         // '<' (tag/decl/literal) or, at dropDepth 0, '&' (entity). The
@@ -406,7 +403,7 @@ object Lexer {
     }
     // reading order = sort by (y, x) — but the common emitter writes lines
     // already ordered, so detect sortedness in one cheap pass and skip the
-    // tuple-sort machinery (round-7; identical order either way — the sort
+    // tuple-sort machinery (identical order either way — the sort
     // below is stable and keyed exactly (y, x))
     var sorted = true
     var k = 1
@@ -426,8 +423,7 @@ object Lexer {
     * raw (escaped) region inside the payload. A candidate occurrence only
     * counts as the key when a ':' follows (after optional spaces) — a decoy
     * VALUE equal to "result" ({"msg":"result","result":"x"}) is followed by
-    * ',' or '}' and previously aborted the whole extraction (round-3 review
-    * finding). No result key, or a non-string result value, falls back to
+    * ',' or '}' and must not abort the whole extraction. No result key, or a non-string result value, falls back to
     * emitting the whole payload — best-effort passthrough beats dropping
     * the turn. */
   def lexToolJson(s: String, stats: Boolean = true): Seq[Block] = {
@@ -451,12 +447,12 @@ object Lexer {
     val sb = new java.lang.StringBuilder(n - i)
     var done = false
     while (i < n && !done) {
-      // bulk run up to the next escape or closing quote (round-7): typical
+      // bulk run up to the next escape or closing quote: typical
       // tool output has neither mid-string, so the whole value lands in one
       // intrinsified indexOf + bulk append instead of a per-char loop. The
       // quote scan is BOUNDED by the next escape — an unbounded indexOf
-      // re-scanned to the closing quote after every escape, going quadratic
-      // on escape-dense values (round-7 review finding).
+      // re-scans to the closing quote after every escape, going quadratic
+      // on escape-dense values.
       val bs = s.indexOf('\\', i)
       var stop =
         if (bs < 0) { val q = s.indexOf('"', i); if (q < 0) n else q }
@@ -468,7 +464,7 @@ object Lexer {
       if (c == '\\' && i + 1 < n) {
         s.charAt(i + 1) match {
           // \uXXXX decodes like the other escapes — leaving it literal made
-          // unicode tool output fail per-turn text equality (round-3 review)
+          // unicode tool output fail per-turn text equality
           case 'u' if i + 5 < n &&
               (2 to 5).forall(o => Character.digit(s.charAt(i + o), 16) >= 0) =>
             sb.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar)

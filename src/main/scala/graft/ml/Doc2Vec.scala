@@ -28,15 +28,14 @@ import org.apache.spark.sql.functions._
 object Doc2Vec {
 
   /** Fit the word model on (docKey, tokens). The normalization the fit's
-    * determinism depends on lives HERE, not in callers (round-4 ADVICE: the
-    * scaladoc promised an ordering the method never enforced, and every
-    * caller duplicated the orderBy/coalesce dance): the input is bounded to
+    * determinism depends on lives HERE, not in callers (so no caller has to
+    * repeat the orderBy/coalesce dance): the input is bounded to
     * the first `maxFitDocs` docs in `docKey` order, then collapsed to ONE
     * partition — multi-partition Hogwild updates are nondeterministic even
     * under a fixed seed.
     *
     * The single partition is NOT a corpus-scale shape, and the bound is
-    * what fences it (round-4 VERDICT "What's wrong" #1): at 10^12 turns the
+    * what fences it: at 10^12 turns the
     * fit sees only the deterministic `maxFitDocs`-doc prefix (orderBy+limit
     * = distributed TakeOrdered, never a full corpus sort), while
     * [[docVectors]] transforms the FULL corpus — one broadcast of the word
@@ -65,13 +64,13 @@ object Doc2Vec {
     * component is snapped to the 1e-9 grid (`floor(w·1e9 + 0.5)`, a long)
     * BEFORE summing, so the per-doc sum is exact integer arithmetic —
     * order-independent — and the only float ops left are one division and
-    * one 6dp round of bit-identical inputs in both engines. This closes
-    * the round-4 ADVICE residual: with double summation, Spark's partial-
-    * agg order and DuckDB's group order could disagree in the last ulp and
-    * flip the 6dp round at a boundary; on the grid the engines cannot
-    * diverge at all. The 5e-10 quantization bias is invisible at the 6dp
-    * export except within 1e-9 of a rounding boundary — exactly the cases
-    * that were previously coin flips and are now pinned.
+    * one 6dp round of bit-identical inputs in both engines. With double
+    * summation, Spark's partial-agg order and DuckDB's group order could
+    * disagree in the last ulp and flip the 6dp round at a boundary; on the
+    * grid the engines cannot diverge at all. The 5e-10 quantization bias
+    * is invisible at the 6dp export except within 1e-9 of a rounding
+    * boundary — exactly the cases double summation leaves to chance, which
+    * the grid pins.
     *
     * Sums stay exact: |wq| ≤ ~5e9 per component and docs are ≤ ~1e3
     * tokens, so per-doc sums sit far below 2^53 (exact as long AND as

@@ -43,7 +43,7 @@ object LabelProp {
         .groupBy(col("k"), col("nl"))
         .agg(sum(col("weight")).as("w"))
       // per-node argmax as a partial-aggregable groupBy, not a rank window
-      // (round-7): the window re-shuffled by k AND sorted every partition;
+      // (which would re-shuffle by k AND sort every partition):
       // min_by over the (−w, nl) struct picks the same winner — largest
       // vote weight, ties to the smallest label — with map-side partial
       // aggregation and no sort. (k, nl) rows are unique post-groupBy, so

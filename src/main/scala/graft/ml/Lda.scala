@@ -13,14 +13,13 @@ import org.apache.spark.sql.functions._
   *
   * The north_star substitutes the E4 block scorer for LDA on the extraction
   * critical path, so this tier exists for reference-user parity: topics,
-  * the doc-topic matrix (M5/M6), topic top-terms (reference
-  * `print_topics`, src/doc_classification.py:66-69), the doc-topic
-  * correlation matrix behind the reference's heatmap (M17,
+  * the doc-topic matrix with its dominant-topic flag (M5/M6), the
+  * doc-topic correlation matrix behind the reference's heatmap (M17,
   * src/doc_classification.py:192-210), and held-out log-perplexity (M18,
   * `log_perplexity` src/doc_classification.py:71).
   *
   * Scale shape: assembly is the same partial-agg relational build as
-  * [[Lsa.project]] (one ObjectHashAggregate shuffle, pre-grouped buffers);
+  * [[Lsa.projectModel]] (one ObjectHashAggregate shuffle, pre-grouped buffers);
   * online LDA's per-iteration cost is one corpus pass with a broadcast
   * topic matrix (k × vocab, small because the vocab is keepN-capped) —
   * no per-doc driver state, so throughput scales with executors.
@@ -47,14 +46,6 @@ object Lda {
     new LDA().setK(k).setMaxIter(maxIter).setSeed(seed)
       .setFeaturesCol("features").fit(features)
 
-  /** M5/M6 — the doc-topic matrix in long form: (docKey, topic, weight). */
-  def docTopics(model: LDAModel, features: DataFrame,
-                docKey: String): DataFrame =
-    model.transform(features)
-      .select(col(docKey),
-        posexplode(vector_to_array(col("topicDistribution")))
-          .as(Seq("topic", "weight")))
-
   /** M5/M6 — the FULL doc-topic matrix in long form with the dominant flag:
     * (docKey, topic, weight@6dp, dominant). One row per (doc, topic); the
     * export both serves the reference's doc-topic matrix read AND gives a
@@ -79,44 +70,15 @@ object Lda {
           (array_position(col("dist"), array_max(col("dist"))) - 1))
           .as("dominant"))
 
-  /** Dominant topic per doc — argmax over the topic distribution as pure
-    * column math (no window): array_position of the max. Ties break to the
-    * LOWEST topic id (array_position returns the first match). */
-  def dominantTopic(model: LDAModel, features: DataFrame,
-                    docKey: String): DataFrame =
-    model.transform(features)
-      .withColumn("dist", vector_to_array(col("topicDistribution")))
-      .select(col(docKey),
-        (array_position(col("dist"), array_max(col("dist"))) - 1)
-          .cast("int").as("topic"),
-        round(array_max(col("dist")), 4).as("weight"))
-
-  /** Topic top-terms joined back to token strings (reference
-    * `print_topics`): (topic, rank, token, weight). `vocab` is the
-    * (token, token_id) dictionary; describeTopics is model-local (k × topN
-    * rows — driver-sized), the join is broadcast. */
-  def topicTerms(model: LDAModel, vocab: DataFrame, topN: Int): DataFrame = {
-    val topics = model.describeTopics(topN)
-      .select(col("topic"),
-        posexplode(arrays_zip(col("termIndices"), col("termWeights")))
-          .as(Seq("rank", "tw")))
-      .select(col("topic"), (col("rank") + 1).cast("int").as("rank"),
-        col("tw.termIndices").as("token_id"),
-        round(col("tw.termWeights"), 6).as("weight"))
-    topics.join(broadcast(vocab.select(col("id").as("token_id"), col("token"))),
-        Seq("token_id"))
-      .select("topic", "rank", "token", "weight")
-  }
-
   /** M17 — the doc-topic correlation matrix the reference renders as a
     * heatmap (src/doc_classification.py:192-210): Pearson corr between
     * every topic pair's weight across docs, from the long-form doc-topic
     * matrix. One self-join on doc + one groupBy (t1, t2) — k²·docs rows
     * through a partial-agg shuffle, never a driver-side matrix. */
-  def topicCorr(docTopics: DataFrame, docKey: String): DataFrame = {
-    val a = docTopics.select(col(docKey).as("d"), col("topic").as("t1"),
+  def topicCorr(matrix: DataFrame, docKey: String): DataFrame = {
+    val a = matrix.select(col(docKey).as("d"), col("topic").as("t1"),
       col("weight").as("w1"))
-    val b = docTopics.select(col(docKey).as("d"), col("topic").as("t2"),
+    val b = matrix.select(col(docKey).as("d"), col("topic").as("t2"),
       col("weight").as("w2"))
     a.join(b, Seq("d")).filter(col("t1") < col("t2"))
       .groupBy(col("t1"), col("t2"))

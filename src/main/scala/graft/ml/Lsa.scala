@@ -22,36 +22,32 @@ import org.apache.spark.storage.StorageLevel
 object Lsa {
 
   /** Long-form (docKey, token_id, value) → (docKey, projection: array[k]),
-    * L2-normalized. `vocabSize` = dictionary size (ids are 0-based dense by
-    * Vocab.build's construction).
+    * L2-normalized, plus the fitted right-singular-vector matrix V
+    * (vocabSize × kEff) the projection is `tfidf · V` of. `vocabSize` =
+    * dictionary size (ids are 0-based dense by Vocab.buildFromCounts'
+    * construction).
     *
-    * `materialize = true` persists and computes the projection frame, then
-    * releases the internal sparse-vector RDD cache immediately — the
-    * returned frame no longer depends on it, so a long-lived session holds
-    * one docs×k cache instead of a leaked corpus-sized vector RDD (callers
-    * unpersist the returned frame when done). With `materialize = false`
-    * the vector RDD must stay cached for the lazy projection and is
-    * reclaimed only when the frame is garbage-collected. */
-  def project(tfidf: DataFrame, docKey: String, valueCol: String,
-              vocabSize: Int, k: Int, materialize: Boolean = false): DataFrame =
-    projectModel(tfidf, docKey, valueCol, vocabSize, k, materialize)._1
-
-  /** [[project]] plus the fitted right-singular-vector matrix V (vocabSize ×
-    * kEff) the projection is `tfidf · V` of. Exposing V is what makes the
-    * projection CROSS-ENGINE VERIFIABLE even though the ARPACK fit is not:
-    * an oracle holding V and the tfidf long form can replay every projected
-    * value (round-4 VERDICT #1 — the q40/q50/q52 self-consistency pattern
-    * applied to the linear algebra downstream consumers read). V is local
-    * by the same scale argument as the broadcast: vocab is keepN-capped. */
+    * Exposing V is what makes the projection CROSS-ENGINE VERIFIABLE even
+    * though the ARPACK fit is not: an oracle holding V and the tfidf long
+    * form can replay every projected value (the q40/q50/q52
+    * self-consistency pattern applied to the linear algebra downstream
+    * consumers read). V is local by the same scale argument as the
+    * broadcast: vocab is keepN-capped.
+    *
+    * The projection frame is persisted and computed before the call
+    * returns, and the internal sparse-vector RDD cache is released at once
+    * — the returned frame no longer depends on it, so a long-lived session
+    * holds one docs×k cache instead of a corpus-sized vector RDD. The
+    * caller owns the returned frame and unpersists it when done. */
   def projectModel(tfidf: DataFrame, docKey: String, valueCol: String,
-              vocabSize: Int, k: Int, materialize: Boolean = false)
+                   vocabSize: Int, k: Int)
       : (DataFrame, org.apache.spark.mllib.linalg.Matrix) = {
     val spark = tfidf.sparkSession
     import spark.implicits._
     require(k <= vocabSize, s"k=$k exceeds vocabSize=$vocabSize")
-    // Relational assembly via SparseAssembly.grouped (partial-agg shuffle —
-    // see that file for the round-2 groupByKey history); the RDD hop is
-    // only the final mllib-vector construction RowMatrix needs.
+    // Relational assembly via SparseAssembly.grouped (partial-agg
+    // shuffle); the RDD hop is only the final mllib-vector construction
+    // RowMatrix needs.
     val docVecs = SparseAssembly.grouped(tfidf, docKey, valueCol)
       .rdd
       .map { case (doc, ps) =>
@@ -59,14 +55,14 @@ object Lsa {
           ps.map(_._2).toArray))
       }
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // computeSVD is an action — it materializes the persisted docVecs, and
-    // the lazy projection map below re-reads them from cache at query time
-    // (do NOT unpersist here: the returned frame still depends on it).
+    // computeSVD is an action — it materializes the persisted docVecs,
+    // which the projection map below re-reads from cache until the
+    // projection itself is materialized.
     val svd = new RowMatrix(docVecs.values).computeSVD(k, computeU = false)
     // ARPACK may converge fewer than k singular vectors on a corpus whose
-    // numerical rank is below k — indexing V past its real column count
-    // read out of bounds (round-3 review finding). Dimensions beyond the
-    // rank stay zero in the (still k-sized) projection.
+    // numerical rank is below k — V is never indexed past its real column
+    // count. Dimensions beyond the rank stay zero in the (still k-sized)
+    // projection.
     val kEff = math.min(k, svd.V.numCols)
     val vb = spark.sparkContext.broadcast(svd.V)
     val out = docVecs.map { case (doc, vec) =>
@@ -79,14 +75,9 @@ object Lsa {
       val n = math.sqrt(proj.map(p => p * p).sum)
       (doc, if (n == 0.0) proj.toSeq else proj.map(_ / n).toSeq)
     }.toDF(docKey, "projection")
-    val frame =
-      if (!materialize) out
-      else {
-        val cached = out.persist(StorageLevel.MEMORY_AND_DISK)
-        cached.count()
-        docVecs.unpersist()
-        cached
-      }
+    val frame = out.persist(StorageLevel.MEMORY_AND_DISK)
+    frame.count()
+    docVecs.unpersist()
     (frame, svd.V)
   }
 }

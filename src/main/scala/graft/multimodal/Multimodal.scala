@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** Multimodal column plumbing: image/audio/video payloads as opaque `binary`
   * columns with typed metadata, plus decode / feature-extract / resize /
   * frame-sample stages. ALL THREE decode paths are REAL: `javax.imageio`
-  * decodes genuine BMPs (round 4, q63), `javax.sound.sampled` decodes
-  * genuine RIFF-WAVE PCM (round 4, q64), and round 5 walks genuine
+  * decodes genuine BMPs (q63), `javax.sound.sampled` decodes genuine
+  * RIFF-WAVE PCM (q64), and a RIFF/AVI walk demuxes genuine
   * MJPEG-in-AVI containers whose frames ImageIO decodes (q69) — every path
   * JDK-bundled, no external codec, all under the driver gate. The one
   * remaining stand-in is [[decodeBytes]], the generic-binary featurizer for
@@ -41,13 +41,13 @@ object Multimodal {
     * data source (reference: modules/image_ocr.py:11-36 walks a TIFF dir
     * and shells tesseract per file). Media kind/codec come from the file
     * extension; width/height/duration stay 0 until the decode stage fills
-    * them. Round 1 only had the synthetic stand-in; round 6 put THIS path
-    * under the driver gate (q75: real BMP/WAV/AVI fixture files on disk →
-    * binaryFile → kind routing → the real q63/q64/q69 decoders). */
+    * them. This path is under the oracle gate (q75: real BMP/WAV/AVI
+    * fixture files on disk → binaryFile → kind routing → the real
+    * q63/q64/q69 decoders). */
   def fromBinaryFiles(spark: SparkSession, dir: String): DataFrame = {
     // extension comes from the BASENAME: splitting the full path on '.'
-    // made any dotted directory ('/data/v1.2/img0001') or extensionless
-    // file yield a garbage codec (round-3 review finding)
+    // would make any dotted directory ('/data/v1.2/img0001') or
+    // extensionless file yield a garbage codec
     val base = element_at(split(col("path"), "/"), -1)
     val ext = when(base.contains("."),
       lower(element_at(split(base, "\\."), -1))).otherwise(lit(""))
@@ -103,7 +103,7 @@ object Multimodal {
 
   // ---------------------------------------------------------- REAL decode
 
-  /** REAL image decode tier (round 4): the "no codec libraries" constraint
+  /** REAL image decode tier: the "no codec libraries" constraint
     * only covers EXTERNAL codecs — `javax.imageio` ships in the JDK and
     * reads BMP/PNG/JPEG/GIF. The synthetic corpus below emits GENUINE
     * 24-bit uncompressed BMPs assembled arithmetically from the row id; the
@@ -145,7 +145,7 @@ object Multimodal {
   /** Pixel budget for [[decodeImage]]: a header may truthfully parse while
     * declaring absurd dimensions (decompression bomb) — reject BEFORE
     * allocating the raster, because the resulting OutOfMemoryError is an
-    * Error no quarantine catch should swallow (round-4 review finding). */
+    * Error no quarantine catch should swallow. */
   val MaxDecodePixels: Long = 64L * 1024 * 1024
 
   /** REAL decode: ImageIO → (width, height, per-channel pixel-mean in ppm,
@@ -154,7 +154,7 @@ object Multimodal {
     * order). The weighted sum — Σ channel(x,y) · (y·w + x + 1) — is what
     * makes the gate prove pixel POSITIONS, not just totals: a plain sum is
     * permutation-invariant, so a vertically-flipped or mirrored decode
-    * would pass it (round-4 review finding). Undecodable or over-budget
+    * would pass it. Undecodable or over-budget
     * bytes → None (quarantine semantics — dimensions are checked from the
     * HEADER, before raster allocation, so a bomb cannot OOM the task). */
   def decodeImage(payload: Array[Byte])
@@ -189,7 +189,7 @@ object Multimodal {
       // with ImageIO's default useCache=true each stream can be a
       // disk-backed FileCacheImageInputStream whose temp file + fd are
       // otherwise reclaimed only at GC — a file-handle churn at the
-      // documented per-row scale (round-4 ADVICE).
+      // documented per-row scale.
       val iis = javax.imageio.ImageIO.createImageInputStream(
         new java.io.ByteArrayInputStream(payload))
       try {
@@ -204,9 +204,9 @@ object Multimodal {
         } finally reader.dispose()
       } finally iis.close()
     } catch {
-      // NonFatal, not just IOException: ImageIO plugins historically throw
-      // IndexOutOfBounds/IllegalArgument on corrupt data (round-4 review
-      // finding); genuine Errors (OOM) still propagate — the dimension
+      // NonFatal, not just IOException: ImageIO plugins throw
+      // IndexOutOfBounds/IllegalArgument on corrupt data; genuine Errors
+      // (OOM) still propagate — the dimension
       // budget above is what prevents them for bomb inputs.
       case scala.util.control.NonFatal(_) => None
     }
@@ -275,7 +275,7 @@ object Multimodal {
 
   /** Image feature extraction over the REAL decoder — mapPartitions so a
     * swapped-in heavyweight decoder has a per-partition init point (the
-    * documented batch shape; plain .map has none — round-4 review finding);
+    * documented batch shape; plain .map has none);
     * undecodable payloads surface as decoded=false rows. */
   def extractImageFeatures(media: DataFrame): DataFrame = {
     val spark = media.sparkSession
@@ -294,7 +294,7 @@ object Multimodal {
         "b_ppm", "r_wsum")
   }
 
-  /** Deterministic 16-bit PCM samples: centered around 0, byte-exact to
+  /** Deterministic 16-bit PCM samples: centered on 0, byte-exact to
     * replay (2003 is prime; values in [-1001, 1001] fit 16-bit signed). */
   @inline private def pcmSample(id: Long, i: Int): Int =
     (((id * 31 + i * 7) % 2003) - 1001).toInt
@@ -335,10 +335,9 @@ object Multimodal {
     * container and PCM encoding → (sampleRateHz, nSamples, sum, sumAbs,
     * position-weighted sum Σ sᵢ·(i+1)) — all integers, so the oracle replay
     * is bit-exact, and the weighted sum pins sample ORDER (a plain sum is
-    * permutation-invariant — round-4 review finding). Guards require
-    * PCM_SIGNED explicitly: a 16-bit mono little-endian PCM_UNSIGNED
-    * stream would otherwise pass and be silently misread as signed
-    * (round-4 review finding). Undecodable bytes → None. */
+    * permutation-invariant). Guards require PCM_SIGNED explicitly: a
+    * 16-bit mono little-endian PCM_UNSIGNED stream would otherwise pass
+    * and be silently misread as signed. Undecodable bytes → None. */
   def decodeAudio(payload: Array[Byte]): Option[(Int, Long, Long, Long, Long)] = {
     if (payload == null || payload.isEmpty) return None
     try {
@@ -383,8 +382,7 @@ object Multimodal {
 
   // ---------------------------------------------------- REAL video decode
 
-  /** REAL video decode tier (round 5, closing the LAST fake kernel —
-    * round-4 VERDICT "What's missing" #1): genuine MJPEG-in-AVI files. The
+  /** REAL video decode tier: genuine MJPEG-in-AVI files. The
     * JDK ships no video DEMUXER, so the RIFF/AVI container walk is ours
     * (the same ~100-line RIFF machinery the q64 WAV builder already
     * exercises, bounds-checked chunk by chunk) — but the per-frame PIXEL
@@ -530,7 +528,7 @@ object Multimodal {
             // even padding — clamped to the walk window: a spec-valid AVI
             // whose FINAL chunk is odd-sized may legally end without the
             // RIFF pad byte, and stepping past the limit would throw and
-            // quarantine an otherwise well-formed container (round-5 ADVICE)
+            // quarantine an otherwise well-formed container
             buf.position(math.min(chunkEnd + (size & 1), end))
           }
         }
@@ -574,7 +572,7 @@ object Multimodal {
 
   /** REAL resize stage — the payload itself is rewritten (decode →
     * integer nearest-neighbor resample → 24-bit BMP re-encode), not just
-    * the metadata (the round-4 stub). mapPartitions batch shape (decoder
+    * the metadata. mapPartitions batch shape (decoder
     * init point); undecodable payloads pass through byte-untouched with
     * resized=false — quarantine, never dropped. */
   def resize(media: DataFrame, w: Int, h: Int): DataFrame = {
@@ -600,9 +598,8 @@ object Multimodal {
     * frame sampler needs (the REAL per-frame decode lives in
     * [[extractVideoFrames]]; this stage is the timestamp-grid planner).
     * Zero/unknown-duration videos (every row fromBinaryFiles emits until
-    * decode fills durations) produce ZERO frames per the contract — the old
-    * greatest(…, 0) floor emitted one spurious frame each (round-3 review
-    * finding). */
+    * decode fills durations) produce ZERO frames per the contract — a
+    * greatest(…, 0) floor would emit one spurious frame each. */
   def frameSample(media: DataFrame, stepMs: Int): DataFrame =
     media.filter(col("meta.kind") === "video" && col("meta.durationMs") > 0)
       .withColumn("frame_idx",

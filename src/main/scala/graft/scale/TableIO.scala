@@ -39,6 +39,10 @@ object TableIO {
     (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
   }
 
+  /** True for a well-formed snapshot name, "snap-<digits>". */
+  private def isSnapshotName(n: String): Boolean =
+    n.startsWith("snap-") && n.length > 5 && n.drop(5).forall(_.isDigit)
+
   /** Currently-published snapshot name, if any. */
   def currentSnapshot(spark: SparkSession, tableDir: String): Option[String] = {
     val (f, dir) = fs(spark, tableDir)
@@ -53,8 +57,7 @@ object TableIO {
         // back to latestComplete (readers) or a fresh snapshot (ExtractJob
         // resume) — the resume path is exactly where a torn pointer is
         // plausible.
-        if (s.startsWith("snap-") && s.stripPrefix("snap-").nonEmpty &&
-            s.stripPrefix("snap-").forall(_.isDigit)) Some(s) else None
+        Some(s).filter(isSnapshotName)
       } finally in.close()
     }
   }
@@ -68,10 +71,8 @@ object TableIO {
     val (f, dir) = fs(spark, tableDir)
     if (!f.exists(dir)) Seq.empty
     else f.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith("snap-") &&
-        n.stripPrefix("snap-").nonEmpty &&
-        n.stripPrefix("snap-").forall(_.isDigit))
-      .sortBy(_.stripPrefix("snap-").toLong)
+      .filter(isSnapshotName)
+      .sortBy(snapNum)
   }
 
   /** Numeric id of a snapshot name — the ONLY way snapshot names may be

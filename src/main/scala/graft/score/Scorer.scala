@@ -3,81 +3,36 @@ package graft.score
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** E4 — the lightweight neural block classifier: a logistic / one-hidden-
-  * layer MLP scorer over shingled token features, applied partition-parallel
-  * as broadcast-weight column math. Replaces the reference's model tier
+/** E4 — the lightweight block classifier: a logistic scorer over
+  * densitometric block features, applied partition-parallel as
+  * broadcast-weight column math. Replaces the reference's model tier
   * (LDA topic inference src/doc_classification.py:116-124, RandomForest
   * src/supervised.py:142-146, keras autoencoder src/autoencoder.py:15-42)
-  * with no external ML runtime: weights are plain Scala arrays baked into
+  * with no external ML runtime: weights are plain Scala doubles baked into
   * the plan as literals (≡ broadcast — they ship once per executor inside
-  * the serialized plan), and the dot products are `aggregate`/`zip_with`
-  * expressions inside whole-stage codegen.
+  * the serialized plan), and the dot product is flat scalar arithmetic
+  * inside whole-stage codegen. Also the relational model-evaluation
+  * operators (M11–M13).
   */
 object Scorer {
 
-  /** Feature vector for a text block, matching [[featureNames]] order.
-    * All features are cheap per-row column math (E2 densitometry). */
-  val featureNames: Seq[String] =
-    Seq("text_len_n", "link_density", "tag_density", "stop_ratio", "digit_ratio")
-
-  def features(text: Column, linkChars: Column, nTags: Column,
-               stops: Seq[String]): Column = {
-    val len = length(text)
-    val toks = filter(split(lower(text), "\\s+"), t => length(t) > 0)
-    val stopArr = array(stops.map(lit): _*)
-    val digits = len - length(regexp_replace(text, "[0-9]", ""))
-    array(
-      least(len.cast("double") / 256.0, lit(1.0)),
-      linkChars.cast("double") / greatest(len, lit(1)),
-      nTags.cast("double") / greatest(len, lit(1)),
-      size(filter(toks, t => array_contains(stopArr, t))).cast("double")
-        / greatest(size(toks), lit(1)),
-      digits.cast("double") / greatest(len, lit(1))
-    )
-  }
-
-  /** Logistic score: sigmoid(w·x + b) with literal weights. */
-  def logistic(featVec: Column, w: Seq[Double], b: Double): Column = {
-    val wArr = array(w.map(lit): _*)
-    val z = aggregate(zip_with(featVec, wArr, (x, wi) => x * wi),
-      lit(b), (acc, x) => acc + x)
-    lit(1.0) / (lit(1.0) + exp(-z))
-  }
-
-  /** One-hidden-layer MLP: sigmoid(W2 · relu(W1·x + b1) + b2).
-    * W1: hidden × in (row-major Seq of rows). Still pure column math. */
-  def mlp(featVec: Column, w1: Seq[Seq[Double]], b1: Seq[Double],
-          w2: Seq[Double], b2: Double): Column = {
-    val hidden: Seq[Column] = w1.zip(b1).map { case (row, bias) =>
-      val rArr = array(row.map(lit): _*)
-      val z = aggregate(zip_with(featVec, rArr, (x, wi) => x * wi),
-        lit(bias), (acc, x) => acc + x)
-      greatest(z, lit(0.0)) // relu
-    }
-    val z2 = hidden.zip(w2).map { case (h, wi) => h * lit(wi) }
-      .foldLeft(lit(b2))(_ + _)
-    lit(1.0) / (lit(1.0) + exp(-z2))
-  }
-
   /** Default content-vs-chrome logistic weights (fit offline on the fixture
-    * set — FIXTURES.md family 6; positive class = content). */
+    * set — FIXTURES.md family 6; positive class = content), in the feature
+    * order of [[scoreSql]]. */
   val DefaultW: Seq[Double] = Seq(2.0, -4.0, -3.0, 1.0, -1.5)
   val DefaultB: Double = 0.25
 
-  /** The stoplist [[DefaultW]]'s stop_ratio feature was fit against — the
-    * ONE shared constant for the Column API ([[features]]) and the SQL text
-    * ([[scoreSql]]). Round-1 ADVICE: Extract's inline SQL had drifted to a
-    * private 10-word list, silently changing what the shared weights mean. */
-  val DefaultStops: Seq[String] = graft.text.Normalize.DefaultStops
-
   /** SQL expression text for sigmoid(w·features(block) + b) over a lexed
-    * block struct variable `v` — generated here so Extract's fused
-    * transform and the offline [[features]] definition stay in lockstep.
-    * PURE ARITHMETIC over the counts the lexer already derived (v.nWords /
-    * v.nStops / v.nDigits, computed in Block.make's single text pass): an
-    * earlier draft re-tokenized every block with split/lower/regexp
-    * expressions and cost 4× whole-kernel throughput (measured).
-    * Feature order = [[featureNames]]. */
+    * block struct variable `v` — the one scorer spelling: Extract's
+    * composed transform evaluates it, and the native
+    * [[graft.extract.ExtractTurnExpr]] mirrors it op for op (ExtractSpec
+    * pins the two kernels equal). PURE ARITHMETIC over the counts the lexer already
+    * derived (v.nWords / v.nStops / v.nDigits, computed in Block.make's
+    * single text pass against the shared stoplist
+    * [[graft.text.Normalize.DefaultStops]]); re-tokenizing every block with
+    * split/lower/regexp expressions costs 4× whole-kernel throughput
+    * (measured). Feature order: text_len_n, link_density, tag_density,
+    * stop_ratio, digit_ratio. */
   def scoreSql(v: String, w: Seq[Double] = DefaultW,
                b: Double = DefaultB): String = {
     // flat scalar dot product — no array construction / aggregate lambda
@@ -163,8 +118,8 @@ object Scorer {
   def thresholdGrid(scored: DataFrame, scoreCol: String, labelCol: String,
                     positive: String, thresholds: Seq[Double]): DataFrame = {
     // STRICT >, matching the production labeling rule (scoreLabeled /
-    // scoredContent both use score > threshold) — a >= grid misattributed
-    // boundary scores at the deployed operating point (round-3 review)
+    // scoredContent both use score > threshold) — a >= grid misattributes
+    // boundary scores at the deployed operating point
     val pred = col("s") > col("threshold")
     val pos = col("pos")
     scored
@@ -183,10 +138,4 @@ object Scorer {
       .withColumn("recall", round(col("tp").cast("double")
         / greatest(col("tp") + col("fn"), lit(1L)), 6))
   }
-
-  /** M19 — confusion matrix as groupBy+pivot
-    * (reference: src/label_prop.py:84-85). */
-  def confusion(df: DataFrame, labelCol: String, predCol: String): DataFrame =
-    df.groupBy(col(labelCol).as("label"))
-      .pivot(predCol).count().na.fill(0)
 }

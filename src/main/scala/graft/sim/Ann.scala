@@ -60,8 +60,8 @@ object Ann {
     * target for [[HyperplaneBucketExpr]] (AnnSpec pins native ≡ composed).
     * Each projection is ONE aggregate lambda with the coefficient computed
     * arithmetically from the element index, so the expression tree is
-    * O(bits) — round 1 unrolled dim×bits element_at nodes, which blows up
-    * codegen at dim ≥ 128. */
+    * O(bits); unrolling dim×bits element_at nodes instead blows up codegen
+    * at dim ≥ 128. */
   def hyperplaneBucketComposed(vec: Column, dim: Int, bits: Int): Column = {
     val idx = sequence(lit(0), lit(dim - 1))
     (0 until bits).map { b =>
@@ -87,8 +87,7 @@ object Ann {
 
   /** Bits sized to the corpus: buckets ≈ n / 2^bits, so pick
     * bits = ceil(log2(n / targetBucket)) clamped to [4, 24] — a fixed
-    * default (round 1: bits=8 always) leaves n²/256 candidates per bucket
-    * at web scale. */
+    * bits=8 leaves n²/256 candidates per bucket at web scale. */
   def bitsFor(n: Long, targetBucket: Int = 256): Int = {
     val raw = math.ceil(math.log(math.max(n, 1).toDouble / targetBucket)
       / math.log(2.0)).toInt
@@ -126,49 +125,25 @@ object Ann {
       .select(col("p_key"), col("c_key"), col("cos"), col("rk"))
   }
 
-  /** IVF (inverted-file) ANN top-k — the data-adaptive scale path next to
-    * [[lshTopK]]'s data-oblivious one: a coarse quantizer partitions the
-    * corpus into `nlist` inverted lists; each probe visits only its
-    * `nprobe` nearest lists and rescores those candidates exactly.
-    *
-    * The coarse quantizer is the GRID-ROUNDED EMPIRICAL CENTROID of a
-    * provided clustering (`clusters`: (key, cluster)): components snap to
-    * the 1e-4 integer grid, the centroid is floor(Σvq/cnt + 0.5) per dim,
-    * and every centroid distance is Σ(vq − c4)² — exact integer
-    * arithmetic end to end, so list assignment and probe routing are
-    * bit-replayable cross-engine (the q40 grid discipline; ties break on
-    * the lower list id). Only the final rescore runs in floats: cosine of
-    * the ORIGINAL vectors, per-row array-order accumulation (no group
-    * summation), rounded 6dp.
-    *
-    * `clusters` only seeds the quantizer (standard IVF: the coarse
-    * quantizer may be trained on a sample); EVERY corpus row is then
-    * assigned to its nearest list, clustered or not.
-    *
-    * Scale shape — the corpus path is shuffle-free: list assignment =
-    * ONE broadcast row carrying the packed centroid matrix, argmin
-    * computed inside the scan projection with array HOFs (zero corpus
-    * exchanges — the first spelling shuffled corpus×nlist rows TWICE);
-    * probe routing = the same broadcast against the (tiny) probe set;
-    * candidate selection = broadcast of the (p_key, list) routing table
-    * against the corpus's computed list column. The only candidate-sized
-    * exchange left is the per-probe top-k window — an nprobe/nlist
-    * fraction of the corpus per probe. The quantizer build (key-join with
-    * `clusters`, posexplode, partial agg down to nlist×dim grid longs)
-    * shuffles only the CLUSTERED SAMPLE — corpus-sized solely when the
-    * provided clustering covers the full corpus, and re-evaluated per
-    * consumer (assignment + routing); at scale, train the quantizer on a
-    * sample and/or persist the (tiny) centroid frame. At 10^12 rows,
-    * nlist grows ~√n and the n·nlist·d assignment cost stays the
-    * standard IVF build price, embarrassingly parallel. */
   /** The grid quantization every IVF distance runs on (1e-4 grid). */
   private def ivfQuant(v: Column): Column =
     floor(v.cast("double") * lit(1e4) + lit(0.5)).cast("long")
 
   /** Build the IVF coarse quantizer from a clustering of (a sample of)
     * the corpus: ONE row packing the per-list, dim-ordered integer-grid
-    * centroid arrays, lists ascending so [[ivfTopKQuantized]]'s argmin
-    * fold resolves distance ties to the LOWER list id by construction.
+    * centroid arrays, lists ascending so [[ivfAssign]]'s argmin fold
+    * resolves distance ties to the LOWER list id by construction.
+    *
+    * The centroid is the GRID-ROUNDED EMPIRICAL CENTROID of `clusters`
+    * ((key, cluster)): components snap to the 1e-4 integer grid and the
+    * centroid is floor(Σvq/cnt + 0.5) per dim, so every centroid distance
+    * is exact integer arithmetic and list assignment and probe routing are
+    * bit-replayable cross-engine (the q40 grid discipline). `clusters`
+    * only seeds the quantizer (standard IVF: it may be trained on a
+    * sample); [[ivfAssign]] then maps EVERY corpus row to a list. The build
+    * (key-join with `clusters`, posexplode, partial agg down to nlist×dim
+    * grid longs) shuffles only the clustered sample.
+    *
     * The quantizer is a MODEL artifact: at scale, build it once,
     * `persist()` (or write) it, and feed it to every query — inlining it
     * re-evaluates the build per consumer. */
@@ -202,11 +177,6 @@ object Ann {
     * nprobe/nlist of the corpus per probe. */
   def nprobeFor(nlist: Int): Int = math.max(1, math.ceil(0.8 * nlist).toInt)
 
-  def ivfTopK(corpus: DataFrame, probes: DataFrame, clusters: DataFrame,
-              key: String, vec: String, k: Int, nprobe: Int = 0): DataFrame =
-    ivfTopKQuantized(corpus, probes,
-      ivfQuantizer(corpus, key, vec, clusters), key, vec, k, nprobe)
-
   /** exact integer d2 to one packed centroid — evaluated per row, in-scan */
   private def d2To(vq: Column, carr: Column): Column =
     aggregate(zip_with(vq, carr, (a, b) => (a - b) * (a - b)),
@@ -214,13 +184,17 @@ object Ann {
 
   /** The IVF corpus-side list assignment — (c_key, c_vec, list), every
     * corpus row mapped to its nearest inverted list by exact integer-grid
-    * argmin against the broadcast quantizer. Split out of
-    * [[ivfTopKQuantized]] (round-7): the assignment is nprobe-independent
-    * and is THE corpus-sized scan of every IVF query, so a caller serving
-    * several probes/nprobe points (q70's top-k, q72's recall read, q73's
-    * whole nprobe curve) builds it once and persists it — the inverted
-    * lists are a model artifact exactly like the quantizer, and at 10^12
-    * rows they are what a deployment stages to disk next to it. */
+    * argmin against the broadcast quantizer. Shuffle-free: ONE broadcast
+    * row carries the packed centroid matrix and the argmin runs inside the
+    * scan projection with array HOFs. The assignment is
+    * nprobe-independent and is THE corpus-sized scan of every IVF query,
+    * so a caller serving several probes/nprobe points (q70's top-k, q72's
+    * recall read, q73's whole nprobe curve) builds it once and persists
+    * it — the inverted lists are a model artifact exactly like the
+    * quantizer, and at 10^12 rows they are what a deployment stages to
+    * disk next to it. At that scale nlist grows ~√n and the n·nlist·d
+    * assignment cost stays the standard IVF build price, embarrassingly
+    * parallel. */
   def ivfAssign(corpus: DataFrame, quantizer: DataFrame, key: String,
                 vec: String): DataFrame =
     corpus.select(col(key).as("c_key"), col(vec).as("c_vec"))
@@ -236,22 +210,23 @@ object Ann {
         }).getField("list"))
       .select(col("c_key"), col("c_vec"), col("list"))
 
-  /** [[ivfTopK]] against a pre-built (persistable) quantizer row.
-    * `nprobe` ≤ 0 (the default) resolves to [[nprobeFor]] of the
-    * quantizer's list count (one head() on the one-row quantizer frame —
-    * build/persist it once via [[ivfQuantizer]]); negative values are
-    * rejected loudly (round-6 ADVICE: they silently meant auto-sizing);
-    * see [[nprobeFor]] for the measured recall the default buys. */
-  def ivfTopKQuantized(corpus: DataFrame, probes: DataFrame,
-                       quantizer: DataFrame, key: String, vec: String,
-                       k: Int, nprobe: Int = 0): DataFrame =
-    ivfTopKAssigned(ivfAssign(corpus, quantizer, key, vec), probes,
-      quantizer, key, vec, k, nprobe)
-
-  /** [[ivfTopKQuantized]] against a pre-built (persistable) corpus
-    * assignment from [[ivfAssign]] — probe routing, candidate join and the
-    * per-probe top-k window only; no corpus-sized work beyond the
-    * candidate slice. */
+  /** IVF (inverted-file) ANN top-k — the data-adaptive scale path next to
+    * [[lshTopK]]'s data-oblivious one. Runs against a pre-built
+    * (persistable) [[ivfQuantizer]] row and its [[ivfAssign]] corpus
+    * assignment: each probe visits only its `nprobe` nearest lists and
+    * rescores those candidates exactly. No corpus-sized work beyond the
+    * candidate slice: probe routing is the same broadcast against the
+    * (tiny) probe set, candidate selection broadcasts the (p_key, list)
+    * routing table against the assignment's list column, and the only
+    * candidate-sized exchange is the per-probe top-k window — an
+    * nprobe/nlist fraction of the corpus per probe. Only the final rescore
+    * runs in floats: cosine of the ORIGINAL vectors, per-row array-order
+    * accumulation (no group summation), rounded 6dp.
+    *
+    * `nprobe` = 0 (the default) resolves to [[nprobeFor]] of the
+    * quantizer's list count (one head() on the one-row quantizer frame);
+    * negative values are rejected, never read as auto-sizing. See
+    * [[nprobeFor]] for the measured recall the default buys. */
   def ivfTopKAssigned(assigned: DataFrame, probes: DataFrame,
                       quantizer: DataFrame, key: String, vec: String,
                       k: Int, nprobe: Int = 0): DataFrame = {

@@ -11,14 +11,14 @@ import org.apache.spark.sql.types._
   *
   * The composed spelling — `aggregate(zip_with(a, b, _*_), 0d, _+_) /
   * (norm(a)*norm(b))` — is three higher-order functions per pair, and
-  * Spark's HOF lambdas evaluate INTERPRETED (round-2 finding: HOFs have no
-  * codegen), which made the pairwise stages of the embedding queries
+  * Spark's HOF lambdas evaluate INTERPRETED (HOFs have no codegen), which
+  * makes the pairwise stages of the embedding queries
   * (q27/q47/q51/q54) pay boxed-lambda costs per element. This expression
   * computes dot product and both norms in ONE primitive loop via a static
   * call, so the enclosing projection keeps whole-stage codegen (same
   * static-call shape as [[graft.extract.LexBlocksExpr]]).
   *
-  * Degenerate inputs → NULL, by design (round-3 review finding):
+  * Degenerate inputs → NULL, by design:
   *  - zero-norm vector → NULL. A plain Java 0.0/0.0 here would produce
   *    NaN, which Spark sorts ABOVE every real double — a single zero
   *    embedding would then top every ANN ranking and pass every near-dup

@@ -17,8 +17,8 @@ import org.apache.spark.sql.types._
   * runs per CORPUS ROW (not per candidate pair), so at 10^12-row ingestion
   * this is the narrow-scan cost of every LSH path (q47/q51); the
   * coefficient matrix is constant per (dim, bits) and hoisted out of the
-  * per-row loop (round-3 review finding — recomputing it cost a
-  * multiply+floorMod per element per row). The arithmetic is unchanged, so
+  * per-row loop (recomputing it would cost a multiply+floorMod per
+  * element per row). The arithmetic is unchanged, so
   * the DuckDB oracles that replay the bucket family replay this too
   * (identical IEEE results: double widening and array-order accumulation
   * per plane, pinned by AnnSpec).
@@ -27,7 +27,7 @@ import org.apache.spark.sql.types._
   * length ≠ dim, or with a null element, buckets to 0 — zip_with pads the
   * shorter side with null, nulling every projection, and `when(null > 0)`
   * clears every bit (the native kernel must not crash or read out of
-  * bounds there — round-3 review finding). ONE deliberate difference: a
+  * bounds there). ONE deliberate difference: a
   * NULL input ARRAY yields NULL here (standard null propagation) where the
   * composed spelling yields bucket 0 — NULL embeddings then drop out of
   * the bucket equi-join instead of all colliding in bucket 0, which is the

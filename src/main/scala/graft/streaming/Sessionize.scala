@@ -32,7 +32,7 @@ object Sessionize {
     // null ts → MinValue+1: sorts first within its micro-batch (the batch
     // twin's nulls-first ordering) instead of an encoder NPE on the
     // non-nullable Long field, which would kill the whole streaming query
-    // on one malformed event (round-3 review finding). MinValue itself
+    // on one malformed event. MinValue itself
     // stays reserved for the no-events-seen state sentinel.
     events.select(col("event_id").cast("long").as("event_id"),
         col("user_id").cast("long").as("user_id"),
@@ -50,12 +50,10 @@ object Sessionize {
             // (q35) gives every null-ts row prev_us NULL ⇒ new session, and
             // the first real event after one sees a NULL lag ⇒ new session:
             //  - e.us == MinValue+1: THIS event has null ts → always a new
-            //    session (previously this relied on signed-overflow wrap for
-            //    lastUs > 0 and silently glued onto the prior session for
-            //    lastUs <= 0 — round-4 review finding);
+            //    session (never left to signed-overflow wrap, which would
+            //    glue it onto the prior session for lastUs <= 0);
             //  - st.lastUs <= MinValue+1: no-events-seen (MinValue) or the
-            //    LAST event had null ts (MinValue+1) → new session
-            //    (round-3 ADVICE overflow fix).
+            //    LAST event had null ts (MinValue+1) → new session.
             // Past the guards both operands are real microsecond timestamps,
             // so the subtraction cannot overflow.
             val newSess = e.us == Long.MinValue + 1 ||

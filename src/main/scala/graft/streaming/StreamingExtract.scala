@@ -1,72 +1,21 @@
 package graft.streaming
 
+import graft.core.Turn
 import graft.extract.Extract
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types._
 
 /** Streaming variant of the extraction kernel. The reference is batch-only
   * (SURVEY.md §2.9: no streaming anywhere), and the north_rule's acceptance
   * path is batch Iceberg → batch Iceberg — this module is the beyond-the-
   * reference tier: because E1–E6 are stateless per-turn transforms, the
   * SAME pipeline object runs under Structured Streaming unchanged; only the
-  * source/sink bindings differ. Late-data semantics come from a watermark
-  * on `ts`; per-conversation ordering is still by explicit key, never by
-  * arrival order.
+  * source/sink bindings differ. Per-conversation ordering is by explicit
+  * key, never by arrival order.
   */
 object StreamingExtract {
-
-  val turnSchema: StructType = StructType(Seq(
-    StructField("conv_id", StringType), StructField("turn_idx", IntegerType),
-    StructField("role", StringType), StructField("text", StringType),
-    StructField("tool", StringType), StructField("ts", TimestampType)))
 
   /** File-stream source → extraction kernel. Caller binds the sink. */
   def fromParquetDir(spark: SparkSession, dir: String): DataFrame =
     Extract.pipeline(
-      spark.readStream.schema(turnSchema).parquet(dir))
-
-  /** Streaming twin of the batch quarantine table (S13): turns whose
-    * payload yields zero content blocks, routed to their own sink instead
-    * of polluting the main table. THE batch rule applied to a streaming
-    * frame — calling [[graft.extract.Extract.quarantine]] itself (pure
-    * projections, streaming-compatible) rather than re-spelling its body,
-    * so the batch ≡ stream contract can't drift (round-3 review finding). */
-  def quarantineStream(spark: SparkSession, dir: String): DataFrame =
-    Extract.quarantine(spark.readStream.schema(turnSchema).parquet(dir))
-
-  /** Streaming exact dedup at ingest — the streaming twin of
-    * [[graft.dedup.Dedup.exact]]: exactly one representative per extracted-
-    * content fingerprint, with state BOUNDED by the watermark horizon
-    * (`dropDuplicatesWithinWatermark` drops a digest from state once the
-    * watermark passes it — the shape that survives an unbounded ingest
-    * where plain `dropDuplicates` state grows forever). Contract
-    * difference, documented: batch keeps min(key) per digest (order-free,
-    * replayable); the stream keeps the FIRST-SEEN arrival inside the
-    * horizon — same one-representative guarantee, pinned against batch by
-    * StreamingSpec on digest sets. */
-  def dedupStream(spark: SparkSession, dir: String,
-                  horizon: String = "10 minutes"): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val turns = spark.readStream.schema(turnSchema).parquet(dir)
-    Extract.extracted(Extract.classified(Extract.lexed(
-        turns.withWatermark("ts", horizon))))
-      .filter(col("extracted") =!= lit(""))
-      .select(col("conv_id"), col("turn_idx"), col("ts"),
-        graft.dedup.Dedup.fingerprint(col("extracted")).as("digest"),
-        col("extracted").as("text"))
-      .dropDuplicatesWithinWatermark("digest")
-  }
-
-  /** Windowed extraction-rate metrics with a watermark — the streaming
-    * observability analog of the batch observe() counters. The extraction
-    * stages run inline on the stream (they preserve all input columns), so
-    * `ts` survives to the windowed aggregation; no stream-stream join. */
-  def extractionRate(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val turns = spark.readStream.schema(turnSchema).parquet(dir)
-    Extract.extracted(Extract.classified(Extract.lexed(
-        turns.withWatermark("ts", "10 minutes"))))
-      .groupBy(window(col("ts"), "5 minutes"))
-      .agg(count(lit(1)).as("turns"), sum(length(col("extracted"))).as("chars"))
-  }
+      spark.readStream.schema(Turn.schema).parquet(dir))
 }

@@ -24,7 +24,7 @@ object Normalize {
     * P1–P8 pipeline: chars grouped in (≤3)-char clusters interleaved with
     * 'x', so each folded token has length 3–5, no aaa-style triple run, and
     * is no stopword. The fixture corpus is ASCII-clean, which left P1
-    * running as IDENTITY in every green driver row (round-4 VERDICT #4) —
+    * running as IDENTITY in every other green gate row —
     * q67/q68 prepend this sentence on BOTH engine and oracle sides (the
     * oracle mirrors the fold with DuckDB `translate` over the same map), so
     * the fold finally folds under the gate. */
@@ -113,8 +113,7 @@ object Normalize {
     * stopword) are FUSED into ONE `filter` pass — Spark's higher-order
     * functions run interpreted with a fresh array materialized per stage,
     * so the chained spelling paid 4 array rebuilds per row for one
-    * conjunction of per-element predicates (round-7 optimization; kept
-    * tokens, order and duplicates are identical by construction — the
+    * conjunction of per-element predicates (kept tokens, order and duplicates are identical by construction — the
     * non-empty check is subsumed by length >= min, and `And` short-
     * circuits so short tokens never reach the regex). With lemmas the
     * original staged chain is kept: the rewrite happens between tokenize
@@ -123,7 +122,7 @@ object Normalize {
                stops: Seq[String] = DefaultStops,
                lemmas: Map[String, String] = Map.empty): Column = {
     if (lemmas.isEmpty)
-      // native one-pass kernel (round-7); [[pipelineComposed]] stays the
+      // native one-pass kernel; [[pipelineComposed]] stays the
       // readable reference semantics, pinned equal by NormalizeSpec
       NormalizeTokensExpr.pipeline(text, stops)
     else {

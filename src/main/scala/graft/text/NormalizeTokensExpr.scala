@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The lemma-free P1–P7 normalization chain as ONE native pass (round-7,
-  * the UDx Expression tier): fold → strip punct/digits → lower → ws split
+/** The lemma-free P1–P7 normalization chain as ONE native pass (the UDx
+  * Expression tier): fold → strip punct/digits → lower → ws split
   * → length / triple-run / stopword filters. The composed spelling (kept
   * in [[Normalize.pipelineComposed]] as the reference semantics and the
   * oracle source) pays a translate + regexp_replace + lower + regex split

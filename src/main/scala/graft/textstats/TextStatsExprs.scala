@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native one-pass kernels for the two regex-heavy curation scans
-  * (round-7 optimization, the UDx policy's Expression tier — each is
+  * (the UDx policy's Expression tier — each is
   * spec-pinned bit-equal to its composed Column spelling, which stays in
   * TextStats as the readable reference semantics and the oracle source):
   *

@@ -16,6 +16,17 @@ class AnnSpec extends AnyFunSuite {
     (4L, Array(0.0f, 0.0f, 0.0f, 1.0f))
   ).toDF("vec_id", "embedding")
 
+  /** IVF top-k composed inline, nothing persisted: quantizer from
+    * `clusters` → corpus assignment → probe top-k. */
+  private def ivfInline(emb: org.apache.spark.sql.DataFrame,
+                        probes: org.apache.spark.sql.DataFrame,
+                        clusters: org.apache.spark.sql.DataFrame,
+                        k: Int, nprobe: Int) = {
+    val quant = Ann.ivfQuantizer(emb, "vec_id", "embedding", clusters)
+    Ann.ivfTopKAssigned(Ann.ivfAssign(emb, quant, "vec_id", "embedding"),
+      probes, quant, "vec_id", "embedding", k, nprobe)
+  }
+
   test("brute-force top-k ranks by cosine with deterministic tie-break") {
     val probes = corpus.filter(col("vec_id") === 0L)
     val got = Ann.bruteTopK(corpus, probes, "vec_id", "embedding", k = 2)
@@ -159,16 +170,17 @@ class AnnSpec extends AnyFunSuite {
     assert(Ann.nprobeFor(1) === 1)
     assert(Ann.nprobeFor(2) === 2)
     assert(Ann.nprobeFor(100) === 80)
-    // the default resolves inside ivfTopKQuantized when nprobe is omitted:
+    // the default resolves inside ivfTopKAssigned when nprobe is omitted:
     // with ceil(0.8*4) = 4 = nlist it must equal the explicit all-lists run
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val clusters = emb.select(col("vec_id"), (col("vec_id") % 4).as("cluster"))
     val probes = emb.filter(col("vec_id") < 3)
     val quant = Ann.ivfQuantizer(emb, "vec_id", "embedding", clusters).persist()
     try {
-      val auto = Ann.ivfTopKQuantized(emb, probes, quant, "vec_id",
+      val assigned = Ann.ivfAssign(emb, quant, "vec_id", "embedding")
+      val auto = Ann.ivfTopKAssigned(assigned, probes, quant, "vec_id",
         "embedding", k = 5).collect().map(_.toSeq).toSet
-      val explicit = Ann.ivfTopKQuantized(emb, probes, quant, "vec_id",
+      val explicit = Ann.ivfTopKAssigned(assigned, probes, quant, "vec_id",
         "embedding", k = 5, nprobe = 4).collect().map(_.toSeq).toSet
       assert(auto === explicit)
     } finally quant.unpersist()
@@ -183,8 +195,7 @@ class AnnSpec extends AnyFunSuite {
     val probes = emb.filter(col("vec_id") < 3)
     val brute = Ann.bruteTopK(emb, probes, "vec_id", "embedding", 5)
       .collect().map(r => (r.getLong(0), r.getInt(3)) -> (r.getLong(1), r.getDouble(2))).toMap
-    val ivf = Ann.ivfTopK(emb, probes, clusters, "vec_id", "embedding",
-        k = 5, nprobe = 4)
+    val ivf = ivfInline(emb, probes, clusters, k = 5, nprobe = 4)
       .collect().map(r => (r.getLong(0), r.getInt(3)) -> (r.getLong(1), r.getDouble(2))).toMap
     assert(ivf === brute)
   }
@@ -193,14 +204,16 @@ class AnnSpec extends AnyFunSuite {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val clusters = emb.select(col("vec_id"), (col("vec_id") % 4).as("cluster"))
     val probes = emb.filter(col("vec_id") < 3)
-    val inline = Ann.ivfTopK(emb, probes, clusters, "vec_id", "embedding",
-      k = 5, nprobe = 2).collect().map(_.toSeq).toSet
+    val inline = ivfInline(emb, probes, clusters, k = 5, nprobe = 2)
+      .collect().map(_.toSeq).toSet
+    // the q70/q72/q73 shape: quantizer and assignment each built once
     val quant = Ann.ivfQuantizer(emb, "vec_id", "embedding", clusters).persist()
+    val assigned = Ann.ivfAssign(emb, quant, "vec_id", "embedding").persist()
     try {
-      val viaQuant = Ann.ivfTopKQuantized(emb, probes, quant, "vec_id",
+      val viaQuant = Ann.ivfTopKAssigned(assigned, probes, quant, "vec_id",
         "embedding", k = 5, nprobe = 2).collect().map(_.toSeq).toSet
       assert(viaQuant === inline)
-    } finally quant.unpersist()
+    } finally { assigned.unpersist(); quant.unpersist() }
   }
 
   test("ivf assigns every corpus row even when the quantizer is sample-trained") {
@@ -210,8 +223,8 @@ class AnnSpec extends AnyFunSuite {
     val sampleClusters = emb.filter(col("vec_id") % 2 === 0)
       .select(col("vec_id"), (col("vec_id") % 4).as("cluster"))
     val probes = emb.filter(col("vec_id") < 3)
-    val ivf = Ann.ivfTopK(emb, probes, sampleClusters, "vec_id", "embedding",
-      k = 5, nprobe = 4) // all lists probed → candidates = whole corpus
+    val ivf = ivfInline(emb, probes, sampleClusters, k = 5,
+      nprobe = 4) // all lists probed → candidates = whole corpus
     val brute = Ann.bruteTopK(emb, probes, "vec_id", "embedding", 5)
       .collect().map(r => (r.getLong(0), r.getInt(3)) -> r.getLong(1)).toMap
     val got = ivf.collect().map(r => (r.getLong(0), r.getInt(3)) -> r.getLong(1)).toMap
@@ -228,8 +241,7 @@ class AnnSpec extends AnyFunSuite {
     val bruteTop = Ann.bruteTopK(emb, probes, "vec_id", "embedding", 5)
       .filter(col("rk") === 1)
       .select("p_key", "cos").as[(Long, Double)].collect().toMap
-    val ivf = Ann.ivfTopK(emb, probes, clusters, "vec_id", "embedding",
-      k = 5, nprobe = 2)
+    val ivf = ivfInline(emb, probes, clusters, k = 5, nprobe = 2)
     assert(ivf.count() <= 15) // ≤ 3 probes × k
     // the probe's own list is always among its nprobe nearest, so its
     // co-list neighbours are candidates — per-probe results are non-empty

@@ -78,7 +78,7 @@ class DedupSpec extends AnyFunSuite {
     // true jaccard(0,2) ≈ 8/14 ≈ 0.57 → per-band collision 0.57^rows; use
     // 8 bands × 2 rows so detection probability is ~96% (deterministic here
     // since the hash family is fixed).
-    val out = Dedup.minhashLsh(docs, "doc_id", "tokens", k = 3, numHashes = 16, bands = 8)
+    val out = Dedup.minhashLshMd5(docs, "doc_id", "tokens", k = 3, numHashes = 16, bands = 8)
     val m = out.select("key_a", "key_b", "est_jaccard")
       .as[(Long, Long, Double)].collect()
       .map { case (a, b, j) => (a, b) -> j }.toMap
@@ -89,9 +89,9 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("simhash: identical docs at hamming 0, near dups within threshold") {
-    // radius 12 needs > 12 bands for the pigeonhole guarantee (64-bit sig,
-    // 16 bands of 4 bits)
-    val out = Dedup.simhashDup(docs, "doc_id", "tokens", maxHamming = 12, bands = 16)
+    // radius 12 needs > 12 bands for the pigeonhole guarantee (32-bit sig,
+    // 16 bands of 2 bits)
+    val out = Dedup.simhashDupMd5(docs, "doc_id", "tokens", maxHamming = 12, bands = 16)
       .select("key_a", "key_b", "hamming").as[(Long, Long, Int)].collect()
       .map { case (a, b, h) => (a, b) -> h }.toMap
     assert(out((0L, 1L)) === 0)
@@ -100,8 +100,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("simhash banded join equals the exact all-pairs scan at radius < bands") {
     // pigeonhole recall property: for maxHamming < bands the bucketed join
-    // must find EXACTLY the pairs an all-pairs Hamming scan finds (round-1
-    // bug regression guard: radius 16 over 4 bands silently lost pairs)
+    // must find EXACTLY the pairs an all-pairs Hamming scan finds
     val corpus = (0L until 40L).map { i =>
       // 13 token slots; vary a couple of slots per doc so pair distances
       // spread across the radius boundary
@@ -111,11 +110,11 @@ class DedupSpec extends AnyFunSuite {
       (i, toks.mkString(" "))
     }.toDF("doc_id", "text").withColumn("tokens", split(col("text"), " "))
     for (radius <- Seq(2, 3)) {
-      val banded = Dedup.simhashDup(corpus, "doc_id", "tokens",
+      val banded = Dedup.simhashDupMd5(corpus, "doc_id", "tokens",
         maxHamming = radius, bands = 4)
         .select("key_a", "key_b").as[(Long, Long)].collect().toSet
       val sig = corpus.select(col("doc_id").as("k"),
-        Dedup.simhash(col("tokens")).as("sh"))
+        Dedup.simhash32Md5(col("tokens")).as("sh"))
       val exact = sig.as("a").join(sig.as("b"), col("a.k") < col("b.k"))
         .withColumn("hamming", bit_count(col("a.sh").bitwiseXOR(col("b.sh"))))
         .filter(col("hamming") <= radius)
@@ -126,7 +125,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("simhashDup rejects a radius the banding cannot guarantee") {
     intercept[IllegalArgumentException] {
-      Dedup.simhashDup(docs, "doc_id", "tokens", maxHamming = 16, bands = 4)
+      Dedup.simhashDupMd5(docs, "doc_id", "tokens", maxHamming = 16, bands = 4)
     }
   }
 
@@ -152,10 +151,10 @@ class DedupSpec extends AnyFunSuite {
     // rows per band uncapped); cap 5 drops those buckets entirely
     val same = (0L until 10L).map(i => (i, "the exact same boilerplate text repeated verbatim"))
       .toDF("doc_id", "text").withColumn("tokens", split(col("text"), " "))
-    val uncapped = Dedup.minhashLsh(same, "doc_id", "tokens", k = 3,
+    val uncapped = Dedup.minhashLshMd5(same, "doc_id", "tokens", k = 3,
       numHashes = 16, bands = 4)
     assert(uncapped.count() === 45) // all C(10,2) pairs
-    val capped = Dedup.minhashLsh(same, "doc_id", "tokens", k = 3,
+    val capped = Dedup.minhashLshMd5(same, "doc_id", "tokens", k = 3,
       numHashes = 16, bands = 4, maxBucket = 5)
     assert(capped.count() === 0)
   }
@@ -183,17 +182,15 @@ class DedupSpec extends AnyFunSuite {
         Dedup.minhashFromHashesComposed(col("hs"), 16).as("hof"))
       .filter(!(col("native") <=> col("hof"))).count()
     assert(diff === 0)
-    // end-to-end signatures over real token arrays, both hash families
+    // end-to-end signatures over real token arrays
     val docs = Seq(
       (0L, Seq("the", "quick", "brown", "fox", "jumps")),
       (1L, Seq("a")), (2L, Seq("lorem", "ipsum", "dolor", "sit", "amet", "sed")))
       .toDF("doc_id", "tokens")
-    Seq(Dedup.minhashSignature(col("tokens"), 3, 8),
-        Dedup.minhashSignatureMd5(col("tokens"), 3, 8)).foreach { sig =>
-      val out = docs.select(sig.as("s")).collect()
-      assert(out.forall(_.getSeq[Long](0).length == 8))
-      assert(out.forall(_.getSeq[Long](0).forall(v => v >= 0 && v < 2147483647L)))
-    }
+    val out = docs.select(Dedup.minhashSignatureMd5(col("tokens"), 3, 8).as("s"))
+      .collect()
+    assert(out.forall(_.getSeq[Long](0).length == 8))
+    assert(out.forall(_.getSeq[Long](0).forall(v => v >= 0 && v < 2147483647L)))
   }
 
   test("native simhash_fold is identical to the composed HOF spelling") {

@@ -90,6 +90,21 @@ class ExtractJobSpec extends AnyFunSuite {
     }
   }
 
+  test("an input whose column types differ from the turn schema publishes nothing") {
+    // the job reads its input with the declared Turn.schema: a BIGINT
+    // turn_idx fails the read instead of flowing on as another type
+    val tmp = Files.createTempDirectory("graft_job_schema").toString
+    Transcripts.synthetic(spark, 100, 10).drop("doc_text")
+      .withColumn("turn_idx", org.apache.spark.sql.functions.col("turn_idx").cast("long"))
+      .write.parquet(s"$tmp/in")
+    val e = intercept[org.apache.spark.SparkException] {
+      ExtractJob.run(spark, s"$tmp/in", s"$tmp/table", nBuckets = 8, salts = 4, cpus = 4)
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("turn_idx")), e)
+    assert(TableIO.currentSnapshot(spark, s"$tmp/table") === None)
+  }
+
   test("zero-row corpus publishes a readable snapshot WITH the bucket column") {
     // the empty placeholder parquet must carry the `bucket` partition column
     // a committed bucketed write exposes via its bucket= dirs — otherwise a

@@ -19,8 +19,8 @@ class LsaSpec extends AnyFunSuite {
   // are orthogonal twins), and ARPACK cannot split an exactly degenerate
   // pair from one Krylov start vector — its 2nd Ritz vector then converges
   // to a suffix-contrast direction and the topic geometry is lost
-  // (observed round 3: identical code alternated between clean and mixed
-  // projections with the symmetric fixture).
+  // (observed: identical code alternated between clean and mixed
+  // projections with a symmetric fixture).
   private val docs = (0L until 12L).map { i =>
     val topic = (i % 2).toInt
     val base =
@@ -30,18 +30,25 @@ class LsaSpec extends AnyFunSuite {
     (i, topic, Seq.fill(if (topic == 0) 4 else 3)(base).flatten :+ suffix)
   }.toDF("doc_id", "topic", "tokens")
 
+  /** The materialized LSA projection of `tfidf` (the frame
+    * Lsa.projectModel returns next to V); the caller unpersists it. */
+  private def lsaFrame(tfidf: org.apache.spark.sql.DataFrame, vocabSize: Int,
+                      k: Int) =
+    Lsa.projectModel(tfidf, "doc_id", "tfidf", vocabSize, k)._1
+
   private def projections(k: Int): Map[Long, (Int, Seq[Double])] = {
     val toks = Vocab.tokensLong(docs, "doc_id", "tokens")
     val tc = Vocab.termCounts(toks, "doc_id")
     val vocab = Vocab.buildFromCounts(tc, nDocs = 12)
     val vocabSize = vocab.count().toInt
     val tfidf = Vocab.tfidfFromCounts(tc, vocab, "doc_id", nDocs = 12)
-    val proj = Lsa.project(tfidf, "doc_id", "tfidf", vocabSize, k)
-    proj.join(docs.select("doc_id", "topic"), Seq("doc_id"))
+    val proj = lsaFrame(tfidf, vocabSize, k)
+    try proj.join(docs.select("doc_id", "topic"), Seq("doc_id"))
       .select("doc_id", "topic", "projection")
       .collect()
       .map(r => r.getLong(0) -> ((r.getInt(1), r.getSeq[Double](2))))
       .toMap
+    finally proj.unpersist()
   }
 
   private def cos(a: Seq[Double], b: Seq[Double]): Double =
@@ -71,7 +78,7 @@ class LsaSpec extends AnyFunSuite {
     val tc = Vocab.termCounts(toks, "doc_id")
     val vocab = Vocab.buildFromCounts(tc, nDocs = 12)
     val tfidf = Vocab.tfidfFromCounts(tc, vocab, "doc_id", nDocs = 12)
-    val proj = Lsa.project(tfidf, "doc_id", "tfidf", vocab.count().toInt, k = 3)
+    val proj = lsaFrame(tfidf, vocab.count().toInt, k = 3)
     import org.apache.spark.ml.feature.PCA
     import org.apache.spark.ml.functions.array_to_vector
     val feat = proj.withColumn("features",
@@ -93,6 +100,7 @@ class LsaSpec extends AnyFunSuite {
     val t1 = pcs.filter(_._1 == 1).map(_._2)
     assert(t0.max < t1.min || t1.max < t0.min,
       "topics must not overlap on PC1")
+    proj.unpersist()
   }
 
   test("k-means over the LSA space recovers the two topics exactly") {
@@ -100,7 +108,7 @@ class LsaSpec extends AnyFunSuite {
     val tc = Vocab.termCounts(toks, "doc_id")
     val vocab = Vocab.buildFromCounts(tc, nDocs = 12)
     val tfidf = Vocab.tfidfFromCounts(tc, vocab, "doc_id", nDocs = 12)
-    val proj = Lsa.project(tfidf, "doc_id", "tfidf", vocab.count().toInt, k = 2)
+    val proj = lsaFrame(tfidf, vocab.count().toInt, k = 2)
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
     // kmeans|| init samples BY PARTITION: pin data order so the seeded init
@@ -115,5 +123,6 @@ class LsaSpec extends AnyFunSuite {
     // each topic maps to exactly one cluster
     assert(assigned.length === 2,
       s"combos: ${assigned.map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSeq}")
+    proj.unpersist()
   }
 }

@@ -9,40 +9,38 @@ class ScorerSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
+  /** Lexed-block stand-ins: the fields [[Scorer.scoreSql]] reads. */
+  private lazy val blocks = Seq(
+    ("some block text here", 4, 3, 4, 1, 0),
+    ("", 0, 0, 0, 0, 0),
+    ("x" * 300 + " 12 of 34", 0, 1, 4, 1, 4),
+    ("home docs about", 15, 3, 3, 0, 0)
+  ).toDF("text", "linkChars", "nTags", "nWords", "nStops", "nDigits")
+    .select(struct(col("*")).as("v"))
+
   test("logistic scorer matches scalar sigmoid on known weights") {
-    val w = Seq(1.0, -2.0, 0.5)
+    val w = Seq(1.0, -2.0, 0.5, 0.3, -0.7)
     val b = 0.1
-    val rows = Seq(Seq(0.2, 0.1, 0.9), Seq(1.0, 1.0, 0.0), Seq(0.0, 0.0, 0.0))
-    val got = rows.toDF("f")
-      .withColumn("score", Scorer.logistic(col("f"), w, b))
-      .select("score").as[Double].collect()
-    rows.zip(got).foreach { case (x, g) =>
-      val z = x.zip(w).map { case (a, c) => a * c }.sum + b
-      val want = 1.0 / (1.0 + math.exp(-z))
-      assert(math.abs(g - want) < 1e-12)
+    Seq((w, b), (Scorer.DefaultW, Scorer.DefaultB)).foreach { case (wi, bi) =>
+      val got = blocks.select(col("v.*"), expr(Scorer.scoreSql("v", wi, bi)).as("s"))
+        .collect()
+      assert(got.length === 4)
+      got.foreach { r =>
+        val len = r.getString(0).length.toDouble
+        val x = Seq(math.min(len / 256.0, 1.0),
+          r.getInt(1) / math.max(len, 1.0),
+          r.getInt(2) / math.max(len, 1.0),
+          r.getInt(4).toDouble / math.max(r.getInt(3), 1),
+          r.getInt(5) / math.max(len, 1.0))
+        val z = x.zip(wi).map { case (a, c) => a * c }.sum + bi
+        val want = 1.0 / (1.0 + math.exp(-z))
+        assert(math.abs(r.getDouble(6) - want) < 1e-12, s"block ${r.getString(0)}")
+      }
     }
   }
 
-  test("mlp scorer: relu hidden layer + sigmoid output") {
-    val w1 = Seq(Seq(1.0, 0.0), Seq(-1.0, 1.0))
-    val b1 = Seq(0.0, 0.5)
-    val w2 = Seq(1.0, -1.0)
-    val b2 = 0.2
-    val x = Seq(0.3, 0.7)
-    val got = Seq(x).toDF("f")
-      .withColumn("score", Scorer.mlp(col("f"), w1, b1, w2, b2))
-      .select("score").as[Double].head()
-    val h = w1.zip(b1).map { case (row, bias) =>
-      math.max(0.0, row.zip(x).map { case (wi, xi) => wi * xi }.sum + bias) }
-    val z = h.zip(w2).map { case (hi, wi) => hi * wi }.sum + b2
-    assert(math.abs(got - 1.0 / (1.0 + math.exp(-z))) < 1e-12)
-  }
-
   test("block features stay in codegen (no UDF, no shuffle)") {
-    val df = Seq(("some block text here", 3, 1)).toDF("text", "nTags", "nLinks")
-      .withColumn("f", Scorer.features(col("text"), col("nLinks"),
-        col("nTags"), Seq("the", "a")))
-      .withColumn("score", Scorer.logistic(col("f"), Scorer.DefaultW, Scorer.DefaultB))
+    val df = blocks.withColumn("score", expr(Scorer.scoreSql("v")))
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange") && !plan.contains("ScalaUDF"))
   }
@@ -61,10 +59,16 @@ class ScorerSpec extends AnyFunSuite {
   }
 
   test("confusion matrix pivots counts") {
-    val df = Seq(("a", "a"), ("a", "b"), ("b", "b")).toDF("label", "pred")
-    val m = Scorer.confusion(df, "label", "pred").orderBy("label").collect()
-    assert(m(0).getString(0) === "a" && m(0).getLong(1) === 1L && m(0).getLong(2) === 1L)
-    assert(m(1).getString(0) === "b" && m(1).getLong(1) === 0L && m(1).getLong(2) === 1L)
+    // q24's pivot (label × predicted = vec_id % 10) over a hand-made
+    // embeddings table: label 0 is predicted 0, 1, 1; label 1 is 2, 2, 3
+    val dir = java.nio.file.Files.createTempDirectory("graft_q24").toString
+    Seq((0L, 0), (1L, 0), (11L, 0), (2L, 1), (12L, 1), (13L, 1))
+      .toDF("vec_id", "label").write.parquet(s"$dir/embeddings.parquet")
+    val m = SparkEntry.queries("q24_confusion")(spark, dir).orderBy("label")
+      .collect().map(r => r.getInt(0) -> (1 to 10).map(r.getLong))
+    assert(m.toSeq === Seq(
+      0 -> Seq(1L, 2L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L),
+      1 -> Seq(0L, 0L, 2L, 1L, 0L, 0L, 0L, 0L, 0L, 0L)))
   }
 
   test("M11: stratified split takes exactly ceil(3n/10) test rows per label") {

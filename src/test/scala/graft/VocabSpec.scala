@@ -18,9 +18,13 @@ class VocabSpec extends AnyFunSuite {
     (3L, Seq("common", "half"))
   ).toDF("doc_id", "tokens")
 
+  /** The shared per-document term counts every vocab operator reads. */
+  private def termCounts(d: org.apache.spark.sql.DataFrame) =
+    Vocab.termCounts(Vocab.tokensLong(d, "doc_id", "tokens"), "doc_id")
+
   test("filter_extremes: no_below drops rare, no_above drops ubiquitous") {
-    val toks = Vocab.tokensLong(docs, "doc_id", "tokens")
-    val vocab = Vocab.build(toks, "doc_id", nDocs = 4, noBelow = 2, noAbove = 0.75)
+    val tc = termCounts(docs)
+    val vocab = Vocab.buildFromCounts(tc, nDocs = 4, noBelow = 2, noAbove = 0.75)
     val got = vocab.orderBy("id").as[(String, Long, Long)].collect().toSeq
     // common df=4 > 0.75*4=3 dropped; rare df=1 < 2 dropped.
     // survivors: half df=2, mid df=2 — tie on df, token asc → half id 0, mid id 1
@@ -28,17 +32,17 @@ class VocabSpec extends AnyFunSuite {
   }
 
   test("deterministic ids are stable under repartitioning") {
-    val toks = Vocab.tokensLong(docs.repartition(5), "doc_id", "tokens")
-    val v1 = Vocab.build(toks, "doc_id", 4, 1, 1.0).orderBy("id").collect().toSeq
-    val toks2 = Vocab.tokensLong(docs.repartition(2, col("doc_id")), "doc_id", "tokens")
-    val v2 = Vocab.build(toks2, "doc_id", 4, 1, 1.0).orderBy("id").collect().toSeq
+    val v1 = Vocab.buildFromCounts(termCounts(docs.repartition(5)), 4, 1, 1.0)
+      .orderBy("id").collect().toSeq
+    val v2 = Vocab.buildFromCounts(termCounts(docs.repartition(2, col("doc_id"))),
+      4, 1, 1.0).orderBy("id").collect().toSeq
     assert(v1 === v2)
   }
 
   test("bow counts duplicates within doc") {
-    val toks = Vocab.tokensLong(docs, "doc_id", "tokens")
-    val vocab = Vocab.build(toks, "doc_id", 4, 1, 1.0)
-    val bow = Vocab.bow(toks, vocab, "doc_id")
+    val tc = termCounts(docs)
+    val vocab = Vocab.buildFromCounts(tc, 4, 1, 1.0)
+    val bow = Vocab.bowFromCounts(tc, vocab, "doc_id")
     val commonId = vocab.filter(col("token") === "common").head().getLong(1)
     val d0 = bow.filter(col("doc_id") === 0 && col("token_id") === commonId)
       .head().getLong(2)
@@ -46,16 +50,15 @@ class VocabSpec extends AnyFunSuite {
   }
 
   test("tfidf: idf = ln(N/df), sublinear tf = 1 + ln(tf)") {
-    val toks = Vocab.tokensLong(docs, "doc_id", "tokens")
-    val vocab = Vocab.build(toks, "doc_id", 4, 1, 1.0)
-    val bow = Vocab.bow(toks, vocab, "doc_id")
-    val plain = Vocab.tfidf(bow, vocab, "doc_id", 4)
+    val tc = termCounts(docs)
+    val vocab = Vocab.buildFromCounts(tc, 4, 1, 1.0)
+    val plain = Vocab.tfidfFromCounts(tc, vocab, "doc_id", 4)
     val rareRow = plain.join(vocab.filter(col("token") === "rare")
         .select(col("id").as("token_id")), Seq("token_id"))
       .head()
     val tfidf = rareRow.getAs[Double]("tfidf")
     assert(math.abs(tfidf - 1.0 * math.log(4.0 / 1.0)) < 1e-12)
-    val sub = Vocab.tfidf(bow, vocab, "doc_id", 4, sublinear = true)
+    val sub = Vocab.tfidfFromCounts(tc, vocab, "doc_id", 4, sublinear = true)
     val commonD0 = sub.join(vocab.filter(col("token") === "common")
         .select(col("id").as("token_id")), Seq("token_id"))
       .filter(col("doc_id") === 0).head().getAs[Double]("tfidf")
