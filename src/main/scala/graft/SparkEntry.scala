@@ -15,10 +15,11 @@ import graft.sim.Ann
 import graft.text.Normalize
 import graft.textstats.TextStats
 
-/** Driver contract — one `queries` entry per implemented operator from
-  * SURVEY.md §2, each with a DuckDB-runnable oracle in [[oracleSql]] where
-  * the semantics are SQL-expressible (hash/LSH ops get rows-only checks and
-  * are pinned instead by ScalaTest oracles in src/test).
+/** Driver contract — one [[Gate]] per implemented operator from SURVEY.md
+  * §2 in [[gates]]: its engine build and its DuckDB oracle. Only the two
+  * exported fits (q60's word vectors, q65's LSA/PCA model) have no oracle;
+  * the oracles of q61, q44 and q49 replay from their exports.
+  * [[queries]] and [[oracleSql]] are the by-name views of that one list.
   *
   * Column-name contract: every computed column is aliased identically in the
   * Spark plan and the oracle SQL — the driver sorts columns by name before
@@ -65,14 +66,17 @@ object SparkEntry {
   // DuckDB regexes are RE2: no backreferences — spell the triple-repeat
   // filter as the explicit 26-triple alternation (exactly the scan the
   // reference performs, modules/main_corpus_processing.py:46-47).
+  /** Orders per status F/O/P as BIGINT counts n_f, n_o, n_p (q08's pivot
+    * and q41's product). */
+  private val OracleStatusCounts = Seq("F", "O", "P").map { st =>
+    s"CAST(sum(CASE WHEN o_orderstatus = '$st' THEN 1 ELSE 0 END) AS BIGINT) AS n_${st.toLowerCase}"
+  }.mkString(",\n           ")
+
   /** q41's data-product aggregate — ALSO q62's oracle (the CSV round-trip
     * must reproduce the product exactly), kept as ONE string so the two
     * gates cannot drift. */
   private val OracleDataProduct =
-    """SELECT n_name,
-           CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_f,
-           CAST(sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS n_o,
-           CAST(sum(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END) AS BIGINT) AS n_p,
+    s"""SELECT n_name, $OracleStatusCounts,
            round(sum(o_totalprice), 2) AS total
          FROM orders
          JOIN customer ON o_custkey = c_custkey
@@ -245,14 +249,15 @@ object SparkEntry {
   }
 
   /** The one fitted topic model that q52, q55 and q56 read, with its
-    * features frame, persisted for the fit's iterative passes. */
+    * features frame. The frame is left unpersisted: MLlib's LDA then caches
+    * the vectors it converts for the fit's iterative passes itself, and
+    * frees them when the fit returns. */
   private def ldaFitted(s: SparkSession, dir: String)
       : (org.apache.spark.ml.clustering.LDAModel, DataFrame) =
     artifact(s, dir, "lda") {
       val features = ldaFeatures(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       (graft.ml.Lda.fit(features, k = 5), features)
-    }(_._2.unpersist())
+    }(_ => ())
 
   /** The one LSA fit that q44 (the projection), q49 (PCA over it) and the
     * q65/q66 model exports read: the persisted docs × k frame and the V
@@ -347,16 +352,75 @@ object SparkEntry {
     graft.corpus.Curation.build(t(s, dir, "documents"), blockTokens = 256)(
       (stage, df) => sharedResult(s, dir, s"curation.$stage")(df))
 
+  /** q27's exact cosine top-5 of the three probes, which q72's recall and
+    * q73's curve compare against. */
+  private def annExact(s: SparkSession, dir: String): DataFrame =
+    sharedResult(s, dir, "brute") {
+      val emb = t(s, dir, "embeddings")
+      Ann.bruteTopK(emb, emb.filter(col("vec_id") < 3), "vec_id", "embedding", 5)
+    }
+
+  /** q70's IVF top-5 of the three probes, at the default nprobe. */
+  private def annIvf(s: SparkSession, dir: String): DataFrame =
+    sharedResult(s, dir, "ivf") {
+      val (_, emb) = kmeansFitted(s, dir)
+      // the oracle replays exactly 8 probed lists (pr <= 8) — fail LOUDLY
+      // if the sizing rule ever drifts
+      require(Ann.nprobeFor(10) == 8,
+        s"q70 oracle is pinned to nprobe=8, nprobeFor(10) gave ${Ann.nprobeFor(10)}")
+      Ann.ivfTopKAssigned(ivfAssignedShared(s, dir),
+        emb.filter(col("vec_id") < 3), ivfQuantizerShared(s, dir),
+        "vec_id", "embedding", k = 5)
+    }
+
+  /** q47's LSH top-5 of the three probes, at the sized bit count. */
+  private def annLsh(s: SparkSession, dir: String): DataFrame =
+    sharedResult(s, dir, "lsh") {
+      val emb = t(s, dir, "embeddings")
+      val bits = Ann.bitsFor(emb.count()) // 4 for every testdata sf (n ≤ 4096)
+      // the oracle replays exactly 4 hyperplanes (generate_series(0,3)) —
+      // fail LOUDLY if a future testdata sf pushes bitsFor past 4 instead of
+      // silently hash-mismatching with no code change
+      require(bits == 4, s"q47 oracle is pinned to bits=4, bitsFor gave $bits")
+      Ann.lshTopK(emb, emb.filter(col("vec_id") < 3), "vec_id", "embedding",
+        k = 5, dim = 64, bits = bits, multiProbe = true)
+    }
+
+  /** q52's doc-topic matrix of the shared LDA fit, which q55 and q56 read. */
+  private def ldaDocTopics(s: SparkSession, dir: String): DataFrame =
+    sharedResult(s, dir, "ldaDocTopics") {
+      val (model, features) = ldaFitted(s, dir)
+      graft.ml.Lda.docTopicMatrix(model, features, "doc_id")
+    }
+
+  /** q41's data product, which q62 writes through the CSV sink. */
+  private def dataProduct(s: SparkSession, dir: String): DataFrame =
+    sharedResult(s, dir, "q41product") {
+      val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
+      val n = t(s, dir, "nation")
+      val observed = c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
+      val enriched = o.join(broadcast(observed), o("o_custkey") === observed("c_custkey"))
+      enriched.groupBy(col("c_nationkey"))
+        .agg(
+          sum(when(col("o_orderstatus") === "F", 1).otherwise(0)).as("n_f"),
+          sum(when(col("o_orderstatus") === "O", 1).otherwise(0)).as("n_o"),
+          sum(when(col("o_orderstatus") === "P", 1).otherwise(0)).as("n_p"),
+          round(sum(col("o_totalprice")), 2).as("total"))
+        .join(broadcast(n), col("c_nationkey") === n("n_nationkey"))
+        .select(col("n_name"), col("n_f"), col("n_o"), col("n_p"), col("total"))
+    }
+
   /** Oracle-side content chunks of a documents-derived turn: the scored
     * kernel's content-candidate blocks are the layout 8-token lines for
     * shape 2 and the single full-text block for shapes 0/1/3 (chrome-path
     * blocks are vetoed structurally and never reach the scorer's output).
-    * Requires CTE columns (doc_id, text, w = string_split(text, ' ')). */
+    * CTEs d (doc_id, text, w) and ch (doc_id, chunks). */
   private val OracleChunks =
-    """CASE WHEN doc_id % 4 = 2 THEN
-         list_transform(generate_series(0, (len(w)-1)//8),
-           i -> array_to_string(w[i*8+1:i*8+8], ' '))
-       ELSE [text] END"""
+    """d AS (SELECT doc_id, text, string_split(text, ' ') AS w FROM documents),
+          ch AS (SELECT doc_id, CASE WHEN doc_id % 4 = 2 THEN
+              list_transform(generate_series(0, (len(w)-1)//8),
+                i -> array_to_string(w[i*8+1:i*8+8], ' '))
+            ELSE [text] END AS chunks FROM d)"""
 
   /** Oracle replay of Scorer.scoreSql over a documents-corpus chunk `c`.
     * The corpus has no links, no inline tags and no digits, so features
@@ -450,34 +514,462 @@ object SparkEntry {
     dir
   }
 
+  // ------------------------------------------------------------------------
+  // oracle fragments: SQL that two or more oracles spell
+  // ------------------------------------------------------------------------
+
   /** conv_id / turn_idx key mapping used by Transcripts.fromDocuments,
     * restated in SQL for the extraction oracles. */
   private val OracleConvId = s"'c' || lpad(CAST(doc_id % ${Transcripts.ConvFold} AS VARCHAR), 4, '0')"
   private val OracleTurnIdx = s"CAST(doc_id // ${Transcripts.ConvFold} AS INT)"
 
+  /** Per-turn text of the documents-derived corpus, keyed like
+    * Transcripts.fromDocuments, with `textExpr` as the turn text: the q30
+    * contract. */
+  private def oracleTurnText(textExpr: String) =
+    s"""SELECT $OracleConvId AS conv_id, $OracleTurnIdx AS turn_idx,
+            $textExpr AS text
+          FROM documents"""
+
+  /** The shared dictionary over the oracle tokens (Vocab.buildFromCounts:
+    * noBelow 2, noAbove 0.9, ids by df desc then token) with its per-doc
+    * counts and unrounded tf-idf. CTEs toks, stats, n, vocab (token, df,
+    * id), bow (doc_id, token_id, df, cnt) and tfidf (doc_id, token_id, cnt,
+    * tfidf). */
+  private val OracleDictionary =
+    s"""toks AS (
+            SELECT doc_id, unnest($OracleTokens) AS token FROM documents),
+          stats AS (
+            SELECT token, count(DISTINCT doc_id) AS df FROM toks GROUP BY 1),
+          n AS (SELECT count(*) AS n_docs FROM documents),
+          vocab AS (
+            SELECT token, df,
+              CAST(row_number() OVER (ORDER BY df DESC, token ASC) - 1 AS BIGINT) AS id
+            FROM stats, n WHERE df >= 2 AND df <= 0.9 * n_docs),
+          bow AS (
+            SELECT doc_id, id AS token_id, df, count(*) AS cnt
+            FROM toks JOIN vocab USING (token) GROUP BY 1, 2, 3),
+          tfidf AS (
+            SELECT doc_id, token_id, cnt,
+              cnt * ln((SELECT n_docs FROM n) / CAST(df AS DOUBLE)) AS tfidf
+            FROM bow)"""
+
+  /** Router's first-match-wins cascade over the oracle tokens, generated
+    * from the same Router.DefaultRules table the engine routes by. */
+  private val OracleRoute = Router.DefaultRules.map { r =>
+    r.allOf.map(kw => s"list_contains($OracleTokens, '$kw')")
+      .mkString("WHEN ", " AND ", s" THEN '${r.route}'")
+  }.mkString("CASE ", "\n            ", " ELSE 'unrouted' END")
+
+  /** The q20 quality score (TextStatsExprs.qualityScorePpm: an integer ppm
+    * blend of length, stopword, punctuation and digit features). CTEs f, g
+    * and q (doc_id, text, quality_ppm) over the documents. */
+  private val OracleQuality =
+    s"""f AS (
+           SELECT doc_id, text,
+             greatest(length(text), 1) AS len,
+             length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g')) AS punct,
+             length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS digits,
+             list_filter(string_split_regex(lower(text), '\\s+'), tk -> length(tk) > 0) AS toks
+           FROM documents),
+         g AS (
+           SELECT doc_id, text, len, punct, digits,
+             greatest(len(toks), 1) AS nt,
+             len(list_filter(toks, tk -> list_contains($OracleStops, tk))) AS stop_hits
+           FROM f),
+         q AS (
+           SELECT doc_id, text,
+             greatest(0, least(1000000,
+               500000 + (least(nt, 64) * 300000) // 64
+                      + (stop_hits * 200000) // nt
+                      - (punct * 500000) // len
+                      - (digits * 500000) // len)) AS quality_ppm
+           FROM g)"""
+
+  /** Dedup.exact over `from` (doc_id, text): the md5 of the case- and
+    * space-folded text, kept at its lowest doc_id. CTEs fp (doc_id,
+    * fingerprint) and keepers (fingerprint, keeper). */
+  private def oracleKeepers(from: String) =
+    s"""fp AS (
+           SELECT doc_id, md5(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS fingerprint
+           FROM $from),
+         keepers AS (SELECT fingerprint, min(doc_id) AS keeper FROM fp GROUP BY 1)"""
+
+  /** The distinct k-token shingles of the token list `w` (Dedup.shingles:
+    * a list shorter than k gives one truncated shingle). */
+  private def oracleShingles(k: Int) =
+    s"""list_distinct(list_transform(
+             generate_series(1, greatest(len(w) - ${k - 1}, 1)),
+             i -> array_to_string(w[i:i+${k - 1}], ' ')))"""
+
+  /** CTE d (doc_id, w): the space-split `textExpr` of the doc_id % 10 = 0
+    * sample the pairwise dedup gates run on. */
+  private def oracleSample(textExpr: String) =
+    s"""d AS (SELECT doc_id, string_split($textExpr, ' ') AS w FROM documents
+           WHERE doc_id % 10 = 0)"""
+
+  /** Dedup.minhashSignatureMd5's inputs over the 3-shingles of each `d`
+    * row: CTEs sh, h (doc_id, hv: the shingle's md5 prefix mod 2³¹−1) and
+    * hi (h_idx in [0, numHashes)). [[OracleMinhash]] is slot h_idx of the
+    * signature, aggregated per (doc_id, h_idx) over h × hi. */
+  private def oracleMinhashInputs(numHashes: Int) =
+    s"""sh AS (SELECT doc_id, unnest(${oracleShingles(3)}) AS sh FROM d),
+         h AS (
+           SELECT doc_id,
+             ('0x' || substr(md5(sh), 1, 8))::BIGINT % 2147483647 AS hv
+           FROM sh),
+         hi AS (SELECT unnest(generate_series(0, ${numHashes - 1})) AS h_idx)"""
+  private val OracleMinhash =
+    """min((hv * ((1000000007 * (h_idx + 1)) % 2147483647)
+                + ((998244353 * (h_idx * h_idx + 1)) % 2147483647)) % 2147483647)"""
+
+  /** Curation.nearDupPairs over `d`: 16 MinHash slots in 4 bands of 4,
+    * candidate pairs from equal band buckets (a bucket holding more than
+    * `maxBucket` docs is dropped; 0 keeps all). Ends in CTE m (key_a,
+    * key_b, slots), the pair's count of equal slots. */
+  private def oracleNearDupSlots(maxBucket: Int) = {
+    val kept = if (maxBucket == 0) "band" else
+      s"""band JOIN (SELECT band, bucket FROM band GROUP BY 1, 2
+                          HAVING count(*) <= $maxBucket) USING (band, bucket)"""
+    s"""${oracleMinhashInputs(16)},
+         sig AS (SELECT doc_id, h_idx, $OracleMinhash AS mh
+                 FROM h, hi GROUP BY 1, 2),
+         band AS (
+           SELECT doc_id, h_idx // 4 AS band,
+             string_agg(CAST(mh AS VARCHAR), ':' ORDER BY h_idx) AS bucket
+           FROM sig GROUP BY 1, 2),
+         bandc AS (SELECT doc_id, band, bucket FROM $kept),
+         pairs AS (
+           SELECT DISTINCT a.doc_id AS key_a, b.doc_id AS key_b
+           FROM bandc a JOIN bandc b
+             ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
+         m AS (
+           SELECT p.key_a, p.key_b,
+             sum(CASE WHEN sa.mh = sb.mh THEN 1 ELSE 0 END) AS slots
+           FROM pairs p
+           JOIN sig sa ON sa.doc_id = p.key_a
+           JOIN sig sb ON sb.doc_id = p.key_b AND sb.h_idx = sa.h_idx
+           GROUP BY 1, 2)"""
+  }
+
+  /** q65's exported LSA/PCA model (part, i, j, value), which the q44, q49
+    * and q66 oracles replay from. */
+  private val OracleLsaExport =
+    "read_parquet('__VERIFY_OUT__/q65_lsa_model/*.parquet')"
+
+  /** q45's and q58's near-dup pairs of the sample, its text rewritten by
+    * `textExpr`: (key_a, key_b, est_jaccard). */
+  private def oracleNearDupPairs(textExpr: String, maxBucket: Int) =
+    s"""WITH ${oracleSample(textExpr)},
+         ${oracleNearDupSlots(maxBucket)}
+         SELECT key_a, key_b, round(slots / 16.0, 6) AS est_jaccard FROM m"""
+
+  /** CTE b (p_key, c_key): q27's exported exact top-k, which the q72 and
+    * q73 recall oracles score against. */
+  private val OracleExactTopK =
+    """b AS (SELECT p_key, c_key
+               FROM read_parquet('__VERIFY_OUT__/q27_ann_topk/*.parquet'))"""
+
+  /** CTE dt (doc_id, topic, weight): q52's exported doc-topic matrix,
+    * which the q52, q55 and q56 oracles replay from. */
+  private val OracleDocTopics =
+    """dt AS (SELECT doc_id, topic, weight
+                     FROM read_parquet('__VERIFY_OUT__/q52_lda/*.parquet'))"""
+
+  /** CTE v (vec_id, e): the embeddings as DOUBLE lists. */
+  private val OracleVectors =
+    "v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)"
+
+  /** The cosine of DOUBLE lists `a` and `b` at 6dp. */
+  private def oracleCos(a: String, b: String) =
+    s"""round(list_dot_product($a, $b)
+               / (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b))), 6)"""
+
+  /** CTE ranked: `from`'s candidate pairs (p_key, c_key, cos) numbered rk
+    * per `by` in Ann's top-k order (best cosine, ties to the lower c_key). */
+  private def oracleRanked(from: String, by: String = "p_key") =
+    s"""ranked AS (
+           SELECT *, CAST(row_number() OVER (PARTITION BY $by
+             ORDER BY cos DESC, c_key ASC) AS INT) AS rk FROM $from)"""
+  private val OracleTop5 = "SELECT p_key, c_key, cos, rk FROM ranked WHERE rk <= 5"
+
+  /** Ann's hyperplane sign buckets of the `v` rows (bits 4, dim 64; the
+    * planes are hash arithmetic both engines replay). CTEs proj and bkt
+    * (vec_id, bucket). */
+  private val OracleLshBuckets =
+    """proj AS (
+           SELECT vec_id, b.b AS b,
+             list_dot_product(e, list_transform(generate_series(0, 63),
+               d -> CAST((b.b*64 + d) * 2654435761 % 1024 - 512 AS DOUBLE))) AS pr
+           FROM v CROSS JOIN generate_series(0, 3) b(b)),
+         bkt AS (
+           SELECT vec_id, CAST(sum(CASE WHEN pr > 0
+             THEN (1 << CAST(b AS INT)) ELSE 0 END) AS INT) AS bucket
+           FROM proj GROUP BY 1)"""
+
+  /** Ann.lshTopK's multi-probe candidates over `v`: each probe (a `v` row
+    * matching `probes`) visits its own bucket and every Hamming-1
+    * neighbour. Ends in CTE cand (p_key, c_key, cos), each distinct pair
+    * once. */
+  private def oracleLshCandidates(probes: String) =
+    s"""$OracleLshBuckets,
+         c AS (SELECT v.vec_id AS c_key, v.e AS c_vec, bkt.bucket
+               FROM v JOIN bkt USING (vec_id)),
+         p0 AS (SELECT v.vec_id AS p_key, v.e AS p_vec, bkt.bucket
+                FROM v JOIN bkt USING (vec_id) WHERE $probes),
+         p AS (
+           SELECT p_key, p_vec, unnest(list_prepend(bucket,
+             list_transform(generate_series(0, 3),
+               i -> CAST(xor(bucket, 1 << CAST(i AS INT)) AS INT)))) AS bucket
+           FROM p0),
+         cand AS (
+           SELECT DISTINCT p.p_key, c.c_key, ${oracleCos("c.c_vec", "p.p_vec")} AS cos
+           FROM c JOIN p ON c.bucket = p.bucket AND c.c_key <> p.p_key)"""
+
+  /** Dedup.embeddingDupLsh over the embeddings: same-bucket pairs (key_a
+    * < key_b) whose 6dp cosine reaches `threshold`. Ends in CTE pairs. */
+  private def oracleEmbedDup(threshold: Double) =
+    s"""$OracleVectors,
+         $OracleLshBuckets,
+         w AS (SELECT v.vec_id, v.e, bkt.bucket FROM v JOIN bkt USING (vec_id)),
+         pairs AS (SELECT * FROM (
+           SELECT a.vec_id AS key_a, b.vec_id AS key_b, ${oracleCos("a.e", "b.e")} AS cos
+           FROM w a JOIN w b ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
+           WHERE cos >= $threshold)"""
+
+  /** LabelProp.spread over the 500-vector prefix v (vec_id, e, label) and
+    * the 3-NN graph of the `candidates` CTEs, which end in cand (p_key,
+    * c_key, cos): every tenth vec_id is seeded with its label, and each of
+    * `iters` clamped rounds gives an unseeded node its neighbours' majority
+    * label (ties to the lower label). */
+  private def oracleLabelProp(candidates: String, iters: Int) = {
+    val rounds = (1 to iters).map { i =>
+      s"""v$i AS (SELECT k.src AS vec_id, l.label AS nl, count(*) AS w
+                FROM knn k JOIN l${i - 1} l ON k.dst = l.vec_id
+                WHERE l.label IS NOT NULL GROUP BY 1, 2),
+         w$i AS (SELECT vec_id, nl FROM (
+           SELECT vec_id, nl, row_number() OVER (PARTITION BY vec_id
+             ORDER BY w DESC, nl ASC) AS rk FROM v$i) WHERE rk = 1),
+         l$i AS (SELECT s.vec_id, coalesce(s.seed, w$i.nl) AS label
+                FROM seeds s LEFT JOIN w$i USING (vec_id))"""
+    }.mkString(",\n         ")
+    s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e, label
+                    FROM embeddings WHERE vec_id < 500),
+         $candidates,
+         ${oracleRanked("cand")},
+         knn AS (SELECT p_key AS src, c_key AS dst FROM ranked WHERE rk <= 3),
+         seeds AS (SELECT vec_id,
+             CASE WHEN vec_id % 10 = 0 THEN label END AS seed FROM v),
+         l0 AS (SELECT vec_id, seed AS label FROM seeds),
+         $rounds
+         SELECT vec_id, label FROM l$iters"""
+  }
+
+  /** CTEs asg (q40's exported clustering) and pts (vec_id, cluster, dim,
+    * vq): every embedding component on q40's 1e-4 integer grid. */
+  private val OracleKmeansGrid =
+    """asg AS (SELECT vec_id, label, cluster
+                  FROM read_parquet('__VERIFY_OUT__/q40_kmeans/*.parquet')),
+         pts AS (SELECT a.vec_id, a.cluster, d.d AS dim,
+                   CAST(floor(e.embedding[d.d]::DOUBLE * 10000.0 + 0.5)
+                     AS BIGINT) AS vq
+                 FROM asg a JOIN embeddings e USING (vec_id),
+                      generate_series(1, 64) d(d))"""
+
+  /** The IVF top-k of the three probes at each of `nprobes`, replayed from
+    * q40's export (Ann.ivfQuantizer → ivfAssign → ivfTopKAssigned): list
+    * centroids on the grid (floor(Σvq/cnt + 0.5) per dim), exact integer
+    * squared distances, argmin list assignment (ties to the lower list),
+    * each probe routed to its nprobe nearest lists by the same distances,
+    * then the cosine rescore. Ends in CTE ranked (nprobe, p_key, c_key,
+    * cos, rk) and keeps np (nprobe). */
+  private def oracleIvf(nprobes: Seq[Int]) =
+    s"""$OracleKmeansGrid,
+         cent AS (SELECT cluster AS list, dim,
+                    CAST(floor(CAST(sum(vq) AS DOUBLE) / count(*) + 0.5)
+                      AS BIGINT) AS c4
+                  FROM pts GROUP BY 1, 2),
+         d2 AS (SELECT p.vec_id, c.list,
+                  CAST(sum((p.vq - c.c4) * (p.vq - c.c4)) AS BIGINT) AS d2
+                FROM pts p JOIN cent c USING (dim) GROUP BY 1, 2),
+         near AS (SELECT vec_id, list, row_number() OVER (PARTITION BY vec_id
+                    ORDER BY d2 ASC, list ASC) AS rn FROM d2),
+         assigned AS (SELECT vec_id, list FROM near WHERE rn = 1),
+         np AS (SELECT unnest([${nprobes.mkString(", ")}]) AS nprobe),
+         routing AS (
+           SELECT n.nprobe, d.vec_id AS p_key, d.list
+           FROM near d JOIN np n ON d.rn <= n.nprobe WHERE d.vec_id < 3),
+         $OracleVectors,
+         cand AS (
+           SELECT r.nprobe, r.p_key, a.vec_id AS c_key, ${oracleCos("c.e", "p.e")} AS cos
+           FROM assigned a JOIN routing r USING (list)
+           JOIN v c ON c.vec_id = a.vec_id
+           JOIN v p ON p.vec_id = r.p_key
+           WHERE a.vec_id <> r.p_key),
+         ${oracleRanked("cand", by = "nprobe, p_key")}"""
+
+  /** Recall ppm over a left join onto the exact top-k: the share of rows
+    * the `hit` side matched, hits · 10⁶ DIV rows. */
+  private def oracleRecallPpm(hit: String) =
+    s"""CAST(sum(CASE WHEN $hit.c_key IS NOT NULL THEN 1 ELSE 0 END)
+                * 1000000 // count(*) AS BIGINT)"""
+
+  /** Multimodal's synthetic BMPs, ids 0 until n: w = 4 + id%4, h = 3 +
+    * id%3, channel (x, y, top-down) formulas mod 251, ppm = floor(sum·10^6
+    * / wh), plus the POSITION-WEIGHTED red sum Σ r(x,y)·(y·w + x + 1).
+    * Plain sums are permutation-invariant (a vertically-flipped decode
+    * would pass them); the weighted sum is what makes a hash match prove
+    * ImageIO returned the encoded pixels AT their encoded positions. */
+  private def oracleImages(n: Int) =
+    s"""WITH px AS (
+           SELECT CAST(s AS BIGINT) AS media_id,
+             4 + s % 4 AS w, 3 + s % 3 AS h, x.x AS x, y.y AS y
+           FROM generate_series(0, ${n - 1}) t(s)
+           JOIN generate_series(0, 6) x(x) ON x.x < 4 + s % 4
+           JOIN generate_series(0, 4) y(y) ON y.y < 3 + s % 3),
+         agg AS (
+           SELECT media_id, any_value(w) AS w, any_value(h) AS h,
+             ${oracleBmpSums("x", "y", "y * w + x + 1")}
+           FROM px GROUP BY 1)
+         SELECT media_id, TRUE AS decoded,
+           CAST(w AS INT) AS width, CAST(h AS INT) AS height,
+           CAST(sr * 1000000 // (w * h) AS BIGINT) AS r_ppm,
+           CAST(sg * 1000000 // (w * h) AS BIGINT) AS g_ppm,
+           CAST(sb * 1000000 // (w * h) AS BIGINT) AS b_ppm,
+           CAST(wr AS BIGINT) AS r_wsum
+         FROM agg"""
+
+  /** The channel sums of source pixels (x, y) of image media_id, and the
+    * red sum weighted by the output position `pos`. */
+  private def oracleBmpSums(x: String, y: String, pos: String) =
+    s"""sum((media_id * 31 + $y * 17 + $x * 7) % 251) AS sr,
+             sum((media_id * 13 + $y * 11 + $x * 5) % 251) AS sg,
+             sum((media_id * 29 + $y * 23 + $x * 3) % 251) AS sb,
+             sum(((media_id * 31 + $y * 17 + $x * 7) % 251)
+                 * ($pos)) AS wr"""
+
+  /** Multimodal's synthetic WAVs, ids 0 until n: 50 + id%50 samples,
+    * sample i = ((id·31 + i·7) mod 2003) − 1001, plus the ORDER-pinning
+    * weighted sum Σ vᵢ·(i+1) (plain sums would pass a reversed stream). */
+  private def oracleAudio(n: Int) =
+    s"""WITH sm AS (
+           SELECT CAST(t.s AS BIGINT) AS media_id, i.i AS i,
+             ((t.s * 31 + i.i * 7) % 2003) - 1001 AS v
+           FROM generate_series(0, ${n - 1}) t(s)
+           JOIN generate_series(0, 98) i(i) ON i.i < 50 + t.s % 50)
+         SELECT media_id, TRUE AS decoded, CAST(8000 AS INT) AS sample_rate,
+           CAST(count(*) AS BIGINT) AS n_samples,
+           CAST(sum(v) AS BIGINT) AS sum_pcm,
+           CAST(sum(abs(v)) AS BIGINT) AS sum_abs_pcm,
+           CAST(sum(v * (i + 1)) AS BIGINT) AS wsum_pcm
+         FROM sm GROUP BY 1"""
+
+  /** Multimodal's synthetic MJPEG AVIs, ids 0 until n: 3 + id%4 frames,
+    * every frame 16×16, level of frame f = (id·7 + f·13) mod 8. */
+  private def oracleVideo(n: Int) =
+    s"""SELECT CAST(t.s AS BIGINT) AS media_id, TRUE AS decoded,
+           CAST(f.f AS INT) AS frame_idx,
+           CAST(16 AS INT) AS width, CAST(16 AS INT) AS height,
+           CAST((t.s * 7 + f.f * 13) % 8 AS INT) AS level
+         FROM generate_series(0, ${n - 1}) t(s)
+         JOIN generate_series(0, 6) f(f) ON f.f < 3 + t.s % 4"""
+
+  /** Packing.packSpans over `from` (doc_id, text): token count =
+    * whitespace tokens + 1 EOS, an inclusive running sum in doc_id order,
+    * span [cum−n, cum), one row per 256-token block the span touches. The
+    * whitespace class is spelled out as Packing.WsClass's (RE2 `\s` omits
+    * \x0B where Java's includes it). */
+  private def oraclePacking(from: String) =
+    s"""d AS (
+           SELECT doc_id,
+             CAST(len(list_filter(string_split_regex(text, '[ \\t\\n\\v\\f\\r]+'),
+               t -> length(t) > 0)) + 1 AS BIGINT) AS n
+           FROM $from),
+         c AS (
+           SELECT doc_id, n,
+             sum(n) OVER (ORDER BY doc_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+           FROM d),
+         s AS (SELECT doc_id, CAST(cum - n AS BIGINT) AS st,
+                 CAST(cum AS BIGINT) AS en FROM c)
+         SELECT CAST(unnest(generate_series(st // 256, (en - 1) // 256))
+             AS BIGINT) AS pack_id,
+           doc_id, CAST(st AS BIGINT) AS start_tok, CAST(en AS BIGINT) AS end_tok
+         FROM s"""
+
+  /** Curation's portable md5 row priority (the first 8 hex chars of the
+    * id's md5 as an int, mod 10⁶) below the row's keep rate r_ppm. */
+  private def oracleSampled(id: String) =
+    s"""('0x' || substr(md5(CAST($id AS VARCHAR)), 1, 8))::BIGINT
+           % 1000000 < r_ppm"""
+
+  /** Curation.sampleToBalanced's keep rates over `from` (lang): every
+    * language kept at the smallest one's count. DuckDB `//` floors where
+    * Spark DIV truncates, identical on these non-negative counts. CTE r
+    * (lang, r_ppm). */
+  private def oracleBalancedRates(from: String) =
+    s"""cnt AS (SELECT lang, count(*) AS cnt FROM $from GROUP BY 1),
+         mn AS (SELECT min(cnt) AS mn FROM cnt),
+         r AS (SELECT lang, CAST(mn * 1000000 // cnt AS BIGINT) AS r_ppm
+               FROM cnt, mn)"""
+
   // ------------------------------------------------------------------------
-  // queries
+  // gates
   // ------------------------------------------------------------------------
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** One gated query: its name, the engine build over an sf dir, and the
+    * DuckDB SQL over the same parquet tables that must return the same
+    * rows. An oracle may read a query's own exported parquet back through
+    * `__VERIFY_OUT__`, which Verify substitutes with its absolute output
+    * dir: the iterative fit (cluster assignment, topic weights) is taken as
+    * given from the export, and everything derived from it is recomputed
+    * in SQL and must match the engine bit-for-bit after the stated
+    * rounding. */
+  final case class Gate(name: String, build: (SparkSession, String) => DataFrame,
+                        oracle: Option[String])
+
+  /** `gates` in order, each name once: a `Map` literal would silently keep
+    * the last of a repeated key. */
+  def gateList(gates: Gate*): Seq[Gate] = {
+    val repeated = gates.groupBy(_.name).collect { case (n, gs) if gs.size > 1 => n }
+    require(repeated.isEmpty, s"repeated gate names: ${repeated.mkString(", ")}")
+    gates
+  }
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    gates.map(g => g.name -> g.build).toMap
+  lazy val oracleSql: Map[String, String] =
+    gates.flatMap(g => g.oracle.map(g.name -> _)).toMap
+
+  /** Lazy, so it reads the oracle fragment vals only once they are
+    * initialized: a strict val declared above one would interpolate null. */
+  lazy val gates: Seq[Gate] = gateList(
     // ---------------------------------------------------------- relational
     // A1/A8 — grouped sums/counts (hash agg, partial+final; money rounded to
     // 2dp DOUBLE in both engines — the true sum is an exact multiple of 0.01,
     // so a ±1e-7 accumulation-order wobble can't cross a rounding boundary).
-    "q01_agg_sums" -> ((s, dir) => t(s, dir, "lineitem")
+    Gate("q01_agg_sums", (s, dir) => t(s, dir, "lineitem")
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
         round(sum(col("l_quantity")), 2).as("sum_qty"),
         round(sum(col("l_extendedprice")), 2).as("sum_price"),
-        count(lit(1)).as("n"))),
+        count(lit(1)).as("n")),
+      Some("""SELECT l_returnflag, l_linestatus,
+           round(sum(l_quantity), 2) AS sum_qty,
+           round(sum(l_extendedprice), 2) AS sum_price,
+           count(*) AS n
+         FROM lineitem GROUP BY 1, 2""")),
 
     // A1 — distribution count (img_info analog, modules/image_ocr.py:16-24)
-    "q02_event_counts" -> ((s, dir) => t(s, dir, "events")
+    Gate("q02_event_counts", (s, dir) => t(s, dir, "events")
       .groupBy(col("event_type")).agg(count(lit(1)).as("n"),
-        round(sum(col("value")), 2).as("sum_value"))),
+        round(sum(col("value")), 2).as("sum_value")),
+      Some("""SELECT event_type, count(*) AS n,
+           round(sum(value), 2) AS sum_value
+         FROM events GROUP BY 1""")),
 
     // J2/J3 — broadcast-hash equi joins: revenue per nation
-    "q03_join_revenue" -> ((s, dir) => {
+    Gate("q03_join_revenue", (s, dir) => {
       val o = t(s, dir, "orders"); val c = t(s, dir, "customer")
       val n = t(s, dir, "nation")
       o.join(broadcast(c), o("o_custkey") === c("c_custkey"))
@@ -485,46 +977,70 @@ object SparkEntry {
         .groupBy(col("n_name"))
         .agg(round(sum(col("o_totalprice")), 2).as("revenue"),
           count(lit(1)).as("n_orders"))
-    }),
+    },
+      Some("""SELECT n_name,
+           round(sum(o_totalprice), 2) AS revenue,
+           count(*) AS n_orders
+         FROM orders
+         JOIN customer ON o_custkey = c_custkey
+         JOIN nation ON c_nationkey = n_nationkey
+         GROUP BY 1""")),
 
     // J1 — semi join (isin filter analog, src/doc_classification.py:639)
-    "q04_semi_join" -> ((s, dir) => {
+    Gate("q04_semi_join", (s, dir) => {
       val c = t(s, dir, "customer")
       val big = t(s, dir, "orders").filter(col("o_totalprice") > 400000)
       c.join(big, c("c_custkey") === big("o_custkey"), "left_semi")
         .select("c_custkey", "c_name")
-    }),
+    },
+      Some("""SELECT c_custkey, c_name FROM customer
+         WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 400000)""")),
 
     // set ops — anti join (complement-by-index analog, SURVEY.md §2.9)
-    "q05_anti_join" -> ((s, dir) => {
+    Gate("q05_anti_join", (s, dir) => {
       val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
       c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
         .select("c_custkey", "c_name")
-    }),
+    },
+      // NOT EXISTS, not NOT IN: the engine runs a left-anti join, and the two
+      // agree only while o_custkey is never NULL — one NULL makes NOT IN
+      // return ZERO rows while the anti-join returns every unmatched customer
+      // (a silent oracle divergence).
+      Some("""SELECT c_custkey, c_name FROM customer c
+         WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)""")),
 
     // T1/T6 — windowed top-n per key (deterministic tie-break)
-    "q06_window_topn" -> ((s, dir) => {
+    Gate("q06_window_topn", (s, dir) => {
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
       t(s, dir, "orders").withColumn("rk", row_number().over(w))
         .filter(col("rk") <= 3)
         .select(col("o_custkey"), col("o_orderkey"),
           round(col("o_totalprice"), 2).as("price"), col("rk"))
-    }),
+    },
+      Some("""SELECT o_custkey, o_orderkey, round(o_totalprice, 2) AS price, rk
+         FROM (SELECT *, row_number() OVER (PARTITION BY o_custkey
+                 ORDER BY o_totalprice DESC, o_orderkey ASC) AS rk FROM orders)
+         WHERE rk <= 3""")),
 
     // T1 — argmax per key (per-doc top-topic analog): window row_number with
     // a total tie-break order — deterministic in any engine
-    "q07_argmax" -> ((s, dir) => {
+    Gate("q07_argmax", (s, dir) => {
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
       t(s, dir, "orders").withColumn("rk", row_number().over(w))
         .filter(col("rk") === 1)
         .select(col("o_custkey"), col("o_orderkey").as("best_order"),
           round(col("o_totalprice"), 2).as("best_price"))
-    }),
+    },
+      Some("""SELECT o_custkey, o_orderkey AS best_order,
+           round(o_totalprice, 2) AS best_price
+         FROM (SELECT *, row_number() OVER (PARTITION BY o_custkey
+                 ORDER BY o_totalprice DESC, o_orderkey ASC) AS rk FROM orders)
+         WHERE rk = 1""")),
 
     // A9 — one-hot pivot (pd.get_dummies analog, src/doc_classification.py:609)
-    "q08_pivot" -> ((s, dir) => {
+    Gate("q08_pivot", (s, dir) => {
       val o = t(s, dir, "orders"); val c = t(s, dir, "customer")
       o.join(broadcast(c), o("o_custkey") === c("c_custkey"))
         .groupBy(col("c_mktsegment"))
@@ -532,137 +1048,223 @@ object SparkEntry {
         .count().na.fill(0)
         .select(col("c_mktsegment"), col("F").as("n_f"), col("O").as("n_o"),
           col("P").as("n_p"))
-    }),
+    },
+      Some(s"""SELECT c_mktsegment, $OracleStatusCounts
+         FROM orders JOIN customer ON o_custkey = c_custkey GROUP BY 1""")),
 
     // A13 — distinct keys
-    "q09_distinct" -> ((s, dir) => t(s, dir, "lineitem")
-      .select("l_returnflag", "l_linestatus").distinct()),
+    Gate("q09_distinct", (s, dir) => t(s, dir, "lineitem")
+      .select("l_returnflag", "l_linestatus").distinct(),
+      Some("SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem")),
 
     // J4 — union-dedup (vocab merge analog, src/doc_classification.py:677)
-    "q10_union_dedup" -> ((s, dir) => {
+    Gate("q10_union_dedup", (s, dir) => {
       val a = t(s, dir, "orders").select(col("o_custkey").as("custkey"))
       val b = t(s, dir, "customer").select(col("c_custkey").as("custkey"))
       a.union(b).distinct()
-    }),
+    },
+      Some("""SELECT o_custkey AS custkey FROM orders
+         UNION SELECT c_custkey AS custkey FROM customer""")),
 
     // A11/A12 — variance + mean per group (np.var/np.mean analogs)
-    "q11_stats" -> ((s, dir) => t(s, dir, "lineitem")
+    Gate("q11_stats", (s, dir) => t(s, dir, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(round(var_pop(col("l_quantity")), 6).as("var_qty"),
-        round(avg(col("l_quantity")), 6).as("avg_qty"))),
+        round(avg(col("l_quantity")), 6).as("avg_qty")),
+      Some("""SELECT l_returnflag,
+           round(var_pop(l_quantity), 6) AS var_qty,
+           round(avg(l_quantity), 6) AS avg_qty
+         FROM lineitem GROUP BY 1""")),
 
     // T2/T4 — global top-k with deterministic tie-break
-    "q12_topk" -> ((s, dir) => t(s, dir, "orders")
+    Gate("q12_topk", (s, dir) => t(s, dir, "orders")
       .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
       .limit(10)
-      .select(col("o_orderkey"), round(col("o_totalprice"), 2).as("price"))),
+      .select(col("o_orderkey"), round(col("o_totalprice"), 2).as("price")),
+      Some("""SELECT o_orderkey, round(o_totalprice, 2) AS price
+         FROM orders ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10""")),
 
     // ---------------------------------------------------------- text tier
     // P1–P8 — normalization pipeline, exploded to long form
-    "q13_tokens" -> ((s, dir) => docTokens(s, dir)
-      .select(col("doc_id"), explode(col("tokens")).as("token"))),
+    Gate("q13_tokens", (s, dir) => docTokens(s, dir)
+      .select(col("doc_id"), explode(col("tokens")).as("token")),
+      Some(s"""SELECT doc_id, unnest($OracleTokens) AS token FROM documents""")),
 
     // A2/A3 — dictionary with filter_extremes + deterministic ids. The
     // three vocab-tier queries read the ONE shared dictionary build
     // (vocabInfo — same params, byte-identical rows), so the df-stats
     // aggregation and ranking window run once per session.
-    "q14_vocab" -> ((s, dir) => vocabInfo(s, dir)._1),
+    Gate("q14_vocab", (s, dir) => vocabInfo(s, dir)._1,
+      Some(s"""WITH $OracleDictionary
+          SELECT token, id, df FROM vocab""")),
 
     // A4 — bag of words (long form); vocab + bow branches read the one
     // materialized termCounts aggregate (see docTermCounts).
-    "q15_bow" -> ((s, dir) => {
+    Gate("q15_bow", (s, dir) => {
       val tc = docTermCounts(s, dir)
       Vocab.bowFromCounts(tc, vocabInfo(s, dir)._1, "doc_id")
-    }),
+    },
+      Some(s"""WITH $OracleDictionary
+          SELECT doc_id, token_id, cnt FROM bow""")),
 
     // M1 — tf-idf (rounded column math); single vocab join carrying id+df
-    "q16_tfidf" -> ((s, dir) => {
+    Gate("q16_tfidf", (s, dir) => {
       val tc = docTermCounts(s, dir)
       val (vocab, n, _) = vocabInfo(s, dir)
       Vocab.tfidfFromCounts(tc, vocab, "doc_id", n)
         .withColumn("tfidf", round(col("tfidf"), 6))
-    }),
+    },
+      Some(s"""WITH $OracleDictionary
+          SELECT doc_id, token_id, cnt, round(tfidf, 6) AS tfidf FROM tfidf""")),
 
     // §2.6 — first-match-wins keyword routing (single pass)
-    "q17_route" -> ((s, dir) => Router.route(docTokens(s, dir), "tokens")
-      .select(col("doc_id"), col("route"))),
+    Gate("q17_route", (s, dir) => Router.route(docTokens(s, dir), "tokens")
+      .select(col("doc_id"), col("route")),
+      Some(s"""SELECT doc_id, $OracleRoute AS route FROM documents""")),
 
     // A7/T5 — docs per route, ordered (reference: docs-per-topic count)
-    "q18_route_counts" -> ((s, dir) =>
+    Gate("q18_route_counts", (s, dir) =>
       Router.route(docTokens(s, dir), "tokens")
-        .groupBy("route").agg(count(lit(1)).as("n"))),
+        .groupBy("route").agg(count(lit(1)).as("n")),
+      Some(s"""WITH routed AS (
+            SELECT doc_id, $OracleRoute AS route FROM documents)
+          SELECT route, count(*) AS n FROM routed GROUP BY 1""")),
 
     // text analysis: token counts + quality + language guess. ONE tokenize
     // serves both: whitespace positions are identical under lower() and
     // empty-token filtering is case-blind, so the size of the lowercased
     // tokens langId reads is wsTokenCount's count of the raw text.
-    "q19_textstats" -> ((s, dir) => t(s, dir, "documents")
+    Gate("q19_textstats", (s, dir) => t(s, dir, "documents")
       .select(col("doc_id"), col("text"),
         Normalize.tokenize(lower(col("text"))).as("toks"))
       .select(col("doc_id"),
         size(col("toks")).as("n_ws_tokens"),
         length(col("text")).as("n_chars"),
-        TextStats.langId(col("toks")).as("lang_guess"))),
+        TextStats.langId(col("toks")).as("lang_guess")),
+      Some("""SELECT doc_id,
+           len(list_filter(string_split_regex(text, '\s+'), tk -> length(tk) > 0)) AS n_ws_tokens,
+           length(text) AS n_chars,
+           CASE WHEN list_contains(list_filter(string_split_regex(lower(text), '\s+'), tk -> length(tk) > 0), 'the')
+                THEN 'en' ELSE 'und' END AS lang_guess
+         FROM documents""")),
 
     // quality score (integer ppm blend of densitometric features —
     // bit-identical across engines, no float rounding boundary)
-    "q20_quality" -> ((s, dir) => t(s, dir, "documents").select(
+    Gate("q20_quality", (s, dir) => t(s, dir, "documents").select(
       col("doc_id"),
       // native one-pass kernel; composed spelling pinned equal
       // by TextStatsExprsSpec and replayed by the unchanged oracle
       graft.textstats.TextStatsExprs.qualityScorePpm(col("text"),
-        Normalize.DefaultStops).as("quality_ppm"))),
+        Normalize.DefaultStops).as("quality_ppm")),
+      Some(s"""WITH $OracleQuality
+         SELECT doc_id, quality_ppm FROM q""")),
 
     // fingerprint + exact dedup
-    "q21_dedup_exact" -> ((s, dir) =>
-      Dedup.exact(t(s, dir, "documents"), "doc_id", "text")),
+    Gate("q21_dedup_exact", (s, dir) =>
+      Dedup.exact(t(s, dir, "documents"), "doc_id", "text"),
+      Some(s"""WITH ${oracleKeepers("documents")}
+         SELECT doc_id, fingerprint, doc_id = keeper AS keep
+         FROM fp JOIN keepers USING (fingerprint)""")),
 
     // P9/P10/P11 — filename/label string surgery
-    "q22_string_ops" -> ((s, dir) => t(s, dir, "part").select(
+    Gate("q22_string_ops", (s, dir) => t(s, dir, "part").select(
       col("p_partkey"),
       element_at(split(col("p_name"), " "), -1).as("last_word"),
       substring_index(col("p_brand"), "#", -1).cast("int").as("brand_num"),
       lower(col("p_type")).as("type_lc"),
-      regexp_extract(col("p_name"), "^(\\w+)", 1).as("first_word"))),
+      regexp_extract(col("p_name"), "^(\\w+)", 1).as("first_word")),
+      Some("""SELECT p_partkey,
+           (string_split(p_name, ' '))[-1] AS last_word,
+           CAST(split_part(p_brand, '#', 2) AS INT) AS brand_num,
+           lower(p_type) AS type_lc,
+           regexp_extract(p_name, '^(\w+)', 1) AS first_word
+         FROM part""")),
 
     // M12 — per-label precision/recall/F1/support
-    "q23_prf" -> ((s, dir) => {
+    Gate("q23_prf", (s, dir) => {
       val df = t(s, dir, "embeddings").select(
         col("label").cast("int").as("label"),
         (col("vec_id") % 10).cast("int").as("pred"))
       Scorer.prfSupport(df, "label", "pred")
-    }),
+    },
+      Some("""WITH d AS (
+           SELECT CAST(label AS INT) AS label, CAST(vec_id % 10 AS INT) AS pred
+           FROM embeddings),
+         by_label AS (
+           SELECT label, CAST(count(*) AS BIGINT) AS support,
+             CAST(sum(CASE WHEN pred = label THEN 1 ELSE 0 END) AS BIGINT) AS tp
+           FROM d GROUP BY 1),
+         by_pred AS (
+           SELECT pred AS label, CAST(count(*) AS BIGINT) AS predicted
+           FROM d GROUP BY 1),
+         j AS (
+           SELECT coalesce(a.label, b.label) AS label,
+             coalesce(support, 0) AS support, coalesce(tp, 0) AS tp,
+             coalesce(predicted, 0) AS predicted
+           FROM by_label a FULL OUTER JOIN by_pred b ON a.label = b.label),
+         pr AS (
+           SELECT label, support, tp,
+             round(CAST(tp AS DOUBLE) / greatest(predicted, 1), 6) AS precision,
+             round(CAST(tp AS DOUBLE) / greatest(support, 1), 6) AS recall
+           FROM j)
+         SELECT label, precision, recall,
+           round(CASE WHEN precision + recall > 0
+             THEN 2.0 * precision * recall / (precision + recall)
+             ELSE 0.0 END, 6) AS f1,
+           support,
+           round(CAST(sum(tp) OVER () AS DOUBLE)
+             / CAST(greatest(sum(support) OVER (), 1) AS DOUBLE), 6) AS accuracy
+         FROM pr""")),
 
     // M19 — confusion matrix (pivot)
-    "q24_confusion" -> ((s, dir) => {
+    Gate("q24_confusion", (s, dir) => {
       val df = t(s, dir, "embeddings").select(
         col("label").cast("int").as("label"),
         (col("vec_id") % 10).cast("int").as("pred"))
       df.groupBy("label").pivot("pred", (0 until 10).map(Integer.valueOf)).count()
         .na.fill(0)
         .select(col("label") +: (0 until 10).map(i => col(i.toString).as(s"p$i")): _*)
-    }),
+    },
+      Some(("""SELECT CAST(label AS INT) AS label, """ +
+        (0 until 10).map(i =>
+          s"CAST(sum(CASE WHEN vec_id % 10 = $i THEN 1 ELSE 0 END) AS BIGINT) AS p$i")
+          .mkString(", ") +
+        " FROM embeddings GROUP BY 1"))),
 
     // windowed time agg — tumbling hour buckets
-    "q25_events_hourly" -> ((s, dir) => t(s, dir, "events")
+    Gate("q25_events_hourly", (s, dir) => t(s, dir, "events")
       .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
       .agg(count(lit(1)).as("n"),
-        round(sum(col("value")), 2).as("sum_value"))),
+        round(sum(col("value")), 2).as("sum_value")),
+      Some("""SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n,
+           round(sum(value), 2) AS sum_value
+         FROM events GROUP BY 1, 2""")),
 
     // semi-structured props extraction (S11-ish: string payload mining)
-    "q26_events_props" -> ((s, dir) => t(s, dir, "events")
+    Gate("q26_events_props", (s, dir) => t(s, dir, "events")
       .withColumn("k", regexp_extract(col("props"), "\"k\": ([0-9]+)", 1).cast("int"))
       .groupBy(col("event_type"))
       .agg(min(col("k")).as("min_k"), max(col("k")).as("max_k"),
-        count(when(col("k").isNotNull, 1)).as("n_k"))),
+        count(when(col("k").isNotNull, 1)).as("n_k")),
+      Some("""WITH e AS (
+           SELECT event_type,
+             CAST(nullif(regexp_extract(props, '"k": ([0-9]+)', 1), '') AS INT) AS k
+           FROM events)
+         SELECT event_type, min(k) AS min_k, max(k) AS max_k,
+           count(CASE WHEN k IS NOT NULL THEN 1 END) AS n_k
+         FROM e GROUP BY 1""")),
 
     // T2/M9 — brute-force cosine top-k for a small probe set. Shared
     // persisted result: q72's recall and q73's curve both consume the exact
     // top-k, so one sweep runs the full corpus scan once.
-    "q27_ann_topk" -> ((s, dir) => sharedResult(s, dir, "brute") {
-      val emb = t(s, dir, "embeddings")
-      Ann.bruteTopK(emb, emb.filter(col("vec_id") < 3), "vec_id", "embedding", 5)
-    }),
+    Gate("q27_ann_topk", annExact,
+      Some(s"""WITH $OracleVectors,
+         scored AS (
+           SELECT p.vec_id AS p_key, c.vec_id AS c_key, ${oracleCos("c.e", "p.e")} AS cos
+           FROM v c, v p
+           WHERE p.vec_id < 3 AND c.vec_id <> p.vec_id),
+         ${oracleRanked("scored")}
+         $OracleTop5""")),
 
     // n-gram Jaccard near-dup pairs on a doc sample. The df cap (the 100 TB
     // hot-shingle guard) is wired through to the driver gate: the oracle
@@ -670,51 +1272,89 @@ object SparkEntry {
     // ngramJaccard returns its pairs eagerly checkpointed and leaves the
     // caller that checkpoint to free, so the pairs are registered as they
     // come.
-    "q28_jaccard" -> ((s, dir) => artifact(s, dir, "jaccard") {
+    Gate("q28_jaccard", (s, dir) => artifact(s, dir, "jaccard") {
       val docs = t(s, dir, "documents").filter(col("doc_id") % 10 === 0)
         .select(col("doc_id"), split(col("text"), " ").as("tokens"))
       Dedup.ngramJaccard(docs, "doc_id", "tokens", k = 3, threshold = 0.3,
         maxShingleDf = 20)
-    }(Scale.unpersistCheckpoint)),
+    }(Scale.unpersistCheckpoint),
+      Some(s"""WITH ${oracleSample("text")},
+         sh_raw AS (SELECT doc_id AS k, unnest(${oracleShingles(3)}) AS sh FROM d),
+         capped AS (
+           SELECT sh FROM (SELECT sh, count(*) AS c FROM sh_raw GROUP BY 1)
+           WHERE c <= 20),
+         sh AS (SELECT k, sh FROM sh_raw JOIN capped USING (sh)),
+         sizes AS (SELECT k, count(*) AS sz FROM sh GROUP BY 1),
+         pairs AS (
+           SELECT a.k AS key_a, b.k AS key_b, count(*) AS inter
+           FROM sh a JOIN sh b ON a.sh = b.sh AND a.k < b.k
+           GROUP BY 1, 2)
+         SELECT key_a, key_b,
+           round(CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter), 6) AS jaccard
+         FROM pairs
+         JOIN sizes sa ON sa.k = key_a
+         JOIN sizes sb ON sb.k = key_b
+         WHERE CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter) >= 0.3""")),
 
     // MinHash signatures (md5-portable variant), exploded long form
-    "q29_minhash" -> ((s, dir) => {
+    Gate("q29_minhash", (s, dir) => {
       val docs = t(s, dir, "documents").filter(col("doc_id") % 10 === 0)
         .select(col("doc_id"), split(col("text"), " ").as("tokens"))
       docs.select(col("doc_id"),
           posexplode(Dedup.minhashSignatureMd5(col("tokens"), 3, 8))
             .as(Seq("h_idx", "minhash")))
-    }),
+    },
+      Some(s"""WITH ${oracleSample("text")},
+         ${oracleMinhashInputs(8)}
+         SELECT doc_id, CAST(h_idx AS INT) AS h_idx, $OracleMinhash AS minhash
+         FROM h, hi GROUP BY 1, 2""")),
 
     // MinHash+LSH end-to-end (md5-portable hash family): banding, bucket
     // join and slot-match estimate all replayed by the DuckDB oracle (q29
     // checks the signatures alone).
     // The operator is the curation chain's near-dup stage (q74).
-    "q45_minhash_lsh" -> ((s, dir) => {
+    Gate("q45_minhash_lsh", (s, dir) => {
       val docs = t(s, dir, "documents").filter(col("doc_id") % 10 === 0)
         .select(col("doc_id"), split(col("text"), " ").as("tokens"))
       graft.corpus.Curation.nearDupPairs(docs)
-    }),
+    },
+      Some(oracleNearDupPairs("text", maxBucket = 0))),
 
     // M11 — TRUE stratified split: exactly ceil(3n/10) test rows per label,
     // deterministic hash order (a plain hash split does not preserve class
     // proportions on skewed labels).
-    "q32_split" -> ((s, dir) => Scorer.stratifiedSplit(
+    Gate("q32_split", (s, dir) => Scorer.stratifiedSplit(
       t(s, dir, "embeddings").select(col("vec_id"),
         col("label").cast("int").as("label")),
-      "label", "vec_id", testNum = 3, testDen = 10)),
+      "label", "vec_id", testNum = 3, testDen = 10),
+      Some("""SELECT vec_id, CAST(label AS INT) AS label,
+           row_number() OVER (PARTITION BY CAST(label AS INT)
+               ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id)
+             <= (count(*) OVER (PARTITION BY CAST(label AS INT)) * 3 + 9) // 10
+             AS is_test
+         FROM embeddings""")),
 
     // P4 — POS-filtered lemmatization over the normalized token stream:
     // lexicon-tagged ADJ tokens are dropped (allowlist NOUN/VERB), tagged
     // tokens are lemma-rewritten, unknown tokens default to NOUN and pass.
-    "q43_lemma_pos" -> ((s, dir) => docTokens(s, dir).select(col("doc_id"),
+    Gate("q43_lemma_pos", (s, dir) => docTokens(s, dir).select(col("doc_id"),
       explode(Normalize.lemmaLookupPos(col("tokens"), PosLexicon,
-        allowed = Set("NOUN", "VERB"))).as("token"))),
+        allowed = Set("NOUN", "VERB"))).as("token")),
+      // hand-compiled replay of PosLexicon ∘ allowlist {NOUN, VERB}: the four
+      // ADJ tokens are the only drops; agg/dup the only lemma rewrites
+      Some(s"""SELECT doc_id, unnest(list_transform(
+            list_filter($OracleTokens,
+              tk -> tk NOT IN ('fast', 'slow', 'big', 'small')),
+            tk -> CASE tk WHEN 'agg' THEN 'aggregate'
+                          WHEN 'dup' THEN 'duplicate' ELSE tk END)) AS token
+          FROM documents""")),
 
     // T7 — deterministic sample (hash-ordered top-20; reservoir analog)
-    "q33_sample" -> ((s, dir) => t(s, dir, "orders")
+    Gate("q33_sample", (s, dir) => t(s, dir, "orders")
       .orderBy(md5(col("o_orderkey").cast("string")), col("o_orderkey"))
-      .limit(20).select("o_orderkey", "o_custkey")),
+      .limit(20).select("o_orderkey", "o_custkey"),
+      Some("""SELECT o_orderkey, o_custkey FROM orders
+         ORDER BY md5(CAST(o_orderkey AS VARCHAR)), o_orderkey LIMIT 20""")),
 
     // A10 — per-route token histogram (route × token rollup, top slice).
     // The histogram derives from the SHARED per-doc term-count
@@ -723,17 +1363,23 @@ object SparkEntry {
     // every token occurrence: count per (route, token) ≡ Σ over the
     // route's docs of that doc's term count, and the corpus-sized explode
     // shuffle collapses to a doc-keyed join of pre-aggregated rows.
-    "q34_route_hist" -> ((s, dir) => {
+    Gate("q34_route_hist", (s, dir) => {
       val routed = Router.route(docTokens(s, dir), "tokens")
         .select(col("doc_id"), col("route"))
       docTermCounts(s, dir).join(routed, Seq("doc_id"))
         .groupBy("route", "token").agg(sum(col("cnt")).as("cnt"))
         .filter(col("cnt") >= 10)
-    }),
+    },
+      Some(s"""WITH routed AS (
+            SELECT doc_id, $OracleTokens AS tokens, $OracleRoute AS route
+            FROM documents),
+          tok AS (SELECT route, unnest(tokens) AS token FROM routed)
+          SELECT route, token, count(*) AS cnt
+          FROM tok GROUP BY 1, 2 HAVING count(*) >= 10""")),
 
     // sessionization — gap > 600s opens a new session per user (exact
     // integer microsecond math: truncating to seconds diverges at edges)
-    "q35_sessionize" -> ((s, dir) => {
+    Gate("q35_sessionize", (s, dir) => {
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       // ts is TIMESTAMP_NTZ; cast is identity under the UTC session zone
       val us = unix_micros(col("ts").cast("timestamp"))
@@ -745,19 +1391,38 @@ object SparkEntry {
         .withColumn("session_idx",
           sum(col("new_sess")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
         .select(col("event_id"), col("user_id"), col("session_idx"))
-    }),
+    },
+      Some("""WITH e AS (
+           SELECT event_id, user_id, ts, epoch_us(ts) AS us,
+             lag(epoch_us(ts), 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
+           FROM events),
+         f AS (
+           SELECT event_id, user_id, ts,
+             CASE WHEN prev_us IS NULL OR us - prev_us > 600000000 THEN 1 ELSE 0 END AS new_sess
+           FROM e)
+         SELECT event_id, user_id,
+           CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_idx
+         FROM f""")),
 
     // multimodal plumbing over the deterministic synthetic media table —
     // payloads are pure id-arithmetic, so DuckDB replays them and all three
     // queries are oracle-checked.
-    "q36_media_meta" -> ((s, dir) =>
+    Gate("q36_media_meta", (s, dir) =>
       graft.multimodal.Multimodal.metaDistribution(
-        graft.multimodal.Multimodal.synthetic(s, 300))),
+        graft.multimodal.Multimodal.synthetic(s, 300)),
+      // ---- multimodal: DuckDB replays the synthetic generator (pure id
+      // arithmetic — Multimodal.synthetic: len = 64 + id%64, byte_i =
+      // (id*31 + i*7) % 251, bucket = byte >> 5; kind = id%3).
+      Some("""SELECT CASE s % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
+                ELSE 'video' END AS kind,
+           'fake' AS codec, count(*) AS count
+         FROM generate_series(0, 299) t(s) GROUP BY 1, 2""")),
     // features are Array[Float]; the driver's pandas checker can't hash
     // arrays, so the checked projection is scalar:
     // posexplode + integer histogram-count recovery (round(value·n_bytes) is
     // exact — counts ≤ 127 and float error ≪ 0.5).
-    "q37_media_features" -> ((s, dir) => {
+    Gate("q37_media_features", (s, dir) => {
       val m = graft.multimodal.Multimodal.synthetic(s, 300)
       val lens = m.select(col("media_id"), length(col("payload")).as("n_bytes"))
       graft.multimodal.Multimodal.extractFeatures(m)
@@ -766,35 +1431,62 @@ object SparkEntry {
         .select(col("media_id"), col("feat_idx"),
           round(col("value").cast("double") * col("n_bytes")).cast("long").as("hist_count"),
           col("n_bytes"))
-    }),
-    "q38_frame_sample" -> ((s, dir) =>
+    },
+      Some("""WITH m AS (
+           SELECT CAST(s AS BIGINT) AS media_id, CAST(64 + s % 64 AS INT) AS n_bytes
+           FROM generate_series(0, 299) t(s)),
+         cnt AS (
+           SELECT m.media_id,
+             CAST(((m.media_id * 31 + i.i * 7) % 251) // 32 AS INT) AS feat_idx,
+             count(*) AS c
+           FROM m JOIN generate_series(0, 126) i(i) ON i.i < m.n_bytes
+           GROUP BY 1, 2),
+         idx AS (SELECT CAST(s AS INT) AS feat_idx FROM generate_series(0, 7) t(s))
+         SELECT m.media_id, idx.feat_idx,
+           CAST(coalesce(cnt.c, 0) AS BIGINT) AS hist_count, m.n_bytes
+         FROM m CROSS JOIN idx
+         LEFT JOIN cnt ON cnt.media_id = m.media_id AND cnt.feat_idx = idx.feat_idx""")),
+    Gate("q38_frame_sample", (s, dir) =>
       graft.multimodal.Multimodal.frameSample(
-        graft.multimodal.Multimodal.synthetic(s, 300), stepMs = 1000)),
+        graft.multimodal.Multimodal.synthetic(s, 300), stepMs = 1000),
+      Some("""WITH v AS (
+           SELECT CAST(s AS BIGINT) AS media_id, 1000 + s % 9000 AS dur
+           FROM generate_series(0, 299) t(s) WHERE s % 3 = 2)
+         SELECT media_id, CAST(f.f AS INT) AS frame_idx,
+           CAST(f.f * 1000 AS INT) AS frame_ts_ms
+         FROM v JOIN generate_series(0, 9) f(f)
+           ON f.f < CAST(ceil(dur / 1000.0) AS INT)""")),
 
     // REAL image decode under the gate: genuine arithmetic-built BMPs →
     // javax.imageio decode → integer ppm channel means; the oracle replays
     // the pixel arithmetic, so a green row proves an ACTUAL decoder
     // round-trip (headers, bottom-up rows, padding, BGR order) with no
     // external codec: ImageIO is JDK-bundled.
-    "q63_image_decode" -> ((s, dir) =>
+    Gate("q63_image_decode", (s, dir) =>
       graft.multimodal.Multimodal.extractImageFeatures(
-        graft.multimodal.Multimodal.syntheticBmp(s, 300))),
+        graft.multimodal.Multimodal.syntheticBmp(s, 300)),
+      Some(oracleImages(300))),
 
     // REAL audio decode under the gate: genuine RIFF/WAVE PCM payloads →
     // javax.sound.sampled decode → integer sample stats; oracle replays the
     // sample arithmetic.
-    "q64_audio_decode" -> ((s, dir) =>
+    Gate("q64_audio_decode", (s, dir) =>
       graft.multimodal.Multimodal.extractAudioFeatures(
-        graft.multimodal.Multimodal.syntheticWav(s, 300))),
+        graft.multimodal.Multimodal.syntheticWav(s, 300)),
+      Some(oracleAudio(300))),
 
     // REAL video decode under the gate: genuine MJPEG-in-AVI containers → bounds-checked RIFF
     // walk (ours — the JDK has no demuxer) → per-frame ImageIO JPEG decode
     // (independent codec) → 32-wide level grid. The oracle replays frame
     // count, order, dimensions and per-frame level from id arithmetic; the
     // levels vary per frame_idx, so a reversed or resequenced walk fails.
-    "q69_video_decode" -> ((s, dir) =>
+    Gate("q69_video_decode", (s, dir) =>
       graft.multimodal.Multimodal.extractVideoFrames(
-        graft.multimodal.Multimodal.syntheticAvi(s, 300))),
+        graft.multimodal.Multimodal.syntheticAvi(s, 300)),
+      // A green row proves the container walk found exactly the encoded
+      // frames IN ORDER and ImageIO recovered each frame's gray level on the
+      // 32-wide grid.
+      Some(oracleVideo(300))),
 
     // T2 scale path #2 — IVF ANN (next to q47's LSH): coarse quantizer =
     // grid-rounded empirical centroids of the SAME shared kmeans
@@ -807,16 +1499,12 @@ object SparkEntry {
     // 10 lists): an explicit nprobe=3 gives a 20–47% recall ANN with no
     // warning, while the default path reads ≥80% recall at every sf (q72
     // checks the number).
-    "q70_ann_ivf" -> ((s, dir) => sharedResult(s, dir, "ivf") {
-      val (_, emb) = kmeansFitted(s, dir)
-      // the oracle replays exactly 8 probed lists (pr <= 8) — fail LOUDLY
-      // if the sizing rule ever drifts
-      require(Ann.nprobeFor(10) == 8,
-        s"q70 oracle is pinned to nprobe=8, nprobeFor(10) gave ${Ann.nprobeFor(10)}")
-      Ann.ivfTopKAssigned(ivfAssignedShared(s, dir),
-        emb.filter(col("vec_id") < 3), ivfQuantizerShared(s, dir),
-        "vec_id", "embedding", k = 5)
-    }),
+    Gate("q70_ann_ivf", annIvf,
+      // The ENTIRE IVF procedure replayed at the default-sized probe routing
+      // (nprobeFor: 8 of 10 lists). Only the final cosine runs in floats
+      // (the q27 pattern).
+      Some(s"""WITH ${oracleIvf(Seq(8))}
+         $OracleTop5""")),
 
     // REAL resize under the gate: the payload itself is rewritten (ImageIO
     // decode → exact integer nearest-neighbor sx=⌊x·sw/w⌋ → 24-bit BMP
@@ -824,18 +1512,39 @@ object SparkEntry {
     // row proves the whole decode→transform→encode→decode loop, positions
     // included (the q63 weighted sum). 6×4 straddles the corpus dims
     // (w 4–7, h 3–5): axes upscale and downscale in the same sweep.
-    "q71_resize_decode" -> ((s, dir) =>
+    Gate("q71_resize_decode", (s, dir) =>
       graft.multimodal.Multimodal.extractImageFeatures(
         graft.multimodal.Multimodal.resize(
-          graft.multimodal.Multimodal.syntheticBmp(s, 300), 6, 4))),
+          graft.multimodal.Multimodal.syntheticBmp(s, 300), 6, 4)),
+      // q71 — the resize loop replayed: every 6×4 output pixel is source
+      // pixel (sx, sy) = (⌊x·sw/6⌋, ⌊y·sh/4⌋) of the q63 arithmetic image,
+      // then the q63 stats over the RESIZED raster (ppm floor-div by 24,
+      // weighted sum with w=6). A green row proves decode, the integer
+      // resample map, the BMP re-encode, and the second decode all agree.
+      Some(s"""WITH src AS (
+           SELECT CAST(s AS BIGINT) AS media_id, x.x AS x, y.y AS y,
+             (x.x * (4 + s % 4)) // 6 AS sx, (y.y * (3 + s % 3)) // 4 AS sy
+           FROM generate_series(0, 299) t(s)
+           CROSS JOIN generate_series(0, 5) x(x)
+           CROSS JOIN generate_series(0, 3) y(y)),
+         agg AS (
+           SELECT media_id, ${oracleBmpSums("sx", "sy", "y * 6 + x + 1")}
+           FROM src GROUP BY 1)
+         SELECT media_id, TRUE AS decoded,
+           CAST(6 AS INT) AS width, CAST(4 AS INT) AS height,
+           CAST(sr * 1000000 // 24 AS BIGINT) AS r_ppm,
+           CAST(sg * 1000000 // 24 AS BIGINT) AS g_ppm,
+           CAST(sb * 1000000 // 24 AS BIGINT) AS b_ppm,
+           CAST(wr AS BIGINT) AS r_wsum
+         FROM agg""")),
 
     // ANN recall@k — the quality metric a deployment tunes nprobe/bits
     // against: per probe, the fraction of the EXACT top-k (q27) that each
     // approximate path (q70 IVF, q47 LSH) recovered, in integer ppm (hits
     // · 10^6 DIV k — no float division, both engines exact). Composes the
     // three gated queries; the oracle replays it from their own exports.
-    "q72_ann_recall" -> ((s, dir) => {
-      val brute = queries("q27_ann_topk")(s, dir)
+    Gate("q72_ann_recall", (s, dir) => {
+      val brute = annExact(s, dir)
       def recallOf(method: String, approx: DataFrame): DataFrame =
         brute.as("b").join(approx.as("i"),
           col("b.p_key") === col("i.p_key") &&
@@ -844,16 +1553,47 @@ object SparkEntry {
           .agg(expr("CAST(sum(CASE WHEN i.c_key IS NOT NULL THEN 1 ELSE 0 END)" +
             " * 1000000 DIV count(*) AS BIGINT)").as("recall_ppm"))
           .select(lit(method).as("method"), col("p_key"), col("recall_ppm"))
-      recallOf("ivf", queries("q70_ann_ivf")(s, dir))
-        .unionAll(recallOf("lsh", queries("q47_ann_lsh")(s, dir)))
-    }),
+      recallOf("ivf", annIvf(s, dir))
+        .unionAll(recallOf("lsh", annLsh(s, dir)))
+    },
+      // q72 — recall replayed from the three ANN exports themselves: per
+      // probe, |approx ∩ exact| · 10^6 DIV k, integer end to end.
+      Some(s"""WITH $OracleExactTopK,
+         iv AS (SELECT p_key, c_key
+                FROM read_parquet('__VERIFY_OUT__/q70_ann_ivf/*.parquet')),
+         ls AS (SELECT p_key, c_key
+                FROM read_parquet('__VERIFY_OUT__/q47_ann_lsh/*.parquet'))
+         SELECT 'ivf' AS method, b.p_key, ${oracleRecallPpm("iv")} AS recall_ppm
+         FROM b LEFT JOIN iv ON iv.p_key = b.p_key AND iv.c_key = b.c_key
+         GROUP BY 2
+         UNION ALL
+         SELECT 'lsh' AS method, b.p_key, ${oracleRecallPpm("ls")} AS recall_ppm
+         FROM b LEFT JOIN ls ON ls.p_key = b.p_key AND ls.c_key = b.c_key
+         GROUP BY 2""")),
 
     // The curation chain's near-dup survivors (graft.corpus.Curation.build):
     // quality gate → exact dedup → MinHash near-dup prune, each stage a
     // gated operator (q20/q21/q45). The survivors are a shared checkpointed
     // stage of the chain q82 packs. The oracle replays the composition.
-    "q74_curation" -> ((s, dir) =>
-      curation(s, dir).survivors.select(col("doc_id"), col("quality_ppm"))),
+    Gate("q74_curation", (s, dir) =>
+      curation(s, dir).survivors.select(col("doc_id"), col("quality_ppm")),
+      // q74 — the full curation composition replayed: the q20 quality
+      // formula at the 650000 gate, the q21 md5 keeper over the qualified
+      // set, then the q45 minhash banding over the unique survivors with
+      // the drop rule slots ≥ 8 (est_jaccard ≥ 0.5 exactly — slots/16 is a
+      // 1/16 grid, so the integer compare cannot disagree with the float).
+      Some(s"""WITH $OracleQuality,
+         qual AS (SELECT * FROM q WHERE quality_ppm >= 650000),
+         ${oracleKeepers("qual")},
+         uniq AS (
+           SELECT q.doc_id, q.text, q.quality_ppm
+           FROM qual q JOIN fp ON fp.doc_id = q.doc_id
+           JOIN keepers k ON k.fingerprint = fp.fingerprint AND k.keeper = q.doc_id),
+         d AS (SELECT doc_id, string_split(text, ' ') AS w FROM uniq),
+         ${oracleNearDupSlots(maxBucket = 0)},
+         dropped AS (SELECT DISTINCT key_b AS doc_id FROM m WHERE slots >= 8)
+         SELECT u.doc_id, u.quality_ppm FROM uniq u
+         WHERE NOT EXISTS (SELECT 1 FROM dropped x WHERE x.doc_id = u.doc_id)""")),
 
     // The IVF nprobe→recall curve — the tradeoff a deployment tunes: mean
     // recall ppm across probes at nprobe ∈ {1, 3, 5, 8} (visiting 10–80% of
@@ -861,12 +1601,12 @@ object SparkEntry {
     // shows what the default buys and what tuning down costs). Monotone by
     // construction (routed lists are nested); the oracle replays every
     // point from q40's export.
-    "q73_ivf_nprobe_curve" -> ((s, dir) => {
+    Gate("q73_ivf_nprobe_curve", (s, dir) => {
       val (_, emb) = kmeansFitted(s, dir)
       val probes = emb.filter(col("vec_id") < 3)
       // same (corpus, probes, k) as q27 — reuse its shared persisted result
       // instead of a third exact corpus scan
-      val brute = queries("q27_ann_topk")(s, dir)
+      val brute = annExact(s, dir)
       val quant = ivfQuantizerShared(s, dir)
       // every curve point reads the ONE persisted corpus assignment — the
       // argmin scan is nprobe-independent
@@ -881,7 +1621,19 @@ object SparkEntry {
             " * 1000000 DIV count(*) AS BIGINT)").as("mean_recall_ppm"))
           .select(lit(np).as("nprobe"), col("mean_recall_ppm"))
       }.reduce(_ unionAll _)
-    }),
+    },
+      // q73 — the q70 IVF replay parametrized by nprobe ∈ {1,3,5,8}: same
+      // centroid/assignment/routing arithmetic from q40's export, candidate
+      // top-5 per (nprobe, probe), recall vs q27's exact export, integer ppm.
+      Some(s"""WITH ${oracleIvf(Seq(1, 3, 5, 8))},
+         ivf AS (SELECT nprobe, p_key, c_key FROM ranked WHERE rk <= 5),
+         $OracleExactTopK,
+         bn AS (SELECT n.nprobe, b.p_key, b.c_key FROM b CROSS JOIN np n)
+         SELECT CAST(bn.nprobe AS INT) AS nprobe,
+           ${oracleRecallPpm("i")} AS mean_recall_ppm
+         FROM bn LEFT JOIN ivf i ON i.nprobe = bn.nprobe
+           AND i.p_key = bn.p_key AND i.c_key = bn.c_key
+         GROUP BY 1""")),
 
     // S3 UNDER THE GATE: real BMP/WAV/AVI files on
     // DISK, ingested through the production `binaryFile` source
@@ -895,7 +1647,7 @@ object SparkEntry {
     // its n_bytes row is under the gate too, so the extension→kind routing
     // of unknown blobs is checked, not assumed (the _READY marker can't do
     // this: Spark file sources skip underscore-prefixed files).
-    "q75_binary_source" -> ((s, dir) => {
+    Gate("q75_binary_source", (s, dir) => {
       val mm = graft.multimodal.Multimodal
       val media = mm.fromBinaryFiles(s, q75Media(math.floorMod(dir.hashCode, 1 << 30)))
         .withColumn("file_id",
@@ -932,7 +1684,32 @@ object SparkEntry {
           lit("n_bytes").as("metric"), length(col("payload")).cast("long")
             .as("value"))
       img.unionAll(aud).unionAll(vid).unionAll(vidN).unionAll(bin)
-    }),
+    },
+      // q75 — the on-disk binaryFile gate replayed: the q63 pixel arithmetic,
+      // the q64 sample arithmetic and the q69 frame arithmetic for file ids
+      // 0..19, in the query's long form (kind, file_id, metric, value).
+      Some(s"""WITH img AS (${oracleImages(Q75Files)}),
+         aud AS (${oracleAudio(Q75Files)}),
+         vid AS (${oracleVideo(Q75Files)})
+         SELECT 'image' AS kind, media_id AS file_id, 'decoded' AS metric,
+           CAST(decoded AS BIGINT) AS value FROM img
+         UNION ALL SELECT 'image', media_id, 'width', width FROM img
+         UNION ALL SELECT 'image', media_id, 'height', height FROM img
+         UNION ALL SELECT 'image', media_id, 'r_ppm', r_ppm FROM img
+         UNION ALL SELECT 'image', media_id, 'g_ppm', g_ppm FROM img
+         UNION ALL SELECT 'image', media_id, 'b_ppm', b_ppm FROM img
+         UNION ALL SELECT 'image', media_id, 'r_wsum', r_wsum FROM img
+         UNION ALL SELECT 'audio', media_id, 'decoded', CAST(decoded AS BIGINT) FROM aud
+         UNION ALL SELECT 'audio', media_id, 'sample_rate', sample_rate FROM aud
+         UNION ALL SELECT 'audio', media_id, 'n_samples', n_samples FROM aud
+         UNION ALL SELECT 'audio', media_id, 'sum_pcm', sum_pcm FROM aud
+         UNION ALL SELECT 'audio', media_id, 'sum_abs_pcm', sum_abs_pcm FROM aud
+         UNION ALL SELECT 'audio', media_id, 'wsum_pcm', wsum_pcm FROM aud
+         UNION ALL SELECT 'video', media_id, printf('f%02d_level', frame_idx),
+           level FROM vid
+         UNION ALL SELECT 'video', media_id, 'n_frames', count(*)
+           FROM vid GROUP BY media_id
+         UNION ALL SELECT 'binary', 1, 'n_bytes', 7""")),
 
     // STREAMING UNDER THE GATE: the documents-
     // derived transcript corpus staged to parquet files, replayed through
@@ -944,7 +1721,7 @@ object SparkEntry {
     // batch gate, not just the spec pin. Per-run nanoTime subdir: a reused
     // checkpoint would mark the staged files already-processed and emit
     // nothing on the second sweep.
-    "q76_streaming_extract" -> ((s, dir) => {
+    Gate("q76_streaming_extract", (s, dir) => {
       val base = stageDir("graft_q76_stream", math.floorMod(dir.hashCode, 1 << 30))
       // drop PREVIOUS run subdirs before staging a new one, so a session
       // that runs this query many times keeps one staging copy, not one
@@ -986,7 +1763,10 @@ object SparkEntry {
         .start()
       q.awaitTermination()
       s.read.parquet(s"$run/out").select("conv_id", "turn_idx", "text")
-    }),
+    },
+      // q76 — the streaming twin must land on exactly the batch contract:
+      // per-turn text equality (q30's oracle).
+      Some(oracleTurnText("text"))),
 
     // Dup-cluster assembly — the step a production dedup pipeline runs
     // AFTER candidate generation: connected components (hash-min label
@@ -1006,7 +1786,7 @@ object SparkEntry {
     // its last round eagerly checkpointed and has freed every earlier
     // round, so a second checkpoint in sharedResult would only strand that
     // round's RDD out of releaseShared's reach.
-    "q77_dup_components" -> ((s, dir) => artifact(s, dir, "cc") {
+    Gate("q77_dup_components", (s, dir) => artifact(s, dir, "cc") {
       val emb = t(s, dir, "embeddings")
       val edges = Dedup.embeddingDupLsh(emb, "vec_id", "embedding",
           threshold = 0.4, dim = 64, bits = 4)
@@ -1020,7 +1800,18 @@ object SparkEntry {
           "in BOTH places or switch to large-star/small-star")
       edges.unpersist()
       labels
-    }(Scale.unpersistCheckpoint)),
+    }(Scale.unpersistCheckpoint),
+      // q77 — dup clusters replayed end to end: the q51 candidate-pair build
+      // (deterministic hyperplane buckets → same-bucket cosine ≥ 0.3), edge
+      // symmetrization, then EXACTLY CcIters unrolled hash-min rounds — the
+      // same deterministic min the engine iterates (the engine additionally
+      // asserts the fixpoint, so "enough rounds" is checked on both sides).
+      Some(s"""WITH ${oracleEmbedDup(0.4)},
+         sym AS (SELECT key_a AS src, key_b AS dst FROM pairs
+                 UNION ALL SELECT key_b AS src, key_a AS dst FROM pairs),
+         l0 AS (SELECT vec_id, vec_id AS c FROM embeddings),
+         $OracleCcRounds
+         SELECT vec_id, CAST(c AS BIGINT) AS component FROM l$CcIters""")),
 
     // Sequence packing — the GPT-style concat-and-split block map
     // (corpus.Packing): docs concatenated in doc_id order with one EOS
@@ -1031,9 +1822,12 @@ object SparkEntry {
     // multiple buckets live at the gated sfs so the two-pass path is what
     // is checked). Integer-only, so the oracle replays it with a plain
     // SQL running sum.
-    "q78_seq_packing" -> ((s, dir) =>
+    Gate("q78_seq_packing", (s, dir) =>
       graft.corpus.Packing.packSpans(t(s, dir, "documents"), "doc_id",
-        "text", blockTokens = 256, bucketSize = 128)),
+        "text", blockTokens = 256, bucketSize = 128),
+      // Integer-only: the engine's bucketed two-pass prefix sum must land on
+      // exactly the plain SQL running sum's numbers.
+      Some(s"WITH ${oraclePacking("documents")}")),
 
     // PII redaction — the curation stage that runs before any text leaves
     // the pipeline (TextStats.redactPii): emails, 32+-char hex blobs,
@@ -1043,7 +1837,7 @@ object SparkEntry {
     // pattern) — the gate proves the PATTERNS and their order, not just
     // the plumbing. Patterns are RE2-safe by construction; the oracle
     // applies the same rules from the same shared table.
-    "q79_pii_redact" -> ((s, dir) => {
+    Gate("q79_pii_redact", (s, dir) => {
       val d = col("doc_id")
       val seeded = t(s, dir, "documents").select(col("doc_id"),
         concat(
@@ -1059,7 +1853,13 @@ object SparkEntry {
         .select(col("doc_id"), col("r.redacted").as("text"),
           col("r.n_emails"), col("r.n_hexkeys"), col("r.n_ips"),
           col("r.n_numruns"))
-    }),
+    },
+      // q79 — the redaction chain replayed rule-for-rule from the SAME
+      // shared pattern table (TextStats.RedactionRules — interpolated, so
+      // the SQL cannot drift from the engine), counts taken on the text as
+      // it stands when each rule fires, RE2 ≡ Java regex by pattern
+      // construction.
+      Some(OracleRedactSql)),
 
     // Benchmark decontamination (the n-gram-overlap rule of the GPT-3/
     // Llama pretraining pipelines), the curation chain's decontamination
@@ -1070,13 +1870,20 @@ object SparkEntry {
     // groupBy(doc_id) shuffle — never a corpus×corpus join. The shingle
     // length is non-degenerate at every sf (8/8/727 contaminated of
     // ~494/~494/~4948 docs).
-    "q80_decontaminate" -> ((s, dir) => {
+    Gate("q80_decontaminate", (s, dir) => {
       val docs = t(s, dir, "documents")
       graft.corpus.Curation.contaminatedBy(
         docs.filter(!graft.corpus.Curation.isBenchmark(col("doc_id")))
           .select(col("doc_id"), split(col("text"), " ").as("tokens")),
         docs)
-    }),
+    },
+      Some(s"""WITH d AS (
+           SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+         sh AS (SELECT doc_id, unnest(${oracleShingles(4)}) AS sh FROM d),
+         bench AS (SELECT DISTINCT sh FROM sh WHERE doc_id % 97 = 0),
+         corpus AS (SELECT doc_id, sh FROM sh WHERE doc_id % 97 <> 0)
+         SELECT doc_id, CAST(count(*) AS BIGINT) AS n_hits
+         FROM corpus JOIN bench USING (sh) GROUP BY 1""")),
 
     // Deterministic mixture sampling: downsample every language to (in
     // expectation) the smallest language's share — lang is the one skewed
@@ -1086,26 +1893,50 @@ object SparkEntry {
     // handful of domains is a handful of giant skewed partitions at 100 TB,
     // while the rate filter is a per-row predicate whose only shuffle is
     // the tiny per-group count.
-    "q81_mix_sample" -> ((s, dir) =>
+    Gate("q81_mix_sample", (s, dir) =>
       graft.corpus.Curation.sampleToBalanced(
         t(s, dir, "documents").select(col("doc_id"), col("lang")),
-        "doc_id", "lang")),
+        "doc_id", "lang"),
+      Some(s"""WITH ${oracleBalancedRates("documents")}
+         SELECT d.doc_id, d.lang
+         FROM documents d JOIN r USING (lang)
+         WHERE ${oracleSampled("d.doc_id")}""")),
 
     // Target-WEIGHTED mixture (the general form of q81): rebalance the
     // en-heavy corpus to an explicit 40/15/15/15/15 share. The weight
     // table is the SHARED MixTargetPpm constant — the oracle SQL is
     // generated from it (the q79 pattern), so the two sides cannot drift.
-    "q83_mix_target" -> ((s, dir) =>
+    Gate("q83_mix_target", (s, dir) =>
       graft.corpus.Curation.sampleToTarget(
         t(s, dir, "documents").select(col("doc_id"), col("lang")),
-        "doc_id", "lang", MixTargetPpm.toMap)),
+        "doc_id", "lang", MixTargetPpm.toMap),
+      // q83 — the weighted-rate arithmetic replayed from the SAME
+      // MixTargetPpm table the engine uses (interpolated, cannot drift):
+      // T = min_g ⌊n_g·10⁶/p_g⌋, required_g = ⌊p_g·T/10⁶⌋,
+      // rate_g = ⌊required_g·10⁶/n_g⌋, then the portable md5 row priority.
+      Some({
+      val vals = MixTargetPpm
+        .map { case (g, p) => s"('$g', CAST($p AS BIGINT))" }.mkString(", ")
+      s"""WITH w(lang, p_ppm) AS (VALUES $vals),
+         c AS (SELECT lang, count(*) AS cnt FROM documents GROUP BY 1),
+         j AS (SELECT c.lang, c.cnt, w.p_ppm FROM c JOIN w USING (lang)),
+         t AS (SELECT min(cnt * 1000000 // p_ppm) AS t FROM j),
+         r AS (SELECT lang,
+                 CAST((p_ppm * t // 1000000) * 1000000 // cnt AS BIGINT)
+                   AS r_ppm
+               FROM j, t)
+         SELECT d.doc_id, d.lang
+         FROM documents d JOIN r USING (lang)
+         WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8))::BIGINT
+           % 1000000 < r_ppm"""
+    })),
 
     // Repetition quality dimension (the duplicate-n-gram family of
     // pretraining quality filters): distinct-token share and duplicate-
     // bigram share per doc, integer ppm. Pure per-row array arithmetic —
     // no explode, no shuffle, stays inside whole-stage codegen; bigrams
     // via the same Dedup.shingles slice the q28/q80 gates pin.
-    "q84_repetition" -> ((s, dir) =>
+    Gate("q84_repetition", (s, dir) =>
       t(s, dir, "documents")
         .select(col("doc_id"), split(col("text"), " ").as("tokens"))
         .select(col("doc_id"),
@@ -1118,7 +1949,22 @@ object SparkEntry {
         .select(col("doc_id"),
           expr("CAST(nd * 1000000 DIV nt AS BIGINT)").as("distinct_tok_ppm"),
           expr("CAST((nb - nbd) * 1000000 DIV nb AS BIGINT)")
-            .as("dup_bigram_ppm"))),
+            .as("dup_bigram_ppm")),
+      // q84 — same bigram slice semantics as the q28/q80 oracles; all
+      // integer ppm so the compare is exact.
+      Some("""WITH d AS (
+           SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+         b AS (
+           SELECT doc_id, w,
+             list_transform(generate_series(1, greatest(len(w) - 1, 1)),
+               i -> array_to_string(w[i:i+1], ' ')) AS bg
+           FROM d)
+         SELECT doc_id,
+           CAST(len(list_distinct(w)) * 1000000 // len(w) AS BIGINT)
+             AS distinct_tok_ppm,
+           CAST((len(bg) - len(list_distinct(bg))) * 1000000 // len(bg)
+             AS BIGINT) AS dup_bigram_ppm
+         FROM b""")),
 
     // The full corpus build: the curation chain's block map
     // (graft.corpus.Curation.build) — q74's survivors → benchmark
@@ -1129,47 +1975,85 @@ object SparkEntry {
     // export (the __VERIFY_OUT__ cross-read pattern), so every stage is
     // pinned twice: by its standalone gate and inside the composition.
     // `graft.app.CurationJob` runs the same chain through staged tables.
-    "q82_corpus_build" -> ((s, dir) => curation(s, dir).blocks),
+    Gate("q82_corpus_build", (s, dir) => curation(s, dir).blocks,
+      // q82 — the composition replayed from q74's own gated export (the
+      // __VERIFY_OUT__ cross-read pattern): decontaminate against the
+      // corpus-wide benchmark shingles, re-derive the mixture rates over the
+      // CLEAN set, then the q78 running-sum block map over the kept docs.
+      Some(s"""WITH surv AS (
+           SELECT doc_id
+           FROM read_parquet('__VERIFY_OUT__/q74_curation/*.parquet')),
+         base AS (
+           SELECT d.doc_id, d.text, d.lang FROM documents d
+           JOIN surv USING (doc_id)),
+         shb AS (
+           SELECT DISTINCT unnest(${oracleShingles(4)}) AS sh
+           FROM (SELECT string_split(text, ' ') AS w FROM documents
+                 WHERE doc_id % 97 = 0)),
+         shc AS (
+           SELECT doc_id, unnest(${oracleShingles(4)}) AS sh
+           FROM (SELECT doc_id, string_split(text, ' ') AS w FROM base)),
+         contam AS (SELECT DISTINCT doc_id FROM shc JOIN shb USING (sh)),
+         clean AS (
+           SELECT b.* FROM base b
+           WHERE NOT EXISTS (SELECT 1 FROM contam x
+                             WHERE x.doc_id = b.doc_id)),
+         ${oracleBalancedRates("clean")},
+         kept AS (
+           SELECT c.doc_id, c.text FROM clean c JOIN r USING (lang)
+           WHERE ${oracleSampled("c.doc_id")}),
+         ${oraclePacking("kept")}""")),
 
     // SimHash near-dup — md5-portable 32-bit signature so DuckDB replays it;
     // maxHamming=3 < bands=4 makes the banded join pigeonhole-EXACT, i.e.
     // identical to the oracle's all-pairs scan (radius 16 over 4 bands would
     // silently lose pairs at distance 4..16). The xxhash64 64-bit
     // production path is pinned by DedupSpec.
-    "q39_simhash" -> ((s, dir) => {
+    Gate("q39_simhash", (s, dir) => {
       val docs = t(s, dir, "documents").filter(col("doc_id") % 10 === 0)
         .select(col("doc_id"), split(col("text"), " ").as("tokens"))
       Dedup.simhashDupMd5(docs, "doc_id", "tokens", maxHamming = 3)
-    }),
+    },
+      // ---- SimHash (md5-portable 32-bit variant; all-pairs scan is exact
+      // because maxHamming=3 < bands=4 makes the Spark-side banding lossless)
+      Some(s"""WITH ${oracleSample("text")},
+         tok AS (SELECT doc_id, unnest(w) AS t FROM d),
+         h AS (SELECT doc_id, ('0x' || substr(md5(t), 1, 8))::BIGINT AS hv FROM tok),
+         votes AS (
+           SELECT doc_id, b.b AS bit,
+             sum(CASE WHEN (hv >> CAST(b.b AS INT)) & 1 = 1 THEN 1 ELSE -1 END) AS vote
+           FROM h CROSS JOIN generate_series(0, 31) b(b) GROUP BY 1, 2),
+         sig AS (
+           SELECT doc_id, CAST(sum(CASE WHEN vote > 0
+             THEN (CAST(1 AS BIGINT) << CAST(bit AS INT)) ELSE 0 END) AS BIGINT) AS sh
+           FROM votes GROUP BY 1)
+         SELECT a.doc_id AS key_a, b.doc_id AS key_b,
+           CAST(bit_count(xor(a.sh, b.sh)) AS INT) AS hamming
+         FROM sig a JOIN sig b ON a.doc_id < b.doc_id
+         WHERE bit_count(xor(a.sh, b.sh)) <= 3""")),
 
     // Entry 4 — the wells data product chain (J1 semi → J2 broadcast join →
     // A9 one-hot → A8 rollup → J3 dimension join) in ONE job. Shared
     // persisted result: q62 writes THIS product through the CSV sink, so
     // the join/rollup chain behind its 25 rows runs once per session.
-    "q41_data_product" -> ((s, dir) => sharedResult(s, dir, "q41product") {
-      val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
-      val n = t(s, dir, "nation")
-      val observed = c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
-      val enriched = o.join(broadcast(observed), o("o_custkey") === observed("c_custkey"))
-      enriched.groupBy(col("c_nationkey"))
-        .agg(
-          sum(when(col("o_orderstatus") === "F", 1).otherwise(0)).as("n_f"),
-          sum(when(col("o_orderstatus") === "O", 1).otherwise(0)).as("n_o"),
-          sum(when(col("o_orderstatus") === "P", 1).otherwise(0)).as("n_p"),
-          round(sum(col("o_totalprice")), 2).as("total"))
-        .join(broadcast(n), col("c_nationkey") === n("n_nationkey"))
-        .select(col("n_name"), col("n_f"), col("n_o"), col("n_p"), col("total"))
-    }),
+    Gate("q41_data_product", dataProduct,
+      Some(OracleDataProduct)),
 
     // P12 — UTM→lat/lon enrichment (column math; pinned by UtmSpec oracle,
     // no portable SQL oracle for the Snyder series)
-    "q42_utm" -> ((s, dir) => t(s, dir, "nation").select(
+    Gate("q42_utm", (s, dir) => t(s, dir, "nation").select(
       col("n_nationkey"),
       graft.dims.Utm.toLatLon(
         lit(350000.0) + col("n_nationkey") * 10000.0,
         lit(4200000.0) + col("n_regionkey") * 50000.0, zone = 13).as("ll"))
       .select(col("n_nationkey"),
-        round(col("ll.lat"), 6).as("lat"), round(col("ll.lon"), 6).as("lon"))),
+        round(col("ll.lat"), 6).as("lat"), round(col("ll.lon"), 6).as("lon")),
+      // ---- P12 UTM inverse (Snyder series restated step-by-step in SQL with
+      // JVM-folded constants; see Utm.oracleSql)
+      Some(graft.dims.Utm.oracleSql(
+      from = "nation", keyExpr = "n_nationkey",
+      easting = "350000.0 + n_nationkey * 10000.0",
+      northing = "4200000.0 + n_regionkey * 50000.0", zone = 13))),
 
     // M3 — MLlib KMeans tier over embeddings (seeded; maxIter 5: each
     // iteration is one full pass + broadcast centroids, and 5 holds the
@@ -1192,7 +2076,7 @@ object SparkEntry {
     // old double-summation spelling could diverge from DuckDB in the last
     // ulp and flip the 6dp round at a boundary; on the grid the engines
     // cannot diverge at all.
-    "q40_kmeans" -> ((s, dir) => {
+    Gate("q40_kmeans", (s, dir) => {
       val (model, emb) = kmeansFitted(s, dir)
       val asg = model.transform(emb).select(col("vec_id"), col("label"),
         col("prediction").as("cluster"), col("embedding"))
@@ -1214,7 +2098,26 @@ object SparkEntry {
         .agg(round(sqrt(sum(col("t") * col("t")).cast("double"))
           / (max(col("cnt")) * lit(1e4)), 6).as("dist2c"))
       asg.drop("embedding").join(dist, "vec_id")
-    }),
+    },
+      // M3 — distance-to-empirical-centroid replayed from the exported
+      // assignments: per-cluster per-dim means, then euclidean distance
+      // (6dp). The fit is taken as given; the group-mean + distance algebra
+      // is cross-engine-verified — on the SAME 1e-4 integer grid the engine
+      // uses, with denominators cleared (dist = sqrt(Σ(vq·cnt − Σvq)²) /
+      // (cnt·1e4)), so every compared sum is exact integer arithmetic and
+      // the summation-order flake class is structurally
+      // closed. HUGEINT keeps the squared terms exact (DuckDB sums BIGINT
+      // into HUGEINT anyway; the cast makes it explicit).
+      Some(s"""WITH $OracleKmeansGrid,
+         cent AS (SELECT cluster, dim, CAST(sum(vq) AS BIGINT) AS s4,
+                    count(*) AS cnt FROM pts GROUP BY 1, 2),
+         dist AS (SELECT vec_id,
+                    round(sqrt(sum(CAST((vq * cnt - s4) AS HUGEINT)
+                                   * (vq * cnt - s4))::DOUBLE)
+                      / (max(cnt) * 10000.0), 6) AS dist2c
+                  FROM pts JOIN cent USING (cluster, dim) GROUP BY 1)
+         SELECT a.vec_id, a.label, a.cluster, d.dist2c
+         FROM asg a JOIN dist d USING (vec_id)""")),
 
     // M2 — LSA: tfidf → truncated SVD(k=5) → L2 normalize (reference Entry 3
     // middle tier). The ARPACK fit is not SQL-replayable, but the projection
@@ -1226,11 +2129,39 @@ object SparkEntry {
     // checked against its recomputation), so rounding would only add a
     // cross-engine round() boundary risk. + 0.0 folds IEEE -0.0 in both
     // engines.
-    "q44_lsa" -> ((s, dir) =>
+    Gate("q44_lsa", (s, dir) =>
       lsaProjection(s, dir)
         .select(col("doc_id"), posexplode(col("projection")).as(Seq("dim", "value")))
         .select(col("doc_id"), col("dim"),
-          (col("value") + lit(0.0d)).as("value"))),
+          (col("value") + lit(0.0d)).as("value")),
+      // M2 — the LSA projection replayed from q65's exported V: rebuild the
+      // engine's full-precision tfidf (the shared dictionary chain, unrounded),
+      // multiply by the exported loadings, L2-normalize per doc — then ECHO
+      // the engine's own full-precision export (part='proj'), FILTERED to the
+      // rows where the recomputation agrees within 1e-6. Both engines now
+      // round IDENTICAL doubles, so the flake class (a value
+      // within an ulp of a .00005 boundary rounding apart across DuckDB
+      // ln()/group order vs Math.log/token order) is structurally closed —
+      // a genuine arithmetic divergence ≥ 1e-6 (≫ cross-engine float noise
+      // ~1e-12, ≪ the 1e-4 rounding step) drops that row from the oracle's
+      // output and fails the row-count compare loudly. CASE nn = 0 mirrors
+      // the engine's zero-norm passthrough.
+      Some(s"""WITH $OracleDictionary,
+          ld AS (SELECT i AS token_id, j AS dim, value AS ldg
+                 FROM $OracleLsaExport
+                 WHERE part = 'loading'),
+          raw AS (SELECT t.doc_id, l.dim, sum(t.tfidf * l.ldg) AS r
+                  FROM tfidf t JOIN ld l USING (token_id) GROUP BY 1, 2),
+          nrm AS (SELECT doc_id, sqrt(sum(r * r)) AS nn FROM raw GROUP BY 1),
+          ex AS (SELECT i AS doc_id, j AS dim, value AS v
+                 FROM $OracleLsaExport
+                 WHERE part = 'proj')
+          SELECT ex.doc_id, ex.dim, ex.v + 0.0 AS value
+          FROM ex
+          JOIN raw r ON r.doc_id = ex.doc_id AND r.dim = ex.dim
+          JOIN nrm n2 ON n2.doc_id = ex.doc_id
+          WHERE abs((CASE WHEN n2.nn = 0 THEN r.r ELSE r.r / n2.nn END) - ex.v)
+                  <= 1e-6""")),
 
     // The LSA/PCA model state behind q44/q49, exported at FULL double
     // precision as the replay input for their oracles (rows-only itself —
@@ -1242,7 +2173,7 @@ object SparkEntry {
     //                   doubles q49 emits, echoed by its tolerance oracle
     // V and W are driver-local by design (vocab is keepN-capped; k×2 is
     // tiny) — the same scale argument as broadcasting them.
-    "q65_lsa_model" -> ((s, dir) => {
+    Gate("q65_lsa_model", (s, dir) => {
       import s.implicits._
       val (proj, v) = lsaModel(s, dir)
       val pc = pcaFitted(s, dir).pc
@@ -1260,7 +2191,8 @@ object SparkEntry {
         .select(lit("pcproj").as("part"), col("doc_id").as("i"),
           posexplode(col("pc")).as(Seq("j", "value")))
       loadings.union(pcRows).union(projRows).union(pcProjRows)
-    }),
+    },
+      None),
 
     // Orthonormality of the exported V, computed DRIVER-SIDE from the model
     // matrix (k×k gram over the capped vocab — not the export), while the
@@ -1268,7 +2200,7 @@ object SparkEntry {
     // a green row proves the export is faithful AND VᵀV ≈ I is visible in
     // the checked values themselves. rint vs half-away rounding never diverges here: true values
     // are 0/1 to SVD accuracy (~1e-14), nowhere near a .00000005 boundary.
-    "q66_lsa_ortho" -> ((s, dir) => {
+    Gate("q66_lsa_ortho", (s, dir) => {
       import s.implicits._
       val (_, v) = lsaModel(s, dir)
       (for { a <- 0 until v.numCols; b <- a until v.numCols } yield {
@@ -1276,7 +2208,17 @@ object SparkEntry {
         while (i < v.numRows) { g += v(i, a) * v(i, b); i += 1 }
         (a, b, math.rint(g * 1e6) / 1e6 + 0.0)
       }).toDF("i", "j", "g")
-    }),
+    },
+      // M2 — VᵀV recomputed in SQL from q65's exported loadings while the
+      // engine computes it from the in-memory model matrix: a green row
+      // proves export fidelity, and the checked values sitting at 1.0/0.0
+      // document the orthonormality of the fitted basis.
+      Some(s"""WITH ld AS (SELECT i, j, value
+                     FROM $OracleLsaExport
+                     WHERE part = 'loading')
+         SELECT a.j AS i, b.j AS j, round(sum(a.value * b.value), 6) + 0.0 AS g
+         FROM ld a JOIN ld b ON a.i = b.i AND a.j <= b.j
+         GROUP BY 1, 2""")),
 
     // T2 scale path — LSH-bucketed ANN top-k with bitsFor sizing and
     // multi-probe, fully replayed by the DuckDB oracle (the hyperplane
@@ -1284,29 +2226,33 @@ object SparkEntry {
     // sign-pattern, probes also visit every Hamming-1 bucket, same-bucket
     // pairs score, dedup, window top-k: the 100 TB ANN path, driver-gated
     // end to end.
-    "q47_ann_lsh" -> ((s, dir) => sharedResult(s, dir, "lsh") {
-      val emb = t(s, dir, "embeddings")
-      val bits = Ann.bitsFor(emb.count()) // 4 for every testdata sf (n ≤ 4096)
-      // the oracle replays exactly 4 hyperplanes (generate_series(0,3)) —
-      // fail LOUDLY if a future testdata sf pushes bitsFor past 4 instead of
-      // silently hash-mismatching with no code change
-      require(bits == 4, s"q47 oracle is pinned to bits=4, bitsFor gave $bits")
-      Ann.lshTopK(emb, emb.filter(col("vec_id") < 3), "vec_id", "embedding",
-        k = 5, dim = 64, bits = bits, multiProbe = true)
-    }),
+    Gate("q47_ann_lsh", annLsh,
+      // The full lshTopK procedure replayed (bits=4 = Ann.bitsFor(n) for
+      // every testdata sf, n ≤ 4096).
+      Some(s"""WITH $OracleVectors,
+         ${oracleLshCandidates("v.vec_id < 3")},
+         ${oracleRanked("cand")}
+         $OracleTop5""")),
 
     // E4 — the neural block scorer IN THE DRIVER GATE:
     // the native fused scored kernel (ExtractTurnExpr scored=true) over the
     // documents-derived corpus; oracle replays the per-chunk logistic
     // decision (sigmoid > 0.5) in SQL and reassembles passing chunks.
-    "q46_scored_extract" -> ((s, dir) =>
+    Gate("q46_scored_extract", (s, dir) =>
       Extract.scoredPipeline(Transcripts.fromDocuments(s, dir))
-        .select(col("conv_id"), col("turn_idx"), col("text"))),
+        .select(col("conv_id"), col("turn_idx"), col("text")),
+      // E4 scored extraction — per-turn text equality under the logistic
+      // arbiter: reassemble exactly the chunks whose sigmoid clears 0.5.
+      Some(s"""WITH $OracleChunks
+          SELECT $OracleConvId AS conv_id, $OracleTurnIdx AS turn_idx,
+            array_to_string(list_filter(chunks,
+              c -> ${oracleChunkSigmoid("c")} > 0.5), ' ') AS text
+          FROM ch""")),
 
     // E4 arithmetic — per-content-block sigmoid scores at 6dp (composed
     // scoreLabeled spelling, pinned ≡ native by ScoredPipelineSpec); the
     // oracle recomputes Scorer.scoreSql feature-for-feature with exp().
-    "q48_block_scores" -> ((s, dir) => {
+    Gate("q48_block_scores", (s, dir) => {
       val turns = Transcripts.fromDocuments(s, dir)
       Extract.scoreLabeled(Extract.lexed(turns))
         .select(col("conv_id"), col("turn_idx"),
@@ -1314,7 +2260,17 @@ object SparkEntry {
             .as(Seq("block_idx", "b")))
         .select(col("conv_id"), col("turn_idx"), col("block_idx"),
           round(col("b.score"), 6).as("score"))
-    }),
+    },
+      // E4 arithmetic — sigmoid scores of surviving content blocks at 6dp.
+      Some(s"""WITH $OracleChunks,
+          scd AS (SELECT doc_id,
+            list_filter(list_transform(chunks,
+              c -> ${oracleChunkSigmoid("c")}), p -> p > 0.5) AS passed
+            FROM ch)
+          SELECT $OracleConvId AS conv_id, $OracleTurnIdx AS turn_idx,
+            CAST(j.j - 1 AS INT) AS block_idx,
+            round(passed[CAST(j.j AS INT)], 6) AS score
+          FROM scd JOIN generate_series(1, 4096) j(j) ON j.j <= len(passed)""")),
 
     // M7 — PCA 2-D projection over the LSA output (reference:
     // src/doc_classification.py:304-311 — viz tier). MLlib's PCA transform
@@ -1323,13 +2279,39 @@ object SparkEntry {
     // covariance eigen-fit itself stays
     // unreplayed, pinned by LsaSpec. Fit shared with q65 via [[pcaFitted]]
     // — the replay MUST read the same model. + 0.0 folds IEEE -0.0.
-    "q49_pca" -> ((s, dir) =>
+    Gate("q49_pca", (s, dir) =>
       // full precision, no round — same echo contract as q44: the oracle
       // outputs the identical doubles from q65's 'pcproj' export
       pcaProjection(s, dir)
         .select(col("doc_id"),
           (col("pc").getItem(0) + lit(0.0d)).as("pc1"),
-          (col("pc").getItem(1) + lit(0.0d)).as("pc2"))),
+          (col("pc").getItem(1) + lit(0.0d)).as("pc2")),
+      // M7 — every PCA coordinate replayed from q65's export: y = Wᵀx over
+      // the full-precision normalized LSA projection (part='proj') and the
+      // component matrix (part='pc'). No centering — MLlib's transform
+      // multiplies the raw vector (probed; LsaSpec pins it too). Same
+      // echo-with-tolerance shape as q44: the output values are the engine's
+      // own exported full-precision coordinates (part='pcproj'), kept only
+      // where the recomputed Wᵀx agrees within 1e-6 — a deviating coordinate
+      // NULLs its doc row and fails the hash compare.
+      Some(s"""WITH pj AS (SELECT i AS doc_id, j AS dim, value AS v
+                     FROM $OracleLsaExport
+                     WHERE part = 'proj'),
+         pc AS (SELECT i AS dim, j AS pcx, value AS w
+                FROM $OracleLsaExport
+                WHERE part = 'pc'),
+         prod AS (SELECT pj.doc_id, pc.pcx, sum(pj.v * pc.w) AS p
+                  FROM pj JOIN pc USING (dim) GROUP BY 1, 2),
+         ex AS (SELECT i AS doc_id, j AS pcx, value AS v
+                FROM $OracleLsaExport
+                WHERE part = 'pcproj'),
+         chk AS (SELECT ex.doc_id, ex.pcx, ex.v
+                 FROM ex JOIN prod p ON p.doc_id = ex.doc_id AND p.pcx = ex.pcx
+                 WHERE abs(p.p - ex.v) <= 1e-6)
+         SELECT doc_id,
+           max(CASE WHEN pcx = 0 THEN v END) + 0.0 AS pc1,
+           max(CASE WHEN pcx = 1 THEN v END) + 0.0 AS pc2
+         FROM chk GROUP BY 1""")),
 
     // M8 — per-point silhouette of the seeded KMeans clustering (reference:
     // modules/Silhouette.py:9-36, sklearn euclidean metric). The cluster
@@ -1340,1500 +2322,17 @@ object SparkEntry {
     // SQL — the metric arithmetic is cross-engine-verified even though the
     // clustering itself cannot be. Sample = vec_id < 500 (sklearn
     // sample_size analog; the full set at the gated sfs).
-    "q50_silhouette" -> ((s, dir) => {
+    Gate("q50_silhouette", (s, dir) => {
       val (model, emb) = kmeansFitted(s, dir)
       val assigned = model.transform(emb).filter(col("vec_id") < 500)
         .select(col("vec_id"), col("prediction").as("cluster"), col("embedding"))
       graft.ml.Silhouette.samples(assigned, "vec_id", "cluster", "embedding")
-    }),
-
-    // Embedding near-dup SCALE PATH — LSH sign-bucketed pairwise cosine,
-    // the 100 TB twin of Dedup.embeddingDup's documented all-pairs variant
-    // (which is O(n²)). Hyperplanes are
-    // deterministic arithmetic, so the oracle replays bucket assignment,
-    // the bucket equi-join and the threshold end to end.
-    "q51_embed_dup" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      // bits PINNED to 4: the oracle's generate_series(0,3) replays exactly
-      // 4 hyperplanes, and deriving from Ann.bitsFor(count) here silently
-      // diverges from the SQL the moment a testdata sf exceeds 4096
-      // embeddings. Production sizing remains Ann.bitsFor —
-      // q47 keeps it under the gate with a loud equality guard.
-      Dedup.embeddingDupLsh(emb, "vec_id", "embedding",
-        threshold = 0.3, dim = 64, bits = 4)
-    }),
-
-    // M4/M5/M6 — LDA topic modeling over the engine BOW (reference:
-    // gensim LdaMulticore, src/doc_classification.py:39-72): the full
-    // doc-topic matrix with the dominant flag. The variational fit isn't
-    // engine-portable, but the dominant flag IS derivable from the exported
-    // weights — the oracle recomputes it per doc (self-consistency); topic
-    // separation pinned by LdaSpec. The exported weights are also the
-    // replay input for q56's correlation oracle.
-    // Shared persisted result: the doc-topic matrix is the LDA transform —
-    // per-doc variational inference, the expensive half after the fit — and
-    // q55 (theta for the plugin bracket) and q56 (the corr matrix over the
-    // SAME 6dp weights) read it too. One frame serves all three, exactly
-    // like the fit itself is shared via ldaFitted.
-    "q52_lda" -> ((s, dir) => sharedResult(s, dir, "ldaDocTopics") {
-      val (model, features) = ldaFitted(s, dir)
-      graft.ml.Lda.docTopicMatrix(model, features, "doc_id")
-    }),
-
-    // M13 — hyperparameter grid search in ONE relational pass (vs the
-    // reference's train-per-config loop, src/supervised.py:66-76): the
-    // decision-threshold grid evaluated against the production 0.5
-    // operating point, so every confusion cell populates across the grid.
-    // Oracle replays the chunk sigmoids and the whole grid in SQL.
-    "q53_grid_search" -> ((s, dir) => {
-      val turns = Transcripts.fromDocuments(s, dir)
-      val scored = Extract.scoreLabeled(Extract.lexed(turns))
-        .select(explode(expr(
-          s"filter(blocks, b -> NOT b.path RLIKE '${Extract.ChromePathRe}')"))
-          .as("b"))
-        .select(round(col("b.score"), 6).as("score"))
-        .withColumn("label",
-          when(col("score") > 0.5, "content").otherwise("chrome"))
-      Scorer.thresholdGrid(scored, "score", "label", "content",
-        Seq(0.3, 0.4, 0.5, 0.6, 0.7))
-    }),
-
-    // M14 — label spreading over the kNN similarity graph (reference:
-    // sklearn LabelSpreading, src/label_prop.py:57-122): 10% seeded nodes,
-    // unweighted 3-NN majority votes, 2 clamped iterations — every step
-    // deterministic, so the oracle replays the graph build and both vote
-    // rounds. The graph tier is capped to the 500-vector prefix: the brute
-    // all-pairs build is the REFERENCE's semantics (sklearn materializes
-    // the full kernel matrix) and exists here as the checked fixture-sized
-    // variant — at corpus scale the edge list comes from Ann.lshTopK and
-    // the spread() iterations are unchanged.
-    "q54_label_prop" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").filter(col("vec_id") < 500)
-      val nodes = emb.select(col("vec_id"),
-        when(col("vec_id") % 10 === 0, col("label")).as("label"))
-      val edges = Ann.bruteTopK(emb, emb, "vec_id", "embedding", k = 3)
-        .select(col("p_key").as("src"), col("c_key").as("dst"),
-          lit(1.0).as("weight"))
-      graft.ml.LabelProp.spread(nodes, "vec_id", "label", edges, iters = 2)
-    }),
-
-    // M14 at SCALE — the same label spreading with the edge list from the
-    // LSH-bucketed kNN ([[Ann.lshTopK]], bits from bitsFor, multi-probe)
-    // instead of the brute all-pairs build: the exact composition a 10^12-row
-    // corpus runs. The oracle replays bucketed candidate generation end to end
-    // (q47's pattern: buckets → Hamming-1 multi-probe → same-bucket cosine →
-    // top-3) and then both clamped vote rounds (q54's pattern).
-    "q57_label_prop_lsh" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").filter(col("vec_id") < 500)
-      val nodes = emb.select(col("vec_id"),
-        when(col("vec_id") % 10 === 0, col("label")).as("label"))
-      val bits = Ann.bitsFor(500) // clamp floor — 4; oracle replays 4 planes
-      require(bits == 4, s"q57 oracle is pinned to bits=4, bitsFor gave $bits")
-      val edges = Ann.lshTopK(emb, emb, "vec_id", "embedding", k = 3,
-        dim = 64, bits = bits, multiProbe = true)
-        .select(col("p_key").as("src"), col("c_key").as("dst"),
-          lit(1.0).as("weight"))
-      graft.ml.LabelProp.spread(nodes, "vec_id", "label", edges, iters = 2)
-    }),
-
-    // MinHash+LSH with the hot-bucket cap BINDING (q45 gates maxBucket=0).
-    // Every doc_id % 50 == 0 row
-    // is rewritten to one constant 4-token text, so all of them share one
-    // signature and land in ONE bucket per band (population 10 at the gated
-    // sfs, 100 at sf0.1) — maxBucket=5 drops that degenerate bucket from
-    // candidate generation in both engines, exactly the q28 maxShingleDf
-    // pattern: the cap is a semantic parameter the oracle replays, not a
-    // sampling trick. Docs 30/130 form a second, UNDER-cap duplicate group
-    // so the green row shows the cap discriminating (their pair survives
-    // with est_jaccard 1.0) rather than emptying the output.
-    "q58_lsh_bucket_cap" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"),
-          split(when(col("doc_id").isin(30, 130), lit("eee fff ggg hhh"))
-            .when(col("doc_id") % 50 === 0, lit("aaa bbb ccc ddd"))
-            .otherwise(col("text")), " ").as("tokens"))
-      graft.corpus.Curation.nearDupPairs(docs, maxBucket = 5)
-    }),
-
-    // M18 — held-out log-perplexity of the topic model (reference:
-    // log_perplexity, src/doc_classification.py:71). Checked, not
-    // rows-only: the variational ELBO itself is the one number
-    // no SQL engine can recompute (digamma terms), but it IS bracketable —
-    // the reported per-token bound must sit ABOVE the plugin cross-entropy
-    // −Σ cnt·ln(Σₖ θ̂_dk·φ_kw)/Σ cnt (a fitted parameter point the bound
-    // cannot beat: the ELBO pays KL penalties the plugin doesn't) and BELOW
-    // ln(V) + margin (the uniform-model ceiling; the margin absorbs the KL
-    // excess — measured lp − ln(V) ≈ +0.04 and lp − plugin ≈ +0.07..0.10 at
-    // every gated sf, see Q55UpperMargin). The query exports φ (part='phi',
-    // full precision, λ columns normalized to distributions) and
-    // the reported value (part='stat', i = k); the oracle recomputes the
-    // bracket from documents + q52's exported θ + the echoed φ and emits
-    // its own 'sane' verdict row — a green hash means BOTH engines computed
-    // the bracket and BOTH found the reported number inside it. The engine
-    // additionally `require`s the bracket with 1e-6 separation so a
-    // boundary-grazing value fails loudly rather than flaking.
-    "q55_lda_perplexity" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
-      val (model, features) = ldaFitted(s, dir)
-      val (vocab, _, vocabSize) = vocabInfo(s, dir)
-      val k = model.getK
-      // topicsMatrix returns the UNNORMALIZED variational λ for the online
-      // optimizer (expected token counts per topic-word, column sums ≫ 1) —
-      // normalize each topic column into the φ distribution (probed: the
-      // raw columns summed to ~e^6, flipping the plugin CE negative)
-      val tm = model.topicsMatrix // vocabSize × k
-      val colSum = Array.tabulate(k)(tpc =>
-        (0 until vocabSize).map(w => tm(w, tpc)).sum)
-      val phiRows = (for { tpc <- 0 until k; w <- 0 until vocabSize }
-        yield ("phi", tpc.toLong, w, tm(w, tpc) / colSum(tpc)))
-        .toDF("part", "i", "j", "value")
-      // the two verification scalars — the MLlib perplexity pass and the
-      // plugin-CE mix over q52's shared doc-topic frame (same model, same
-      // transform) — verify the one shared fit, so a session computes them
-      // once
-      val (lp, plugin) = artifact(s, dir, "q55Stats") {
-        val lp0 =
-          math.rint(graft.ml.Lda.logPerplexity(model, features) * 1e4) / 1e4
-        val theta = queries("q52_lda")(s, dir)
-          .select(col("doc_id"), col("topic"), col("weight"))
-        val bow = Vocab.bowFromCounts(docTermCounts(s, dir), vocab, "doc_id")
-        val phiDf = phiRows.select(col("i").cast("int").as("topic"),
-          col("j").cast("long").as("token_id"), col("value").as("phi"))
-        val mix = bow.join(theta, Seq("doc_id"))
-          .join(broadcast(phiDf), Seq("topic", "token_id"))
-          .groupBy("doc_id", "token_id")
-          .agg(max(col("cnt")).as("cnt"),
-            sum(col("weight") * col("phi")).as("m"))
-        val org.apache.spark.sql.Row(p: Double) = mix
-          .agg((-sum(col("cnt") * log(col("m"))) / sum(col("cnt"))).as("p"))
-          .head()
-        (lp0, p)
-      }(_ => ())
-      val upper = math.log(vocabSize.toDouble) + Q55UpperMargin
-      require(lp - plugin > 1e-6 && upper - lp > 1e-6,
-        s"q55 perplexity bracket violated (or boundary-grazing): " +
-          s"plugin=$plugin lp=$lp upper=$upper — a real regression in the " +
-          s"LDA fit or the bound arithmetic, not a flake")
-      Seq(("stat", k.toLong, 0, lp), ("sane", 0L, 0, 1.0))
-        .toDF("part", "i", "j", "value")
-        .union(phiRows)
-    }),
-
-    // M17 — the doc-topic correlation matrix behind the reference's heatmap
-    // (src/doc_classification.py:192-210). Correlation over the SAME
-    // 6dp-rounded weights q52 exports, so the oracle can recompute every
-    // corr cell from q52's parquet output (self-consistency): the LDA fit isn't replayable, the Pearson arithmetic is.
-    "q56_topic_corr" -> ((s, dir) => {
-      // q52's shared frame IS the 6dp-rounded doc-topic matrix (its dist
-      // column rounds before the explode), so transforming + rounding here
-      // would be a third LDA transform producing byte-identical weights
-      val dt = queries("q52_lda")(s, dir)
-        .select(col("doc_id"), col("topic"), col("weight"))
-      graft.ml.Lda.topicCorr(dt, "doc_id")
-    }),
-
-    // P1 UNDER THE GATE: the fixture corpus is
-    // ASCII-clean, so in every other green row the fold runs as identity —
-    // here every FoldFrom character is prepended (Normalize.
-    // FoldCoverageSentence, shaped to survive P2–P7) and the oracle mirrors
-    // the fold with DuckDB translate over the same map, so a green row
-    // proves the fold MAP, not just the pipeline around it.
-    "q67_fold_accents" -> ((s, dir) => t(s, dir, "documents")
-      .select(col("doc_id"), explode(Normalize.pipeline(
-        concat(lit(Normalize.FoldCoverageSentence + " "), col("text"))))
-        .as("token"))),
-
-    // Non-ASCII through the FULL extraction kernel (the q30 contract over
-    // accent-prefixed documents): multi-byte text crosses every payload
-    // shape — markup content, layout line chunking, JSON string — and must
-    // come back byte-exact (per-turn text equality), so the lexer's
-    // non-ASCII handling runs under the gate, not only in specs.
-    "q68_extract_accented" -> ((s, dir) =>
-      Extract.pipeline(Transcripts.fromDocumentsPrefixed(s, dir,
-        Normalize.FoldCoverageSentence))
-        .select(col("conv_id"), col("turn_idx"), col("text"))),
-
-    // ---------------------------------------------------------- extraction
-    // E1–E6 — THE FLAGSHIP: full extraction kernel over the documents-derived
-    // transcript corpus; oracle = the original document text (per-turn text
-    // equality, north_rule).
-    "q30_extract" -> ((s, dir) =>
-      Extract.pipeline(Transcripts.fromDocuments(s, dir))
-        .select(col("conv_id"), col("turn_idx"), col("text"))),
-
-    // E1 hardening UNDER THE GATE: the full kernel over
-    // the ADVERSARIAL payload shells — comment/CDATA/doctype decoys, HTML5
-    // complete comments, unquoted attributes, quoted '>', entity refs incl.
-    // a lone-surrogate ref, reverse-order layout lines, tool-JSON value
-    // decoys (Transcripts.fromDocumentsAdversarial). Every shape must still
-    // extract to exactly the document text, so the oracle is q30's.
-    "q59_extract_adversarial" -> ((s, dir) =>
-      Extract.pipeline(Transcripts.fromDocumentsAdversarial(s, dir))
-        .select(col("conv_id"), col("turn_idx"), col("text"))),
-
-    // S8 + S11 — CSV sink AND source in one gate: the q41 data product is
-    // written through the CSV sink (header, explicit quoting defaults) and
-    // read back through the CSV source with an EXPLICIT schema (inference
-    // would lose long-vs-int and the 2dp money doubles). The round-trip is
-    // lossless — the oracle is q41's own SQL — because shortest-repr double
-    // printing parses back to the identical double. The reference's analog
-    // reads `wells_aggregated.csv` into its map dashboards
-    // (src/bokeh_wells_map.ipynb cell 1).
-    "q62_csv_roundtrip" -> ((s, dir) => {
-      // pid in the path: two processes gating the same sf concurrently must
-      // not overwrite each other's CSV between the lazy write and read
-      // (floorMod, not abs — abs(Int.MinValue) is negative). q62Stage also
-      // sweeps dirs left by DEAD gate processes and deletes our own at JVM
-      // exit, so repeated Verify sweeps leave no /tmp litter.
-      val out = q62Stage(math.floorMod(dir.hashCode, 1 << 30))
-      queries("q41_data_product")(s, dir)
-        .write.mode("overwrite").option("header", "true").csv(out)
-      s.read.schema(
-          "n_name STRING, n_f BIGINT, n_o BIGINT, n_p BIGINT, total DOUBLE")
-        .option("header", "true").csv(out)
-    }),
-
-    // M16 — doc2vec, Spark-first (ml.Doc2Vec): the learned word vectors,
-    // exported at full double precision as q61's replay input. Rows-only
-    // (the skip-gram SGD fit is iterative); geometry pinned by Doc2VecSpec.
-    "q60_word_vectors" -> ((s, dir) => {
-      val (model, _) = doc2vecFitted(s, dir)
-      graft.ml.Doc2Vec.wordVectors(model)
-    }),
-
-    // M16 — document vectors by token-occurrence averaging
-    // (Word2VecModel.transform semantics: sum of in-vocab token vectors /
-    // TOTAL token count). The fit is taken as given via q60's export; the
-    // tokenize + join + average arithmetic is replayed by the oracle.
-    "q61_doc2vec" -> ((s, dir) => {
-      val (model, docs) = doc2vecFitted(s, dir)
-      graft.ml.Doc2Vec.docVectors(model, docs, "doc_id")
-    }),
-
-    // E5 — span offsets for the single-content-block shapes (0, 1, 3);
-    // layout shape 2 spans are pinned by ScalaTest instead.
-    "q31_spans" -> ((s, dir) => {
-      val turns = Transcripts.fromDocuments(s, dir)
-      Extract.pipeline(turns)
-        .withColumn("span", explode(col("spans")))
-        .select(col("conv_id"), col("turn_idx"),
-          col("span.start").as("span_start"), col("span.end").as("span_end"),
-          col("span.label").as("label"))
-        .filter(col("label") === "content")
-        .join(t(s, dir, "documents")
-            .filter(col("doc_id") % 4 =!= 2)
-            .select(
-              concat(lit("c"), lpad((col("doc_id") % Transcripts.ConvFold)
-                .cast("string"), 4, "0")).as("conv_id"),
-              (col("doc_id") / Transcripts.ConvFold).cast("int").as("turn_idx")),
-          Seq("conv_id", "turn_idx"), "left_semi")
-    })
-  )
-
-  // ------------------------------------------------------------------------
-  // oracles (DuckDB SQL over the same parquet tables)
-  // ------------------------------------------------------------------------
-
-  def oracleSql: Map[String, String] = Map(
-    "q01_agg_sums" ->
-      """SELECT l_returnflag, l_linestatus,
-           round(sum(l_quantity), 2) AS sum_qty,
-           round(sum(l_extendedprice), 2) AS sum_price,
-           count(*) AS n
-         FROM lineitem GROUP BY 1, 2""",
-
-    "q02_event_counts" ->
-      """SELECT event_type, count(*) AS n,
-           round(sum(value), 2) AS sum_value
-         FROM events GROUP BY 1""",
-
-    "q03_join_revenue" ->
-      """SELECT n_name,
-           round(sum(o_totalprice), 2) AS revenue,
-           count(*) AS n_orders
-         FROM orders
-         JOIN customer ON o_custkey = c_custkey
-         JOIN nation ON c_nationkey = n_nationkey
-         GROUP BY 1""",
-
-    "q04_semi_join" ->
-      """SELECT c_custkey, c_name FROM customer
-         WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 400000)""",
-
-    // NOT EXISTS, not NOT IN: the engine runs a left-anti join, and the two
-    // agree only while o_custkey is never NULL — one NULL makes NOT IN
-    // return ZERO rows while the anti-join returns every unmatched customer
-    // (a silent oracle divergence).
-    "q05_anti_join" ->
-      """SELECT c_custkey, c_name FROM customer c
-         WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)""",
-
-    "q06_window_topn" ->
-      """SELECT o_custkey, o_orderkey, round(o_totalprice, 2) AS price, rk
-         FROM (SELECT *, row_number() OVER (PARTITION BY o_custkey
-                 ORDER BY o_totalprice DESC, o_orderkey ASC) AS rk FROM orders)
-         WHERE rk <= 3""",
-
-    "q07_argmax" ->
-      """SELECT o_custkey, o_orderkey AS best_order,
-           round(o_totalprice, 2) AS best_price
-         FROM (SELECT *, row_number() OVER (PARTITION BY o_custkey
-                 ORDER BY o_totalprice DESC, o_orderkey ASC) AS rk FROM orders)
-         WHERE rk = 1""",
-
-    "q08_pivot" ->
-      """SELECT c_mktsegment,
-           CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_f,
-           CAST(sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS n_o,
-           CAST(sum(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END) AS BIGINT) AS n_p
-         FROM orders JOIN customer ON o_custkey = c_custkey GROUP BY 1""",
-
-    "q09_distinct" ->
-      "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem",
-
-    "q10_union_dedup" ->
-      """SELECT o_custkey AS custkey FROM orders
-         UNION SELECT c_custkey AS custkey FROM customer""",
-
-    "q11_stats" ->
-      """SELECT l_returnflag,
-           round(var_pop(l_quantity), 6) AS var_qty,
-           round(avg(l_quantity), 6) AS avg_qty
-         FROM lineitem GROUP BY 1""",
-
-    "q12_topk" ->
-      """SELECT o_orderkey, round(o_totalprice, 2) AS price
-         FROM orders ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10""",
-
-    "q13_tokens" ->
-      s"""SELECT doc_id, unnest($OracleTokens) AS token FROM documents""",
-
-    "q14_vocab" ->
-      s"""WITH toks AS (
-            SELECT doc_id, unnest($OracleTokens) AS token FROM documents),
-          stats AS (
-            SELECT token, count(DISTINCT doc_id) AS df FROM toks GROUP BY 1),
-          n AS (SELECT count(*) AS n_docs FROM documents)
-          SELECT token,
-            CAST(row_number() OVER (ORDER BY df DESC, token ASC) - 1 AS BIGINT) AS id,
-            df
-          FROM stats, n WHERE df >= 2 AND df <= 0.9 * n_docs""",
-
-    "q15_bow" ->
-      s"""WITH toks AS (
-            SELECT doc_id, unnest($OracleTokens) AS token FROM documents),
-          stats AS (
-            SELECT token, count(DISTINCT doc_id) AS df FROM toks GROUP BY 1),
-          n AS (SELECT count(*) AS n_docs FROM documents),
-          vocab AS (
-            SELECT token,
-              CAST(row_number() OVER (ORDER BY df DESC, token ASC) - 1 AS BIGINT) AS id
-            FROM stats, n WHERE df >= 2 AND df <= 0.9 * n_docs)
-          SELECT doc_id, id AS token_id, count(*) AS cnt
-          FROM toks JOIN vocab USING (token) GROUP BY 1, 2""",
-
-    "q16_tfidf" ->
-      s"""WITH toks AS (
-            SELECT doc_id, unnest($OracleTokens) AS token FROM documents),
-          stats AS (
-            SELECT token, count(DISTINCT doc_id) AS df FROM toks GROUP BY 1),
-          n AS (SELECT count(*) AS n_docs FROM documents),
-          vocab AS (
-            SELECT token, df,
-              CAST(row_number() OVER (ORDER BY df DESC, token ASC) - 1 AS BIGINT) AS id
-            FROM stats, n WHERE df >= 2 AND df <= 0.9 * n_docs),
-          bow AS (
-            SELECT doc_id, id AS token_id, df, count(*) AS cnt
-            FROM toks JOIN vocab USING (token) GROUP BY 1, 2, 3)
-          SELECT doc_id, token_id, cnt,
-            round(cnt * ln((SELECT n_docs FROM n) / CAST(df AS DOUBLE)), 6) AS tfidf
-          FROM bow""",
-
-    "q17_route" ->
-      s"""SELECT doc_id, CASE
-            WHEN list_contains($OracleTokens, 'scan') AND list_contains($OracleTokens, 'table') THEN 'scan_heavy'
-            WHEN list_contains($OracleTokens, 'join') AND list_contains($OracleTokens, 'sort') AND list_contains($OracleTokens, 'merge') THEN 'join_sort'
-            WHEN list_contains($OracleTokens, 'window') AND list_contains($OracleTokens, 'agg') THEN 'windowed'
-            WHEN list_contains($OracleTokens, 'stream') AND list_contains($OracleTokens, 'batch') THEN 'streaming'
-            WHEN list_contains($OracleTokens, 'vector') AND list_contains($OracleTokens, 'column') THEN 'vectorized'
-            WHEN list_contains($OracleTokens, 'hash') AND list_contains($OracleTokens, 'key') THEN 'hashing'
-            WHEN list_contains($OracleTokens, 'group') AND list_contains($OracleTokens, 'query') THEN 'grouped'
-            WHEN list_contains($OracleTokens, 'filter') AND list_contains($OracleTokens, 'row') THEN 'filtered'
-            WHEN list_contains($OracleTokens, 'order') AND list_contains($OracleTokens, 'part') THEN 'ordered'
-            WHEN list_contains($OracleTokens, 'data') AND list_contains($OracleTokens, 'value') THEN 'misc_data'
-            ELSE 'unrouted' END AS route
-          FROM documents""",
-
-    "q18_route_counts" ->
-      s"""WITH routed AS (
-            SELECT doc_id, CASE
-              WHEN list_contains($OracleTokens, 'scan') AND list_contains($OracleTokens, 'table') THEN 'scan_heavy'
-              WHEN list_contains($OracleTokens, 'join') AND list_contains($OracleTokens, 'sort') AND list_contains($OracleTokens, 'merge') THEN 'join_sort'
-              WHEN list_contains($OracleTokens, 'window') AND list_contains($OracleTokens, 'agg') THEN 'windowed'
-              WHEN list_contains($OracleTokens, 'stream') AND list_contains($OracleTokens, 'batch') THEN 'streaming'
-              WHEN list_contains($OracleTokens, 'vector') AND list_contains($OracleTokens, 'column') THEN 'vectorized'
-              WHEN list_contains($OracleTokens, 'hash') AND list_contains($OracleTokens, 'key') THEN 'hashing'
-              WHEN list_contains($OracleTokens, 'group') AND list_contains($OracleTokens, 'query') THEN 'grouped'
-              WHEN list_contains($OracleTokens, 'filter') AND list_contains($OracleTokens, 'row') THEN 'filtered'
-              WHEN list_contains($OracleTokens, 'order') AND list_contains($OracleTokens, 'part') THEN 'ordered'
-              WHEN list_contains($OracleTokens, 'data') AND list_contains($OracleTokens, 'value') THEN 'misc_data'
-              ELSE 'unrouted' END AS route
-            FROM documents)
-          SELECT route, count(*) AS n FROM routed GROUP BY 1""",
-
-    "q19_textstats" ->
-      """SELECT doc_id,
-           len(list_filter(string_split_regex(text, '\s+'), tk -> length(tk) > 0)) AS n_ws_tokens,
-           length(text) AS n_chars,
-           CASE WHEN list_contains(list_filter(string_split_regex(lower(text), '\s+'), tk -> length(tk) > 0), 'the')
-                THEN 'en' ELSE 'und' END AS lang_guess
-         FROM documents""",
-
-    "q20_quality" ->
-      s"""WITH f AS (
-           SELECT doc_id,
-             greatest(length(text), 1) AS len,
-             length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g')) AS punct,
-             length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS digits,
-             list_filter(string_split_regex(lower(text), '\\s+'), tk -> length(tk) > 0) AS toks
-           FROM documents),
-         g AS (
-           SELECT doc_id,
-             len, punct, digits, greatest(len(toks), 1) AS nt,
-             len(list_filter(toks, tk -> list_contains($OracleStops, tk))) AS stop_hits
-           FROM f)
-         SELECT doc_id,
-           greatest(0, least(1000000,
-             500000 + (least(nt, 64) * 300000) // 64
-                    + (stop_hits * 200000) // nt
-                    - (punct * 500000) // len
-                    - (digits * 500000) // len)) AS quality_ppm
-         FROM g""",
-
-    "q21_dedup_exact" ->
-      """WITH fp AS (
-           SELECT doc_id, md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS fingerprint
-           FROM documents),
-         keepers AS (
-           SELECT fingerprint, min(doc_id) AS keeper FROM fp GROUP BY 1)
-         SELECT doc_id, fingerprint, doc_id = keeper AS keep
-         FROM fp JOIN keepers USING (fingerprint)""",
-
-    "q22_string_ops" ->
-      """SELECT p_partkey,
-           (string_split(p_name, ' '))[-1] AS last_word,
-           CAST(split_part(p_brand, '#', 2) AS INT) AS brand_num,
-           lower(p_type) AS type_lc,
-           regexp_extract(p_name, '^(\w+)', 1) AS first_word
-         FROM part""",
-
-    "q23_prf" ->
-      """WITH d AS (
-           SELECT CAST(label AS INT) AS label, CAST(vec_id % 10 AS INT) AS pred
-           FROM embeddings),
-         by_label AS (
-           SELECT label, CAST(count(*) AS BIGINT) AS support,
-             CAST(sum(CASE WHEN pred = label THEN 1 ELSE 0 END) AS BIGINT) AS tp
-           FROM d GROUP BY 1),
-         by_pred AS (
-           SELECT pred AS label, CAST(count(*) AS BIGINT) AS predicted
-           FROM d GROUP BY 1),
-         j AS (
-           SELECT coalesce(a.label, b.label) AS label,
-             coalesce(support, 0) AS support, coalesce(tp, 0) AS tp,
-             coalesce(predicted, 0) AS predicted
-           FROM by_label a FULL OUTER JOIN by_pred b ON a.label = b.label),
-         pr AS (
-           SELECT label, support, tp,
-             round(CAST(tp AS DOUBLE) / greatest(predicted, 1), 6) AS precision,
-             round(CAST(tp AS DOUBLE) / greatest(support, 1), 6) AS recall
-           FROM j)
-         SELECT label, precision, recall,
-           round(CASE WHEN precision + recall > 0
-             THEN 2.0 * precision * recall / (precision + recall)
-             ELSE 0.0 END, 6) AS f1,
-           support,
-           round(CAST(sum(tp) OVER () AS DOUBLE)
-             / CAST(greatest(sum(support) OVER (), 1) AS DOUBLE), 6) AS accuracy
-         FROM pr""",
-
-    "q24_confusion" ->
-      ("""SELECT CAST(label AS INT) AS label, """ +
-        (0 until 10).map(i =>
-          s"CAST(sum(CASE WHEN vec_id % 10 = $i THEN 1 ELSE 0 END) AS BIGINT) AS p$i")
-          .mkString(", ") +
-        " FROM embeddings GROUP BY 1"),
-
-    "q25_events_hourly" ->
-      """SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n,
-           round(sum(value), 2) AS sum_value
-         FROM events GROUP BY 1, 2""",
-
-    "q26_events_props" ->
-      """WITH e AS (
-           SELECT event_type,
-             CAST(nullif(regexp_extract(props, '"k": ([0-9]+)', 1), '') AS INT) AS k
-           FROM events)
-         SELECT event_type, min(k) AS min_k, max(k) AS max_k,
-           count(CASE WHEN k IS NOT NULL THEN 1 END) AS n_k
-         FROM e GROUP BY 1""",
-
-    "q27_ann_topk" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-         scored AS (
-           SELECT p.vec_id AS p_key, c.vec_id AS c_key,
-             round(list_dot_product(c.e, p.e)
-               / (sqrt(list_dot_product(c.e, c.e)) * sqrt(list_dot_product(p.e, p.e))), 6) AS cos
-           FROM v c, v p
-           WHERE p.vec_id < 3 AND c.vec_id <> p.vec_id),
-         ranked AS (
-           SELECT *, CAST(row_number() OVER (PARTITION BY p_key
-             ORDER BY cos DESC, c_key ASC) AS INT) AS rk FROM scored)
-         SELECT p_key, c_key, cos, rk FROM ranked WHERE rk <= 5""",
-
-    "q28_jaccard" ->
-      """WITH d AS (
-           SELECT doc_id, string_split(text, ' ') AS w FROM documents
-           WHERE doc_id % 10 = 0),
-         sh_raw AS (
-           SELECT doc_id AS k, unnest(list_distinct(list_transform(
-             generate_series(1, greatest(len(w) - 2, 1)),
-             i -> array_to_string(w[i:i+2], ' ')))) AS sh
-           FROM d),
-         capped AS (
-           SELECT sh FROM (SELECT sh, count(*) AS c FROM sh_raw GROUP BY 1)
-           WHERE c <= 20),
-         sh AS (SELECT k, sh FROM sh_raw JOIN capped USING (sh)),
-         sizes AS (SELECT k, count(*) AS sz FROM sh GROUP BY 1),
-         pairs AS (
-           SELECT a.k AS key_a, b.k AS key_b, count(*) AS inter
-           FROM sh a JOIN sh b ON a.sh = b.sh AND a.k < b.k
-           GROUP BY 1, 2)
-         SELECT key_a, key_b,
-           round(CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter), 6) AS jaccard
-         FROM pairs
-         JOIN sizes sa ON sa.k = key_a
-         JOIN sizes sb ON sb.k = key_b
-         WHERE CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter) >= 0.3""",
-
-    "q29_minhash" ->
-      """WITH d AS (
-           SELECT doc_id, string_split(text, ' ') AS w FROM documents
-           WHERE doc_id % 10 = 0),
-         sh AS (
-           SELECT doc_id, unnest(list_distinct(list_transform(
-             generate_series(1, greatest(len(w) - 2, 1)),
-             i -> array_to_string(w[i:i+2], ' ')))) AS sh
-           FROM d),
-         h AS (
-           SELECT doc_id,
-             ('0x' || substr(md5(sh), 1, 8))::BIGINT % 2147483647 AS hv
-           FROM sh),
-         hi AS (SELECT unnest(generate_series(0, 7)) AS h_idx)
-         SELECT doc_id, CAST(h_idx AS INT) AS h_idx,
-           min((hv * ((1000000007 * (h_idx + 1)) % 2147483647)
-                + ((998244353 * (h_idx * h_idx + 1)) % 2147483647)) % 2147483647) AS minhash
-         FROM h, hi GROUP BY 1, 2""",
-
-    "q45_minhash_lsh" ->
-      """WITH d AS (
-           SELECT doc_id, string_split(text, ' ') AS w FROM documents
-           WHERE doc_id % 10 = 0),
-         sh AS (
-           SELECT doc_id, unnest(list_distinct(list_transform(
-             generate_series(1, greatest(len(w) - 2, 1)),
-             i -> array_to_string(w[i:i+2], ' ')))) AS sh
-           FROM d),
-         h AS (
-           SELECT doc_id,
-             ('0x' || substr(md5(sh), 1, 8))::BIGINT % 2147483647 AS hv
-           FROM sh),
-         hi AS (SELECT unnest(generate_series(0, 15)) AS h_idx),
-         sig AS (
-           SELECT doc_id, h_idx,
-             min((hv * ((1000000007 * (h_idx + 1)) % 2147483647)
-                  + ((998244353 * (h_idx * h_idx + 1)) % 2147483647)) % 2147483647) AS mh
-           FROM h, hi GROUP BY 1, 2),
-         band AS (
-           SELECT doc_id, h_idx // 4 AS band,
-             string_agg(CAST(mh AS VARCHAR), ':' ORDER BY h_idx) AS bucket
-           FROM sig GROUP BY 1, 2),
-         pairs AS (
-           SELECT DISTINCT a.doc_id AS key_a, b.doc_id AS key_b
-           FROM band a JOIN band b
-             ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
-         m AS (
-           SELECT p.key_a, p.key_b,
-             sum(CASE WHEN sa.mh = sb.mh THEN 1 ELSE 0 END) AS slots
-           FROM pairs p
-           JOIN sig sa ON sa.doc_id = p.key_a
-           JOIN sig sb ON sb.doc_id = p.key_b AND sb.h_idx = sa.h_idx
-           GROUP BY 1, 2)
-         SELECT key_a, key_b, round(slots / 16.0, 6) AS est_jaccard FROM m""",
-
-    // q45's procedure with the degenerate-text rewrite and the hot-bucket
-    // cap replayed: buckets with population > 5 are dropped before pairing.
-    "q58_lsh_bucket_cap" ->
-      """WITH d AS (
-           SELECT doc_id, string_split(CASE
-             WHEN doc_id IN (30, 130) THEN 'eee fff ggg hhh'
-             WHEN doc_id % 50 = 0 THEN 'aaa bbb ccc ddd'
-             ELSE text END, ' ') AS w
-           FROM documents WHERE doc_id % 10 = 0),
-         sh AS (
-           SELECT doc_id, unnest(list_distinct(list_transform(
-             generate_series(1, greatest(len(w) - 2, 1)),
-             i -> array_to_string(w[i:i+2], ' ')))) AS sh
-           FROM d),
-         h AS (
-           SELECT doc_id,
-             ('0x' || substr(md5(sh), 1, 8))::BIGINT % 2147483647 AS hv
-           FROM sh),
-         hi AS (SELECT unnest(generate_series(0, 15)) AS h_idx),
-         sig AS (
-           SELECT doc_id, h_idx,
-             min((hv * ((1000000007 * (h_idx + 1)) % 2147483647)
-                  + ((998244353 * (h_idx * h_idx + 1)) % 2147483647)) % 2147483647) AS mh
-           FROM h, hi GROUP BY 1, 2),
-         band AS (
-           SELECT doc_id, h_idx // 4 AS band,
-             string_agg(CAST(mh AS VARCHAR), ':' ORDER BY h_idx) AS bucket
-           FROM sig GROUP BY 1, 2),
-         small AS (SELECT band, bucket FROM band
-                   GROUP BY band, bucket HAVING count(*) <= 5),
-         bandc AS (SELECT b.doc_id, b.band, b.bucket
-                   FROM band b JOIN small USING (band, bucket)),
-         pairs AS (
-           SELECT DISTINCT a.doc_id AS key_a, b.doc_id AS key_b
-           FROM bandc a JOIN bandc b
-             ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
-         m AS (
-           SELECT p.key_a, p.key_b,
-             sum(CASE WHEN sa.mh = sb.mh THEN 1 ELSE 0 END) AS slots
-           FROM pairs p
-           JOIN sig sa ON sa.doc_id = p.key_a
-           JOIN sig sb ON sb.doc_id = p.key_b AND sb.h_idx = sa.h_idx
-           GROUP BY 1, 2)
-         SELECT key_a, key_b, round(slots / 16.0, 6) AS est_jaccard FROM m""",
-
-    "q32_split" ->
-      """SELECT vec_id, CAST(label AS INT) AS label,
-           row_number() OVER (PARTITION BY CAST(label AS INT)
-               ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id)
-             <= (count(*) OVER (PARTITION BY CAST(label AS INT)) * 3 + 9) // 10
-             AS is_test
-         FROM embeddings""",
-
-    // hand-compiled replay of PosLexicon ∘ allowlist {NOUN, VERB}: the four
-    // ADJ tokens are the only drops; agg/dup the only lemma rewrites
-    "q43_lemma_pos" ->
-      s"""SELECT doc_id, unnest(list_transform(
-            list_filter($OracleTokens,
-              tk -> tk NOT IN ('fast', 'slow', 'big', 'small')),
-            tk -> CASE tk WHEN 'agg' THEN 'aggregate'
-                          WHEN 'dup' THEN 'duplicate' ELSE tk END)) AS token
-          FROM documents""",
-
-    "q33_sample" ->
-      """SELECT o_orderkey, o_custkey FROM orders
-         ORDER BY md5(CAST(o_orderkey AS VARCHAR)), o_orderkey LIMIT 20""",
-
-    "q34_route_hist" ->
-      s"""WITH routed AS (
-            SELECT doc_id, $OracleTokens AS tokens, CASE
-              WHEN list_contains($OracleTokens, 'scan') AND list_contains($OracleTokens, 'table') THEN 'scan_heavy'
-              WHEN list_contains($OracleTokens, 'join') AND list_contains($OracleTokens, 'sort') AND list_contains($OracleTokens, 'merge') THEN 'join_sort'
-              WHEN list_contains($OracleTokens, 'window') AND list_contains($OracleTokens, 'agg') THEN 'windowed'
-              WHEN list_contains($OracleTokens, 'stream') AND list_contains($OracleTokens, 'batch') THEN 'streaming'
-              WHEN list_contains($OracleTokens, 'vector') AND list_contains($OracleTokens, 'column') THEN 'vectorized'
-              WHEN list_contains($OracleTokens, 'hash') AND list_contains($OracleTokens, 'key') THEN 'hashing'
-              WHEN list_contains($OracleTokens, 'group') AND list_contains($OracleTokens, 'query') THEN 'grouped'
-              WHEN list_contains($OracleTokens, 'filter') AND list_contains($OracleTokens, 'row') THEN 'filtered'
-              WHEN list_contains($OracleTokens, 'order') AND list_contains($OracleTokens, 'part') THEN 'ordered'
-              WHEN list_contains($OracleTokens, 'data') AND list_contains($OracleTokens, 'value') THEN 'misc_data'
-              ELSE 'unrouted' END AS route
-            FROM documents),
-          tok AS (SELECT route, unnest(tokens) AS token FROM routed)
-          SELECT route, token, count(*) AS cnt
-          FROM tok GROUP BY 1, 2 HAVING count(*) >= 10""",
-
-    "q35_sessionize" ->
-      """WITH e AS (
-           SELECT event_id, user_id, ts, epoch_us(ts) AS us,
-             lag(epoch_us(ts), 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-           FROM events),
-         f AS (
-           SELECT event_id, user_id, ts,
-             CASE WHEN prev_us IS NULL OR us - prev_us > 600000000 THEN 1 ELSE 0 END AS new_sess
-           FROM e)
-         SELECT event_id, user_id,
-           CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_idx
-         FROM f""",
-
-    "q41_data_product" ->
-      OracleDataProduct,
-
-    // S8+S11 — the CSV round-trip must reproduce the data product exactly
-    "q62_csv_roundtrip" ->
-      OracleDataProduct,
-
-    // ---- multimodal: DuckDB replays the synthetic generator (pure id
-    // arithmetic — Multimodal.synthetic: len = 64 + id%64, byte_i =
-    // (id*31 + i*7) % 251, bucket = byte >> 5; kind = id%3).
-    "q36_media_meta" ->
-      """SELECT CASE s % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-                ELSE 'video' END AS kind,
-           'fake' AS codec, count(*) AS count
-         FROM generate_series(0, 299) t(s) GROUP BY 1, 2""",
-
-    "q37_media_features" ->
-      """WITH m AS (
-           SELECT CAST(s AS BIGINT) AS media_id, CAST(64 + s % 64 AS INT) AS n_bytes
-           FROM generate_series(0, 299) t(s)),
-         cnt AS (
-           SELECT m.media_id,
-             CAST(((m.media_id * 31 + i.i * 7) % 251) // 32 AS INT) AS feat_idx,
-             count(*) AS c
-           FROM m JOIN generate_series(0, 126) i(i) ON i.i < m.n_bytes
-           GROUP BY 1, 2),
-         idx AS (SELECT CAST(s AS INT) AS feat_idx FROM generate_series(0, 7) t(s))
-         SELECT m.media_id, idx.feat_idx,
-           CAST(coalesce(cnt.c, 0) AS BIGINT) AS hist_count, m.n_bytes
-         FROM m CROSS JOIN idx
-         LEFT JOIN cnt ON cnt.media_id = m.media_id AND cnt.feat_idx = idx.feat_idx""",
-
-    // q63 — the BMP pixel arithmetic replayed: w = 4 + id%4, h = 3 + id%3,
-    // channel (x, y, top-down) formulas mod 251, ppm = floor(sum·10^6 / wh),
-    // plus the POSITION-WEIGHTED red sum Σ r(x,y)·(y·w + x + 1). Plain sums
-    // are permutation-invariant (a vertically-flipped decode would pass
-    // them); the weighted sum is what makes a hash match prove ImageIO
-    // returned the encoded pixels AT their encoded positions.
-    "q63_image_decode" ->
-      """WITH px AS (
-           SELECT CAST(s AS BIGINT) AS media_id,
-             4 + s % 4 AS w, 3 + s % 3 AS h, x.x AS x, y.y AS y
-           FROM generate_series(0, 299) t(s)
-           JOIN generate_series(0, 6) x(x) ON x.x < 4 + s % 4
-           JOIN generate_series(0, 4) y(y) ON y.y < 3 + s % 3),
-         agg AS (
-           SELECT media_id, any_value(w) AS w, any_value(h) AS h,
-             sum((media_id * 31 + y * 17 + x * 7) % 251) AS sr,
-             sum((media_id * 13 + y * 11 + x * 5) % 251) AS sg,
-             sum((media_id * 29 + y * 23 + x * 3) % 251) AS sb,
-             sum(((media_id * 31 + y * 17 + x * 7) % 251)
-                 * (y * w + x + 1)) AS wr
-           FROM px GROUP BY 1)
-         SELECT media_id, TRUE AS decoded,
-           CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-           CAST(sr * 1000000 // (w * h) AS BIGINT) AS r_ppm,
-           CAST(sg * 1000000 // (w * h) AS BIGINT) AS g_ppm,
-           CAST(sb * 1000000 // (w * h) AS BIGINT) AS b_ppm,
-           CAST(wr AS BIGINT) AS r_wsum
-         FROM agg""",
-
-    // q64 — the WAV sample arithmetic replayed: n = 50 + id%50 samples,
-    // sample i = ((id·31 + i·7) mod 2003) − 1001, plus the ORDER-pinning
-    // weighted sum Σ vᵢ·(i+1) (plain sums would pass a reversed stream).
-    "q64_audio_decode" ->
-      """WITH sm AS (
-           SELECT CAST(t.s AS BIGINT) AS media_id, i.i AS i,
-             ((t.s * 31 + i.i * 7) % 2003) - 1001 AS v
-           FROM generate_series(0, 299) t(s)
-           JOIN generate_series(0, 98) i(i) ON i.i < 50 + t.s % 50)
-         SELECT media_id, TRUE AS decoded, CAST(8000 AS INT) AS sample_rate,
-           CAST(count(*) AS BIGINT) AS n_samples,
-           CAST(sum(v) AS BIGINT) AS sum_pcm,
-           CAST(sum(abs(v)) AS BIGINT) AS sum_abs_pcm,
-           CAST(sum(v * (i + 1)) AS BIGINT) AS wsum_pcm
-         FROM sm GROUP BY 1""",
-
-    // q69 — the MJPEG-AVI gate replayed: n = 3 + id%4 frames, every frame
-    // 16×16, level of frame f = (id·7 + f·13) mod 8. A green row proves the
-    // container walk found exactly the encoded frames IN ORDER and ImageIO
-    // recovered each frame's gray level on the 32-wide grid.
-    "q69_video_decode" ->
-      """SELECT CAST(t.s AS BIGINT) AS media_id, TRUE AS decoded,
-           CAST(f.f AS INT) AS frame_idx,
-           CAST(16 AS INT) AS width, CAST(16 AS INT) AS height,
-           CAST((t.s * 7 + f.f * 13) % 8 AS INT) AS level
-         FROM generate_series(0, 299) t(s)
-         JOIN generate_series(0, 6) f(f) ON f.f < 3 + t.s % 4""",
-
-    // q71 — the resize loop replayed: every 6×4 output pixel is source
-    // pixel (sx, sy) = (⌊x·sw/6⌋, ⌊y·sh/4⌋) of the q63 arithmetic image,
-    // then the q63 stats over the RESIZED raster (ppm floor-div by 24,
-    // weighted sum with w=6). A green row proves decode, the integer
-    // resample map, the BMP re-encode, and the second decode all agree.
-    "q71_resize_decode" ->
-      """WITH src AS (
-           SELECT CAST(s AS BIGINT) AS media_id, x.x AS x, y.y AS y,
-             (x.x * (4 + s % 4)) // 6 AS sx, (y.y * (3 + s % 3)) // 4 AS sy
-           FROM generate_series(0, 299) t(s)
-           CROSS JOIN generate_series(0, 5) x(x)
-           CROSS JOIN generate_series(0, 3) y(y)),
-         agg AS (
-           SELECT media_id,
-             sum((media_id * 31 + sy * 17 + sx * 7) % 251) AS sr,
-             sum((media_id * 13 + sy * 11 + sx * 5) % 251) AS sg,
-             sum((media_id * 29 + sy * 23 + sx * 3) % 251) AS sb,
-             sum(((media_id * 31 + sy * 17 + sx * 7) % 251)
-                 * (y * 6 + x + 1)) AS wr
-           FROM src GROUP BY 1)
-         SELECT media_id, TRUE AS decoded,
-           CAST(6 AS INT) AS width, CAST(4 AS INT) AS height,
-           CAST(sr * 1000000 // 24 AS BIGINT) AS r_ppm,
-           CAST(sg * 1000000 // 24 AS BIGINT) AS g_ppm,
-           CAST(sb * 1000000 // 24 AS BIGINT) AS b_ppm,
-           CAST(wr AS BIGINT) AS r_wsum
-         FROM agg""",
-
-    // q72 — recall replayed from the three ANN exports themselves: per
-    // probe, |approx ∩ exact| · 10^6 DIV k, integer end to end.
-    "q72_ann_recall" ->
-      """WITH b AS (SELECT p_key, c_key
-                    FROM read_parquet('__VERIFY_OUT__/q27_ann_topk/*.parquet')),
-         iv AS (SELECT p_key, c_key
-                FROM read_parquet('__VERIFY_OUT__/q70_ann_ivf/*.parquet')),
-         ls AS (SELECT p_key, c_key
-                FROM read_parquet('__VERIFY_OUT__/q47_ann_lsh/*.parquet'))
-         SELECT 'ivf' AS method, b.p_key,
-           CAST(sum(CASE WHEN iv.c_key IS NOT NULL THEN 1 ELSE 0 END)
-                * 1000000 // count(*) AS BIGINT) AS recall_ppm
-         FROM b LEFT JOIN iv ON iv.p_key = b.p_key AND iv.c_key = b.c_key
-         GROUP BY 2
-         UNION ALL
-         SELECT 'lsh' AS method, b.p_key,
-           CAST(sum(CASE WHEN ls.c_key IS NOT NULL THEN 1 ELSE 0 END)
-                * 1000000 // count(*) AS BIGINT) AS recall_ppm
-         FROM b LEFT JOIN ls ON ls.p_key = b.p_key AND ls.c_key = b.c_key
-         GROUP BY 2""",
-
-    // q73 — the q70 IVF replay parametrized by nprobe ∈ {1,3,5,8}: same
-    // centroid/assignment/routing arithmetic from q40's export, candidate
-    // top-5 per (nprobe, probe), recall vs q27's exact export, integer ppm.
-    "q73_ivf_nprobe_curve" ->
-      """WITH asg AS (SELECT vec_id, cluster
-                      FROM read_parquet('__VERIFY_OUT__/q40_kmeans/*.parquet')),
-         pts AS (SELECT a.vec_id, a.cluster, d.d AS dim,
-                   CAST(floor(e.embedding[d.d]::DOUBLE * 10000.0 + 0.5)
-                     AS BIGINT) AS vq
-                 FROM asg a JOIN embeddings e USING (vec_id),
-                      generate_series(1, 64) d(d)),
-         cent AS (SELECT cluster AS list, dim,
-                    CAST(floor(CAST(sum(vq) AS DOUBLE) / count(*) + 0.5)
-                      AS BIGINT) AS c4
-                  FROM pts GROUP BY 1, 2),
-         d2 AS (SELECT p.vec_id, c.list,
-                  CAST(sum((p.vq - c.c4) * (p.vq - c.c4)) AS BIGINT) AS d2
-                FROM pts p JOIN cent c USING (dim) GROUP BY 1, 2),
-         assigned AS (
-           SELECT vec_id, list FROM (
-             SELECT vec_id, list, row_number() OVER (PARTITION BY vec_id
-               ORDER BY d2 ASC, list ASC) AS rn FROM d2) WHERE rn = 1),
-         np AS (SELECT unnest([1, 3, 5, 8]) AS nprobe),
-         routing AS (
-           SELECT n.nprobe, d.vec_id AS p_key, d.list FROM (
-             SELECT vec_id, list, row_number() OVER (PARTITION BY vec_id
-               ORDER BY d2 ASC, list ASC) AS pr FROM d2 WHERE vec_id < 3) d
-           JOIN np n ON d.pr <= n.nprobe),
-         v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-         cand AS (
-           SELECT r.nprobe, r.p_key, a.vec_id AS c_key,
-             round(list_dot_product(c.e, p.e)
-               / (sqrt(list_dot_product(c.e, c.e))
-                  * sqrt(list_dot_product(p.e, p.e))), 6) AS cos
-           FROM assigned a JOIN routing r USING (list)
-           JOIN v c ON c.vec_id = a.vec_id
-           JOIN v p ON p.vec_id = r.p_key
-           WHERE a.vec_id <> r.p_key),
-         ivf AS (
-           SELECT nprobe, p_key, c_key FROM (
-             SELECT *, row_number() OVER (PARTITION BY nprobe, p_key
-               ORDER BY cos DESC, c_key ASC) AS rk FROM cand) WHERE rk <= 5),
-         b AS (SELECT p_key, c_key
-               FROM read_parquet('__VERIFY_OUT__/q27_ann_topk/*.parquet')),
-         bn AS (SELECT n.nprobe, b.p_key, b.c_key FROM b CROSS JOIN np n)
-         SELECT CAST(bn.nprobe AS INT) AS nprobe,
-           CAST(sum(CASE WHEN i.c_key IS NOT NULL THEN 1 ELSE 0 END)
-                * 1000000 // count(*) AS BIGINT) AS mean_recall_ppm
-         FROM bn LEFT JOIN ivf i ON i.nprobe = bn.nprobe
-           AND i.p_key = bn.p_key AND i.c_key = bn.c_key
-         GROUP BY 1""",
-
-    // q74 — the full curation composition replayed: the q20 quality
-    // formula at the 650000 gate, the q21 md5 keeper over the qualified
-    // set, then the q45 minhash banding over the unique survivors with
-    // the drop rule slots ≥ 8 (est_jaccard ≥ 0.5 exactly — slots/16 is a
-    // 1/16 grid, so the integer compare cannot disagree with the float).
-    "q74_curation" ->
-      s"""WITH f AS (
-           SELECT doc_id, text,
-             greatest(length(text), 1) AS len,
-             length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g')) AS punct,
-             length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS digits,
-             list_filter(string_split_regex(lower(text), '\\s+'), tk -> length(tk) > 0) AS toks
-           FROM documents),
-         g AS (
-           SELECT doc_id, text, len, punct, digits,
-             greatest(len(toks), 1) AS nt,
-             len(list_filter(toks, tk -> list_contains($OracleStops, tk))) AS stop_hits
-           FROM f),
-         q AS (
-           SELECT doc_id, text,
-             greatest(0, least(1000000,
-               500000 + (least(nt, 64) * 300000) // 64
-                      + (stop_hits * 200000) // nt
-                      - (punct * 500000) // len
-                      - (digits * 500000) // len)) AS quality_ppm
-           FROM g),
-         qual AS (SELECT * FROM q WHERE quality_ppm >= 650000),
-         fp AS (
-           SELECT doc_id, md5(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS fingerprint
-           FROM qual),
-         keepers AS (SELECT fingerprint, min(doc_id) AS keeper FROM fp GROUP BY 1),
-         uniq AS (
-           SELECT q.doc_id, q.text, q.quality_ppm
-           FROM qual q JOIN fp ON fp.doc_id = q.doc_id
-           JOIN keepers k ON k.fingerprint = fp.fingerprint AND k.keeper = q.doc_id),
-         d AS (SELECT doc_id, string_split(text, ' ') AS w FROM uniq),
-         sh AS (
-           SELECT doc_id, unnest(list_distinct(list_transform(
-             generate_series(1, greatest(len(w) - 2, 1)),
-             i -> array_to_string(w[i:i+2], ' ')))) AS sh
-           FROM d),
-         h AS (
-           SELECT doc_id,
-             ('0x' || substr(md5(sh), 1, 8))::BIGINT % 2147483647 AS hv
-           FROM sh),
-         hi AS (SELECT unnest(generate_series(0, 15)) AS h_idx),
-         sig AS (
-           SELECT doc_id, h_idx,
-             min((hv * ((1000000007 * (h_idx + 1)) % 2147483647)
-                  + ((998244353 * (h_idx * h_idx + 1)) % 2147483647)) % 2147483647) AS mh
-           FROM h, hi GROUP BY 1, 2),
-         band AS (
-           SELECT doc_id, h_idx // 4 AS band,
-             string_agg(CAST(mh AS VARCHAR), ':' ORDER BY h_idx) AS bucket
-           FROM sig GROUP BY 1, 2),
-         pairs AS (
-           SELECT DISTINCT a.doc_id AS key_a, b.doc_id AS key_b
-           FROM band a JOIN band b
-             ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
-         m AS (
-           SELECT p.key_a, p.key_b,
-             sum(CASE WHEN sa.mh = sb.mh THEN 1 ELSE 0 END) AS slots
-           FROM pairs p
-           JOIN sig sa ON sa.doc_id = p.key_a
-           JOIN sig sb ON sb.doc_id = p.key_b AND sb.h_idx = sa.h_idx
-           GROUP BY 1, 2),
-         dropped AS (SELECT DISTINCT key_b AS doc_id FROM m WHERE slots >= 8)
-         SELECT u.doc_id, u.quality_ppm FROM uniq u
-         WHERE NOT EXISTS (SELECT 1 FROM dropped x WHERE x.doc_id = u.doc_id)""",
-
-    "q38_frame_sample" ->
-      """WITH v AS (
-           SELECT CAST(s AS BIGINT) AS media_id, 1000 + s % 9000 AS dur
-           FROM generate_series(0, 299) t(s) WHERE s % 3 = 2)
-         SELECT media_id, CAST(f.f AS INT) AS frame_idx,
-           CAST(f.f * 1000 AS INT) AS frame_ts_ms
-         FROM v JOIN generate_series(0, 9) f(f)
-           ON f.f < CAST(ceil(dur / 1000.0) AS INT)""",
-
-    // ---- SimHash (md5-portable 32-bit variant; all-pairs scan is exact
-    // because maxHamming=3 < bands=4 makes the Spark-side banding lossless)
-    "q39_simhash" ->
-      """WITH d AS (
-           SELECT doc_id, string_split(text, ' ') AS w FROM documents
-           WHERE doc_id % 10 = 0),
-         tok AS (SELECT doc_id, unnest(w) AS t FROM d),
-         h AS (SELECT doc_id, ('0x' || substr(md5(t), 1, 8))::BIGINT AS hv FROM tok),
-         votes AS (
-           SELECT doc_id, b.b AS bit,
-             sum(CASE WHEN (hv >> CAST(b.b AS INT)) & 1 = 1 THEN 1 ELSE -1 END) AS vote
-           FROM h CROSS JOIN generate_series(0, 31) b(b) GROUP BY 1, 2),
-         sig AS (
-           SELECT doc_id, CAST(sum(CASE WHEN vote > 0
-             THEN (CAST(1 AS BIGINT) << CAST(bit AS INT)) ELSE 0 END) AS BIGINT) AS sh
-           FROM votes GROUP BY 1)
-         SELECT a.doc_id AS key_a, b.doc_id AS key_b,
-           CAST(bit_count(xor(a.sh, b.sh)) AS INT) AS hamming
-         FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-         WHERE bit_count(xor(a.sh, b.sh)) <= 3""",
-
-    // ---- P12 UTM inverse (Snyder series restated step-by-step in SQL with
-    // JVM-folded constants; see Utm.oracleSql)
-    "q42_utm" -> graft.dims.Utm.oracleSql(
-      from = "nation", keyExpr = "n_nationkey",
-      easting = "350000.0 + n_nationkey * 10000.0",
-      northing = "4200000.0 + n_regionkey * 50000.0", zone = 13),
-
-    // LSH ANN — the full lshTopK procedure replayed: deterministic
-    // hyperplane buckets (bits=4 = Ann.bitsFor(n) for every testdata sf,
-    // n ≤ 4096), multi-probe Hamming-1 fan-out, same-bucket cosine,
-    // dedup, window top-k.
-    "q47_ann_lsh" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-         proj AS (
-           SELECT vec_id, b.b AS b,
-             list_dot_product(e, list_transform(generate_series(0, 63),
-               d -> CAST((b.b*64 + d) * 2654435761 % 1024 - 512 AS DOUBLE))) AS pr
-           FROM v CROSS JOIN generate_series(0, 3) b(b)),
-         bkt AS (
-           SELECT vec_id, CAST(sum(CASE WHEN pr > 0
-             THEN (1 << CAST(b AS INT)) ELSE 0 END) AS INT) AS bucket
-           FROM proj GROUP BY 1),
-         c AS (SELECT v.vec_id AS c_key, v.e AS c_vec, bkt.bucket
-               FROM v JOIN bkt USING (vec_id)),
-         p0 AS (SELECT v.vec_id AS p_key, v.e AS p_vec, bkt.bucket
-                FROM v JOIN bkt USING (vec_id) WHERE v.vec_id < 3),
-         p AS (
-           SELECT p_key, p_vec, unnest(list_prepend(bucket,
-             list_transform(generate_series(0, 3),
-               i -> CAST(xor(bucket, 1 << CAST(i AS INT)) AS INT)))) AS bucket
-           FROM p0),
-         cand AS (
-           SELECT DISTINCT p.p_key, c.c_key,
-             round(list_dot_product(c.c_vec, p.p_vec)
-               / (sqrt(list_dot_product(c.c_vec, c.c_vec))
-                  * sqrt(list_dot_product(p.p_vec, p.p_vec))), 6) AS cos
-           FROM c JOIN p ON c.bucket = p.bucket AND c.c_key <> p.p_key),
-         ranked AS (
-           SELECT *, CAST(row_number() OVER (PARTITION BY p_key
-             ORDER BY cos DESC, c_key ASC) AS INT) AS rk FROM cand)
-         SELECT p_key, c_key, cos, rk FROM ranked WHERE rk <= 5""",
-
-    // T2 scale path #2 — the ENTIRE IVF procedure replayed from q40's
-    // exported clustering + the embeddings table: grid-quantized centroid
-    // build (the q40 1e-4 grid; floor(Σvq/cnt + 0.5) per dim), exact
-    // integer squared distance of every vector to every list centroid,
-    // argmin list assignment (tie → lower list), default-sized probe
-    // routing (nprobeFor: 8 of 10 lists) by the same distances, then exact
-    // cosine rescore of the routed candidates. Only the final cosine runs
-    // in floats (the q27 pattern).
-    "q70_ann_ivf" ->
-      """WITH asg AS (SELECT vec_id, cluster
-                      FROM read_parquet('__VERIFY_OUT__/q40_kmeans/*.parquet')),
-         pts AS (SELECT a.vec_id, a.cluster, d.d AS dim,
-                   CAST(floor(e.embedding[d.d]::DOUBLE * 10000.0 + 0.5)
-                     AS BIGINT) AS vq
-                 FROM asg a JOIN embeddings e USING (vec_id),
-                      generate_series(1, 64) d(d)),
-         cent AS (SELECT cluster AS list, dim,
-                    CAST(floor(CAST(sum(vq) AS DOUBLE) / count(*) + 0.5)
-                      AS BIGINT) AS c4
-                  FROM pts GROUP BY 1, 2),
-         d2 AS (SELECT p.vec_id, c.list,
-                  CAST(sum((p.vq - c.c4) * (p.vq - c.c4)) AS BIGINT) AS d2
-                FROM pts p JOIN cent c USING (dim) GROUP BY 1, 2),
-         assigned AS (
-           SELECT vec_id, list FROM (
-             SELECT vec_id, list, row_number() OVER (PARTITION BY vec_id
-               ORDER BY d2 ASC, list ASC) AS rn FROM d2) WHERE rn = 1),
-         routing AS (
-           SELECT vec_id AS p_key, list FROM (
-             SELECT vec_id, list, row_number() OVER (PARTITION BY vec_id
-               ORDER BY d2 ASC, list ASC) AS pr FROM d2 WHERE vec_id < 3)
-           WHERE pr <= 8),
-         v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-         cand AS (
-           SELECT r.p_key, a.vec_id AS c_key,
-             round(list_dot_product(c.e, p.e)
-               / (sqrt(list_dot_product(c.e, c.e))
-                  * sqrt(list_dot_product(p.e, p.e))), 6) AS cos
-           FROM assigned a JOIN routing r USING (list)
-           JOIN v c ON c.vec_id = a.vec_id
-           JOIN v p ON p.vec_id = r.p_key
-           WHERE a.vec_id <> r.p_key),
-         ranked AS (
-           SELECT *, CAST(row_number() OVER (PARTITION BY p_key
-             ORDER BY cos DESC, c_key ASC) AS INT) AS rk FROM cand)
-         SELECT p_key, c_key, cos, rk FROM ranked WHERE rk <= 5""",
-
-    // Embedding near-dup scale path — deterministic sign buckets (bits=4 =
-    // Ann.bitsFor(n) for every testdata sf, n ≤ 4096), bucket equi-join,
-    // cosine threshold.
-    "q51_embed_dup" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-         proj AS (
-           SELECT vec_id, b.b AS b,
-             list_dot_product(e, list_transform(generate_series(0, 63),
-               d -> CAST((b.b*64 + d) * 2654435761 % 1024 - 512 AS DOUBLE))) AS pr
-           FROM v CROSS JOIN generate_series(0, 3) b(b)),
-         bkt AS (
-           SELECT vec_id, CAST(sum(CASE WHEN pr > 0
-             THEN (1 << CAST(b AS INT)) ELSE 0 END) AS INT) AS bucket
-           FROM proj GROUP BY 1),
-         w AS (SELECT v.vec_id, v.e, bkt.bucket FROM v JOIN bkt USING (vec_id))
-         SELECT * FROM (
-           SELECT a.vec_id AS key_a, b.vec_id AS key_b,
-             round(list_dot_product(a.e, b.e)
-               / (sqrt(list_dot_product(a.e, a.e))
-                  * sqrt(list_dot_product(b.e, b.e))), 6) AS cos
-           FROM w a JOIN w b ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
-         WHERE cos >= 0.3""",
-
-    // M13 grid search — chunk sigmoids × threshold grid, confusion cells
-    // against the 0.5 operating point, metrics at 6dp.
-    "q53_grid_search" ->
-      s"""WITH d AS (SELECT doc_id, text, string_split(text, ' ') AS w
-                     FROM documents),
-          ch AS (SELECT doc_id, $OracleChunks AS chunks FROM d),
-          sc AS (SELECT unnest(list_transform(chunks,
-                   c -> round(${oracleChunkSigmoid("c")}, 6))) AS score
-                 FROM ch),
-          g AS (SELECT unnest(CAST([0.3, 0.4, 0.5, 0.6, 0.7] AS DOUBLE[]))
-                  AS threshold),
-          cells AS (
-            SELECT g.threshold,
-              CAST(count(*) AS BIGINT) AS n,
-              CAST(sum(CASE WHEN sc.score > g.threshold AND sc.score > 0.5
-                THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-              CAST(sum(CASE WHEN sc.score > g.threshold AND sc.score <= 0.5
-                THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-              CAST(sum(CASE WHEN sc.score <= g.threshold AND sc.score <= 0.5
-                THEN 1 ELSE 0 END) AS BIGINT) AS tn,
-              CAST(sum(CASE WHEN sc.score <= g.threshold AND sc.score > 0.5
-                THEN 1 ELSE 0 END) AS BIGINT) AS fn
-            FROM sc CROSS JOIN g GROUP BY 1)
-          SELECT threshold, n, tp, fp, tn, fn,
-            round(CAST(tp + tn AS DOUBLE) / n, 6) AS accuracy,
-            round(CAST(tp AS DOUBLE) / greatest(tp + fp, 1), 6) AS precision,
-            round(CAST(tp AS DOUBLE) / greatest(tp + fn, 1), 6) AS recall
-          FROM cells""",
-
-    // M14 label spreading — 3-NN graph (brute cosine, 6dp, dst-asc ties),
-    // two clamped majority-vote rounds unrolled.
-    "q54_label_prop" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e, label
-                    FROM embeddings WHERE vec_id < 500),
-         seeds AS (SELECT vec_id,
-             CASE WHEN vec_id % 10 = 0 THEN label END AS seed FROM v),
-         scored AS (
-           SELECT p.vec_id AS src, c.vec_id AS dst,
-             round(list_dot_product(c.e, p.e)
-               / (sqrt(list_dot_product(c.e, c.e))
-                  * sqrt(list_dot_product(p.e, p.e))), 6) AS cos
-           FROM v c, v p WHERE c.vec_id <> p.vec_id),
-         knn AS (SELECT src, dst FROM (
-           SELECT src, dst, row_number() OVER (PARTITION BY src
-             ORDER BY cos DESC, dst ASC) AS rk FROM scored) WHERE rk <= 3),
-         l0 AS (SELECT vec_id, seed AS label FROM seeds),
-         v1 AS (SELECT k.src AS vec_id, l.label AS nl, count(*) AS w
-                FROM knn k JOIN l0 l ON k.dst = l.vec_id
-                WHERE l.label IS NOT NULL GROUP BY 1, 2),
-         w1 AS (SELECT vec_id, nl FROM (
-           SELECT vec_id, nl, row_number() OVER (PARTITION BY vec_id
-             ORDER BY w DESC, nl ASC) AS rk FROM v1) WHERE rk = 1),
-         l1 AS (SELECT s.vec_id, coalesce(s.seed, w1.nl) AS label
-                FROM seeds s LEFT JOIN w1 USING (vec_id)),
-         v2 AS (SELECT k.src AS vec_id, l.label AS nl, count(*) AS w
-                FROM knn k JOIN l1 l ON k.dst = l.vec_id
-                WHERE l.label IS NOT NULL GROUP BY 1, 2),
-         w2 AS (SELECT vec_id, nl FROM (
-           SELECT vec_id, nl, row_number() OVER (PARTITION BY vec_id
-             ORDER BY w DESC, nl ASC) AS rk FROM v2) WHERE rk = 1),
-         l2 AS (SELECT s.vec_id, coalesce(s.seed, w2.nl) AS label
-                FROM seeds s LEFT JOIN w2 USING (vec_id))
-         SELECT vec_id, label FROM l2""",
-
-    // M14 scale composition — kNN edges from the LSH bucket procedure
-    // (q47's replay: 4 deterministic hyperplanes, Hamming-1 multi-probe,
-    // same-bucket cosine, top-3 per src) feeding the same two clamped vote
-    // rounds as q54.
-    "q57_label_prop_lsh" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e, label
-                    FROM embeddings WHERE vec_id < 500),
-         proj AS (
-           SELECT vec_id, b.b AS b,
-             list_dot_product(e, list_transform(generate_series(0, 63),
-               d -> CAST((b.b*64 + d) * 2654435761 % 1024 - 512 AS DOUBLE))) AS pr
-           FROM v CROSS JOIN generate_series(0, 3) b(b)),
-         bkt AS (
-           SELECT vec_id, CAST(sum(CASE WHEN pr > 0
-             THEN (1 << CAST(b AS INT)) ELSE 0 END) AS INT) AS bucket
-           FROM proj GROUP BY 1),
-         c AS (SELECT v.vec_id AS c_key, v.e AS c_vec, bkt.bucket
-               FROM v JOIN bkt USING (vec_id)),
-         p0 AS (SELECT v.vec_id AS p_key, v.e AS p_vec, bkt.bucket
-                FROM v JOIN bkt USING (vec_id)),
-         p AS (
-           SELECT p_key, p_vec, unnest(list_prepend(bucket,
-             list_transform(generate_series(0, 3),
-               i -> CAST(xor(bucket, 1 << CAST(i AS INT)) AS INT)))) AS bucket
-           FROM p0),
-         cand AS (
-           SELECT DISTINCT p.p_key AS src, c.c_key AS dst,
-             round(list_dot_product(c.c_vec, p.p_vec)
-               / (sqrt(list_dot_product(c.c_vec, c.c_vec))
-                  * sqrt(list_dot_product(p.p_vec, p.p_vec))), 6) AS cos
-           FROM c JOIN p ON c.bucket = p.bucket AND c.c_key <> p.p_key),
-         knn AS (SELECT src, dst FROM (
-           SELECT src, dst, row_number() OVER (PARTITION BY src
-             ORDER BY cos DESC, dst ASC) AS rk FROM cand) WHERE rk <= 3),
-         seeds AS (SELECT vec_id,
-             CASE WHEN vec_id % 10 = 0 THEN label END AS seed FROM v),
-         l0 AS (SELECT vec_id, seed AS label FROM seeds),
-         v1 AS (SELECT k.src AS vec_id, l.label AS nl, count(*) AS w
-                FROM knn k JOIN l0 l ON k.dst = l.vec_id
-                WHERE l.label IS NOT NULL GROUP BY 1, 2),
-         w1 AS (SELECT vec_id, nl FROM (
-           SELECT vec_id, nl, row_number() OVER (PARTITION BY vec_id
-             ORDER BY w DESC, nl ASC) AS rk FROM v1) WHERE rk = 1),
-         l1 AS (SELECT s.vec_id, coalesce(s.seed, w1.nl) AS label
-                FROM seeds s LEFT JOIN w1 USING (vec_id)),
-         v2 AS (SELECT k.src AS vec_id, l.label AS nl, count(*) AS w
-                FROM knn k JOIN l1 l ON k.dst = l.vec_id
-                WHERE l.label IS NOT NULL GROUP BY 1, 2),
-         w2 AS (SELECT vec_id, nl FROM (
-           SELECT vec_id, nl, row_number() OVER (PARTITION BY vec_id
-             ORDER BY w DESC, nl ASC) AS rk FROM v2) WHERE rk = 1),
-         l2 AS (SELECT s.vec_id, coalesce(s.seed, w2.nl) AS label
-                FROM seeds s LEFT JOIN w2 USING (vec_id))
-         SELECT vec_id, label FROM l2""",
-
-    // E4 scored extraction — per-turn text equality under the logistic
-    // arbiter: reassemble exactly the chunks whose sigmoid clears 0.5.
-    "q46_scored_extract" ->
-      s"""WITH d AS (SELECT doc_id, text, string_split(text, ' ') AS w
-                     FROM documents),
-          ch AS (SELECT doc_id, $OracleChunks AS chunks FROM d)
-          SELECT $OracleConvId AS conv_id, $OracleTurnIdx AS turn_idx,
-            array_to_string(list_filter(chunks,
-              c -> ${oracleChunkSigmoid("c")} > 0.5), ' ') AS text
-          FROM ch""",
-
-    // E4 arithmetic — sigmoid scores of surviving content blocks at 6dp.
-    "q48_block_scores" ->
-      s"""WITH d AS (SELECT doc_id, text, string_split(text, ' ') AS w
-                     FROM documents),
-          ch AS (SELECT doc_id, $OracleChunks AS chunks FROM d),
-          scd AS (SELECT doc_id,
-            list_filter(list_transform(chunks,
-              c -> ${oracleChunkSigmoid("c")}), p -> p > 0.5) AS passed
-            FROM ch)
-          SELECT $OracleConvId AS conv_id, $OracleTurnIdx AS turn_idx,
-            CAST(j.j - 1 AS INT) AS block_idx,
-            round(passed[CAST(j.j AS INT)], 6) AS score
-          FROM scd JOIN generate_series(1, 4096) j(j) ON j.j <= len(passed)""",
-
-    // SELF-CONSISTENCY oracles: `__VERIFY_OUT__` is substituted by Verify
-    // with the absolute output dir, so the SQL reads a query's OWN exported
-    // parquet back. The iterative fit (cluster assignment / topic weights)
-    // is taken as given from the export; everything derived from it is
-    // recomputed in SQL and must match the engine bit-for-bit after the
-    // stated rounding.
-
-    // M2 — the LSA projection replayed from q65's exported V: rebuild the
-    // engine's full-precision tfidf (q16's CTE chain without the 6dp round),
-    // multiply by the exported loadings, L2-normalize per doc — then ECHO
-    // the engine's own full-precision export (part='proj'), FILTERED to the
-    // rows where the recomputation agrees within 1e-6. Both engines now
-    // round IDENTICAL doubles, so the flake class (a value
-    // within an ulp of a .00005 boundary rounding apart across DuckDB
-    // ln()/group order vs Math.log/token order) is structurally closed —
-    // a genuine arithmetic divergence ≥ 1e-6 (≫ cross-engine float noise
-    // ~1e-12, ≪ the 1e-4 rounding step) drops that row from the oracle's
-    // output and fails the row-count compare loudly. CASE nn = 0 mirrors
-    // the engine's zero-norm passthrough.
-    "q44_lsa" ->
-      s"""WITH toks AS (
-            SELECT doc_id, unnest($OracleTokens) AS token FROM documents),
-          stats AS (
-            SELECT token, count(DISTINCT doc_id) AS df FROM toks GROUP BY 1),
-          n AS (SELECT count(*) AS n_docs FROM documents),
-          vocab AS (
-            SELECT token, df,
-              CAST(row_number() OVER (ORDER BY df DESC, token ASC) - 1 AS BIGINT) AS id
-            FROM stats, n WHERE df >= 2 AND df <= 0.9 * n_docs),
-          bow AS (
-            SELECT doc_id, id AS token_id, df, count(*) AS cnt
-            FROM toks JOIN vocab USING (token) GROUP BY 1, 2, 3),
-          tfidf AS (
-            SELECT doc_id, token_id,
-              cnt * ln((SELECT n_docs FROM n) / CAST(df AS DOUBLE)) AS tfidf
-            FROM bow),
-          ld AS (SELECT i AS token_id, j AS dim, value AS ldg
-                 FROM read_parquet('__VERIFY_OUT__/q65_lsa_model/*.parquet')
-                 WHERE part = 'loading'),
-          raw AS (SELECT t.doc_id, l.dim, sum(t.tfidf * l.ldg) AS r
-                  FROM tfidf t JOIN ld l USING (token_id) GROUP BY 1, 2),
-          nrm AS (SELECT doc_id, sqrt(sum(r * r)) AS nn FROM raw GROUP BY 1),
-          ex AS (SELECT i AS doc_id, j AS dim, value AS v
-                 FROM read_parquet('__VERIFY_OUT__/q65_lsa_model/*.parquet')
-                 WHERE part = 'proj')
-          SELECT ex.doc_id, ex.dim, ex.v + 0.0 AS value
-          FROM ex
-          JOIN raw r ON r.doc_id = ex.doc_id AND r.dim = ex.dim
-          JOIN nrm n2 ON n2.doc_id = ex.doc_id
-          WHERE abs((CASE WHEN n2.nn = 0 THEN r.r ELSE r.r / n2.nn END) - ex.v)
-                  <= 1e-6""",
-
-    // M7 — every PCA coordinate replayed from q65's export: y = Wᵀx over
-    // the full-precision normalized LSA projection (part='proj') and the
-    // component matrix (part='pc'). No centering — MLlib's transform
-    // multiplies the raw vector (probed; LsaSpec pins it too). Same
-    // echo-with-tolerance shape as q44: the output values are the engine's
-    // own exported full-precision coordinates (part='pcproj'), kept only
-    // where the recomputed Wᵀx agrees within 1e-6 — a deviating coordinate
-    // NULLs its doc row and fails the hash compare.
-    "q49_pca" ->
-      """WITH pj AS (SELECT i AS doc_id, j AS dim, value AS v
-                     FROM read_parquet('__VERIFY_OUT__/q65_lsa_model/*.parquet')
-                     WHERE part = 'proj'),
-         pc AS (SELECT i AS dim, j AS pcx, value AS w
-                FROM read_parquet('__VERIFY_OUT__/q65_lsa_model/*.parquet')
-                WHERE part = 'pc'),
-         prod AS (SELECT pj.doc_id, pc.pcx, sum(pj.v * pc.w) AS p
-                  FROM pj JOIN pc USING (dim) GROUP BY 1, 2),
-         ex AS (SELECT i AS doc_id, j AS pcx, value AS v
-                FROM read_parquet('__VERIFY_OUT__/q65_lsa_model/*.parquet')
-                WHERE part = 'pcproj'),
-         chk AS (SELECT ex.doc_id, ex.pcx, ex.v
-                 FROM ex JOIN prod p ON p.doc_id = ex.doc_id AND p.pcx = ex.pcx
-                 WHERE abs(p.p - ex.v) <= 1e-6)
-         SELECT doc_id,
-           max(CASE WHEN pcx = 0 THEN v END) + 0.0 AS pc1,
-           max(CASE WHEN pcx = 1 THEN v END) + 0.0 AS pc2
-         FROM chk GROUP BY 1""",
-
-    // M2 — VᵀV recomputed in SQL from q65's exported loadings while the
-    // engine computes it from the in-memory model matrix: a green row
-    // proves export fidelity, and the checked values sitting at 1.0/0.0
-    // document the orthonormality of the fitted basis.
-    "q66_lsa_ortho" ->
-      """WITH ld AS (SELECT i, j, value
-                     FROM read_parquet('__VERIFY_OUT__/q65_lsa_model/*.parquet')
-                     WHERE part = 'loading')
-         SELECT a.j AS i, b.j AS j, round(sum(a.value * b.value), 6) + 0.0 AS g
-         FROM ld a JOIN ld b ON a.i = b.i AND a.j <= b.j
-         GROUP BY 1, 2""",
-
-    // M16 — document vectors replayed from q60's exported word vectors:
-    // whitespace tokenize (occurrences kept), join to the vocab, divide by
-    // the TOTAL token count (Word2VecModel.transform's denominator, probed
-    // empirically). Built LEFT-of-documents so a doc whose every token is
-    // OOV still yields its zero vector — an inner join would DROP such
-    // docs while the engine emits zeros (no such doc exists in today's fixtures, but the gate must not depend on
-    // that). The sum runs over the SAME 1e-9 integer grid the engine sums
-    // on (floor(w·1e9 + 0.5) of identical exported doubles → identical
-    // longs; integer sums are order-independent), so the summation-order
-    // flake class is structurally closed — the only float
-    // ops are one division and one round of bit-identical inputs.
-    // + 0.0 folds -0.0 (engine does the same).
-    "q61_doc2vec" ->
-      """WITH wv AS (SELECT token, dim,
-                       CAST(floor(w * 1000000000.0 + 0.5) AS BIGINT) AS wq
-                     FROM read_parquet('__VERIFY_OUT__/q60_word_vectors/*.parquet')),
-         tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
-                 FROM documents),
-         sums AS (SELECT t.doc_id, v.dim, CAST(sum(v.wq) AS BIGINT) AS s9
-                  FROM tok t JOIN wv v USING (token) GROUP BY 1, 2),
-         docs AS (SELECT doc_id, len(string_split(text, ' ')) AS n
-                  FROM documents),
-         dims AS (SELECT DISTINCT dim FROM wv)
-         SELECT d.doc_id, m.dim,
-           round(coalesce(s.s9, 0)::DOUBLE / (d.n * 1000000000.0), 6) + 0.0 AS v
-         FROM docs d CROSS JOIN dims m
-         LEFT JOIN sums s ON s.doc_id = d.doc_id AND s.dim = m.dim""",
-
-    // M4/M5/M6 — the dominant flag replayed from the exported doc-topic
-    // weights: per-doc max, first topic attaining it (the engine decides
-    // dominance on the same 6dp-rounded weights it exports, ties to the
-    // lowest topic id). The variational fit is taken as given; the argmax
-    // arithmetic is cross-engine-verified.
-    "q52_lda" ->
-      """WITH dt AS (SELECT doc_id, topic, weight
-                     FROM read_parquet('__VERIFY_OUT__/q52_lda/*.parquet')),
-         mx AS (SELECT doc_id, max(weight) AS m FROM dt GROUP BY 1),
-         fm AS (SELECT d.doc_id, min(d.topic) AS t0
-                FROM dt d JOIN mx USING (doc_id)
-                WHERE d.weight = mx.m GROUP BY 1)
-         SELECT d.doc_id, d.topic, d.weight, (d.topic = f.t0) AS dominant
-         FROM dt d JOIN fm f USING (doc_id)""",
-
-    // M18 — the perplexity BRACKET recomputed in SQL:
-    // take the fit as given (φ echoed from this query's own export, θ from
-    // q52's), rebuild the engine's BOW (the q44 vocab chain), compute the
-    // plugin cross-entropy −Σ cnt·ln(Σₖ θ̂·φ)/Σ cnt and the ln(V)+margin
-    // ceiling, and emit an independent 'sane' verdict — the hash matches
-    // only if DuckDB's own bracket also contains the reported value. The
-    // verdict is a boolean ~0.1+ nats from either boundary, so cross-engine
-    // float-sum noise (~1e-12) cannot flip it (the engine `require`s 1e-6
-    // separation and fails loudly instead).
-    "q55_lda_perplexity" ->
-      s"""WITH ex AS (SELECT part, i, j, value
-                      FROM read_parquet('__VERIFY_OUT__/q55_lda_perplexity/*.parquet')),
-          toks AS (
-            SELECT doc_id, unnest($OracleTokens) AS token FROM documents),
-          stats AS (
-            SELECT token, count(DISTINCT doc_id) AS df FROM toks GROUP BY 1),
-          n AS (SELECT count(*) AS n_docs FROM documents),
-          vocab AS (
-            SELECT token, df,
-              CAST(row_number() OVER (ORDER BY df DESC, token ASC) - 1 AS BIGINT) AS id
-            FROM stats, n WHERE df >= 2 AND df <= 0.9 * n_docs),
-          bow AS (
-            SELECT doc_id, id AS token_id, count(*) AS cnt
-            FROM toks JOIN vocab USING (token) GROUP BY 1, 2),
-          theta AS (SELECT doc_id, topic, weight
-                    FROM read_parquet('__VERIFY_OUT__/q52_lda/*.parquet')),
-          phi AS (SELECT CAST(i AS INT) AS topic, CAST(j AS BIGINT) AS token_id,
-                    value AS phi
-                  FROM ex WHERE part = 'phi'),
-          mix AS (
-            SELECT b.doc_id, b.token_id, any_value(b.cnt) AS cnt,
-              sum(t.weight * p.phi) AS m
-            FROM bow b
-            JOIN theta t ON t.doc_id = b.doc_id
-            JOIN phi p ON p.topic = t.topic AND p.token_id = b.token_id
-            GROUP BY 1, 2),
-          pl AS (SELECT -sum(cnt * ln(m)) / sum(cnt) AS plugin FROM mix),
-          vs AS (SELECT count(*) AS v FROM vocab),
-          st AS (SELECT value AS lp FROM ex WHERE part = 'stat')
-          SELECT part, i, j, value FROM ex WHERE part <> 'sane'
-          UNION ALL
-          SELECT 'sane', CAST(0 AS BIGINT), 0,
-            CASE WHEN (SELECT lp FROM st) > (SELECT plugin FROM pl)
-                  AND (SELECT lp FROM st)
-                        < ln((SELECT v FROM vs)) + $Q55UpperMargin
-            THEN 1.0 ELSE 0.0 END
-          FROM (SELECT 1)""",
-
-    // M3 — distance-to-empirical-centroid replayed from the exported
-    // assignments: per-cluster per-dim means, then euclidean distance
-    // (6dp). The fit is taken as given; the group-mean + distance algebra
-    // is cross-engine-verified — on the SAME 1e-4 integer grid the engine
-    // uses, with denominators cleared (dist = sqrt(Σ(vq·cnt − Σvq)²) /
-    // (cnt·1e4)), so every compared sum is exact integer arithmetic and
-    // the summation-order flake class is structurally
-    // closed. HUGEINT keeps the squared terms exact (DuckDB sums BIGINT
-    // into HUGEINT anyway; the cast makes it explicit).
-    "q40_kmeans" ->
-      """WITH asg AS (SELECT vec_id, label, cluster
-                      FROM read_parquet('__VERIFY_OUT__/q40_kmeans/*.parquet')),
-         pts AS (SELECT a.vec_id, a.cluster, d.d AS dim,
-                   CAST(floor(e.embedding[d.d]::DOUBLE * 10000.0 + 0.5)
-                     AS BIGINT) AS vq
-                 FROM asg a JOIN embeddings e USING (vec_id),
-                      generate_series(1, 64) d(d)),
-         cent AS (SELECT cluster, dim, CAST(sum(vq) AS BIGINT) AS s4,
-                    count(*) AS cnt FROM pts GROUP BY 1, 2),
-         dist AS (SELECT vec_id,
-                    round(sqrt(sum(CAST((vq * cnt - s4) AS HUGEINT)
-                                   * (vq * cnt - s4))::DOUBLE)
-                      / (max(cnt) * 10000.0), 6) AS dist2c
-                  FROM pts JOIN cent USING (cluster, dim) GROUP BY 1)
-         SELECT a.vec_id, a.label, a.cluster, d.dist2c
-         FROM asg a JOIN dist d USING (vec_id)""",
-
-    // M8 — silhouette arithmetic replayed from the exported assignments:
-    // pairwise euclidean distances (6dp) via the same dot-product algebra
-    // the native cosine kernel uses, mean-to-own / min-mean-to-other, then
-    // (b−a)/max(a,b) at 4dp. Singleton clusters → 0 (sklearn convention).
-    "q50_silhouette" ->
-      """WITH asg AS (SELECT vec_id, cluster
+    },
+      // M8 — silhouette arithmetic replayed from the exported assignments:
+      // pairwise euclidean distances (6dp) via the same dot-product algebra
+      // the native cosine kernel uses, mean-to-own / min-mean-to-other, then
+      // (b−a)/max(a,b) at 4dp. Singleton clusters → 0 (sklearn convention).
+      Some("""WITH asg AS (SELECT vec_id, cluster
                       FROM read_parquet('__VERIFY_OUT__/q50_silhouette/*.parquet')),
          v AS (SELECT a.vec_id, a.cluster, e.embedding::DOUBLE[] AS vec,
                  list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]) AS n2
@@ -2858,43 +2357,425 @@ object SparkEntry {
                        / greatest(own.a_mean, oth.b_min), 4)
            END + 0.0 AS sil  -- fold -0.0 to +0.0 (engine does the same)
          FROM v LEFT JOIN own ON v.vec_id = own.ka
-                LEFT JOIN oth ON v.vec_id = oth.ka""",
+                LEFT JOIN oth ON v.vec_id = oth.ka""")),
 
-    // M17 — every Pearson corr cell recomputed from q52's exported
-    // doc-topic weights (the same 6dp values the engine correlates).
-    "q56_topic_corr" ->
-      """WITH dt AS (SELECT doc_id, topic, weight
-                     FROM read_parquet('__VERIFY_OUT__/q52_lda/*.parquet'))
+    // Embedding near-dup SCALE PATH — LSH sign-bucketed pairwise cosine,
+    // the 100 TB twin of Dedup.embeddingDup's documented all-pairs variant
+    // (which is O(n²)). Hyperplanes are
+    // deterministic arithmetic, so the oracle replays bucket assignment,
+    // the bucket equi-join and the threshold end to end.
+    Gate("q51_embed_dup", (s, dir) => {
+      val emb = t(s, dir, "embeddings")
+      // bits PINNED to 4: the oracle's generate_series(0,3) replays exactly
+      // 4 hyperplanes, and deriving from Ann.bitsFor(count) here silently
+      // diverges from the SQL the moment a testdata sf exceeds 4096
+      // embeddings. Production sizing remains Ann.bitsFor —
+      // q47 keeps it under the gate with a loud equality guard.
+      Dedup.embeddingDupLsh(emb, "vec_id", "embedding",
+        threshold = 0.3, dim = 64, bits = 4)
+    },
+      // Embedding near-dup scale path — deterministic sign buckets (bits=4 =
+      // Ann.bitsFor(n) for every testdata sf, n ≤ 4096), bucket equi-join,
+      // cosine threshold.
+      Some(s"""WITH ${oracleEmbedDup(0.3)}
+         SELECT * FROM pairs""")),
+
+    // M4/M5/M6 — LDA topic modeling over the engine BOW (reference:
+    // gensim LdaMulticore, src/doc_classification.py:39-72): the full
+    // doc-topic matrix with the dominant flag. The variational fit isn't
+    // engine-portable, but the dominant flag IS derivable from the exported
+    // weights — the oracle recomputes it per doc (self-consistency); topic
+    // separation pinned by LdaSpec. The exported weights are also the
+    // replay input for q56's correlation oracle.
+    // Shared persisted result: the doc-topic matrix is the LDA transform —
+    // per-doc variational inference, the expensive half after the fit — and
+    // q55 (theta for the plugin bracket) and q56 (the corr matrix over the
+    // SAME 6dp weights) read it too. One frame serves all three, exactly
+    // like the fit itself is shared via ldaFitted.
+    Gate("q52_lda", ldaDocTopics,
+      // M4/M5/M6 — the dominant flag replayed from the exported doc-topic
+      // weights: per-doc max, first topic attaining it (the engine decides
+      // dominance on the same 6dp-rounded weights it exports, ties to the
+      // lowest topic id). The variational fit is taken as given; the argmax
+      // arithmetic is cross-engine-verified.
+      Some(s"""WITH $OracleDocTopics,
+         mx AS (SELECT doc_id, max(weight) AS m FROM dt GROUP BY 1),
+         fm AS (SELECT d.doc_id, min(d.topic) AS t0
+                FROM dt d JOIN mx USING (doc_id)
+                WHERE d.weight = mx.m GROUP BY 1)
+         SELECT d.doc_id, d.topic, d.weight, (d.topic = f.t0) AS dominant
+         FROM dt d JOIN fm f USING (doc_id)""")),
+
+    // M13 — hyperparameter grid search in ONE relational pass (vs the
+    // reference's train-per-config loop, src/supervised.py:66-76): the
+    // decision-threshold grid evaluated against the production 0.5
+    // operating point, so every confusion cell populates across the grid.
+    // Oracle replays the chunk sigmoids and the whole grid in SQL.
+    Gate("q53_grid_search", (s, dir) => {
+      val turns = Transcripts.fromDocuments(s, dir)
+      val scored = Extract.scoreLabeled(Extract.lexed(turns))
+        .select(explode(expr(
+          s"filter(blocks, b -> NOT b.path RLIKE '${Extract.ChromePathRe}')"))
+          .as("b"))
+        .select(round(col("b.score"), 6).as("score"))
+        .withColumn("label",
+          when(col("score") > 0.5, "content").otherwise("chrome"))
+      Scorer.thresholdGrid(scored, "score", "label", "content",
+        Seq(0.3, 0.4, 0.5, 0.6, 0.7))
+    },
+      // M13 grid search — chunk sigmoids × threshold grid, confusion cells
+      // against the 0.5 operating point, metrics at 6dp.
+      Some(s"""WITH $OracleChunks,
+          sc AS (SELECT unnest(list_transform(chunks,
+                   c -> round(${oracleChunkSigmoid("c")}, 6))) AS score
+                 FROM ch),
+          g AS (SELECT unnest(CAST([0.3, 0.4, 0.5, 0.6, 0.7] AS DOUBLE[]))
+                  AS threshold),
+          cells AS (
+            SELECT g.threshold,
+              CAST(count(*) AS BIGINT) AS n,
+              CAST(sum(CASE WHEN sc.score > g.threshold AND sc.score > 0.5
+                THEN 1 ELSE 0 END) AS BIGINT) AS tp,
+              CAST(sum(CASE WHEN sc.score > g.threshold AND sc.score <= 0.5
+                THEN 1 ELSE 0 END) AS BIGINT) AS fp,
+              CAST(sum(CASE WHEN sc.score <= g.threshold AND sc.score <= 0.5
+                THEN 1 ELSE 0 END) AS BIGINT) AS tn,
+              CAST(sum(CASE WHEN sc.score <= g.threshold AND sc.score > 0.5
+                THEN 1 ELSE 0 END) AS BIGINT) AS fn
+            FROM sc CROSS JOIN g GROUP BY 1)
+          SELECT threshold, n, tp, fp, tn, fn,
+            round(CAST(tp + tn AS DOUBLE) / n, 6) AS accuracy,
+            round(CAST(tp AS DOUBLE) / greatest(tp + fp, 1), 6) AS precision,
+            round(CAST(tp AS DOUBLE) / greatest(tp + fn, 1), 6) AS recall
+          FROM cells""")),
+
+    // M14 — label spreading over the kNN similarity graph (reference:
+    // sklearn LabelSpreading, src/label_prop.py:57-122): 10% seeded nodes,
+    // unweighted 3-NN majority votes, 2 clamped iterations — every step
+    // deterministic, so the oracle replays the graph build and both vote
+    // rounds. The graph tier is capped to the 500-vector prefix: the brute
+    // all-pairs build is the REFERENCE's semantics (sklearn materializes
+    // the full kernel matrix) and exists here as the checked fixture-sized
+    // variant — at corpus scale the edge list comes from Ann.lshTopK and
+    // the spread() iterations are unchanged.
+    Gate("q54_label_prop", (s, dir) => {
+      val emb = t(s, dir, "embeddings").filter(col("vec_id") < 500)
+      val nodes = emb.select(col("vec_id"),
+        when(col("vec_id") % 10 === 0, col("label")).as("label"))
+      val edges = Ann.bruteTopK(emb, emb, "vec_id", "embedding", k = 3)
+        .select(col("p_key").as("src"), col("c_key").as("dst"),
+          lit(1.0).as("weight"))
+      graft.ml.LabelProp.spread(nodes, "vec_id", "label", edges, iters = 2)
+    },
+      // M14 label spreading — 3-NN graph (brute cosine, 6dp, dst-asc ties),
+      // two clamped majority-vote rounds unrolled.
+      Some(oracleLabelProp(s"""cand AS (
+           SELECT p.vec_id AS p_key, c.vec_id AS c_key, ${oracleCos("c.e", "p.e")} AS cos
+           FROM v c, v p WHERE c.vec_id <> p.vec_id)""", iters = 2))),
+
+    // M14 at SCALE — the same label spreading with the edge list from the
+    // LSH-bucketed kNN ([[Ann.lshTopK]], bits from bitsFor, multi-probe)
+    // instead of the brute all-pairs build: the exact composition a 10^12-row
+    // corpus runs. The oracle replays bucketed candidate generation end to end
+    // (q47's pattern: buckets → Hamming-1 multi-probe → same-bucket cosine →
+    // top-3) and then both clamped vote rounds (q54's pattern).
+    Gate("q57_label_prop_lsh", (s, dir) => {
+      val emb = t(s, dir, "embeddings").filter(col("vec_id") < 500)
+      val nodes = emb.select(col("vec_id"),
+        when(col("vec_id") % 10 === 0, col("label")).as("label"))
+      val bits = Ann.bitsFor(500) // clamp floor — 4; oracle replays 4 planes
+      require(bits == 4, s"q57 oracle is pinned to bits=4, bitsFor gave $bits")
+      val edges = Ann.lshTopK(emb, emb, "vec_id", "embedding", k = 3,
+        dim = 64, bits = bits, multiProbe = true)
+        .select(col("p_key").as("src"), col("c_key").as("dst"),
+          lit(1.0).as("weight"))
+      graft.ml.LabelProp.spread(nodes, "vec_id", "label", edges, iters = 2)
+    },
+      // M14 scale composition — kNN edges from the LSH bucket procedure
+      // (q47's replay: 4 deterministic hyperplanes, Hamming-1 multi-probe,
+      // same-bucket cosine, top-3 per src) feeding the same two clamped vote
+      // rounds as q54.
+      Some(oracleLabelProp(oracleLshCandidates("TRUE"), iters = 2))),
+
+    // MinHash+LSH with the hot-bucket cap BINDING (q45 gates maxBucket=0).
+    // Every doc_id % 50 == 0 row
+    // is rewritten to one constant 4-token text, so all of them share one
+    // signature and land in ONE bucket per band (population 10 at the gated
+    // sfs, 100 at sf0.1) — maxBucket=5 drops that degenerate bucket from
+    // candidate generation in both engines, exactly the q28 maxShingleDf
+    // pattern: the cap is a semantic parameter the oracle replays, not a
+    // sampling trick. Docs 30/130 form a second, UNDER-cap duplicate group
+    // so the green row shows the cap discriminating (their pair survives
+    // with est_jaccard 1.0) rather than emptying the output.
+    Gate("q58_lsh_bucket_cap", (s, dir) => {
+      val docs = t(s, dir, "documents").filter(col("doc_id") % 10 === 0)
+        .select(col("doc_id"),
+          split(when(col("doc_id").isin(30, 130), lit("eee fff ggg hhh"))
+            .when(col("doc_id") % 50 === 0, lit("aaa bbb ccc ddd"))
+            .otherwise(col("text")), " ").as("tokens"))
+      graft.corpus.Curation.nearDupPairs(docs, maxBucket = 5)
+    },
+      // q45's procedure with the degenerate-text rewrite and the hot-bucket
+      // cap replayed: buckets with population > 5 are dropped before pairing.
+      Some(oracleNearDupPairs("CASE WHEN doc_id IN (30, 130) THEN 'eee fff ggg hhh' " +
+        "WHEN doc_id % 50 = 0 THEN 'aaa bbb ccc ddd' ELSE text END", maxBucket = 5))),
+
+    // M18 — held-out log-perplexity of the topic model (reference:
+    // log_perplexity, src/doc_classification.py:71). Checked, not
+    // rows-only: the variational ELBO itself is the one number
+    // no SQL engine can recompute (digamma terms), but it IS bracketable —
+    // the reported per-token bound must sit ABOVE the plugin cross-entropy
+    // −Σ cnt·ln(Σₖ θ̂_dk·φ_kw)/Σ cnt (a fitted parameter point the bound
+    // cannot beat: the ELBO pays KL penalties the plugin doesn't) and BELOW
+    // ln(V) + margin (the uniform-model ceiling; the margin absorbs the KL
+    // excess — measured lp − ln(V) ≈ +0.04 and lp − plugin ≈ +0.07..0.10 at
+    // every gated sf, see Q55UpperMargin). The query exports φ (part='phi',
+    // full precision, λ columns normalized to distributions) and
+    // the reported value (part='stat', i = k); the oracle recomputes the
+    // bracket from documents + q52's exported θ + the echoed φ and emits
+    // its own 'sane' verdict row — a green hash means BOTH engines computed
+    // the bracket and BOTH found the reported number inside it. The engine
+    // additionally `require`s the bracket with 1e-6 separation so a
+    // boundary-grazing value fails loudly rather than flaking.
+    Gate("q55_lda_perplexity", (s, dir) => {
+      val spark = s
+      import spark.implicits._
+      val (model, features) = ldaFitted(s, dir)
+      val (vocab, _, vocabSize) = vocabInfo(s, dir)
+      val k = model.getK
+      // topicsMatrix returns the UNNORMALIZED variational λ for the online
+      // optimizer (expected token counts per topic-word, column sums ≫ 1) —
+      // normalize each topic column into the φ distribution (probed: the
+      // raw columns summed to ~e^6, flipping the plugin CE negative)
+      val tm = model.topicsMatrix // vocabSize × k
+      val colSum = Array.tabulate(k)(tpc =>
+        (0 until vocabSize).map(w => tm(w, tpc)).sum)
+      val phiRows = (for { tpc <- 0 until k; w <- 0 until vocabSize }
+        yield ("phi", tpc.toLong, w, tm(w, tpc) / colSum(tpc)))
+        .toDF("part", "i", "j", "value")
+      // the two verification scalars — the MLlib perplexity pass and the
+      // plugin-CE mix over q52's shared doc-topic frame (same model, same
+      // transform) — verify the one shared fit, so a session computes them
+      // once
+      val (lp, plugin) = artifact(s, dir, "q55Stats") {
+        val lp0 =
+          math.rint(graft.ml.Lda.logPerplexity(model, features) * 1e4) / 1e4
+        val theta = ldaDocTopics(s, dir)
+          .select(col("doc_id"), col("topic"), col("weight"))
+        val bow = Vocab.bowFromCounts(docTermCounts(s, dir), vocab, "doc_id")
+        val phiDf = phiRows.select(col("i").cast("int").as("topic"),
+          col("j").cast("long").as("token_id"), col("value").as("phi"))
+        val mix = bow.join(theta, Seq("doc_id"))
+          .join(broadcast(phiDf), Seq("topic", "token_id"))
+          .groupBy("doc_id", "token_id")
+          .agg(max(col("cnt")).as("cnt"),
+            sum(col("weight") * col("phi")).as("m"))
+        val org.apache.spark.sql.Row(p: Double) = mix
+          .agg((-sum(col("cnt") * log(col("m"))) / sum(col("cnt"))).as("p"))
+          .head()
+        (lp0, p)
+      }(_ => ())
+      val upper = math.log(vocabSize.toDouble) + Q55UpperMargin
+      require(lp - plugin > 1e-6 && upper - lp > 1e-6,
+        s"q55 perplexity bracket violated (or boundary-grazing): " +
+          s"plugin=$plugin lp=$lp upper=$upper — a real regression in the " +
+          s"LDA fit or the bound arithmetic, not a flake")
+      Seq(("stat", k.toLong, 0, lp), ("sane", 0L, 0, 1.0))
+        .toDF("part", "i", "j", "value")
+        .union(phiRows)
+    },
+      // M18 — the perplexity BRACKET recomputed in SQL:
+      // take the fit as given (φ echoed from this query's own export, θ from
+      // q52's), rebuild the engine's BOW (the shared dictionary chain), compute the
+      // plugin cross-entropy −Σ cnt·ln(Σₖ θ̂·φ)/Σ cnt and the ln(V)+margin
+      // ceiling, and emit an independent 'sane' verdict — the hash matches
+      // only if DuckDB's own bracket also contains the reported value. The
+      // verdict is a boolean ~0.1+ nats from either boundary, so cross-engine
+      // float-sum noise (~1e-12) cannot flip it (the engine `require`s 1e-6
+      // separation and fails loudly instead).
+      Some(s"""WITH ex AS (SELECT part, i, j, value
+                      FROM read_parquet('__VERIFY_OUT__/q55_lda_perplexity/*.parquet')),
+          $OracleDictionary,
+          $OracleDocTopics,
+          phi AS (SELECT CAST(i AS INT) AS topic, CAST(j AS BIGINT) AS token_id,
+                    value AS phi
+                  FROM ex WHERE part = 'phi'),
+          mix AS (
+            SELECT b.doc_id, b.token_id, any_value(b.cnt) AS cnt,
+              sum(t.weight * p.phi) AS m
+            FROM bow b
+            JOIN dt t ON t.doc_id = b.doc_id
+            JOIN phi p ON p.topic = t.topic AND p.token_id = b.token_id
+            GROUP BY 1, 2),
+          pl AS (SELECT -sum(cnt * ln(m)) / sum(cnt) AS plugin FROM mix),
+          vs AS (SELECT count(*) AS v FROM vocab),
+          st AS (SELECT value AS lp FROM ex WHERE part = 'stat')
+          SELECT part, i, j, value FROM ex WHERE part <> 'sane'
+          UNION ALL
+          SELECT 'sane', CAST(0 AS BIGINT), 0,
+            CASE WHEN (SELECT lp FROM st) > (SELECT plugin FROM pl)
+                  AND (SELECT lp FROM st)
+                        < ln((SELECT v FROM vs)) + $Q55UpperMargin
+            THEN 1.0 ELSE 0.0 END
+          FROM (SELECT 1)""")),
+
+    // M17 — the doc-topic correlation matrix behind the reference's heatmap
+    // (src/doc_classification.py:192-210). Correlation over the SAME
+    // 6dp-rounded weights q52 exports, so the oracle can recompute every
+    // corr cell from q52's parquet output (self-consistency): the LDA fit isn't replayable, the Pearson arithmetic is.
+    Gate("q56_topic_corr", (s, dir) => {
+      // q52's shared frame IS the 6dp-rounded doc-topic matrix (its dist
+      // column rounds before the explode), so transforming + rounding here
+      // would be a third LDA transform producing byte-identical weights
+      val dt = ldaDocTopics(s, dir)
+        .select(col("doc_id"), col("topic"), col("weight"))
+      graft.ml.Lda.topicCorr(dt, "doc_id")
+    },
+      // M17 — every Pearson corr cell recomputed from q52's exported
+      // doc-topic weights (the same 6dp values the engine correlates).
+      Some(s"""WITH $OracleDocTopics
          SELECT a.topic AS t1, b.topic AS t2,
            round(corr(a.weight, b.weight), 6) + 0.0 AS corr  -- fold -0.0
          FROM dt a JOIN dt b ON a.doc_id = b.doc_id AND a.topic < b.topic
-         GROUP BY 1, 2""",
+         GROUP BY 1, 2""")),
 
-    "q30_extract" ->
-      s"""SELECT $OracleConvId AS conv_id, $OracleTurnIdx AS turn_idx, text
-          FROM documents""",
-
-    // per-turn text equality holds over the adversarial shells too
-    "q59_extract_adversarial" ->
-      s"""SELECT $OracleConvId AS conv_id, $OracleTurnIdx AS turn_idx, text
-          FROM documents""",
-
-    // P1 replay: the SAME fold map as the engine, applied by DuckDB
-    // translate BEFORE the shared P2–P7 chain (both engines fold first).
-    "q67_fold_accents" ->
-      s"""SELECT doc_id, unnest(${oracleTokensOf(
+    // P1 UNDER THE GATE: the fixture corpus is
+    // ASCII-clean, so in every other green row the fold runs as identity —
+    // here every FoldFrom character is prepended (Normalize.
+    // FoldCoverageSentence, shaped to survive P2–P7) and the oracle mirrors
+    // the fold with DuckDB translate over the same map, so a green row
+    // proves the fold MAP, not just the pipeline around it.
+    Gate("q67_fold_accents", (s, dir) => t(s, dir, "documents")
+      .select(col("doc_id"), explode(Normalize.pipeline(
+        concat(lit(Normalize.FoldCoverageSentence + " "), col("text"))))
+        .as("token")),
+      // P1 replay: the SAME fold map as the engine, applied by DuckDB
+      // translate BEFORE the shared P2–P7 chain (both engines fold first).
+      Some(s"""SELECT doc_id, unnest(${oracleTokensOf(
             s"translate('${Normalize.FoldCoverageSentence} ' || text, " +
               s"'${Normalize.FoldFrom}', '${Normalize.FoldTo}')")}) AS token
-          FROM documents""",
+          FROM documents""")),
 
-    // per-turn text equality with the accent prefix intact, byte-exact
-    "q68_extract_accented" ->
-      s"""SELECT $OracleConvId AS conv_id, $OracleTurnIdx AS turn_idx,
-            '${Normalize.FoldCoverageSentence} ' || text AS text
-          FROM documents""",
+    // Non-ASCII through the FULL extraction kernel (the q30 contract over
+    // accent-prefixed documents): multi-byte text crosses every payload
+    // shape — markup content, layout line chunking, JSON string — and must
+    // come back byte-exact (per-turn text equality), so the lexer's
+    // non-ASCII handling runs under the gate, not only in specs.
+    Gate("q68_extract_accented", (s, dir) =>
+      Extract.pipeline(Transcripts.fromDocumentsPrefixed(s, dir,
+        Normalize.FoldCoverageSentence))
+        .select(col("conv_id"), col("turn_idx"), col("text")),
+      // per-turn text equality with the accent prefix intact, byte-exact
+      Some(oracleTurnText(s"'${Normalize.FoldCoverageSentence} ' || text"))),
 
-    "q31_spans" ->
-      s"""SELECT $OracleConvId AS conv_id, $OracleTurnIdx AS turn_idx,
+    // ---------------------------------------------------------- extraction
+    // E1–E6 — THE FLAGSHIP: full extraction kernel over the documents-derived
+    // transcript corpus; oracle = the original document text (per-turn text
+    // equality, north_rule).
+    Gate("q30_extract", (s, dir) =>
+      Extract.pipeline(Transcripts.fromDocuments(s, dir))
+        .select(col("conv_id"), col("turn_idx"), col("text")),
+      Some(oracleTurnText("text"))),
+
+    // E1 hardening UNDER THE GATE: the full kernel over
+    // the ADVERSARIAL payload shells — comment/CDATA/doctype decoys, HTML5
+    // complete comments, unquoted attributes, quoted '>', entity refs incl.
+    // a lone-surrogate ref, reverse-order layout lines, tool-JSON value
+    // decoys (Transcripts.fromDocumentsAdversarial). Every shape must still
+    // extract to exactly the document text, so the oracle is q30's.
+    Gate("q59_extract_adversarial", (s, dir) =>
+      Extract.pipeline(Transcripts.fromDocumentsAdversarial(s, dir))
+        .select(col("conv_id"), col("turn_idx"), col("text")),
+      // per-turn text equality holds over the adversarial shells too
+      Some(oracleTurnText("text"))),
+
+    // S8 + S11 — CSV sink AND source in one gate: the q41 data product is
+    // written through the CSV sink (header, explicit quoting defaults) and
+    // read back through the CSV source with an EXPLICIT schema (inference
+    // would lose long-vs-int and the 2dp money doubles). The round-trip is
+    // lossless — the oracle is q41's own SQL — because shortest-repr double
+    // printing parses back to the identical double. The reference's analog
+    // reads `wells_aggregated.csv` into its map dashboards
+    // (src/bokeh_wells_map.ipynb cell 1).
+    Gate("q62_csv_roundtrip", (s, dir) => {
+      // pid in the path: two processes gating the same sf concurrently must
+      // not overwrite each other's CSV between the lazy write and read
+      // (floorMod, not abs — abs(Int.MinValue) is negative). q62Stage also
+      // sweeps dirs left by DEAD gate processes and deletes our own at JVM
+      // exit, so repeated Verify sweeps leave no /tmp litter.
+      val out = q62Stage(math.floorMod(dir.hashCode, 1 << 30))
+      dataProduct(s, dir)
+        .write.mode("overwrite").option("header", "true").csv(out)
+      s.read.schema(
+          "n_name STRING, n_f BIGINT, n_o BIGINT, n_p BIGINT, total DOUBLE")
+        .option("header", "true").csv(out)
+    },
+      // S8+S11 — the CSV round-trip must reproduce the data product exactly
+      Some(OracleDataProduct)),
+
+    // M16 — doc2vec, Spark-first (ml.Doc2Vec): the learned word vectors,
+    // exported at full double precision as q61's replay input. Rows-only
+    // (the skip-gram SGD fit is iterative); geometry pinned by Doc2VecSpec.
+    Gate("q60_word_vectors", (s, dir) => {
+      val (model, _) = doc2vecFitted(s, dir)
+      graft.ml.Doc2Vec.wordVectors(model)
+    },
+      None),
+
+    // M16 — document vectors by token-occurrence averaging
+    // (Word2VecModel.transform semantics: sum of in-vocab token vectors /
+    // TOTAL token count). The fit is taken as given via q60's export; the
+    // tokenize + join + average arithmetic is replayed by the oracle.
+    Gate("q61_doc2vec", (s, dir) => {
+      val (model, docs) = doc2vecFitted(s, dir)
+      graft.ml.Doc2Vec.docVectors(model, docs, "doc_id")
+    },
+      // M16 — document vectors replayed from q60's exported word vectors:
+      // whitespace tokenize (occurrences kept), join to the vocab, divide by
+      // the TOTAL token count (Word2VecModel.transform's denominator, probed
+      // empirically). Built LEFT-of-documents so a doc whose every token is
+      // OOV still yields its zero vector — an inner join would DROP such
+      // docs while the engine emits zeros (no such doc exists in today's fixtures, but the gate must not depend on
+      // that). The sum runs over the SAME 1e-9 integer grid the engine sums
+      // on (floor(w·1e9 + 0.5) of identical exported doubles → identical
+      // longs; integer sums are order-independent), so the summation-order
+      // flake class is structurally closed — the only float
+      // ops are one division and one round of bit-identical inputs.
+      // + 0.0 folds -0.0 (engine does the same).
+      Some("""WITH wv AS (SELECT token, dim,
+                       CAST(floor(w * 1000000000.0 + 0.5) AS BIGINT) AS wq
+                     FROM read_parquet('__VERIFY_OUT__/q60_word_vectors/*.parquet')),
+         tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
+                 FROM documents),
+         sums AS (SELECT t.doc_id, v.dim, CAST(sum(v.wq) AS BIGINT) AS s9
+                  FROM tok t JOIN wv v USING (token) GROUP BY 1, 2),
+         docs AS (SELECT doc_id, len(string_split(text, ' ')) AS n
+                  FROM documents),
+         dims AS (SELECT DISTINCT dim FROM wv)
+         SELECT d.doc_id, m.dim,
+           round(coalesce(s.s9, 0)::DOUBLE / (d.n * 1000000000.0), 6) + 0.0 AS v
+         FROM docs d CROSS JOIN dims m
+         LEFT JOIN sums s ON s.doc_id = d.doc_id AND s.dim = m.dim""")),
+
+    // E5 — span offsets for the single-content-block shapes (0, 1, 3);
+    // layout shape 2 spans are pinned by ScalaTest instead.
+    Gate("q31_spans", (s, dir) => {
+      val turns = Transcripts.fromDocuments(s, dir)
+      Extract.pipeline(turns)
+        .withColumn("span", explode(col("spans")))
+        .select(col("conv_id"), col("turn_idx"),
+          col("span.start").as("span_start"), col("span.end").as("span_end"),
+          col("span.label").as("label"))
+        .filter(col("label") === "content")
+        .join(t(s, dir, "documents")
+            .filter(col("doc_id") % 4 =!= 2)
+            .select(
+              concat(lit("c"), lpad((col("doc_id") % Transcripts.ConvFold)
+                .cast("string"), 4, "0")).as("conv_id"),
+              (col("doc_id") / Transcripts.ConvFold).cast("int").as("turn_idx")),
+          Seq("conv_id", "turn_idx"), "left_semi")
+    },
+      Some(s"""SELECT $OracleConvId AS conv_id, $OracleTurnIdx AS turn_idx,
             CASE doc_id % 4
               WHEN 0 THEN 98
               WHEN 1 THEN 117
@@ -2904,247 +2785,6 @@ object SparkEntry {
               WHEN 1 THEN 117 + length(text)
               WHEN 3 THEN 41 + length(text) END AS span_end,
             'content' AS label
-          FROM documents WHERE doc_id % 4 <> 2""",
-
-    // q75 — the on-disk binaryFile gate replayed: the q63 pixel arithmetic,
-    // the q64 sample arithmetic and the q69 frame arithmetic for file ids
-    // 0..19, in the query's long form (kind, file_id, metric, value).
-    "q75_binary_source" ->
-      """WITH ipx AS (
-           SELECT CAST(s AS BIGINT) AS id, 4 + s % 4 AS w, 3 + s % 3 AS h,
-             x.x AS x, y.y AS y
-           FROM generate_series(0, 19) t(s)
-           JOIN generate_series(0, 6) x(x) ON x.x < 4 + s % 4
-           JOIN generate_series(0, 4) y(y) ON y.y < 3 + s % 3),
-         iagg AS (
-           SELECT id, any_value(w) AS w, any_value(h) AS h,
-             sum((id * 31 + y * 17 + x * 7) % 251) AS sr,
-             sum((id * 13 + y * 11 + x * 5) % 251) AS sg,
-             sum((id * 29 + y * 23 + x * 3) % 251) AS sb,
-             sum(((id * 31 + y * 17 + x * 7) % 251) * (y * w + x + 1)) AS wr
-           FROM ipx GROUP BY 1),
-         asm AS (
-           SELECT CAST(t.s AS BIGINT) AS id, i.i AS i,
-             ((t.s * 31 + i.i * 7) % 2003) - 1001 AS v
-           FROM generate_series(0, 19) t(s)
-           JOIN generate_series(0, 98) i(i) ON i.i < 50 + t.s % 50),
-         aagg AS (
-           SELECT id, count(*) AS n, sum(v) AS sv, sum(abs(v)) AS sa,
-             sum(v * (i + 1)) AS ws
-           FROM asm GROUP BY 1),
-         vf AS (
-           SELECT CAST(t.s AS BIGINT) AS id, f.f AS f
-           FROM generate_series(0, 19) t(s)
-           JOIN generate_series(0, 6) f(f) ON f.f < 3 + t.s % 4)
-         SELECT 'image' AS kind, id AS file_id, 'decoded' AS metric,
-           CAST(1 AS BIGINT) AS value FROM iagg
-         UNION ALL SELECT 'image', id, 'width', CAST(w AS BIGINT) FROM iagg
-         UNION ALL SELECT 'image', id, 'height', CAST(h AS BIGINT) FROM iagg
-         UNION ALL SELECT 'image', id, 'r_ppm',
-           CAST(sr * 1000000 // (w * h) AS BIGINT) FROM iagg
-         UNION ALL SELECT 'image', id, 'g_ppm',
-           CAST(sg * 1000000 // (w * h) AS BIGINT) FROM iagg
-         UNION ALL SELECT 'image', id, 'b_ppm',
-           CAST(sb * 1000000 // (w * h) AS BIGINT) FROM iagg
-         UNION ALL SELECT 'image', id, 'r_wsum', CAST(wr AS BIGINT) FROM iagg
-         UNION ALL SELECT 'audio', id, 'decoded', CAST(1 AS BIGINT) FROM aagg
-         UNION ALL SELECT 'audio', id, 'sample_rate', CAST(8000 AS BIGINT) FROM aagg
-         UNION ALL SELECT 'audio', id, 'n_samples', CAST(n AS BIGINT) FROM aagg
-         UNION ALL SELECT 'audio', id, 'sum_pcm', CAST(sv AS BIGINT) FROM aagg
-         UNION ALL SELECT 'audio', id, 'sum_abs_pcm', CAST(sa AS BIGINT) FROM aagg
-         UNION ALL SELECT 'audio', id, 'wsum_pcm', CAST(ws AS BIGINT) FROM aagg
-         UNION ALL SELECT 'video', id, printf('f%02d_level', f),
-           CAST((id * 7 + f * 13) % 8 AS BIGINT) FROM vf
-         UNION ALL SELECT 'video', id, 'n_frames', CAST(count(*) AS BIGINT)
-           FROM vf GROUP BY id
-         UNION ALL SELECT 'binary', CAST(1 AS BIGINT), 'n_bytes',
-           CAST(7 AS BIGINT)""",
-
-    // q76 — the streaming twin must land on exactly the batch contract:
-    // per-turn text equality (q30's oracle, verbatim).
-    "q76_streaming_extract" ->
-      s"""SELECT $OracleConvId AS conv_id, $OracleTurnIdx AS turn_idx, text
-          FROM documents""",
-
-    // q77 — dup clusters replayed end to end: the q51 candidate-pair build
-    // (deterministic hyperplane buckets → same-bucket cosine ≥ 0.3), edge
-    // symmetrization, then EXACTLY CcIters unrolled hash-min rounds — the
-    // same deterministic min the engine iterates (the engine additionally
-    // asserts the fixpoint, so "enough rounds" is checked on both sides).
-    "q77_dup_components" ->
-      s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-         proj AS (
-           SELECT vec_id, b.b AS b,
-             list_dot_product(e, list_transform(generate_series(0, 63),
-               d -> CAST((b.b*64 + d) * 2654435761 % 1024 - 512 AS DOUBLE))) AS pr
-           FROM v CROSS JOIN generate_series(0, 3) b(b)),
-         bkt AS (
-           SELECT vec_id, CAST(sum(CASE WHEN pr > 0
-             THEN (1 << CAST(b AS INT)) ELSE 0 END) AS INT) AS bucket
-           FROM proj GROUP BY 1),
-         w AS (SELECT v.vec_id, v.e, bkt.bucket FROM v JOIN bkt USING (vec_id)),
-         pairs AS (SELECT * FROM (
-           SELECT a.vec_id AS key_a, b.vec_id AS key_b,
-             round(list_dot_product(a.e, b.e)
-               / (sqrt(list_dot_product(a.e, a.e))
-                  * sqrt(list_dot_product(b.e, b.e))), 6) AS cos
-           FROM w a JOIN w b ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
-           WHERE cos >= 0.4),
-         sym AS (SELECT key_a AS src, key_b AS dst FROM pairs
-                 UNION ALL SELECT key_b AS src, key_a AS dst FROM pairs),
-         l0 AS (SELECT vec_id, vec_id AS c FROM embeddings),
-         $OracleCcRounds
-         SELECT vec_id, CAST(c AS BIGINT) AS component FROM l$CcIters""",
-
-    // q78 — the block map replayed with a plain SQL running sum: token
-    // count = whitespace tokens + 1 EOS, inclusive cumsum in doc_id order,
-    // span [cum−n, cum), one row per 256-token block the span touches.
-    // Integer-only — the engine's bucketed two-pass prefix sum must land
-    // on exactly these numbers. The whitespace class is EXPLICIT on both
-    // sides (Packing.WsClass; RE2 `\s` omits \x0B where Java's includes
-    // it).
-    "q78_seq_packing" ->
-      """WITH d AS (
-           SELECT doc_id,
-             CAST(len(list_filter(string_split_regex(text, '[ \t\n\v\f\r]+'),
-               t -> length(t) > 0)) + 1 AS BIGINT) AS n
-           FROM documents),
-         c AS (
-           SELECT doc_id, n,
-             sum(n) OVER (ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           FROM d),
-         s AS (SELECT doc_id, CAST(cum - n AS BIGINT) AS st,
-                 CAST(cum AS BIGINT) AS en FROM c)
-         SELECT CAST(unnest(generate_series(st // 256, (en - 1) // 256))
-             AS BIGINT) AS pack_id,
-           doc_id, CAST(st AS BIGINT) AS start_tok, CAST(en AS BIGINT) AS end_tok
-         FROM s""",
-
-    // q79 — the redaction chain replayed rule-for-rule from the SAME
-    // shared pattern table (TextStats.RedactionRules — interpolated, so
-    // the SQL cannot drift from the engine), counts taken on the text as
-    // it stands when each rule fires, RE2 ≡ Java regex by pattern
-    // construction.
-    "q79_pii_redact" -> OracleRedactSql,
-
-    // q80 — same shingle slice semantics as the q28/q29 oracles (w[i:i+3]
-    // is 4 tokens; generate_series floor of 1 mirrors the engine's
-    // greatest(size-k, 0) truncated-shingle edge for short docs).
-    "q80_decontaminate" ->
-      """WITH d AS (
-           SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         sh AS (
-           SELECT doc_id, unnest(list_distinct(list_transform(
-             generate_series(1, greatest(len(w) - 3, 1)),
-             i -> array_to_string(w[i:i+3], ' ')))) AS sh
-           FROM d),
-         bench AS (SELECT DISTINCT sh FROM sh WHERE doc_id % 97 = 0),
-         corpus AS (SELECT doc_id, sh FROM sh WHERE doc_id % 97 <> 0)
-         SELECT doc_id, CAST(count(*) AS BIGINT) AS n_hits
-         FROM corpus JOIN bench USING (sh) GROUP BY 1""",
-
-    // q81 — the row priority is the q29-oracle md5 arithmetic (first 8 hex
-    // chars as a 32-bit int); DuckDB `//` floors where Spark DIV truncates,
-    // identical on these non-negative counts.
-    "q81_mix_sample" ->
-      """WITH c AS (SELECT lang, count(*) AS cnt FROM documents GROUP BY 1),
-         m AS (SELECT min(cnt) AS mn FROM c),
-         r AS (SELECT lang, CAST(mn * 1000000 // cnt AS BIGINT) AS r_ppm
-               FROM c, m)
-         SELECT d.doc_id, d.lang
-         FROM documents d JOIN r USING (lang)
-         WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8))::BIGINT
-           % 1000000 < r_ppm""",
-
-    // q83 — the weighted-rate arithmetic replayed from the SAME
-    // MixTargetPpm table the engine uses (interpolated, cannot drift):
-    // T = min_g ⌊n_g·10⁶/p_g⌋, required_g = ⌊p_g·T/10⁶⌋,
-    // rate_g = ⌊required_g·10⁶/n_g⌋, then the portable md5 row priority.
-    "q83_mix_target" -> {
-      val vals = MixTargetPpm
-        .map { case (g, p) => s"('$g', CAST($p AS BIGINT))" }.mkString(", ")
-      s"""WITH w(lang, p_ppm) AS (VALUES $vals),
-         c AS (SELECT lang, count(*) AS cnt FROM documents GROUP BY 1),
-         j AS (SELECT c.lang, c.cnt, w.p_ppm FROM c JOIN w USING (lang)),
-         t AS (SELECT min(cnt * 1000000 // p_ppm) AS t FROM j),
-         r AS (SELECT lang,
-                 CAST((p_ppm * t // 1000000) * 1000000 // cnt AS BIGINT)
-                   AS r_ppm
-               FROM j, t)
-         SELECT d.doc_id, d.lang
-         FROM documents d JOIN r USING (lang)
-         WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8))::BIGINT
-           % 1000000 < r_ppm"""
-    },
-
-    // q84 — same bigram slice semantics as the q28/q80 oracles; all
-    // integer ppm so the compare is exact.
-    "q84_repetition" ->
-      """WITH d AS (
-           SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         b AS (
-           SELECT doc_id, w,
-             list_transform(generate_series(1, greatest(len(w) - 1, 1)),
-               i -> array_to_string(w[i:i+1], ' ')) AS bg
-           FROM d)
-         SELECT doc_id,
-           CAST(len(list_distinct(w)) * 1000000 // len(w) AS BIGINT)
-             AS distinct_tok_ppm,
-           CAST((len(bg) - len(list_distinct(bg))) * 1000000 // len(bg)
-             AS BIGINT) AS dup_bigram_ppm
-         FROM b""",
-
-    // q82 — the composition replayed from q74's own gated export (the
-    // __VERIFY_OUT__ cross-read pattern): decontaminate against the
-    // corpus-wide benchmark shingles, re-derive the mixture rates over the
-    // CLEAN set, then the q78 running-sum block map over the kept docs.
-    "q82_corpus_build" ->
-      """WITH surv AS (
-           SELECT doc_id
-           FROM read_parquet('__VERIFY_OUT__/q74_curation/*.parquet')),
-         base AS (
-           SELECT d.doc_id, d.text, d.lang FROM documents d
-           JOIN surv USING (doc_id)),
-         shb AS (
-           SELECT DISTINCT unnest(list_distinct(list_transform(
-             generate_series(1, greatest(len(w) - 3, 1)),
-             i -> array_to_string(w[i:i+3], ' ')))) AS sh
-           FROM (SELECT string_split(text, ' ') AS w FROM documents
-                 WHERE doc_id % 97 = 0)),
-         shc AS (
-           SELECT doc_id, unnest(list_distinct(list_transform(
-             generate_series(1, greatest(len(w) - 3, 1)),
-             i -> array_to_string(w[i:i+3], ' ')))) AS sh
-           FROM (SELECT doc_id, string_split(text, ' ') AS w FROM base)),
-         contam AS (SELECT DISTINCT doc_id FROM shc JOIN shb USING (sh)),
-         clean AS (
-           SELECT b.* FROM base b
-           WHERE NOT EXISTS (SELECT 1 FROM contam x
-                             WHERE x.doc_id = b.doc_id)),
-         cnt AS (SELECT lang, count(*) AS cnt FROM clean GROUP BY 1),
-         mn AS (SELECT min(cnt) AS mn FROM cnt),
-         r AS (SELECT lang, CAST(mn * 1000000 // cnt AS BIGINT) AS r_ppm
-               FROM cnt, mn),
-         kept AS (
-           SELECT c.doc_id, c.text FROM clean c JOIN r USING (lang)
-           WHERE ('0x' || substr(md5(CAST(c.doc_id AS VARCHAR)), 1, 8))::BIGINT
-             % 1000000 < r_ppm),
-         d AS (
-           SELECT doc_id,
-             CAST(len(list_filter(string_split_regex(text, '[ \t\n\v\f\r]+'),
-               t -> length(t) > 0)) + 1 AS BIGINT) AS n
-           FROM kept),
-         c AS (
-           SELECT doc_id, n,
-             sum(n) OVER (ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           FROM d),
-         s AS (SELECT doc_id, CAST(cum - n AS BIGINT) AS st,
-                 CAST(cum AS BIGINT) AS en FROM c)
-         SELECT CAST(unnest(generate_series(st // 256, (en - 1) // 256))
-             AS BIGINT) AS pack_id,
-           doc_id, CAST(st AS BIGINT) AS start_tok, CAST(en AS BIGINT) AS end_tok
-         FROM s"""
+          FROM documents WHERE doc_id % 4 <> 2"""))
   )
 }

@@ -1,5 +1,6 @@
 package graft.app
 
+import graft.core.Documents
 import graft.corpus.Curation
 import graft.scale.{Scale, TableIO}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -25,6 +26,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Each stage is read back with the schema it was written with. Both
   * tables are keyed and bucketed by doc_id: per-doc rows have no
   * conversation skew, so salts=1.
+  *
+  * The input is read with the declared [[Documents.schema]]: no
+  * schema-inference job runs, and an input whose column types differ
+  * fails the read and publishes nothing.
   *
   * The benchmark set is the [[Curation.isBenchmark]] docs of the input, as
   * in q80 and q82, so the job's output is q82's at the same documents.
@@ -63,7 +68,7 @@ object CurationJob {
         nBuckets, stageWaves, salts = 1, keyCol = "doc_id", orderCol = orderCol)
       spark.read.schema(Scale.bucketedSchema(df.schema)).parquet(s"$dir/data")
     }
-    Curation.build(spark.read.parquet(in), blockTokens) {
+    Curation.build(spark.read.schema(Documents.schema).parquet(in), blockTokens) {
       case ("survivors", df) => df // stage_clean's write runs them
       case ("clean", df) =>
         staged("clean", s"$table/$snap/stage_clean", waves, "doc_id", df)

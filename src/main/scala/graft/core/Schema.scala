@@ -32,6 +32,16 @@ object Turn {
     StructField("tool", StringType), StructField("ts", TimestampType)))
 }
 
+/** The columns of a documents table that the curation chain reads
+  * ([[graft.corpus.Curation.build]]); other columns of the table are left
+  * unread. CurationJob reads its input with it, as ExtractJob reads with
+  * [[Turn.schema]]. */
+object Documents {
+  val schema: StructType = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType),
+    StructField("lang", StringType)))
+}
+
 /** A span of extracted content, with [start, end) character offsets into the
   * ORIGINAL turn payload (reference analog: spaCy sentence spans,
   * src/spacy_test.py:30-42). */

@@ -105,6 +105,24 @@ class CurationJobSpec extends AnyFunSuite {
     }
   }
 
+  test("an input whose column types differ from the documents schema publishes nothing") {
+    // the job reads its input with the declared Documents.schema: a STRING
+    // doc_id fails the read instead of flowing on as another type (an INT
+    // one would not: Spark widens INT32 to BIGINT on read)
+    val work = java.nio.file.Files.createTempDirectory("curation_job_schema").toString
+    val in = s"$work/documents.parquet"
+    spark.read.parquet(s"$srcDir/documents.parquet")
+      .withColumn("doc_id", col("doc_id").cast("string"))
+      .write.parquet(in)
+    val table = s"$work/corpus_blocks"
+    val e = intercept[org.apache.spark.SparkException] {
+      CurationJob.run(spark, in, table, nBuckets = 8)
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("doc_id")), e)
+    assert(TableIO.currentSnapshot(spark, table) === None)
+  }
+
   test("a run killed between stage_clean and publish resumes without rewriting stage_clean") {
     val table = java.nio.file.Files.createTempDirectory("curation_job_kill")
       .toString + "/corpus_blocks"

@@ -178,7 +178,16 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("every query has a DuckDB oracle except the two exported fits") {
+    val names = SparkEntry.gates.map(_.name)
+    assert(names.size === 84)
+    assert(names.distinct.size === 84)
+    assert(SparkEntry.queries.keySet === names.toSet)
     assert(SparkEntry.oracleSql.keySet ===
       SparkEntry.queries.keySet -- Set("q60_word_vectors", "q65_lsa_model"))
+    // a repeated name throws where a Map literal would keep the last one
+    val g = SparkEntry.gates.head
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.gateList(g, SparkEntry.gates(1), g.copy(oracle = None)))
+    assert(e.getMessage.contains(g.name))
   }
 }
