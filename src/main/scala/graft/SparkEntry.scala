@@ -905,8 +905,8 @@ object SparkEntry {
 
   /** Curation.sampleToBalanced's keep rates over `from` (lang): every
     * language kept at the smallest one's count. DuckDB `//` floors where
-    * Spark DIV truncates, identical on these non-negative counts. CTE r
-    * (lang, r_ppm). */
+    * the engine's driver-side Long division truncates, identical on these
+    * non-negative counts. CTE r (lang, r_ppm). */
   private def oracleBalancedRates(from: String) =
     s"""cnt AS (SELECT lang, count(*) AS cnt FROM $from GROUP BY 1),
          mn AS (SELECT min(cnt) AS mn FROM cnt),
@@ -1891,8 +1891,9 @@ object SparkEntry {
     // construction, probed). Rate-based (integer-ppm keep rates, portable
     // md5 row priority), NOT an exact-n window: a per-group window over a
     // handful of domains is a handful of giant skewed partitions at 100 TB,
-    // while the rate filter is a per-row predicate whose only shuffle is
-    // the tiny per-group count.
+    // while the rate filter is a per-row predicate. Its only shuffle is the
+    // tiny per-group count, collected when the gate is built; the rates are
+    // computed in the driver and filter the rows as a literal map.
     Gate("q81_mix_sample", (s, dir) =>
       graft.corpus.Curation.sampleToBalanced(
         t(s, dir, "documents").select(col("doc_id"), col("lang")),
@@ -1906,11 +1907,13 @@ object SparkEntry {
     // en-heavy corpus to an explicit 40/15/15/15/15 share. The weight
     // table is the SHARED MixTargetPpm constant — the oracle SQL is
     // generated from it (the q79 pattern), so the two sides cannot drift.
+    // Same shape as q81: the per-group counts are collected when the gate
+    // is built, and T and the rates are driver-side Long arithmetic.
     Gate("q83_mix_target", (s, dir) =>
       graft.corpus.Curation.sampleToTarget(
         t(s, dir, "documents").select(col("doc_id"), col("lang")),
         "doc_id", "lang", MixTargetPpm.toMap),
-      // q83 — the weighted-rate arithmetic replayed from the SAME
+      // q83 — the driver's weighted-rate arithmetic replayed from the SAME
       // MixTargetPpm table the engine uses (interpolated, cannot drift):
       // T = min_g ⌊n_g·10⁶/p_g⌋, required_g = ⌊p_g·T/10⁶⌋,
       // rate_g = ⌊required_g·10⁶/n_g⌋, then the portable md5 row priority.

@@ -41,14 +41,20 @@ object Curation {
     *    the mixture-sampled clean docs.
     *
     * The chain persists the frames it reads more than once (the quality
-    * frame, the near-dup self-join input, the token counts) and releases
-    * them once the last boundary has returned, so a boundary must have run
-    * every job its frame needs by then. A boundary may return its frame
+    * frame, the exact-dedup survivors, the token counts) and releases them
+    * once the last boundary has returned, so a boundary must have run every
+    * job its frame needs by then. A boundary may return its frame
     * unchanged: the next boundary's job then runs the stage too.
     *
-    * The near-dup prune is greedy by id: a doc drops when it pairs with ANY
-    * lower-id doc at est_jaccard ≥ 0.5, so a transitive chain prunes
-    * conservatively. Mixture rates are counted over the clean set.
+    * Exact dedup keeps the smallest doc_id per [[Dedup.fingerprint]] (one
+    * aggregate; the quality gate has dropped null text). The near-dup prune
+    * is greedy by id: a doc drops when it pairs with ANY lower-id doc at
+    * est_jaccard ≥ 0.5, so a transitive chain prunes conservatively.
+    * Contamination is a per-doc predicate, so its shingle hits are taken
+    * over the exact-dedup survivors, beside the MinHash branch rather than
+    * after it; both drops are anti-joins on the raw candidate rows, with no
+    * `distinct`. Mixture rates are counted over the clean set, in a job
+    * that runs when the sampler is called (after the "clean" boundary).
     */
   def build(docs: DataFrame, blockTokens: Int)(
       boundary: (String, DataFrame) => DataFrame): Stages = {
@@ -59,24 +65,22 @@ object Curation {
           TextStatsExprs.qualityScorePpm(col("text"), Normalize.DefaultStops)
             .as("quality_ppm"))
         .filter(col("quality_ppm") >= QualityMinPpm))
-      val keepers = Dedup.exact(quality, "doc_id", "text")
-        .filter(col("keep")).select("doc_id")
+      val keepers = quality.groupBy(Dedup.fingerprint(col("text")))
+        .agg(min(col("doc_id")).as("doc_id"))
       val unique = hold(quality.join(keepers, Seq("doc_id"), "left_semi"))
-      val nearDropped = nearDupPairs(tokenized(unique))
+      val nearDropped = nearDupCandidates(tokenized(unique), maxBucket = 0)
         .filter(col("est_jaccard") >= 0.5)
-        .select(col("key_b").as("doc_id")).distinct()
+        .select(col("key_b").as("doc_id"))
       val survivors = boundary("survivors",
         unique.join(nearDropped, Seq("doc_id"), "left_anti"))
-      val contam = contaminatedBy(tokenized(survivors), docs).select("doc_id")
+      val contam = contaminationHits(tokenized(unique), benchmarkTokens(docs),
+        "doc_id", "tokens", DecontamK)
       val clean = boundary("clean",
         survivors.join(contam, Seq("doc_id"), "left_anti")
           .select("doc_id", "text", "lang"))
-      val kept = sampleToBalanced(clean.select(col("doc_id"), col("lang")),
-        "doc_id", "lang")
-      val counts = hold(Packing.tokenCounts(
-        clean.join(kept.select("doc_id"), Seq("doc_id"))
-          .select(col("doc_id"), col("text")),
-        "doc_id", "text", bucketSize = 4096L))
+      val kept = sampleToBalanced(clean, "doc_id", "lang")
+      val counts = hold(Packing.tokenCounts(kept, "doc_id", "text",
+        bucketSize = 4096L))
       val blocks = boundary("blocks",
         Packing.packSpansFromCounts(counts, "doc_id", blockTokens))
       Stages(survivors, blocks)
@@ -88,22 +92,31 @@ object Curation {
   private def tokenized(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), split(col("text"), " ").as("tokens"))
 
-  /** The curation's near-dup candidate pairs over (doc_id, tokens):
-    * md5-portable MinHash LSH on 3-token shingles, 16 hashes in 4 bands
+  /** The curation's near-dup pairs over (doc_id, tokens): md5-portable
+    * MinHash LSH on 3-token shingles, 16 hashes in 4 bands
     * ([[graft.dedup.Dedup.minhashLshMd5]]), with its hot-bucket cap. */
   def nearDupPairs(docs: DataFrame, maxBucket: Long = 0): DataFrame =
-    Dedup.minhashLshMd5(docs, "doc_id", "tokens", k = 3, numHashes = 16,
+    nearDupCandidates(docs, maxBucket).distinct()
+
+  /** [[nearDupPairs]] before its `distinct`: a pair once per band it
+    * collides in ([[graft.dedup.Dedup.minhashLshCandidates]]). */
+  private def nearDupCandidates(docs: DataFrame, maxBucket: Long): DataFrame =
+    Dedup.minhashLshCandidates(docs, "doc_id", "tokens", k = 3, numHashes = 16,
       bands = 4, maxBucket = maxBucket)
 
   /** The evaluation-suite stand-in: documents with doc_id ≡ 0 (mod 97). */
   def isBenchmark(docId: Column): Column = docId % 97 === 0
 
+  /** (doc_id, tokens) of the [[isBenchmark]] docs of `docs` (doc_id,
+    * text): the curation's benchmark set. */
+  private def benchmarkTokens(docs: DataFrame): DataFrame =
+    tokenized(docs.filter(isBenchmark(col("doc_id"))))
+
   /** (doc_id, n_hits) for each `corpus` (doc_id, tokens) doc sharing a
     * 4-token shingle with the [[isBenchmark]] docs of `docs` (doc_id,
     * text) — [[contaminated]] with the curation's benchmark set and k. */
   def contaminatedBy(corpus: DataFrame, docs: DataFrame): DataFrame =
-    contaminated(corpus, tokenized(docs.filter(isBenchmark(col("doc_id")))),
-      "doc_id", "tokens", DecontamK)
+    contaminated(corpus, benchmarkTokens(docs), "doc_id", "tokens", DecontamK)
 
   /** Benchmark decontamination: flag corpus documents that share at least
     * one k-token shingle with an evaluation ("benchmark") set, so they can
@@ -112,17 +125,29 @@ object Curation {
     *
     * Returns (key, n_hits): one row per CONTAMINATED corpus doc with the
     * number of its distinct shingles that appear anywhere in the benchmark
-    * set. The caller anti-joins to clean (or audits the hit counts).
+    * set — [[contaminationHits]] counted per doc, for an audit of the hit
+    * counts. A caller that only drops the flagged docs anti-joins on the
+    * hits themselves and skips this aggregate's shuffle.
+    */
+  def contaminated(corpus: DataFrame, bench: DataFrame, key: String,
+                   tokens: String, k: Int): DataFrame =
+    contaminationHits(corpus, bench, key, tokens, k)
+      .groupBy(key)
+      .agg(count(lit(1)).as("n_hits"))
+
+  /** The shingle hits behind [[contaminated]]: (key, sh), one row per
+    * distinct k-token shingle of a corpus doc that appears anywhere in the
+    * benchmark set.
     *
     * Scale shape: the benchmark set is small by construction (eval suites
     * are thousands of docs, the corpus is billions), so its distinct
     * shingle set is broadcast — the corpus side is ONE scan with a
-    * map-side hash probe and a single groupBy(key) shuffle for the counts.
-    * Never a corpus×corpus join. Shingling reuses [[graft.dedup.Dedup
-    * .shingles]] (same slice semantics as the q28 Jaccard gate).
+    * map-side hash probe and no shuffle. Never a corpus×corpus join.
+    * Shingling reuses [[graft.dedup.Dedup.shingles]] (same slice semantics
+    * as the q28 Jaccard gate).
     */
-  def contaminated(corpus: DataFrame, bench: DataFrame, key: String,
-                   tokens: String, k: Int): DataFrame = {
+  def contaminationHits(corpus: DataFrame, bench: DataFrame, key: String,
+                        tokens: String, k: Int): DataFrame = {
     val benchShingles = bench
       .select(explode(array_distinct(
         graft.dedup.Dedup.shingles(col(tokens), k))).as("sh"))
@@ -131,8 +156,7 @@ object Curation {
       .select(col(key), explode(array_distinct(
         graft.dedup.Dedup.shingles(col(tokens), k))).as("sh"))
       .join(broadcast(benchShingles), Seq("sh"))
-      .groupBy(key)
-      .agg(count(lit(1)).as("n_hits"))
+      .select(col(key), col("sh"))
   }
 
   /** Deterministic mixture sampling: downsample every group to (in
@@ -141,26 +165,25 @@ object Curation {
     * (min_count·10⁶ div count); a row is kept iff its portable md5
     * priority (first 8 hex chars of md5(key) mod 10⁶ — the same
     * cross-engine hash the MinHash md5 gate uses) falls under its
-    * group's rate.
+    * group's rate. Returns the kept rows of `df`, with all of its columns.
     *
     * Rate-based, NOT exact-n: an exact per-group quota needs a window
     * partitioned by group — with a handful of domains over a 100 TB corpus
-    * that is a handful of giant skewed partitions. The rate filter is a
-    * pure per-row predicate: the only shuffle is the tiny per-group count
-    * aggregate, which then rides back in as a broadcast join. The kept set
-    * is fully deterministic in the keys (no RNG), so the oracle replays it
+    * that is a handful of giant skewed partitions. The per-group counts are
+    * one small aggregate, collected when this is called (a handful of rows
+    * by design); the rates are computed in the driver and the kept rows are
+    * a per-row predicate against them ([[sampleByRates]]). The kept set is
+    * fully deterministic in the keys (no RNG), so the oracle replays it
     * row-for-row.
     *
-    * The input is scanned twice (counts, then filter) — at scale, stage or
-    * persist the narrow (key, group) projection between the passes, the
-    * same discipline as [[Packing.tokenCounts]].
+    * `group` is a string column. A null group counts toward the minimum,
+    * but none of its rows is kept.
     */
   def sampleToBalanced(df: DataFrame, key: String, group: String): DataFrame = {
-    val counts = df.groupBy(group).agg(count(lit(1)).as("cnt"))
-    val minCnt = counts.agg(min(col("cnt")).as("mn"))
-    val rates = counts.crossJoin(broadcast(minCnt))
-      .select(col(group),
-        expr("CAST(mn * 1000000 DIV cnt AS BIGINT)").as("r_ppm"))
+    val counts = groupCounts(df, group)
+    val rates = counts.values.minOption.fold(Map.empty[String, Long]) { mn =>
+      counts.collect { case (Some(g), cnt) => g -> ppm(mn) / cnt }
+    }
     sampleByRates(df, key, group, rates)
   }
 
@@ -171,45 +194,43 @@ object Curation {
     * T = min_g ⌊n_g·10⁶ / p_g⌋ (the group that runs out first caps the
     * corpus); each group then keeps required_g = ⌊p_g·T / 10⁶⌋ rows in
     * expectation via rate_g = ⌊required_g·10⁶ / n_g⌋. All-integer ppm
-    * arithmetic, same portable md5 row priority, same scale shape: the
-    * only shuffle is the tiny per-group count.
+    * arithmetic in the driver over the collected per-group counts, same
+    * portable md5 row priority, same scale shape as [[sampleToBalanced]].
     *
-    * Groups absent from `weightsPpm` get weight 0 and are dropped; groups
-    * in the map but absent from the data simply don't constrain T.
+    * Groups absent from `weightsPpm` (the null group too) get weight 0:
+    * they do not constrain T and are dropped. Groups in the map but absent
+    * from the data simply don't constrain T.
     */
   def sampleToTarget(df: DataFrame, key: String, group: String,
                      weightsPpm: Map[String, Long]): DataFrame = {
     require(weightsPpm.values.forall(_ > 0), "weights must be positive ppm")
-    val s = df.sparkSession
-    import scala.jdk.CollectionConverters._
-    val w = s.createDataFrame(
-      weightsPpm.toSeq.sortBy(_._1)
-        .map { case (g, p) => org.apache.spark.sql.Row(g, p) }.asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(group,
-          org.apache.spark.sql.types.StringType, nullable = false),
-        org.apache.spark.sql.types.StructField("p_ppm",
-          org.apache.spark.sql.types.LongType, nullable = false))))
-    val counts = df.groupBy(group).agg(count(lit(1)).as("cnt"))
-      .join(broadcast(w), Seq(group))
-    val tMax = counts
-      .agg(min(expr("CAST(cnt * 1000000 DIV p_ppm AS BIGINT)")).as("t"))
-    val rates = counts.crossJoin(broadcast(tMax))
-      .select(col(group),
-        expr("CAST((p_ppm * t DIV 1000000) * 1000000 DIV cnt AS BIGINT)")
-          .as("r_ppm"))
+    val weighted = groupCounts(df, group).collect {
+      case (Some(g), cnt) if weightsPpm.contains(g) => (g, cnt, weightsPpm(g))
+    }
+    val tMax = weighted.map { case (_, cnt, p) => ppm(cnt) / p }.minOption
+    val rates = tMax.fold(Map.empty[String, Long]) { t =>
+      weighted.map { case (g, cnt, p) =>
+        g -> ppm(Math.multiplyExact(p, t) / 1000000L) / cnt }.toMap
+    }
     sampleByRates(df, key, group, rates)
   }
 
-  /** Shared tail of the samplers: broadcast the tiny (group, r_ppm) frame
-    * and keep rows whose portable md5 priority clears their group's rate. */
+  /** n·10⁶, failing on overflow as Spark's ANSI arithmetic does. */
+  private def ppm(n: Long): Long = Math.multiplyExact(n, 1000000L)
+
+  /** The samplers' per-group row counts, null group included (as None). */
+  private def groupCounts(df: DataFrame, group: String): Map[Option[String], Long] =
+    df.groupBy(col(group)).count().collect()
+      .map(r => Option(r.getString(0)) -> r.getLong(1)).toMap
+
+  /** Shared tail of the samplers: keep the rows whose portable md5
+    * priority clears their group's `ratesPpm` entry, a per-row predicate
+    * with the rates as a literal map; a group without a rate keeps none. */
   private def sampleByRates(df: DataFrame, key: String, group: String,
-                            rates: DataFrame): DataFrame = {
+                            ratesPpm: Map[String, Long]): DataFrame = {
     val prio = pmod(
       conv(substring(md5(col(key).cast("string")), 1, 8), 16, 10)
         .cast("long"), lit(1000000L))
-    df.join(broadcast(rates), Seq(group))
-      .filter(prio < col("r_ppm"))
-      .select(col(key), col(group))
+    df.filter(prio < element_at(typedLit(ratesPpm), col(group)))
   }
 }

@@ -2,6 +2,7 @@ package graft.dedup
 
 import graft.scale.Scale
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication suite for a web-scale training-data pipeline: exact,
@@ -9,8 +10,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale design (100 TB):
   *  - exact dedup is one hash-shuffle on a 16-byte digest — the minimum
-  *    possible exchange; the winner per group is chosen with min(), not a
-  *    window sort, so partial aggregation applies;
+  *    possible exchange; the winner per group is its min() key, as an
+  *    aggregate where only the winners are needed (partial aggregation
+  *    applies) and as a window where every row carries its flag;
   *  - MinHash/LSH never materializes the O(n²) pair space: docs shuffle once
   *    keyed by (band, band-signature) and only same-bucket pairs join;
   *  - SimHash buckets on 8-bit sub-keys of the 32-bit signature (each
@@ -24,19 +26,21 @@ object Dedup {
 
   // ------------------------------------------------------------ exact (hash)
 
-  /** Exact dedup: the fingerprint is md5 of lowercased, whitespace-
-    * collapsed text, so case and whitespace variants share a digest; keeps
-    * the smallest key per digest group. Returns (key, fingerprint, keep)
-    * for every row — keep = true on the group's canonical representative. */
-  def exact(df: DataFrame, key: String, text: String): DataFrame = {
-    val withFp = df.select(col(key),
-      md5(regexp_replace(lower(col(text)), "\\s+", " ")).as("fingerprint"))
-    val keepers = withFp.groupBy("fingerprint")
-      .agg(min(col(key)).as("keeper"))
-    withFp.join(keepers, Seq("fingerprint"))
-      .select(col(key), col("fingerprint"),
-        (col(key) === col("keeper")).as("keep"))
-  }
+  /** The exact-dedup fingerprint: md5 of the lowercased, whitespace-
+    * collapsed text, so case and whitespace variants share a digest. */
+  def fingerprint(text: Column): Column =
+    md5(regexp_replace(lower(text), "\\s+", " "))
+
+  /** Exact dedup: keeps the smallest key per [[fingerprint]] group.
+    * Returns (key, fingerprint, keep) for every row with non-null text —
+    * keep = true on the group's canonical representative. The group
+    * minimum is a window over the fingerprint, so md5 runs once per row and
+    * the rows shuffle once, with no join back. */
+  def exact(df: DataFrame, key: String, text: String): DataFrame =
+    df.filter(col(text).isNotNull)
+      .select(col(key), fingerprint(col(text)).as("fingerprint"))
+      .withColumn("keep",
+        col(key) === min(col(key)).over(Window.partitionBy("fingerprint")))
 
   // ------------------------------------------------------- shingles / jaccard
 
@@ -148,13 +152,24 @@ object Dedup {
       numHashes)
   }
 
-  /** MinHash+LSH near-dup candidates over [[minhashSignatureMd5]]: band the
+  /** MinHash+LSH near-dup pairs over [[minhashSignatureMd5]]: the distinct
+    * [[minhashLshCandidates]], one row per (key_a, key_b) with its
+    * estimated Jaccard (fraction of matching signature slots). The DuckDB
+    * oracle replays the whole candidate generation — banding, bucket join
+    * and slot-match estimate (q45, q58). */
+  def minhashLshMd5(df: DataFrame, key: String, tokens: String, k: Int = 3,
+                    numHashes: Int = 16, bands: Int = 4,
+                    maxBucket: Long = 0): DataFrame =
+    minhashLshCandidates(df, key, tokens, k, numHashes, bands, maxBucket)
+      .distinct()
+
+  /** The MinHash+LSH candidate pairs behind [[minhashLshMd5]]: band the
     * signature (bands × rowsPerBand = numHashes), bucket-join on (band_id,
     * band_signature). One shuffle keyed by band bucket; same-bucket pairs
-    * only. Returns candidate pairs with their estimated Jaccard (fraction
-    * of matching signature slots). The DuckDB oracle replays the whole
-    * candidate generation — banding, bucket join and slot-match estimate
-    * (q45, q58).
+    * only. Returns (key_a, key_b, est_jaccard) with key_a < key_b, once per
+    * band the pair collides in. A caller that only tests membership (an
+    * anti- or semi-join on a key) reads these as they are, without the
+    * shuffle a `distinct` costs.
     *
     * `maxBucket` caps bucket population: a bucket of b docs makes b²/2
     * candidate pairs, so one degenerate bucket (e.g. the empty-shingle
@@ -162,9 +177,9 @@ object Dedup {
     * larger than the cap are dropped from candidate generation — a standard,
     * documented recall trade (members of a giant bucket are near-identical
     * boilerplate and surface via exact dedup instead). 0 disables. */
-  def minhashLshMd5(df: DataFrame, key: String, tokens: String, k: Int = 3,
-                    numHashes: Int = 16, bands: Int = 4,
-                    maxBucket: Long = 0): DataFrame = {
+  def minhashLshCandidates(df: DataFrame, key: String, tokens: String, k: Int,
+                           numHashes: Int, bands: Int,
+                           maxBucket: Long): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rows = numHashes / bands
     val sig = df.select(col(key).as("k"),
@@ -185,13 +200,9 @@ object Dedup {
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
           col("a.k") < col("b.k"))
       .select(col("a.k").as("key_a"), col("b.k").as("key_b"),
-        col("a.sig").as("sig_a"), col("b.sig").as("sig_b"))
-      .distinct()
-      .withColumn("est_jaccard",
-        round(size(filter(zip_with(col("sig_a"), col("sig_b"),
+        round(size(filter(zip_with(col("a.sig"), col("b.sig"),
           (x, y) => (x === y).cast("int")), e => e === 1)).cast("double")
-          / numHashes.toDouble, 6))
-      .select("key_a", "key_b", "est_jaccard")
+          / numHashes.toDouble, 6).as("est_jaccard"))
   }
 
   // ---------------------------------------------------------------- SimHash

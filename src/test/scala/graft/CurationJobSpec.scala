@@ -4,6 +4,8 @@ import graft.app.CurationJob
 import graft.corpus.{Curation, Packing}
 import graft.dedup.Dedup
 import graft.scale.{Scale, TableIO}
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -66,6 +68,32 @@ class CurationJobSpec extends AnyFunSuite {
     assert(graft.scale.Scale.manifestRows(spark,
       s"$table/$snap/stage_clean/manifest").size === 8)
   }
+
+  test("one run over the fixture corpus runs at most MaxJobs Spark jobs") {
+    // every job is a scheduling round trip and, at scale, a corpus pass: a
+    // shuffle or a driver-side step that creeps back into the chain shows
+    // here first
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val table = java.nio.file.Files.createTempDirectory("curation_job_jobs")
+      .toString + "/corpus_blocks"
+    ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      CurationJob.run(spark, s"$srcDir/documents.parquet", table, nBuckets = 8)
+      ListenerBusDrain.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get <= MaxJobs)
+  }
+
+  /** The jobs one [[CurationJob.run]] over the sf0.001 documents at 8
+    * buckets and one wave runs on local[4]: 17 for stage_clean's write, 2
+    * for the mixture sampler's per-language counts and 8 for the block
+    * map's write (adaptive execution runs each shuffle stage as a job). */
+  private val MaxJobs = 27
 
   private val blockCols = Seq("pack_id", "doc_id", "start_tok", "end_tok")
 

@@ -60,6 +60,15 @@ class CurationSpec extends AnyFunSuite {
     assert(out === Map(10L -> 1L, 11L -> 2L))
   }
 
+  /** The samplers' portable md5 row priority, recomputed independently of
+    * Spark. */
+  private def prio(id: Long): Long = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val hx = md.digest(id.toString.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString.substring(0, 8)
+    java.lang.Long.parseLong(hx, 16) % 1000000L
+  }
+
   test("balanced sampling: ppm rates from group counts, md5-priority row picks") {
     // g1 has 4 rows, g2 has 2 → mn = 2, r(g1) = 500000 ppm, r(g2) = 1000000
     // ppm (every g2 row survives: priorities live in [0, 1e6)). The kept g1
@@ -68,12 +77,6 @@ class CurationSpec extends AnyFunSuite {
     val rows = Seq(1L -> "g1", 2L -> "g1", 3L -> "g1", 4L -> "g1",
       5L -> "g2", 6L -> "g2")
     val df = rows.toDF("k", "g")
-    def prio(id: Long): Long = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val hx = md.digest(id.toString.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.substring(0, 8)
-      java.lang.Long.parseLong(hx, 16) % 1000000L
-    }
     val expected = rows.filter { case (id, g) =>
       prio(id) < (if (g == "g1") 500000L else 1000000L) }.toSet
     val out = graft.corpus.Curation.sampleToBalanced(df, "k", "g")
@@ -88,12 +91,6 @@ class CurationSpec extends AnyFunSuite {
     // rate(g1) = 2e6//6 = 333333 ppm, rate(g2) = 1000000 (keep all).
     val rows = (1L to 6L).map(_ -> "g1") ++ Seq(7L -> "g2", 8L -> "g2")
     val df = rows.toDF("k", "g")
-    def prio(id: Long): Long = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val hx = md.digest(id.toString.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.substring(0, 8)
-      java.lang.Long.parseLong(hx, 16) % 1000000L
-    }
     val expected = rows.filter { case (id, g) =>
       prio(id) < (if (g == "g1") 333333L else 1000000L) }.toSet
     val out = graft.corpus.Curation.sampleToTarget(df, "k", "g",
@@ -101,6 +98,50 @@ class CurationSpec extends AnyFunSuite {
       .as[(Long, String)].collect().toSet
     assert(out === expected)
     assert(Set(7L -> "g2", 8L -> "g2").subsetOf(out))
+  }
+
+  test("a null group counts toward the balanced minimum, but none of its rows is kept") {
+    // g1 has 4 rows, g2 has 2, the null group 1 → mn = 1, r(g1) = 250000
+    // ppm, r(g2) = 500000 ppm. Without the null group mn would be 2 and
+    // doc 2 (priority 438605) and doc 5 (507327) would survive too.
+    val rows = Seq[(Long, String)](1L -> "g1", 2L -> "g1", 3L -> "g1",
+      4L -> "g1", 5L -> "g2", 6L -> "g2", 7L -> null)
+    val expected = rows.filter { case (id, g) =>
+      g != null && prio(id) < (if (g == "g1") 250000L else 500000L) }.toSet
+    val out = graft.corpus.Curation.sampleToBalanced(rows.toDF("k", "g"), "k", "g")
+      .as[(Long, String)].collect().toSet
+    assert(out === expected)
+    assert(out === Set(6L -> "g2"))
+  }
+
+  test("a group without a target weight, null included, does not cap T and keeps no row") {
+    // the weighted case above plus a null-group row and a g3 row: T, the
+    // rates and the kept rows are the same as without them
+    val rows = (1L to 6L).map(_ -> "g1") ++ Seq(7L -> "g2", 8L -> "g2") ++
+      Seq(9L -> (null: String), 10L -> "g3")
+    val expected = rows.filter { case (id, g) =>
+      (g == "g1" && prio(id) < 333333L) || g == "g2" }.toSet
+    val out = graft.corpus.Curation.sampleToTarget(rows.toDF("k", "g"), "k", "g",
+        Map("g1" -> 500000L, "g2" -> 500000L))
+      .as[(Long, String)].collect().toSet
+    assert(out === expected)
+  }
+
+  test("the samplers return an empty frame for an empty input") {
+    val empty = Seq.empty[(Long, String)].toDF("k", "g")
+    assert(graft.corpus.Curation.sampleToBalanced(empty, "k", "g").isEmpty)
+    assert(graft.corpus.Curation.sampleToTarget(empty, "k", "g",
+      Map("g1" -> 500000L, "g2" -> 500000L)).isEmpty)
+  }
+
+  test("balanced sampling keeps every input column") {
+    val df = Seq((1L, "g1", "a"), (2L, "g1", "b"), (5L, "g2", "c"))
+      .toDF("k", "g", "payload")
+    val out = graft.corpus.Curation.sampleToBalanced(df, "k", "g")
+    assert(out.columns.toSeq === Seq("k", "g", "payload"))
+    // mn = 1: r(g1) = 500000 ppm keeps doc 2 (438605), r(g2) keeps doc 5
+    assert(out.as[(Long, String, String)].collect().toSet ===
+      Set((2L, "g1", "b"), (5L, "g2", "c")))
   }
 
   test("repetition metrics: distinct-token and duplicate-bigram ppm, hand-computed") {
