@@ -24,8 +24,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the last incomplete stage, and the snapshot becomes visible only at the
   * final atomic pointer flip (TableIO), so readers never see a torn build.
   * Each stage is read back with the schema it was written with. Both
-  * tables are keyed and bucketed by doc_id: per-doc rows have no
-  * conversation skew, so salts=1.
+  * tables are keyed and bucketed by doc_id.
   *
   * The input is read with the declared [[Documents.schema]]: no
   * schema-inference job runs, and an input whose column types differ
@@ -65,7 +64,7 @@ object CurationJob {
     def staged(stage: String, dir: String, stageWaves: Int, orderCol: String,
                df: DataFrame): DataFrame = {
       written(stage) = Scale.resumableWrite(df, s"$dir/data", s"$dir/manifest",
-        nBuckets, stageWaves, salts = 1, keyCol = "doc_id", orderCol = orderCol)
+        nBuckets, stageWaves, keyCol = "doc_id", orderCol = orderCol)
       spark.read.schema(Scale.bucketedSchema(df.schema)).parquet(s"$dir/data")
     }
     Curation.build(spark.read.schema(Documents.schema).parquet(in), blockTokens) {

@@ -18,16 +18,14 @@ import org.apache.spark.sql.functions._
   * `Turn.schema` (at 10^12 turns this is an Iceberg table with
   * bucket(conv_id) partitioning; here a parquet dir);
   * the per-turn kernel is embarrassingly parallel and runs MAP-SIDE in the
-  * scan stage — the job's only shuffle is the write's keyed repartition.
-  * `salts` is the writer spread of a hot bucket: a column-pruned count of
-  * the rows per bucket runs first, and only a bucket holding more than a
-  * quarter of one writer task's even share (a skewed long conversation) is
-  * spread over `salts` writer keys, so an unskewed corpus writes one file
-  * per bucket. The write is bucket-partitioned and manifest-guarded INSIDE
-  * an unpublished snapshot directory, so a resumed run recomputes only
-  * unfinished buckets AND readers of the published table never see a torn
-  * write — the snapshot becomes visible only at the final atomic pointer
-  * flip (TableIO).
+  * scan stage — the job's only shuffle is the write's keyed rebalance,
+  * whose map statistics size the fan-out: AQE splits a bucket that a
+  * skewed long conversation makes hot, and an unskewed corpus writes one
+  * file per bucket (Scale.resumableWrite). The write is bucket-partitioned
+  * and manifest-guarded INSIDE an unpublished snapshot directory, so a
+  * resumed run recomputes only unfinished buckets AND readers of the
+  * published table never see a torn write — the snapshot becomes visible
+  * only at the final atomic pointer flip (TableIO).
   * Metrics come from `observe` (Spark-native, no driver-side collect).
   * `waves` > 1 commits the write in that many bucket chunks, each a
   * resume point (Scale.resumableWrite).
@@ -55,7 +53,9 @@ object ExtractJob {
   }
 
   /** Job body (main minus session lifecycle — testable): returns
-    * (published snapshot, rows written). */
+    * (published snapshot, rows written). `salts` and `cpus` reach no plan:
+    * they are kept for perfbench's source compatibility, and `salts` still
+    * names the staging snapshot's params. */
   def run(spark: SparkSession, in: String, table: String, nBuckets: Int,
           salts: Int, cpus: Int, waves: Int = 1): (String, Long) = {
     // waves is not a parameter of the staging snapshot: it changes
@@ -64,10 +64,10 @@ object ExtractJob {
     val snap = TableIO.openStaging(spark, table, s"nBuckets=$nBuckets\nsalts=$salts")
     // NO upfront repartition: the kernel is per-turn embarrassingly
     // parallel and runs map-side inside the scan stage (size-balanced
-    // splits), so the job's ONLY shuffle is the write's keyed repartition —
-    // which is where conversation skew actually bites and where
-    // resumableWrite's measured fan-out handles it. The declared schema
-    // means no inference job, and a mistyped input fails the read.
+    // splits), so the job's ONLY shuffle is the write's keyed rebalance —
+    // which is where conversation skew actually bites and where AQE splits
+    // a hot bucket. The declared schema means no inference job, and a
+    // mistyped input fails the read.
     val turns = spark.read.schema(Turn.schema).parquet(in)
     // Observation (not a bare .observe name): the metrics are retrieved
     // after the write action and printed; a bare-name observe would compute

@@ -10,13 +10,11 @@ import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, LogicalPlan}
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructType}
 
 /** The scale module (SURVEY.md §7 item 8): conv_id hash bucketing, a keyed
-  * write that salts only measured-hot buckets, AQE config, and the
+  * write whose fan-out AQE sizes from its shuffle, AQE config, and the
   * per-bucket lineage manifest that makes a failed 10^12-turn run
   * resumable without recomputing completed buckets (north_rule).
   *
@@ -142,35 +140,6 @@ object Scale {
       .foldLeft(Map.empty[Int, Long]) { case (m, (b, n)) => m.updated(b, m.getOrElse(b, n) max n) }
   }
 
-  /** Rows per bucket of `df`, from one column-pruned pass over `keyCol`.
-    * The pass counts `df` without its top `observe` (CollectMetrics)
-    * nodes: they pass every row through unchanged, but they block column
-    * pruning, so counting an observed frame would run its whole projection
-    * and feed its single-shot Observation. */
-  private def bucketCounts(df: DataFrame, nBuckets: Int, keyCol: String,
-                           buckets: Seq[Int]): Map[Int, Long] = {
-    def strip(p: LogicalPlan): LogicalPlan = p match {
-      case c: CollectMetrics => strip(c.child)
-      case _ => p
-    }
-    val keyed = ColumnBridge.ofRows(df.sparkSession, strip(df.queryExecution.analyzed))
-      .select(bucketCol(nBuckets, keyCol))
-    val pending =
-      if (buckets.size == nBuckets) keyed
-      else keyed.filter(col("bucket").isin(buckets.map(Int.box): _*))
-    pending.groupBy("bucket").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-  }
-
-  /** Buckets too big for one writer. The task that writes a bucket alone
-    * also receives its hashed part of the other buckets, so a bucket of
-    * more than a quarter of an even share (all rows over the writer stage's
-    * `parallelism`) would push that task well past the share. */
-  private def hotBuckets(counts: Map[Int, Long], parallelism: Int): Seq[Int] = {
-    val share = counts.values.sum.toDouble / parallelism
-    counts.collect { case (b, n) if n > share / 4 => b }.toSeq.sorted
-  }
-
   /** Rows under each of `buckets`' `bucket=` dirs in `outDir`: the sum of
     * the record counts in its data files' parquet footers. A driver-side
     * listing of each of those dirs, not of `outDir`, plus one footer read
@@ -197,18 +166,23 @@ object Scale {
     * bucket-partitioned, so a resume after k completed buckets rescans only
     * (n−k)/n of the data.
     *
-    * Fan-out is measured, not blind. With `salts` > 1, one column-pruned
-    * `groupBy(bucket).count()` over `keyCol` runs before the write. A
-    * bucket holding more than a quarter of an even share of the rows (all
-    * rows over `spark.sql.shuffle.partitions`) is hot: its rows are keyed by
-    * (bucket, `orderCol` mod `salts`), so they spread over the writer tasks
-    * as a blind salting would, and a 10^9-turn conversation, which lands in
-    * ONE bucket, has no single straggler writer. Every other bucket keeps
-    * one writer, so an unskewed corpus with several buckets per writer task
-    * writes one file per non-empty bucket instead of one per bucket per
-    * writer task; with under four buckets per writer task every bucket is
-    * hot. With `salts` = 1 no pre-pass runs and every bucket has one writer.
-    * The pre-pass only sizes the fan-out.
+    * Fan-out comes from the write's own shuffle, with no pass of its own.
+    * Each wave is keyed by a REBALANCE hint on `bucket` at `nBuckets`
+    * partitions. With AQE on ([[defaults]]), `OptimizeSkewInRebalancePartitions`
+    * splits a bucket whose shuffle output is over
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` across several
+    * writer tasks, and `CoalesceShufflePartitions` merges small buckets
+    * into one task, so an unskewed corpus writes one file per non-empty
+    * bucket. Both read the shuffle's map-output statistics. The split cuts
+    * a bucket only between map-output blocks: a hot bucket spreads over at
+    * most the scan tasks that produced its rows, so a writer task holds
+    * roughly the larger of the advisory size and one scan task's output
+    * for that bucket. The kernel runs map-side in the scan stage, and a
+    * 10^9-turn conversation spans many input splits, so it is spread; a
+    * bucket fed by a single map task stays one file. With AQE off, the
+    * hint is a plain hash repartition: one writer per bucket. `salts`
+    * reaches no plan; it and its check stay for perfbench's source
+    * compatibility.
     *
     * The manifest holds the parquet footer counts of the committed files:
     * after each wave commits, every bucket of the wave is recorded with the
@@ -251,11 +225,6 @@ object Scale {
     require(salts >= 1, s"salts must be >= 1: $salts")
     val spark = df.sparkSession
     val done = manifestRows(spark, manifestDir)
-    val pending = (0 until nBuckets).filterNot(done.contains)
-    val hot =
-      if (salts <= 1 || pending.isEmpty) Seq.empty[Int]
-      else hotBuckets(bucketCounts(df, nBuckets, keyCol, pending),
-        spark.conf.get("spark.sql.shuffle.partitions").toInt)
     val withBucket = df.withColumn("bucket", bucketCol(nBuckets, keyCol))
     val recorded = (0 until waves).flatMap { w =>
       val waveBuckets = (w until nBuckets by waves).filterNot(done.contains)
@@ -267,12 +236,7 @@ object Scale {
         val wave =
           if (waveBuckets.size == nBuckets) withBucket // nothing to prune
           else withBucket.filter(col("bucket").isin(waveBuckets.map(Int.box): _*))
-        val keyed =
-          if (hot.isEmpty) wave.repartition(col("bucket"))
-          else wave.repartition(col("bucket"),
-            when(col("bucket").isin(hot.map(Int.box): _*), pmod(col(orderCol), lit(salts)))
-              .otherwise(lit(0)))
-        keyed
+        wave.hint("rebalance", nBuckets, col("bucket"))
           .sortWithinPartitions("bucket", keyCol, orderCol)
           .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
           .partitionBy("bucket").parquet(outDir)

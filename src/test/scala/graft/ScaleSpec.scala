@@ -16,7 +16,7 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 /** FIXTURES.md families 9 (resume/lineage) and 4 (skew): idempotent resume
-  * under partial failure, and salting bounds on skewed conversations. */
+  * under partial failure, and the write's spread of skewed conversations. */
 class ScaleSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
 
@@ -114,23 +114,22 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("salted write spreads a skewed conversation across writer files") {
-    // a 1000-turn conversation lands entirely in ONE bucket; with salts>1
-    // the write's (bucket, turn_idx % salts) keying hands it to several
-    // writer tasks → several files in that bucket dir, no straggler. The
-    // table content must be identical to the unsalted write.
+    // a 1000-turn conversation lands entirely in ONE bucket. Its rows come
+    // from every one of the 8 input parts, as a long conversation's rows
+    // come from many input splits, so AQE can split the bucket between
+    // map-output blocks once it is over the advisory size → several files
+    // in that bucket dir, no straggler. The table content must be identical
+    // to the unsplit write.
     val tmp = Files.createTempDirectory("graft_salted_write").toString
     val skewed = Transcripts.synthetic(spark, 2000, 10, skewFactor = 100)
-      .drop("doc_text")
+      .drop("doc_text").repartition(8)
     val result = Extract.pipeline(skewed)
-    // AQE coalescing merges this fixture-sized shuffle back into one task
-    // (at corpus scale the salt groups exceed the advisory partition size
-    // and stay separate) — pin the spread mechanism without it
     val n1 = Scale.resumableWrite(result, s"$tmp/plain", s"$tmp/man1", nBuckets = 8)
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    val n2 =
-      try Scale.resumableWrite(result, s"$tmp/salted", s"$tmp/man2",
-        nBuckets = 8, salts = 8)
-      finally spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    // the default advisory size (64 MB) holds this whole fixture in one
+    // writer task; 64 KB is between its cold and its hot bucket sizes
+    val n2 = withAdvisorySize("64k") {
+      Scale.resumableWrite(result, s"$tmp/salted", s"$tmp/man2", nBuckets = 8, salts = 8)
+    }
     assert(n1 === n2)
     val a = spark.read.parquet(s"$tmp/plain").select("conv_id", "turn_idx", "text")
     val b = spark.read.parquet(s"$tmp/salted").select("conv_id", "turn_idx", "text")
@@ -146,6 +145,13 @@ class ScaleSpec extends AnyFunSuite {
     assert(files > 1, s"skewed bucket written by a single task ($files file)")
   }
 
+  /** `body` with `spark.sql.adaptive.advisoryPartitionSizeInBytes` at
+    * `size`, the shuffle output over which AQE splits a bucket. */
+  private def withAdvisorySize[T](size: String)(body: => T): T = {
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", size)
+    try body finally spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+  }
+
   /** Data files under each `bucket=` dir of `dir`. */
   private def filesPerBucket(dir: String): Map[String, Seq[java.io.File]] =
     new java.io.File(dir).listFiles().toSeq
@@ -157,9 +163,9 @@ class ScaleSpec extends AnyFunSuite {
     val tmp = Files.createTempDirectory("graft_fanout").toString
     val result = Extract.pipeline(Transcripts.synthetic(spark, 2000, 10).drop("doc_text"))
     val n1 = Scale.resumableWrite(result, s"$tmp/plain", s"$tmp/man1")
-    // coalescing off, as in the salted-write test: each bucket must still
-    // reach exactly one writer task, because with 64 buckets over 4 writer
-    // tasks no bucket is hot
+    // coalescing off, so no bucket shares a writer task with its
+    // neighbours by merging: each must still reach exactly one writer
+    // task, because no bucket's shuffle output is over the advisory size
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     val n2 =
       try Scale.resumableWrite(result, s"$tmp/salted", s"$tmp/man2", salts = 8)
@@ -196,29 +202,35 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("a hot bucket spreads over the writer tasks, a cold one keeps one writer") {
-    // conversation 0 holds a quarter of the corpus, so its bucket holds more
-    // than an even share of the 4 writer tasks' rows; every other bucket
-    // holds under 2 %
+    // conversation 0 holds a quarter of the corpus, so its bucket's shuffle
+    // output is over the 64 KB advisory size; every other bucket holds
+    // under 2 % and stays under it. The 8 input parts each feed the hot
+    // bucket, so AQE can split it between their map-output blocks.
+    // Coalescing is off: it would merge the cold buckets up to its 1 MB
+    // floor (`coalescePartitions.minPartitionSize`), most of this fixture,
+    // so each writer task holds one bucket or one split of the hot one.
     val tmp = Files.createTempDirectory("graft_hot").toString
     val result = Extract.pipeline(
-      Transcripts.synthetic(spark, 4000, 10, skewFactor = 100).drop("doc_text"))
+      Transcripts.synthetic(spark, 4000, 10, skewFactor = 100).drop("doc_text")
+        .repartition(8))
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     val n =
-      try Scale.resumableWrite(result, s"$tmp/out", s"$tmp/man", salts = 16)
-      finally spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+      try withAdvisorySize("64k") {
+        Scale.resumableWrite(result, s"$tmp/out", s"$tmp/man", salts = 16)
+      } finally spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     assert(n === 4000)
     val hot = result.filter(col("conv_id") === "c00000000000000")
       .select(Scale.bucketCol()).distinct().collect().map(r => s"bucket=${r.getInt(0)}")
     val files = filesPerBucket(s"$tmp/out")
     assert(files(hot.head).size === 4, s"hot bucket files: ${files(hot.head).size}")
     assert((files - hot.head).values.forall(_.size == 1))
-    // rows per writer task (the part number of its files): the hot bucket's
-    // 16 salt keys land on every task, so none holds much over a quarter
+    // rows per writer task (the part number of its files): the hot bucket
+    // holds over a quarter of the rows, and its splits land on separate
+    // tasks, so none holds a tenth
     val perTask = files.values.flatten.toSeq
       .groupBy(_.getName.split("-")(1))
       .map { case (_, fs) => fs.map(f => spark.read.parquet(f.getPath).count()).sum }
-    assert(perTask.size === 4)
-    assert(perTask.max < 0.35 * n, s"rows per writer task: $perTask")
+    assert(perTask.max < 0.1 * n, s"rows per writer task: $perTask")
   }
 
   /** What `body` returns, and the (function name, executed plan, observed
@@ -246,7 +258,7 @@ class ScaleSpec extends AnyFunSuite {
     val result = Extract.pipeline(Transcripts.synthetic(spark, 2000, 10).drop("doc_text"))
     val obs = org.apache.spark.sql.Observation("footer_counts")
     // (input, salts, its Observation): a nondeterministic filter keeps
-    // different rows on each evaluation, so a pre-pass count of it is not
+    // different rows on each evaluation, so only the committed files count
     // the written rows
     val inputs = Seq(
       ("plain", result, 1, None),
