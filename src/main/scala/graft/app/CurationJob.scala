@@ -24,7 +24,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the last incomplete stage, and the snapshot becomes visible only at the
   * final atomic pointer flip (TableIO), so readers never see a torn build.
   * Each stage is read back with the schema it was written with. Both
-  * tables are keyed and bucketed by doc_id.
+  * tables are keyed and bucketed by doc_id. Each staged write checks that
+  * the rows it saw, and the rows a resumed manifest records, are the rows
+  * its files hold (Scale.resumableWrite), so a stage whose manifest
+  * disagrees with its data never publishes.
   *
   * The input is read with the declared [[Documents.schema]]: no
   * schema-inference job runs, and an input whose column types differ
@@ -64,7 +67,7 @@ object CurationJob {
     def staged(stage: String, dir: String, stageWaves: Int, orderCol: String,
                df: DataFrame): DataFrame = {
       written(stage) = Scale.resumableWrite(df, s"$dir/data", s"$dir/manifest",
-        nBuckets, stageWaves, keyCol = "doc_id", orderCol = orderCol)
+        nBuckets, stageWaves, keyCol = "doc_id", orderCol = orderCol).rows
       spark.read.schema(Scale.bucketedSchema(df.schema)).parquet(s"$dir/data")
     }
     Curation.build(spark.read.schema(Documents.schema).parquet(in), blockTokens) {

@@ -26,7 +26,8 @@ import org.apache.spark.sql.functions._
   * resumed run recomputes only unfinished buckets AND readers of the
   * published table never see a torn write — the snapshot becomes visible
   * only at the final atomic pointer flip (TableIO).
-  * Metrics come from `observe` (Spark-native, no driver-side collect).
+  * Metrics come from `observe` on the write itself, which also checks
+  * that the rows it saw are the rows its files hold (Scale.resumableWrite).
   * `waves` > 1 commits the write in that many bucket chunks, each a
   * resume point (Scale.resumableWrite).
   */
@@ -53,15 +54,18 @@ object ExtractJob {
   }
 
   /** Job body (main minus session lifecycle — testable): returns
-    * (published snapshot, rows written). `salts` and `cpus` reach no plan:
-    * they are kept for perfbench's source compatibility, and `salts` still
-    * names the staging snapshot's params. */
+    * (published snapshot, rows written). `salts` and `cpus` reach no plan
+    * and name no snapshot: they are kept for perfbench's source
+    * compatibility. The `[extract_metrics]` log line carries the rows this
+    * call wrote, their empty turns and their characters, as observed by
+    * the write ([[Scale.resumableWrite]]'s `observe`); on a resumed run
+    * they cover only the buckets this run wrote, not the whole table. */
   def run(spark: SparkSession, in: String, table: String, nBuckets: Int,
           salts: Int, cpus: Int, waves: Int = 1): (String, Long) = {
     // waves is not a parameter of the staging snapshot: it changes
     // checkpoint granularity, never bucket identity, so a retry may resume
     // the same snapshot at a different wave count.
-    val snap = TableIO.openStaging(spark, table, s"nBuckets=$nBuckets\nsalts=$salts")
+    val snap = TableIO.openStaging(spark, table, s"nBuckets=$nBuckets")
     // NO upfront repartition: the kernel is per-turn embarrassingly
     // parallel and runs map-side inside the scan stage (size-balanced
     // splits), so the job's ONLY shuffle is the write's keyed rebalance —
@@ -69,50 +73,14 @@ object ExtractJob {
     // a hot bucket. The declared schema means no inference job, and a
     // mistyped input fails the read.
     val turns = spark.read.schema(Turn.schema).parquet(in)
-    // Observation (not a bare .observe name): the metrics are retrieved
-    // after the write action and printed; a bare-name observe would compute
-    // the aggregates on every row and discard them. Attached ONLY on a
-    // FRESH single-wave run:
-    //  - an Observation is single-shot, and its CollectMetrics node is a
-    //    pushdown barrier — under waves>1 it would pin the kernel ABOVE the
-    //    wave's bucket filter (kernel × waves) and capture wave-0's subset
-    //    as the job metric;
-    //  - on a RESUMED snapshot the observed plan either never executes
-    //    (all buckets already manifested → resumableWrite runs no write
-    //    job, and obs.get would block forever) or sees only the re-written
-    //    subset.
-    // Both fall back to one aggregation over the written table.
-    val resumed = Scale.manifestRows(spark, s"$table/$snap/manifest").nonEmpty
-    val pipeline = Extract.pipeline(turns)
-    val obs =
-      if (waves == 1 && !resumed)
-        Some(org.apache.spark.sql.Observation("extract_metrics"))
-      else None
-    val metrics = Seq(count(lit(1)).as("turns_out"),
-      coalesce(sum(when(col("text") === "", 1).otherwise(0)), lit(0L)).as("empty_turns"),
-      coalesce(sum(length(col("text"))), lit(0L)).as("chars_out"))
-    val extracted = obs.fold(pipeline)(o => pipeline.observe(o, metrics.head, metrics.tail: _*))
-    val written = Scale.resumableWrite(extracted,
-      TableIO.dataDir(table, snap), s"$table/$snap/manifest", nBuckets, waves, salts)
-    // .filter(_.nonEmpty): a zero-row fresh run's keyed write launches zero
-    // tasks, so the Observation completes with an EMPTY map (no metrics row
-    // ever accumulated) — fall through to the aggregation over the written
-    // table, which reads the zero-row table as zeros.
-    val m: Map[String, Any] = obs.map(_.get).filter(_.nonEmpty).getOrElse {
-      val r = spark.read.parquet(TableIO.dataDir(table, snap))
-        .agg(metrics.head, metrics.tail: _*).collect()(0)
-      Map("turns_out" -> r.get(0), "empty_turns" -> r.get(1), "chars_out" -> r.get(2))
-    }
-    // the manifest records the committed files' footer counts, while
-    // turns_out counts the rows the write saw (or, on a resumed or
-    // multi-wave run, the data dir): a mismatch means the manifest is not
-    // the data's. A retry of such a snapshot fails here too.
-    if (m("turns_out") != written)
-      throw new IllegalStateException(s"$table/$snap: manifest records " +
-        s"$written rows but the write observed ${m("turns_out")}; not publishing")
-    System.err.println(s"[extract_metrics] turns_out=${m("turns_out")} " +
+    val written = Scale.resumableWrite(Extract.pipeline(turns),
+      TableIO.dataDir(table, snap), s"$table/$snap/manifest", nBuckets, waves, salts,
+      observe = Seq(when(col("text") === "", 1).otherwise(0).as("empty_turns"),
+        length(col("text")).as("chars_out")))
+    val m = written.observed
+    System.err.println(s"[extract_metrics] turns_out=${m("rows")} " +
       s"empty_turns=${m("empty_turns")} chars_out=${m("chars_out")}")
     TableIO.publish(spark, table, snap)
-    (snap, written)
+    (snap, written.rows)
   }
 }

@@ -42,21 +42,6 @@ object Documents {
     StructField("lang", StringType)))
 }
 
-/** A span of extracted content, with [start, end) character offsets into the
-  * ORIGINAL turn payload (reference analog: spaCy sentence spans,
-  * src/spacy_test.py:30-42). */
-final case class Span(start: Int, end: Int, label: String)
-
-/** Output row: extracted main content + span offsets, keyed like the input.
-  * Reference analog: the `.txt` sibling emitted by the OCR kernel
-  * (modules/image_ocr.py:29-36) — but keyed and auditable. */
-final case class ExtractedTurn(
-    conv_id: String,
-    turn_idx: Int,
-    text: String,
-    spans: Seq[Span]
-)
-
 /** One lexed block of a turn payload (E1 in SURVEY.md §2.4): a run of text
   * inside one block-level container, with char offsets into the original
   * payload plus densitometric raw counts used by the E2/E3 classifier and

@@ -9,7 +9,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructType}
 
@@ -157,6 +157,13 @@ object Scale {
     }.sum)
   }
 
+  /** What one [[resumableWrite]] call did. `rows` is the total over the
+    * manifest: earlier calls' buckets plus this one's. `observed` covers
+    * only the rows this call wrote: `"rows"` their count, and each of the
+    * call's `observe` columns, by name, its sum over them. A call that
+    * finds every bucket done writes no row and observes zeros. */
+  final case class Written(rows: Long, observed: Map[String, Long])
+
   /** Resumable keyed write: bucket the result by hash(`keyCol`, default
     * conv_id), drop buckets the manifest marks complete, and write every
     * remaining bucket in ONE distributed job with dynamic partition
@@ -188,14 +195,27 @@ object Scale {
     * after each wave commits, every bucket of the wave is recorded with the
     * record counts summed over its dir's data files, a zero-row bucket
     * included (rows=0), or every resume would rescan it. Neither counting
-    * nor recording runs a Spark job: each wave adds one manifest file in
-    * the driver, by create-then-rename ([[recordBuckets]]). The return
-    * value is the total over the manifest: earlier runs' buckets plus this
-    * one's. A caller that can count the written rows itself (ExtractJob's
-    * Observation) should compare that count with the total before it
-    * publishes. On return `outDir` always reads back with
-    * [[bucketedSchema]]: a write with no rows commits no `bucket=` dir, so
-    * one empty parquet file with that schema stands in.
+    * nor recording runs a Spark job: each wave adds one manifest file, by
+    * create-then-rename ([[recordBuckets]]). On return `outDir` always
+    * reads back with [[bucketedSchema]]: a write with no rows commits no
+    * `bucket=` dir, so one empty parquet file with that schema stands in.
+    *
+    * The rows a write saw are the rows its files hold, or nothing is
+    * manifested:
+    *  - each wave carries a fresh `Observation` between its bucket filter
+    *    and the REBALANCE hint, in the write's map stage, counting its rows
+    *    and summing the `observe` columns. After the wave commits, that
+    *    count must equal the wave's footer counts, or the call throws
+    *    before [[recordBuckets]]: the wave is never manifested and a retry
+    *    rewrites it. A wave whose write runs no task observes no row;
+    *  - a call that finds a non-empty manifest first re-reads the footers
+    *    of every bucket it marks done, with no Spark job, and throws,
+    *    naming the buckets, if any sum differs from its manifest count.
+    *    This runs before any write.
+    * Accumulator updates in a map stage count at least once: a map task
+    * that re-runs after a lost shuffle output can be counted twice. Such a
+    * wave is refused and rewritten on retry, so the failure is a false
+    * refusal, never a wrong publish.
     *
     * Each file is sorted by (`keyCol`, `orderCol`): the write sorts by
     * (bucket, keyCol, orderCol), which also satisfies the bucket ordering
@@ -219,35 +239,57 @@ object Scale {
   def resumableWrite(df: DataFrame, outDir: String, manifestDir: String,
                      nBuckets: Int = DefaultBuckets, waves: Int = 1,
                      salts: Int = 1, keyCol: String = "conv_id",
-                     orderCol: String = "turn_idx"): Long = {
+                     orderCol: String = "turn_idx",
+                     observe: Seq[Column] = Nil): Written = {
     require(waves >= 1 && waves <= nBuckets,
       s"waves must be in [1, nBuckets]: $waves")
     require(salts >= 1, s"salts must be >= 1: $salts")
     val spark = df.sparkSession
     val done = manifestRows(spark, manifestDir)
-    val withBucket = df.withColumn("bucket", bucketCol(nBuckets, keyCol))
-    val recorded = (0 until waves).flatMap { w =>
+    val disagree = footerCounts(spark, outDir, done.keys.toSeq.sorted)
+      .collect { case (b, n) if n != done(b) => b }
+    if (disagree.nonEmpty)
+      throw new IllegalStateException(s"$manifestDir records other row counts than " +
+        s"the data files of buckets ${disagree.mkString(", ")}; not writing")
+    val bucket = bucketCol(nBuckets, keyCol)
+    val names = "rows" +: df.select(observe: _*).columns.toSeq
+    require(names.distinct.size == names.size,
+      s"observe names must be distinct and none may be rows: $names")
+    val metrics = (count(lit(1)) +: observe.map(c => coalesce(sum(c).cast("long"), lit(0L))))
+      .zip(names).map { case (m, n) => m.as(n) }
+    val waveResults = (0 until waves).flatMap { w =>
       val waveBuckets = (w until nBuckets by waves).filterNot(done.contains)
-      if (waveBuckets.isEmpty) Nil
+      if (waveBuckets.isEmpty) None
       else {
         // partitionOverwriteMode is scoped to THIS write via the per-write
         // option, not session conf (a conf mutation would leak into every
         // later write of a long-lived session).
         val wave =
-          if (waveBuckets.size == nBuckets) withBucket // nothing to prune
-          else withBucket.filter(col("bucket").isin(waveBuckets.map(Int.box): _*))
-        wave.hint("rebalance", nBuckets, col("bucket"))
+          if (waveBuckets.size == nBuckets) df // nothing to prune
+          else df.filter(bucket.isin(waveBuckets.map(Int.box): _*))
+        val obs = Observation()
+        wave.observe(obs, metrics.head, metrics.tail: _*)
+          .withColumn("bucket", bucket)
+          .hint("rebalance", nBuckets, col("bucket"))
           .sortWithinPartitions("bucket", keyCol, orderCol)
           .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
           .partitionBy("bucket").parquet(outDir)
+        val m = obs.get
+        val seen = names.map(n => n -> m.get(n).fold(0L)(_.asInstanceOf[Long])).toMap
         val rows = footerCounts(spark, outDir, waveBuckets)
+        val held = rows.map(_._2).sum
+        if (held != seen("rows"))
+          throw new IllegalStateException(s"$outDir: the write of buckets " +
+            s"${waveBuckets.mkString(", ")} saw ${seen("rows")} rows but their files " +
+            s"hold $held; not recording them")
         recordBuckets(spark, manifestDir, rows)
-        rows
+        Some((rows, seen))
       }
     }
     if (!TableIO.dataFiles(spark, outDir).hasNext)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], bucketedSchema(df.schema))
         .repartition(1).write.mode("overwrite").parquet(outDir)
-    (done ++ recorded).values.sum
+    Written((done ++ waveResults.flatMap(_._1)).values.sum,
+      names.map(n => n -> waveResults.map(_._2(n)).sum).toMap)
   }
 }

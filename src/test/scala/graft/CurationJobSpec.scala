@@ -4,8 +4,6 @@ import graft.app.CurationJob
 import graft.corpus.{Curation, Packing}
 import graft.dedup.Dedup
 import graft.scale.{Scale, TableIO}
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -73,20 +71,12 @@ class CurationJobSpec extends AnyFunSuite {
     // every job is a scheduling round trip and, at scale, a corpus pass: a
     // shuffle or a driver-side step that creeps back into the chain shows
     // here first
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
     val table = java.nio.file.Files.createTempDirectory("curation_job_jobs")
       .toString + "/corpus_blocks"
-    ListenerBusDrain.drain(sc)
-    sc.addSparkListener(listener)
-    try {
+    val (_, jobs) = SparkTestBase.jobsDuring {
       CurationJob.run(spark, s"$srcDir/documents.parquet", table, nBuckets = 8)
-      ListenerBusDrain.drain(sc)
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get <= MaxJobs)
+    }
+    assert(jobs <= MaxJobs)
   }
 
   /** The jobs one [[CurationJob.run]] over the sf0.001 documents at 8
@@ -181,6 +171,24 @@ class CurationJobSpec extends AnyFunSuite {
     val got = published(table)
     assert(got === clean)
     assert(written === got.size.toLong)
+  }
+
+  test("a staging snapshot whose stage_clean manifest disagrees with its files never publishes") {
+    // what a kill before publish leaves, with bucket 0 of stage_clean
+    // manifested at a count its files do not hold: the retry resumes the
+    // snapshot (its params match) and must refuse it, every time
+    val table = java.nio.file.Files.createTempDirectory("curation_job_bad_manifest")
+      .toString + "/corpus_blocks"
+    val (snap, _) = CurationJob.run(spark, s"$srcDir/documents.parquet", table, nBuckets = 8)
+    SparkTestBase.unpublish(table, snap)
+    Scale.recordBuckets(spark, s"$table/$snap/stage_clean/manifest", Seq(0 -> 100000L))
+    Seq(1, 2).foreach { _ =>
+      val e = intercept[IllegalStateException] {
+        CurationJob.run(spark, s"$srcDir/documents.parquet", table, nBuckets = 8)
+      }
+      assert(e.getMessage.contains("stage_clean"), e.getMessage)
+      assert(TableIO.currentSnapshot(spark, table) === None)
+    }
   }
 
   test("a retry with a different nBuckets starts a fresh snapshot") {

@@ -4,8 +4,6 @@ import graft.app.ExtractJob
 import graft.core.Transcripts
 import graft.extract.Extract
 import graft.scale.TableIO
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -44,14 +42,13 @@ class ExtractJobSpec extends AnyFunSuite {
   test("resume of a fully-written unpublished snapshot completes and publishes") {
     // crash window: the write + manifest finished but the job died before
     // TableIO.publish. The retry resumes the staging snapshot with ZERO
-    // remaining buckets, so no write job ever runs — an Observation
-    // attached to the pipeline would block forever on .get (round-4 review
-    // finding); the job must fall back to post-hoc metrics and publish.
+    // remaining buckets, so no write job ever runs, and nothing may wait
+    // on metrics that only a write produces: the job must publish.
     val tmp = Files.createTempDirectory("graft_job_resume_full").toString
     Transcripts.synthetic(spark, 200, 10).drop("doc_text")
       .write.parquet(s"$tmp/in")
     TableIO.writeSidecar(spark, s"$tmp/table", "snap-00001", "params",
-      "nBuckets=8\nsalts=4")
+      "nBuckets=8")
     graft.scale.Scale.resumableWrite(
       Extract.pipeline(spark.read.parquet(s"$tmp/in")),
       TableIO.dataDir(s"$tmp/table", "snap-00001"),
@@ -67,14 +64,14 @@ class ExtractJobSpec extends AnyFunSuite {
   }
 
   test("a staging snapshot whose manifest disagrees with its data never publishes") {
-    // what a failed total check leaves behind: every bucket written and
-    // manifested, one with a wrong count. The retry resumes it (its params
-    // match), runs no write, and must still refuse to publish.
+    // every bucket written and manifested, one with a count its files do
+    // not hold. The retry resumes it (its params match), has no bucket
+    // left to write, and must still refuse to publish.
     val tmp = Files.createTempDirectory("graft_job_bad_manifest").toString
     Transcripts.synthetic(spark, 200, 10).drop("doc_text")
       .write.parquet(s"$tmp/in")
     TableIO.writeSidecar(spark, s"$tmp/table", "snap-00001", "params",
-      "nBuckets=8\nsalts=4")
+      "nBuckets=8")
     val manifest = s"$tmp/table/snap-00001/manifest"
     graft.scale.Scale.resumableWrite(
       Extract.pipeline(spark.read.parquet(s"$tmp/in")),
@@ -107,7 +104,7 @@ class ExtractJobSpec extends AnyFunSuite {
     // the empty placeholder parquet must carry the `bucket` partition column
     // a committed bucketed write exposes via its bucket= dirs — otherwise a
     // reader selecting `bucket` works on every non-empty snapshot and fails
-    // only on empty corpora (round-4 ADVICE schema asymmetry)
+    // only on empty corpora
     val tmp = Files.createTempDirectory("graft_job_empty").toString
     Transcripts.synthetic(spark, 10, 5).drop("doc_text")
       .filter("turn_idx < 0") // empty, schema intact
@@ -129,11 +126,12 @@ class ExtractJobSpec extends AnyFunSuite {
     // simulate a FAILED first attempt at nBuckets=8: staging snapshot with
     // params + a partial manifest exists, but was never published
     TableIO.writeSidecar(spark, s"$tmp/table", "snap-00001", "params",
-      "nBuckets=8\nsalts=4")
+      "nBuckets=8")
     graft.scale.Scale.recordBuckets(spark, s"$tmp/table/snap-00001/manifest",
       Seq(0 -> 10L, 1 -> 10L))
     // retry with DIFFERENT nBuckets: must NOT resume snap-00001 (its "done"
-    // buckets were computed under the old bucketing — round-2 ADVICE)
+    // bucket ids were computed under the old bucketing and mean other
+    // conversations under the new one)
     val (snap, n) = ExtractJob.run(spark, s"$tmp/in", s"$tmp/table",
       nBuckets = 16, salts = 4, cpus = 4)
     assert(snap === "snap-00002")
@@ -148,30 +146,56 @@ class ExtractJobSpec extends AnyFunSuite {
     assert(n3 === 200)
   }
 
+  test("a retry that changes only salts resumes the staging snapshot and rewrites no bucket") {
+    // salts reaches no plan, so it must not name the staging snapshot: a
+    // retry at another salts count writes the same table
+    val tmp = Files.createTempDirectory("graft_job_salts").toString
+    Transcripts.synthetic(spark, 200, 10).drop("doc_text")
+      .write.parquet(s"$tmp/in")
+    val (snap, _) = ExtractJob.run(spark, s"$tmp/in", s"$tmp/table",
+      nBuckets = 8, salts = 4, cpus = 4)
+    SparkTestBase.unpublish(s"$tmp/table", snap)
+    val data = new java.io.File(TableIO.dataDir(s"$tmp/table", snap))
+    val before = SparkTestBase.mtimesUnder(data)
+    assert(before.keys.exists(_.endsWith(".parquet")))
+    val (retry, n) = ExtractJob.run(spark, s"$tmp/in", s"$tmp/table",
+      nBuckets = 8, salts = 16, cpus = 4)
+    assert(retry === snap)
+    assert(n === 200)
+    assert(SparkTestBase.mtimesUnder(data) === before, "a bucket was rewritten on resume")
+    assert(TableIO.currentSnapshot(spark, s"$tmp/table") === Some(snap))
+  }
+
   test("one run over the fixture corpus runs at most MaxJobs Spark jobs") {
     // the write's own shuffle sizes its fan-out: a pass over the input that
-    // only guesses it shows here as extra jobs
+    // only guesses it shows here as extra jobs. A multi-wave run pays per
+    // wave only its write, and a resume with no bucket left runs no job.
     val tmp = Files.createTempDirectory("graft_job_jobs").toString
     Transcripts.synthetic(spark, 300, 10).drop("doc_text")
       .write.parquet(s"$tmp/in")
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    def run(table: String, waves: Int) = SparkTestBase.jobsDuring {
+      ExtractJob.run(spark, s"$tmp/in", s"$tmp/$table",
+        nBuckets = 8, salts = 4, cpus = 4, waves = waves)
     }
-    ListenerBusDrain.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val (_, n) = ExtractJob.run(spark, s"$tmp/in", s"$tmp/table",
-        nBuckets = 8, salts = 4, cpus = 4)
-      assert(n === 300)
-      ListenerBusDrain.drain(sc)
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get <= MaxJobs)
+    val ((_, n), jobs) = run("table", 1)
+    assert(n === 300)
+    assert(jobs <= MaxJobs)
+    val ((snap, n4), jobs4) = run("table4", 4)
+    assert(n4 === 300)
+    assert(jobs4 <= MaxWaveJobs)
+    SparkTestBase.unpublish(s"$tmp/table4", snap)
+    val ((resumed, nr), jobsResumed) = run("table4", 4)
+    assert(resumed === snap)
+    assert(nr === 300)
+    assert(jobsResumed === 0)
   }
 
   /** The jobs one fresh single-wave [[ExtractJob.run]] over 300 turns at 8
     * buckets runs on local[4]: the write's shuffle map stage and its
     * writer stage (adaptive execution runs each stage as a job). */
   private val MaxJobs = 2
+
+  /** The same at 4 waves: each wave's shuffle map stage and writer
+    * stage, and no job after the last wave. */
+  private val MaxWaveJobs = 8
 }

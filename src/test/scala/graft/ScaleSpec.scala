@@ -28,7 +28,7 @@ class ScaleSpec extends AnyFunSuite {
     val result = Extract.pipeline(turns)
 
     // straight-through run
-    val n1 = Scale.resumableWrite(result, out1, man1, nBuckets = 8)
+    val n1 = Scale.resumableWrite(result, out1, man1, nBuckets = 8).rows
 
     // simulate a failed run that completed buckets {0,1,2}: pre-write those
     // buckets and their manifest rows, then "resume"
@@ -39,7 +39,7 @@ class ScaleSpec extends AnyFunSuite {
       (0 until 3).map(b => b -> spark.read.parquet(s"$out2/bucket=$b").count()))
     val preDone = Scale.manifestRows(spark, man2).keySet
     assert(preDone === Set(0, 1, 2))
-    val n2 = Scale.resumableWrite(result, out2, man2, nBuckets = 8)
+    val n2 = Scale.resumableWrite(result, out2, man2, nBuckets = 8).rows
 
     assert(n1 === n2)
     val a = spark.read.parquet(out1).select("conv_id", "turn_idx", "text")
@@ -61,7 +61,7 @@ class ScaleSpec extends AnyFunSuite {
     val turns = Transcripts.synthetic(spark, 500, 10).drop("doc_text")
     val result = Extract.pipeline(turns)
 
-    val n1 = Scale.resumableWrite(result, oneShot, manOne, nBuckets = 8)
+    val n1 = Scale.resumableWrite(result, oneShot, manOne, nBuckets = 8).rows
 
     // simulate a run killed after wave 0 of 4 (buckets {0,4} committed +
     // manifested, wave 1 died mid-write): only wave-0 buckets exist
@@ -73,7 +73,7 @@ class ScaleSpec extends AnyFunSuite {
     val mtimes0 = Seq(0, 4).map(b => b -> mtimes(new java.io.File(s"$waved/bucket=$b"))).toMap
 
     // resume with waves=4: waves 0 fully pruned, 1–3 written + manifested
-    val n2 = Scale.resumableWrite(result, waved, manWaved, nBuckets = 8, waves = 4)
+    val n2 = Scale.resumableWrite(result, waved, manWaved, nBuckets = 8, waves = 4).rows
     assert(n1 === n2)
     val a = spark.read.parquet(oneShot).select("conv_id", "turn_idx", "text")
     val b = spark.read.parquet(waved).select("conv_id", "turn_idx", "text")
@@ -98,14 +98,14 @@ class ScaleSpec extends AnyFunSuite {
     val odd = result.withColumn("bucket", Scale.bucketCol(8))
       .filter(pmod(col("bucket"), lit(2)) === 1).drop("bucket")
     val n = Scale.resumableWrite(odd, s"$tmp/out", s"$tmp/man",
-      nBuckets = 8, waves = 2)
+      nBuckets = 8, waves = 2).rows
     assert(n === odd.count())
     assert(Scale.manifestRows(spark, s"$tmp/man").keySet === (0 until 8).toSet)
     // with no rows at all no wave commits a bucket dir; the dir must still
     // read back, with the columns a non-empty write has
     val none = result.filter(lit(false))
     assert(Scale.resumableWrite(none, s"$tmp/none", s"$tmp/man_none",
-      nBuckets = 8, waves = 2) === 0)
+      nBuckets = 8, waves = 2).rows === 0)
     assert(Scale.manifestRows(spark, s"$tmp/man_none").keySet === (0 until 8).toSet)
     val back = spark.read.parquet(s"$tmp/none")
     assert(back.schema.map(f => f.name -> f.dataType.simpleString) ===
@@ -124,11 +124,11 @@ class ScaleSpec extends AnyFunSuite {
     val skewed = Transcripts.synthetic(spark, 2000, 10, skewFactor = 100)
       .drop("doc_text").repartition(8)
     val result = Extract.pipeline(skewed)
-    val n1 = Scale.resumableWrite(result, s"$tmp/plain", s"$tmp/man1", nBuckets = 8)
+    val n1 = Scale.resumableWrite(result, s"$tmp/plain", s"$tmp/man1", nBuckets = 8).rows
     // the default advisory size (64 MB) holds this whole fixture in one
     // writer task; 64 KB is between its cold and its hot bucket sizes
     val n2 = withAdvisorySize("64k") {
-      Scale.resumableWrite(result, s"$tmp/salted", s"$tmp/man2", nBuckets = 8, salts = 8)
+      Scale.resumableWrite(result, s"$tmp/salted", s"$tmp/man2", nBuckets = 8, salts = 8).rows
     }
     assert(n1 === n2)
     val a = spark.read.parquet(s"$tmp/plain").select("conv_id", "turn_idx", "text")
@@ -162,13 +162,13 @@ class ScaleSpec extends AnyFunSuite {
   test("measured fan-out: an unskewed corpus writes one file per non-empty bucket") {
     val tmp = Files.createTempDirectory("graft_fanout").toString
     val result = Extract.pipeline(Transcripts.synthetic(spark, 2000, 10).drop("doc_text"))
-    val n1 = Scale.resumableWrite(result, s"$tmp/plain", s"$tmp/man1")
+    val n1 = Scale.resumableWrite(result, s"$tmp/plain", s"$tmp/man1").rows
     // coalescing off, so no bucket shares a writer task with its
     // neighbours by merging: each must still reach exactly one writer
     // task, because no bucket's shuffle output is over the advisory size
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     val n2 =
-      try Scale.resumableWrite(result, s"$tmp/salted", s"$tmp/man2", salts = 8)
+      try Scale.resumableWrite(result, s"$tmp/salted", s"$tmp/man2", salts = 8).rows
       finally spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     assert(n1 === n2)
     val nonEmpty = result.select(Scale.bucketCol()).distinct().count()
@@ -216,7 +216,7 @@ class ScaleSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     val n =
       try withAdvisorySize("64k") {
-        Scale.resumableWrite(result, s"$tmp/out", s"$tmp/man", salts = 16)
+        Scale.resumableWrite(result, s"$tmp/out", s"$tmp/man", salts = 16).rows
       } finally spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     assert(n === 4000)
     val hot = result.filter(col("conv_id") === "c00000000000000")
@@ -267,7 +267,7 @@ class ScaleSpec extends AnyFunSuite {
     inputs.foreach { case (name, df, salts, observation) =>
       val out = s"$tmp/$name"; val man = s"$tmp/man_$name"
       val (n, queries) = queriesDuring {
-        Scale.resumableWrite(df, out, man, nBuckets = 8, salts = salts)
+        Scale.resumableWrite(df, out, man, nBuckets = 8, salts = salts).rows
       }
       val table = spark.read.parquet(out)
       val perBucket = table.groupBy("bucket").count().collect()
@@ -291,7 +291,7 @@ class ScaleSpec extends AnyFunSuite {
     val tmp = Files.createTempDirectory("graft_wave_kill").toString
     val out = s"$tmp/out"; val man = new java.io.File(s"$tmp/man")
     val result = Extract.pipeline(Transcripts.synthetic(spark, 2000, 10).drop("doc_text"))
-    val n1 = Scale.resumableWrite(result, out, man.getPath, nBuckets = 8, waves = 4)
+    val n1 = Scale.resumableWrite(result, out, man.getPath, nBuckets = 8, waves = 4).rows
     val rows1 = Scale.manifestRows(spark, man.getPath)
     // what a kill between wave 2's commit and its manifest rename leaves:
     // the wave's bucket dirs, no wave file, and a hidden temp file
@@ -306,7 +306,7 @@ class ScaleSpec extends AnyFunSuite {
     val keptBefore = kept.map(f => f.getName -> f.lastModified).toMap
     val dataBefore = (0 until 8).map(b => b -> mtimes(new java.io.File(s"$out/bucket=$b"))).toMap
 
-    val n2 = Scale.resumableWrite(result, out, man.getPath, nBuckets = 8, waves = 4)
+    val n2 = Scale.resumableWrite(result, out, man.getPath, nBuckets = 8, waves = 4).rows
     assert(n2 === n1)
     assert(Scale.manifestRows(spark, man.getPath) === rows1)
     assert(kept.map(f => f.getName -> f.lastModified).toMap === keptBefore)
@@ -330,6 +330,44 @@ class ScaleSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains(s"$man/wave-bad"), e.getMessage)
     assert(!new java.io.File(s"$tmp/out").exists())
+  }
+
+  test("a resume whose manifest disagrees with a done bucket's files stops before writing and names the bucket") {
+    val tmp = Files.createTempDirectory("graft_resume_disagree").toString
+    val out = s"$tmp/out"; val man = s"$tmp/man"
+    val result = Extract.pipeline(Transcripts.synthetic(spark, 500, 10).drop("doc_text"))
+    // a failed run that completed buckets {0,1,2}, with 1 and 2 manifested
+    // at counts their files do not hold
+    result.withColumn("bucket", Scale.bucketCol(8)).filter(col("bucket") < 3)
+      .write.mode("overwrite").partitionBy("bucket").parquet(out)
+    Scale.recordBuckets(spark, man, (0 until 3).map { b =>
+      val n = spark.read.parquet(s"$out/bucket=$b").count()
+      b -> (if (b == 0) n else n + 1)
+    })
+    val before = SparkTestBase.mtimesUnder(new java.io.File(out))
+    val e = intercept[IllegalStateException] {
+      Scale.resumableWrite(result, out, man, nBuckets = 8)
+    }
+    assert(e.getMessage.contains("buckets 1, 2"), e.getMessage)
+    assert(SparkTestBase.mtimesUnder(new java.io.File(out)) === before)
+  }
+
+  test("a wave whose bucket dirs hold other rows than its write saw is never manifested") {
+    val tmp = Files.createTempDirectory("graft_wave_disagree").toString
+    val out = s"$tmp/out"; val man = s"$tmp/man"
+    val withBucket = Extract.pipeline(Transcripts.synthetic(spark, 300, 10).drop("doc_text"))
+      .withColumn("bucket", Scale.bucketCol(8))
+    // files an earlier attempt left in bucket 1, which this input leaves
+    // empty: dynamic overwrite replaces only the buckets the write reaches
+    withBucket.filter(col("bucket") === 1)
+      .write.mode("overwrite").partitionBy("bucket").parquet(out)
+    val input = withBucket.filter(col("bucket") =!= 1).drop("bucket")
+    val e = intercept[IllegalStateException] {
+      Scale.resumableWrite(input, out, man, nBuckets = 8, waves = 2)
+    }
+    assert(e.getMessage.contains("buckets 1, 3, 5, 7"), e.getMessage)
+    // wave 0 (buckets 0, 2, 4, 6) committed and was manifested; wave 1 not
+    assert(Scale.manifestRows(spark, man).keySet === Set(0, 2, 4, 6))
   }
 
   /** Command lines of the OS processes started while `body` runs, from an
